@@ -747,6 +747,16 @@ def _triage_flaps(vs_prev: dict, fp_snapshot, live_fp, floor_probe,
     return triage, demote
 
 
+def _is_quiet(la: list[float], threshold: float,
+              load5_limit: float | None = None) -> bool:
+    """The quiet-gate condition on a loadavg triple: the 1-minute term
+    <= ``threshold`` and, when ``load5_limit`` is given, the 5-minute
+    term <= ``load5_limit``. A run that starts while it is false is
+    stamped ``load_contaminated``."""
+    return bool(la) and la[0] <= threshold and (
+        load5_limit is None or len(la) < 2 or la[1] <= load5_limit)
+
+
 def _await_quiet(threshold: float, timeout_s: float, poll_s: float = 15.0,
                  loadavg=None, sleep=None,
                  load5_limit: float | None = None) -> tuple[list[float], float]:
@@ -773,9 +783,8 @@ def _await_quiet(threshold: float, timeout_s: float, poll_s: float = 15.0,
             la = loadavg()
         except OSError:  # pragma: no cover — non-POSIX
             return [], waited
-        quiet = bool(la) and la[0] <= threshold and (
-            load5_limit is None or len(la) < 2 or la[1] <= load5_limit)
-        if not la or quiet or waited >= timeout_s:
+        if (not la or _is_quiet(la, threshold, load5_limit)
+                or waited >= timeout_s):
             return la, waited
         sleep(poll_s)
         waited += poll_s
@@ -1016,16 +1025,19 @@ def main() -> None:
     # and the first half of the suite recorded 4-6x inflated. The limit
     # mirrors the warm-box corroboration fraction in _is_throttled so
     # the gate waits on exactly the condition the stamp would flag.
-    _n_cpus = os.cpu_count()
+    from streaming_data_spark.session import get_session, local_cores
+
+    # the cores the session runs on ($SPARK_GRAFT_CPUS), not the host's
+    _n_cpus = local_cores()
     load5_cap = CALIB_WARM_LOAD5_FRAC * _n_cpus if _n_cpus else None
     _load_avg0, _waited = _await_quiet(
         threshold, wait_budget, load5_limit=load5_cap)
-    contaminated = bool(_load_avg0) and _load_avg0[0] > threshold
+    contaminated = bool(_load_avg0) and not _is_quiet(
+        _load_avg0, threshold, load5_cap)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else -1.0
 
-    from streaming_data_spark.session import get_session
     import __spark_entry__ as entry_mod
 
     spark = get_session(app_name="sds-bench")
@@ -1190,7 +1202,8 @@ def main() -> None:
             "numbers are order-independent"
         ),
         "load_context": {
-            "cpus": os.cpu_count(),
+            "cpus": _n_cpus,
+            "master": spark.sparkContext.master,
             "spark_calib_sec": spark_calib,
             "spark_calib_shuffle_sec": spark_calib_shuffle,
             "spark_calib_end_sec": spark_calib_end,

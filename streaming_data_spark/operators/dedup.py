@@ -188,9 +188,10 @@ def _minhash_signatures_arrow(
 
     r17 (guide §4.2, second half — cheapen the digests): the base
     hash comes from the raw digest bytes instead of the hex string,
-    and a per-task digest memo (bounded, cleared past 1M entries)
-    amortizes md5 across repeated shingles — near-dup corpora repeat
-    shingles heavily, and the digest is the kernel's dominant term
+    and a per-task digest memo (bounded: cleared before any insert
+    past 1M entries) amortizes md5 across repeated shingles — near-dup
+    corpora repeat shingles heavily, and the digest is the kernel's
+    dominant term
     (min unaffected: the memo only dedups identical strings, and min
     over a multiset with duplicated values equals min over the set).
     Measured at the x10 replica, interleaved same-session A/B: old
@@ -224,13 +225,13 @@ def _minhash_signatures_arrow(
         class _DigestMemo(dict):
             def __missing__(self, g):
                 v = int.from_bytes(md5(g.encode("utf-8")).digest()[:4], "big") >> 4
+                if len(self) >= 1_000_000:  # bound worker RSS per task
+                    self.clear()
                 self[g] = v
                 return v
 
         memo = _DigestMemo()
         for batch in batches:
-            if len(memo) > 1_000_000:  # bound worker RSS per task
-                memo.clear()
             ids = batch.column(0)
             out_ids: list = []
             out_sigs: list = []
@@ -689,8 +690,10 @@ def ranked_encoded_shingles(
             ).otherwise(
                 F.raise_error(F.lit(
                     "xxhash64 shingle-id collision detected: two distinct "
-                    "shingles share an _sid; rerun this build with a "
-                    "string-keyed dictionary encoding"
+                    "shingles share an _sid. 64-bit shingle ids are sound "
+                    "only well below ~6e8 distinct shingles per build "
+                    "(birthday bound n^2/2^65: ~1% at 6e8, ~39% at 4e9); "
+                    "split the corpus into smaller builds"
                 ))
             ),
         )

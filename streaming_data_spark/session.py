@@ -27,7 +27,8 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _local_cores() -> int:
+def local_cores() -> int:
+    """The session's core count: $SPARK_GRAFT_CPUS, else the host's."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
@@ -51,7 +52,7 @@ def get_session(
     partitions = 4x cores (AQE coalesces small shuffles back down;
     see _default_shuffle_partitions for the measured rationale).
     """
-    cores = _local_cores()
+    cores = local_cores()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cores}]")

@@ -9,20 +9,27 @@ it twice on overlapping input adds zero duplicate rows — the property
 the reference relies on for replay tolerance, and what makes
 at-least-once streaming delivery exactly-once-observable (T1).
 
+The keyed writers run on every micro-batch, so each call runs one
+action, the write, and takes the appended-row count from an
+``Observation`` on it. ``write_if_absent`` runs at most 3 Spark jobs
+per call on an existing parquet target; its docstring gives the
+budget and why the batch is not persisted.
+
 Not atomic under concurrent writers (SURVEY §7.4-1) — the reference
 is single-writer too (one transaction per load,
 upbit_daily_candels.py:241). Document, don't pretend.
 """
-
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _is_missing_path(exc: AnalysisException) -> bool:
@@ -64,7 +71,6 @@ def _single_writer_lock(target_path: str):
     leaves a stale lock that the operator removes (the lock carries
     pid + timestamp for that triage).
     """
-    import json as _json
     import re as _re
     import time as _time
 
@@ -84,7 +90,7 @@ def _single_writer_lock(target_path: str):
             "race the anti-join (remove the lock only if its owner is dead)"
         ) from None
     with os.fdopen(fd, "w") as fh:
-        fh.write(_json.dumps({"pid": os.getpid(), "ts": _time.time()}))
+        fh.write(json.dumps({"pid": os.getpid(), "ts": _time.time()}))
     try:
         yield
     finally:
@@ -101,9 +107,25 @@ def write_if_absent(
 ) -> int:
     """K1/K2 — idempotent keyed append to a path-based table.
 
-    Returns the number of rows actually appended. The anti-join reads
-    only the key columns of the target (column-pruned scan); the
-    shuffle is keyed on ``keys`` and AQE-sized.
+    Returns the number of rows actually appended, counted by an
+    ``Observation`` on the write, so the count covers exactly the rows
+    written.
+
+    Job budget on an existing parquet target: at most 3 Spark jobs —
+    the key-only scan of the target (broadcast or shuffled), the
+    shuffle stage of the batch dedup, then the write. The target's key
+    schema is declared (see _read_keys), so no schema-inference job
+    runs. The batch is
+    not persisted: AQE may not coalesce the shuffle output of a cached
+    plan (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is off by default), so a cached write would put one file per
+    shuffle partition into the target on every call, and every later
+    call would read them all back. Uncached, the anti-join shuffle is
+    AQE-sized and a small batch lands as one file.
+
+    A call that inserts nothing still runs the write: the target keeps
+    its rows, and Spark may add one schema-only file to it. On a
+    missing target that creates it, empty.
 
     ``enforce_single_writer=True`` wraps the read-check-append in the
     advisory lock (see _single_writer_lock) so a concurrent writer
@@ -115,24 +137,91 @@ def write_if_absent(
                 new, target_path, keys, fmt, partition_by,
                 enforce_single_writer=False,
             )
-    spark = new.sparkSession
-    deduped = new.dropDuplicates(list(keys))
+    keys = list(keys)
+    to_insert = new.dropDuplicates(keys)
     try:
-        existing = spark.read.format(fmt).load(target_path).select(*keys)
-        to_insert = deduped.join(existing, on=list(keys), how="left_anti")
+        existing = _read_keys(new, target_path, keys, fmt)
+        to_insert = to_insert.join(existing, on=keys, how="left_anti")
     except AnalysisException as exc:
         if not _is_missing_path(exc):
             raise
-        to_insert = deduped  # target doesn't exist yet — first load
-    to_insert = to_insert.persist()
-    n = to_insert.count()
-    if n:
-        writer = to_insert.write.mode("append").format(fmt)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(target_path)
-    to_insert.unpersist()
-    return n
+        # target doesn't exist yet — first load
+    to_insert, obs = _counted(to_insert)
+    writer = to_insert.write.mode("append").format(fmt)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(target_path)
+    return obs.get["n"]
+
+
+# Spark records each parquet file's Spark schema in its footer here.
+_SPARK_PARQUET_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_keys(
+    new: DataFrame, target_path: str, keys: list[str], fmt: str
+) -> DataFrame:
+    """The target's key columns, typed as the target stores them, so
+    the anti-join coerces types exactly as an inferred read would.
+
+    Parquet declares that key schema instead of inferring it: Spark's
+    inference is a Spark job, while the stored types come from one
+    file's footer, read on the driver. The batch's key types only
+    serve to list the files. A declared type that differs from the
+    stored one is not safe to keep: the parquet reader reads a stored
+    decimal, date or timestamp declared as bigint as its raw integer.
+
+    Other formats infer. ORC inference already reads one footer on the
+    driver, with no job. JSON stores no types, and its reader converts
+    a stored token to a declared type it does not hold (the number 50.0
+    read as the string "50.0"), which would re-insert matching rows.
+    CSV matches a declared schema by position, not by name.
+    """
+    spark = new.sparkSession
+    if fmt != "parquet":
+        return spark.read.format(fmt).load(target_path).select(*keys)
+    by_name = {f.name.lower(): f for f in new.schema}
+    declared = StructType([by_name[k.lower()] for k in keys])
+    existing = spark.read.schema(declared).parquet(target_path)
+    files = existing.inputFiles()
+    if not files:
+        return existing
+    stored = _parquet_footer_schema(files[0])
+    if stored is None:  # let Spark infer
+        return spark.read.parquet(target_path).select(*keys)
+    stored_types = {f.name.lower(): f.dataType for f in stored}
+    # a key missing from the footer is a partition column, typed by
+    # its directory values; it keeps the batch's type
+    key_schema = StructType([
+        StructField(f.name, stored_types.get(f.name.lower(), f.dataType))
+        for f in declared
+    ])
+    if [f.dataType for f in key_schema] == [f.dataType for f in declared]:
+        return existing
+    return spark.read.schema(key_schema).parquet(target_path)
+
+
+def _parquet_footer_schema(path: str) -> StructType | None:
+    """The Spark schema a parquet file's footer records; None for a
+    file written by another engine or on a filesystem pyarrow cannot
+    open. Reads the footer only."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    try:
+        fs, fs_path = pafs.FileSystem.from_uri(path)
+        meta = pq.read_schema(fs_path, filesystem=fs).metadata or {}
+    except (OSError, ValueError):  # unsupported scheme: infer instead
+        return None
+    raw = meta.get(_SPARK_PARQUET_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df``, and an Observation whose ``get["n"]`` is its row count
+    once the action that runs it (the write) is done — no extra job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def incremental_load(
@@ -203,26 +292,26 @@ def write_if_absent_jdbc(
 
     Single-writer semantics, like the reference (one transaction per
     load) — concurrent writers can still race between probe and append.
+    The count is observed on the append, as in ``write_if_absent``; a
+    call that inserts nothing still runs the (empty) append, which
+    creates the table on a first load.
     """
     from streaming_data_spark.sources.jdbc import jdbc_table
 
-    spark = new.sparkSession
-    deduped = new.dropDuplicates(list(keys))
+    keys = list(keys)
+    to_insert = new.dropDuplicates(keys)
     try:
         existing = jdbc_table(
-            spark, url, table, properties=properties
+            new.sparkSession, url, table, properties=properties
         ).select(*keys)
-        to_insert = deduped.join(existing, on=list(keys), how="left_anti")
+        to_insert = to_insert.join(existing, on=keys, how="left_anti")
     except Exception as exc:  # noqa: BLE001 — JDBC surfaces Py4JJavaError
         if "does not exist" not in str(exc):
             raise
-        to_insert = deduped  # table doesn't exist yet — first load
-    to_insert = to_insert.persist()
-    n = to_insert.count()
-    if n:
-        append_jdbc(to_insert, url, table, batchsize=batchsize, properties=properties)
-    to_insert.unpersist()
-    return n
+        # table doesn't exist yet — first load
+    to_insert, obs = _counted(to_insert)
+    append_jdbc(to_insert, url, table, batchsize=batchsize, properties=properties)
+    return obs.get["n"]
 
 
 def write_csv(df: DataFrame, path: str, header: bool = True) -> None:

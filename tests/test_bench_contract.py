@@ -115,6 +115,18 @@ def test_await_quiet_also_waits_on_the_5min_term():
     assert waited == 0.0
 
 
+def test_contamination_stamp_mirrors_both_quiet_gate_terms():
+    """A run whose wait budget ran out with the 1-minute loadavg quiet
+    but the 5-minute term still above its cap is stamped
+    load_contaminated too: main() stamps exactly when _is_quiet, the
+    gate's own condition, is false."""
+    assert bench._is_quiet([1.0, 0.5, 0.4], 2.0, load5_limit=1.0)
+    assert not bench._is_quiet([2.5, 0.5, 0.4], 2.0, load5_limit=1.0)
+    assert not bench._is_quiet([1.0, 14.6, 12.0], 2.0, load5_limit=1.0)
+    assert bench._is_quiet([1.0, 14.6, 12.0], 2.0)  # no cap: 1-min only
+    assert not bench._is_quiet([], 2.0)
+
+
 def test_calibrate_start_retries_while_throttled_within_budget():
     """r16 verdict item 1 (second half): a throttled START stamp must be
     re-run under a bounded backoff budget, not recorded. First retry is

@@ -33,9 +33,10 @@ def test_autosize_shuffle_partitions_floors_at_parallelism(spark, tmp_path):
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        # pin the session BELOW parallelism so the parallelism leg of
-        # the floor (max(parallelism, current conf)) is what binds
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        # pin the session BELOW parallelism (1 is below it on any
+        # host) so the parallelism leg of the floor
+        # (max(parallelism, current conf)) is what binds
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
         (tmp_path / "t.bin").write_bytes(b"x" * 1024)
         n = autosize_shuffle_partitions(spark, str(tmp_path))
         assert n == spark.sparkContext.defaultParallelism

@@ -3,6 +3,8 @@ writer, incremental load, conditional gating."""
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -118,3 +120,135 @@ def test_single_writer_lock_blocks_concurrent_append(spark, sf_small, tmp_path):
     # replay after release: idempotent, appends nothing
     n2 = write_if_absent(rows, target, keys=["doc_id"], enforce_single_writer=True)
     assert n2 == 0
+
+
+# -- cost and type contracts of the keyed writer -----------------------------
+
+
+def _keyed_batch(spark, lo, hi, key_type="bigint"):
+    """``hi - lo`` rows over 4 input partitions, keyed ``k``. The modulo
+    hides the range's uniqueness from the optimizer, so the dedup keeps
+    its shuffle, as on a streamed batch."""
+    return spark.range(lo, hi, numPartitions=4).select(
+        (F.col("id") % (1 << 40)).cast(key_type).alias("k"),
+        F.col("id").cast("string").alias("v"),
+    )
+
+
+def _jobs_of(spark, fn):
+    """(fn's result, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _data_files(path):
+    return set(glob.glob(f"{path}/**/part-*", recursive=True))
+
+
+def test_write_if_absent_job_budget_on_existing_target(spark, target):
+    """At most 3 jobs per call on a non-empty target: the key scan,
+    the dedup's shuffle stage and the write. No schema-inference job,
+    no persist + count."""
+    write_if_absent(_keyed_batch(spark, 0, 3000), target, keys=["k"])
+    n, jobs = _jobs_of(
+        spark,
+        lambda: write_if_absent(_keyed_batch(spark, 1500, 4500), target, keys=["k"]),
+    )
+    assert n == 1500
+    assert jobs <= 3, jobs
+
+
+def test_write_if_absent_small_batch_lands_as_one_file(spark, target):
+    """A 3k-row call adds one data file, not one per shuffle partition:
+    the write is not planned from a cached relation, so AQE coalesces
+    the anti-join shuffle."""
+    write_if_absent(_keyed_batch(spark, 0, 3000), target, keys=["k"])
+    before = _data_files(target)
+    assert write_if_absent(_keyed_batch(spark, 3000, 6000), target, keys=["k"]) == 3000
+    assert len(_data_files(target) - before) == 1
+
+
+def test_write_if_absent_empty_replay_adds_only_a_schema_file(spark, target):
+    """A replay that inserts nothing returns 0 and leaves the rows
+    unchanged. The write still runs (the count is observed on it), and
+    Spark's empty write adds exactly one schema-only file."""
+    batch = _keyed_batch(spark, 0, 3000)
+    write_if_absent(batch, target, keys=["k"])
+    before = _data_files(target)
+    assert write_if_absent(batch, target, keys=["k"]) == 0
+    added = _data_files(target) - before
+    assert len(added) == 1
+    assert spark.read.parquet(*added).count() == 0
+    assert spark.read.parquet(target).count() == 3000
+
+
+@pytest.mark.parametrize("fmt", ["json", "orc"])
+def test_write_if_absent_other_name_resolved_formats(spark, target, fmt):
+    """JSON and ORC targets keep the keyed-append contract. ORC reads
+    its key schema from a footer on the driver, so it stays inside the
+    same 3-job budget as parquet."""
+    assert write_if_absent(_keyed_batch(spark, 0, 100), target, ["k"], fmt=fmt) == 100
+    n, jobs = _jobs_of(
+        spark,
+        lambda: write_if_absent(_keyed_batch(spark, 50, 150), target, ["k"], fmt=fmt),
+    )
+    assert n == 50
+    if fmt == "orc":
+        assert jobs <= 3, jobs
+    assert write_if_absent(_keyed_batch(spark, 50, 150), target, ["k"], fmt=fmt) == 0
+    stored = spark.read.format(fmt).load(target)
+    assert stored.count() == stored.select("k").distinct().count() == 150
+
+
+def test_write_if_absent_csv_keeps_inference(spark, target):
+    """CSV matches a declared schema by position, so its key read is
+    inferred: a headerless target's columns are ``_c0``, ``_c1``, and
+    the key fails to resolve instead of being read from the wrong
+    column."""
+    from pyspark.errors import AnalysisException
+
+    batch = _keyed_batch(spark, 0, 100).select("v", "k")
+    write_if_absent(batch, target, ["k"], fmt="csv")
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        write_if_absent(batch, target, ["k"], fmt="csv")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "json"])
+@pytest.mark.parametrize(
+    "stored_type,batch_type",
+    [("bigint", "int"), ("decimal(10,2)", "bigint"), ("double", "string")],
+)
+def test_write_if_absent_key_type_mismatch_never_duplicates(
+    spark, target, fmt, stored_type, batch_type
+):
+    """A batch whose key type differs from the target's either matches
+    the stored keys (as a join of the two types would) or raises. It
+    never re-inserts the keys it shares with the target. Parquet would
+    read a stored decimal declared as bigint as its raw unscaled
+    integer, so the declared key types are the stored ones."""
+    write_if_absent(_keyed_batch(spark, 0, 100, stored_type), target, ["k"], fmt=fmt)
+    try:
+        n = write_if_absent(_keyed_batch(spark, 50, 150, batch_type), target, ["k"], fmt=fmt)
+    except Exception:  # noqa: BLE001 — raising is the other allowed outcome
+        assert spark.read.format(fmt).load(target).count() == 100
+        return
+    assert n == 50
+    assert spark.read.format(fmt).load(target).count() == 150
+
+
+def test_write_if_absent_infers_when_the_footer_has_no_spark_schema(
+    spark, target, monkeypatch
+):
+    """A parquet target written by another engine has no Spark schema
+    in its footers; the key read falls back to inference."""
+    from streaming_data_spark.sinks import writers
+
+    write_if_absent(_keyed_batch(spark, 0, 100, "decimal(10,2)"), target, ["k"])
+    monkeypatch.setattr(writers, "_parquet_footer_schema", lambda path: None)
+    assert write_if_absent(_keyed_batch(spark, 50, 150), target, ["k"]) == 50
