@@ -1,23 +1,31 @@
 """Custom stateful streaming operators (SURVEY.md §2.9 T6).
 
 The reference's streaming path (Logstash) is stateless per event; state
-only enters through windowed aggregation. This module adds the one
-genuinely custom stateful operator a training-data event pipeline
-needs — gap-based sessionization — as an ``applyInPandasWithState``
-operator, the Spark-idiomatic escape hatch when ``window()`` can't
-express the semantics (session length is data-dependent, not fixed).
+only enters through windowed aggregation. This module adds the ten
+custom stateful operators a training-data event pipeline needs where
+``window()`` can't express the semantics: gap-based sessionization
+(session length is data-dependent, not fixed), cross-batch change
+alerts, and the streaming twins of the eight indicator operators in
+operators/indicators (SMA cross, Bollinger, EWMA, RSI, ATR,
+stochastic, OBV, Holt).
 
-Scale notes: state is per-key and O(1) per key (one open session
-tuple); the shuffle is the groupBy on the session key, identical to
-what any keyed stateful op pays. Arrow moves each key-batch into
-pandas, so per-event Python overhead is amortized per batch, not paid
-per row.
+Each operator is a pure per-key fold, ``fold(state, rows) -> (out
+rows, new state)``, and ``_keyed_fold`` binds every one of them
+through ``applyInPandasWithState`` — the Structured Streaming shape
+of arbitrary stateful processing, a user function over (key, rows,
+state). The folds repeat their batch twins' IEEE op order, which is
+what keeps each stream equal to its batch form bit-for-bit.
+
+Scale notes: state is per-key and O(1) or O(window) per key; the
+shuffle is the groupBy on the key, identical to what any keyed
+stateful op pays. Arrow moves each key-batch into pandas, so
+per-event Python overhead is amortized per batch, not paid per row.
 """
 
 from __future__ import annotations
 
 import math
-from typing import TYPE_CHECKING, Any, Iterator, Tuple
+from typing import TYPE_CHECKING, Any, Callable, Iterator, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -34,18 +42,77 @@ from pyspark.sql.types import (
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("session_value", DoubleType()),
-    ]
-)
+
+def _round6_half_up(x: float) -> float:
+    """HALF-UP (away from zero) 6-decimal rounding, matching Spark's
+    round() rather than Python's banker's rounding. ONE copy on
+    purpose: every stream==batch contract in this module leans on this
+    exact rule, so all kernels must share it."""
+    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
+
+
+def _us(col: "pd.Series") -> "pd.Series":
+    """Timestamp column -> epoch microseconds, the unit every fold and
+    every stored state in this module uses."""
+    return col.astype("int64") // 1000
+
+
+def _keyed_fold(
+    df: DataFrame,
+    key_col: str,
+    order_cols: list[str],
+    fields: list[StructField],
+    state_schema: StructType,
+    fold: Callable[[Any, "pd.DataFrame"], tuple[list[tuple], tuple]],
+) -> DataFrame:
+    """Bind a per-key fold as a stateful streaming operator — the one
+    ``applyInPandasWithState`` call site in this module.
+
+    Per key and micro-batch, the key's rows are concatenated and sorted
+    by ``order_cols``; ``fold(state, batch)`` receives the stored state
+    tuple (None for a key never seen) and returns (rows, new state).
+    Each row is a tuple in ``fields`` order, with TimestampType fields
+    as epoch µs. The output leads with the key under ``key_col``'s own
+    name and input type, so a non-default key never comes back renamed
+    or retyped. State moves only when the key's events arrive.
+    """
+    out_schema = StructType(
+        [StructField(key_col, df.schema[key_col].dataType), *fields]
+    )
+    cols = [(f.name, isinstance(f.dataType, TimestampType)) for f in fields]
+
+    def _fn(
+        key: Tuple[Any, ...],
+        pdfs: Iterator["pd.DataFrame"],
+        state: GroupState,
+    ) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        batch = pd.concat(list(pdfs)).sort_values(order_cols)
+        rows, new_state = fold(tuple(state.get) if state.exists else None, batch)
+        state.update(tuple(new_state))
+        if rows:
+            out = {key_col: [key[0]] * len(rows)}
+            for i, (name, is_ts) in enumerate(cols):
+                vals = [r[i] for r in rows]
+                out[name] = pd.to_datetime(vals, unit="us") if is_ts else vals
+            yield pd.DataFrame(out)
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        _fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Gap sessionization
+# ---------------------------------------------------------------------------
 
 # open-session state: (start_us, end_us, n_events, value_sum)
-_STATE_SCHEMA = StructType(
+_SESSION_STATE = StructType(
     [
         StructField("start_us", LongType()),
         StructField("end_us", LongType()),
@@ -55,100 +122,63 @@ _STATE_SCHEMA = StructType(
 )
 
 
+def _advance_session(state, ts_us, values, gap_us):
+    """Fold one key's ts-ordered batch into its open session; return
+    (closed sessions, new open session). A session closes when the
+    next event comes more than ``gap_us`` after its end — the same
+    rule as the batch form (queries_ext3.q_sessionization), which sees
+    all data. The last session stays open in state: only a later event
+    can prove it closed."""
+    open_sess = None if state is None else list(state)
+    closed = []
+    for t, v in zip(ts_us, values):
+        t, v = int(t), float(v)
+        if open_sess is None:
+            open_sess = [t, t, 1, v]
+        elif t - open_sess[1] > gap_us:
+            closed.append(tuple(open_sess))
+            open_sess = [t, t, 1, v]
+        else:
+            # late events inside the gap extend, never shrink
+            open_sess[1] = max(open_sess[1], t)
+            open_sess[2] += 1
+            open_sess[3] += v
+    return closed, tuple(open_sess)
+
+
 def sessionize_stream(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
     gap_minutes: int = 30,
-    timeout: bool = False,
 ) -> DataFrame:
     """Split each key's event stream into sessions separated by more
     than ``gap_minutes`` of inactivity; emit a session row the moment a
     later event (possibly in a later micro-batch) proves it closed.
-
-    The open session per key lives in Spark state across micro-batches.
-    With ``timeout=True`` an open session is flushed once processing
-    time exceeds the gap with no new events; otherwise open sessions
-    close only when a late-enough event arrives (matching the batch
-    form in queries_ext3.q_sessionization, which sees all data).
-    """
+    The open session per key lives in Spark state across micro-batches
+    and closes only when a late-enough event arrives."""
     gap_us = gap_minutes * 60 * 1_000_000
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def emit(rows: list[tuple[int, int, int, float]]) -> "pd.DataFrame":
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(rows),
-                    "session_start": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "session_end": pd.to_datetime([r[1] for r in rows], unit="us"),
-                    "n_events": [r[2] for r in rows],
-                    "session_value": [r[3] for r in rows],
-                }
-            )
-
-        if state.hasTimedOut:
-            start_us, end_us, n, total = state.get
-            state.remove()
-            yield emit([(start_us, end_us, n, total)])
-            return
-
-        batch = pd.concat(list(pdfs)).sort_values(ts_col)
-        ts_us = batch[ts_col].astype("int64") // 1000
-        values = batch[value_col].astype("float64")
-
-        open_sess = list(state.get) if state.exists else None
-        closed: list[tuple[int, int, int, float]] = []
-        for t, v in zip(ts_us, values):
-            if open_sess is None:
-                open_sess = [t, t, 1, float(v)]
-            elif t - open_sess[1] > gap_us:
-                closed.append(tuple(open_sess))
-                open_sess = [t, t, 1, float(v)]
-            else:
-                # late events inside the gap extend, never shrink
-                open_sess[1] = max(open_sess[1], t)
-                open_sess[2] += 1
-                open_sess[3] += float(v)
-        state.update(tuple(open_sess))
-        if timeout:
-            state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        if closed:
-            yield emit(closed)
-
-    conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=conf,
+    return _keyed_fold(
+        events,
+        key_col,
+        [ts_col],
+        [
+            StructField("session_start", TimestampType()),
+            StructField("session_end", TimestampType()),
+            StructField("n_events", LongType()),
+            StructField("session_value", DoubleType()),
+        ],
+        _SESSION_STATE,
+        lambda state, b: _advance_session(
+            state, _us(b[ts_col]), b[value_col].astype("float64"), gap_us
+        ),
     )
 
 
 # ---------------------------------------------------------------------------
-# Per-key change alerts — one detection kernel, two stateful-API bindings
+# Per-key change alerts
 # ---------------------------------------------------------------------------
-
-ALERT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("prev_value", DoubleType()),
-        StructField("change_pct", DoubleType()),
-    ]
-)
 
 # cross-batch state: the key's last-seen event. ``seq`` is the
 # deterministic tiebreak for same-timestamp events (an event id when
@@ -161,33 +191,6 @@ _LAST_SCHEMA = StructType(
         StructField("value", DoubleType()),
     ]
 )
-# State-schema v1 — the (ts_us, value) layout from before the seq
-# tiebreak hardening. Spark validates the DECLARED state schema
-# against what the checkpoint stored, so a v2 (3-field) query cannot
-# open a v1 checkpoint (and Spark offers no in-place state
-# migration). ``change_alert_stream(state_schema_version=1)`` is the
-# operational escape hatch: it declares THIS schema, keeps old
-# checkpoints restartable, and runs the same kernel with seq=0
-# (arrival-order tie resolution — exactly the old behavior).
-# Upgrading to v2 for the deterministic tiebreak requires a fresh
-# checkpoint (see COVERAGE.md "State-schema versions").
-_LAST_SCHEMA_V1 = StructType(
-    [
-        StructField("ts_us", LongType()),
-        StructField("value", DoubleType()),
-    ]
-)
-CHANGE_ALERT_STATE_VERSION = 2  # current default; suffix checkpoints with it
-
-
-def _round6_half_up(x: float) -> float:
-    """HALF-UP (away from zero) 6-decimal rounding, matching Spark's
-    round() rather than Python's banker's rounding. ONE copy on
-    purpose: every stream==batch contract in this module leans on this
-    exact rule, so all kernels must share it."""
-    import math
-
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
 
 
 def _detect_changes(prev, ts_us, values, pct, seqs=None):
@@ -225,50 +228,13 @@ def _detect_changes(prev, ts_us, values, pct, seqs=None):
     return out, prev
 
 
-def _alerts_frame(key, rows):
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "user_id": [key] * len(rows),
-            "ts": pd.to_datetime([r[0] for r in rows], unit="us"),
-            "value": [r[1] for r in rows],
-            "prev_value": [r[2] for r in rows],
-            "change_pct": [r[3] for r in rows],
-        }
-    )
-
-
-def has_transform_with_state_runtime() -> bool:
-    """transformWithState's state-server protocol is protobuf-based;
-    the PySpark side needs the ``protobuf`` package at PYTHON-WORKER
-    runtime (pyspark/sql/streaming/proto/StateMessage_pb2.py imports
-    google.protobuf). Absent → the query crashes at state-schema
-    validation, so bind the fallback API instead.
-
-    Caveat: this probes the DRIVER interpreter — correct in local
-    mode (driver and workers share one environment), best-effort on a
-    cluster whose executor images differ from the driver's. For
-    heterogeneous deployments pass ``api="apply"``/``api="tws"``
-    explicitly instead of trusting ``auto``."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def change_alert_stream(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
     pct: float = 0.5,
-    api: str = "auto",
-    state_ttl_ms: int | None = None,
     seq_col: str | None = None,
-    state_schema_version: int = 2,
 ) -> DataFrame:
     """Per-key change detection across micro-batches: emit an alert row
     whenever a key's value moves more than ``pct`` (relative) against
@@ -277,155 +243,40 @@ def change_alert_stream(
     classifier (a5 / operators.aggregates) and the engine-side version
     of the reference's poll-and-alert monitor loop (monitor_errors.py
     greps logs on a timer; here state lives in the engine and alerting
-    is event-driven).
-
-    ``api`` selects the stateful binding, both over the SAME kernel:
-
-    - ``"tws"`` — Spark 4 ``transformWithStateInPandas`` (SPARK-46815):
-      named/typed per-variable state, native TTL (``state_ttl_ms`` —
-      state hygiene at 100 TB key cardinality without hand-rolled
-      timers), RocksDB state store (spills to disk instead of growing
-      the heap with key count). Requires the ``protobuf`` package at
-      worker runtime.
-    - ``"apply"`` — ``applyInPandasWithState``, the 3.4+ API; no
-      runtime deps beyond Arrow. TTL is not supported here (ignored).
-    - ``"auto"`` (default) — tws when its runtime is present, else
-      apply. Either way per-key state is ONE (ts, seq, value) tuple —
-      O(keys) total, the minimum any cross-batch comparator holds.
+    is event-driven). Per-key state is ONE (ts, seq, value) tuple —
+    O(keys) total, the minimum any cross-batch comparator holds.
 
     ``seq_col`` names a monotone-per-key column (an event id) used as
     the tiebreak for same-timestamp events; without it two same-ts
     events for one key resolve by arrival order, which can differ
     between replays (and from the batch lag() twin). Pass it whenever
     the source has a stable id.
-
-    ``state_schema_version`` selects the stored per-key state layout:
-    2 (default) is the current (ts_us, seq, value) tuple; 1 is the
-    pre-seq (ts_us, value) layout — pass 1 to RESTART a checkpoint
-    written before the tiebreak hardening (Spark rejects a schema
-    change against a live checkpoint and cannot migrate state
-    in-place). v1 runs the same kernel with seq pinned to 0 and is
-    incompatible with ``seq_col``.
     """
-    if api == "auto":
-        api = "tws" if has_transform_with_state_runtime() else "apply"
-    if state_schema_version not in (1, 2):
-        raise ValueError(f"state_schema_version must be 1 or 2, got {state_schema_version}")
-    if state_schema_version == 1 and seq_col is not None:
-        raise ValueError(
-            "state_schema_version=1 (ts_us, value) cannot store the seq tiebreak; "
-            "drop seq_col or start a fresh v2 checkpoint"
-        )
-    state_schema = _LAST_SCHEMA if state_schema_version == 2 else _LAST_SCHEMA_V1
 
-    def _load(stored):
-        """Stored state tuple -> kernel (ts_us, seq, value)."""
-        if stored is None:
-            return None
-        if state_schema_version == 2:
-            return stored
-        return (stored[0], 0, stored[1])
-
-    def _store(prev):
-        """Kernel (ts_us, seq, value) -> stored state tuple."""
-        if state_schema_version == 2:
-            return prev
-        return (prev[0], prev[2])
-
-    sort_cols = [ts_col] if seq_col is None else [ts_col, seq_col]
-
-    def _seqs(batch):
-        return None if seq_col is None else batch[seq_col].astype("int64")
-
-    if api == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
+    def _fold(prev, b):
+        seqs = None if seq_col is None else b[seq_col].astype("int64")
+        return _detect_changes(
+            prev, _us(b[ts_col]), b[value_col].astype("float64"), pct, seqs=seqs
         )
 
-        class _ChangeDetector(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._last = handle.getValueState(
-                    "last", state_schema, state_ttl_ms
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as pd
-
-                batch = pd.concat(list(rows)).sort_values(sort_cols)
-                prev = _load(self._last.get() if self._last.exists() else None)
-                out, prev = _detect_changes(
-                    prev,
-                    batch[ts_col].astype("int64") // 1000,
-                    batch[value_col].astype("float64"),
-                    pct,
-                    seqs=_seqs(batch),
-                )
-                self._last.update(_store(prev))
-                if out:
-                    yield _alerts_frame(key[0], out)
-
-            def close(self) -> None:
-                pass
-
-        return events.groupBy(key_col).transformWithStateInPandas(
-            statefulProcessor=_ChangeDetector(),
-            outputStructType=ALERT_SCHEMA,
-            outputMode="append",
-            # TTL state is only legal under processing-time semantics
-            # (Spark raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_
-            # ASSIGN_TTL otherwise), so the mode follows the TTL ask.
-            timeMode="processingTime" if state_ttl_ms else "none",
-        )
-
-    if api != "apply":
-        raise ValueError(f"unknown api {api!r}; one of auto/tws/apply")
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(sort_cols)
-        prev = _load(tuple(state.get) if state.exists else None)
-        out, prev = _detect_changes(
-            prev,
-            batch[ts_col].astype("int64") // 1000,
-            batch[value_col].astype("float64"),
-            pct,
-            seqs=_seqs(batch),
-        )
-        state.update(tuple(_store(prev)))
-        if out:
-            yield _alerts_frame(key[0], out)
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        events,
+        key_col,
+        [ts_col] if seq_col is None else [ts_col, seq_col],
+        [
+            StructField("ts", TimestampType()),
+            StructField("value", DoubleType()),
+            StructField("prev_value", DoubleType()),
+            StructField("change_pct", DoubleType()),
+        ],
+        _LAST_SCHEMA,
+        _fold,
     )
 
 
 # ---------------------------------------------------------------------------
 # Streaming SMA crossover — golden/death-cross alerts over a candle stream
 # ---------------------------------------------------------------------------
-
-CROSS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("day", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("sma_s", DoubleType()),
-        StructField("sma_l", DoubleType()),
-        # None on warmed days without a cross — emitted anyway so the
-        # stream is row-equal to the batch form, not just alert-equal
-        StructField("signal", StringType()),
-    ]
-)
 
 # cross-batch state: the trailing `long` closes (day-ordered) plus
 # whether the PREVIOUS emitted day had a fully-warmed long window and
@@ -492,53 +343,24 @@ def sma_cross_stream(
     ``long`` closes across micro-batches, so a cross whose two sides
     arrive in different batches still fires; state is O(long) per key
     regardless of stream length, and keys shard across executors on
-    the groupBy — the same scaling shape as every stateful op here.
-
-    The output key column is named ``key_col`` and typed from the
-    input schema (CROSS_SCHEMA documents the default user_id shape) —
-    a non-default key must not silently come back renamed."""
-    out_schema = StructType(
+    the groupBy — the same scaling shape as every stateful op here."""
+    return _keyed_fold(
+        daily,
+        key_col,
+        [day_col],
         [
-            StructField(key_col, daily.schema[key_col].dataType),
-            *CROSS_SCHEMA.fields[1:],
-        ]
-    )
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(day_col)
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_cross(
-            prev,
-            batch[day_col].astype("int64") // 1000,
-            batch[close_col].astype("float64"),
-            short,
-            long,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "sma_s": [r[2] for r in rows],
-                    "sma_l": [r[3] for r in rows],
-                    "signal": [r[4] for r in rows],
-                }
-            )
-
-    return daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_CROSS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+            StructField("day", TimestampType()),
+            StructField("close", DoubleType()),
+            StructField("sma_s", DoubleType()),
+            StructField("sma_l", DoubleType()),
+            # None on warmed days without a cross — emitted anyway so the
+            # stream is row-equal to the batch form, not just alert-equal
+            StructField("signal", StringType()),
+        ],
+        _CROSS_STATE,
+        lambda state, b: _advance_cross(
+            state, _us(b[day_col]), b[close_col].astype("float64"), short, long
+        ),
     )
 
 
@@ -617,54 +439,22 @@ def bollinger_stream(
     warm rule, same rounded bands, same ABOVE/IN/BELOW classification,
     with the trailing window carried across micro-batches. State is
     O(periods) per key; keys shard across executors on the groupBy."""
-    out_schema = StructType(
+    return _keyed_fold(
+        daily,
+        key_col,
+        [day_col],
         [
-            StructField(key_col, daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("close", DoubleType()),
             StructField("mid", DoubleType()),
             StructField("upper", DoubleType()),
             StructField("lower", DoubleType()),
             StructField("position", StringType()),
-        ]
-    )
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(day_col)
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_bollinger(
-            prev,
-            batch[day_col].astype("int64") // 1000,
-            batch[close_col].astype("float64"),
-            periods,
-            n_std,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "mid": [r[2] for r in rows],
-                    "upper": [r[3] for r in rows],
-                    "lower": [r[4] for r in rows],
-                    "position": [r[5] for r in rows],
-                }
-            )
-
-    return daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_BOLL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        _BOLL_STATE,
+        lambda state, b: _advance_bollinger(
+            state, _us(b[day_col]), b[close_col].astype("float64"), periods, n_std
+        ),
     )
 
 
@@ -707,48 +497,20 @@ def ewma_stream(
     streaming twin of operators/indicators.ewma (the mapInPandas
     partition fold): same recursion, same IEEE op order, values carry
     across micro-batches through O(1) state per key."""
-    out_schema = StructType(
+    a = float(alpha)
+    return _keyed_fold(
+        daily,
+        key_col,
+        [day_col],
         [
-            StructField(key_col, daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("close", DoubleType()),
             StructField("ewma", DoubleType()),
-        ]
-    )
-    a = float(alpha)
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(day_col)
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_ewma(
-            prev,
-            batch[day_col].astype("int64") // 1000,
-            batch[close_col].astype("float64"),
-            a,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "ewma": [r[2] for r in rows],
-                }
-            )
-
-    return daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_EWMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        _EWMA_STATE,
+        lambda state, b: _advance_ewma(
+            state, _us(b[day_col]), b[close_col].astype("float64"), a
+        ),
     )
 
 
@@ -816,43 +578,19 @@ def rsi_stream(
 ) -> DataFrame:
     """Streaming Wilder RSI — twin of operators/indicators.rsi: same
     seed + recursion through O(1) state per key."""
-    out_schema = StructType(
+    return _keyed_fold(
+        daily,
+        key_col,
+        [day_col],
         [
-            StructField(key_col, daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("close", DoubleType()),
             StructField("rsi", DoubleType()),
-        ]
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(day_col)
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_rsi(
-            prev,
-            batch[day_col].astype("int64") // 1000,
-            batch[close_col].astype("float64"),
-            periods,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "rsi": [r[2] for r in rows],
-                }
-            )
-
-    return daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_RSI_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        _RSI_STATE,
+        lambda state, b: _advance_rsi(
+            state, _us(b[day_col]), b[close_col].astype("float64"), periods
+        ),
     )
 
 
@@ -898,45 +636,24 @@ def atr_stream(
 ) -> DataFrame:
     """Streaming ATR — twin of operators/indicators.atr over a daily
     OHLC stream; O(periods) state per key."""
-    out_schema = StructType(
+    return _keyed_fold(
+        ohlcv_daily,
+        key_col,
+        ["day"],
         [
-            StructField(key_col, ohlcv_daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("tr", DoubleType()),
             StructField("atr", DoubleType()),
-        ]
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values("day")
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_atr(
-            prev,
-            batch["day"].astype("int64") // 1000,
-            batch["high"].astype("float64"),
-            batch["low"].astype("float64"),
-            batch["close"].astype("float64"),
+        ],
+        _ATR_STATE,
+        lambda state, b: _advance_atr(
+            state,
+            _us(b["day"]),
+            b["high"].astype("float64"),
+            b["low"].astype("float64"),
+            b["close"].astype("float64"),
             periods,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "tr": [r[1] for r in rows],
-                    "atr": [r[2] for r in rows],
-                }
-            )
-
-    return ohlcv_daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_ATR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
     )
 
 
@@ -990,48 +707,26 @@ def stochastic_stream(
 ) -> DataFrame:
     """Streaming stochastic oscillator — twin of
     operators/indicators.stochastic; O(periods) state per key."""
-    out_schema = StructType(
+    return _keyed_fold(
+        ohlcv_daily,
+        key_col,
+        ["day"],
         [
-            StructField(key_col, ohlcv_daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("close", DoubleType()),
             StructField("pct_k", DoubleType()),
             StructField("pct_d", DoubleType()),
-        ]
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values("day")
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_stoch(
-            prev,
-            batch["day"].astype("int64") // 1000,
-            batch["high"].astype("float64"),
-            batch["low"].astype("float64"),
-            batch["close"].astype("float64"),
+        ],
+        _STOCH_STATE,
+        lambda state, b: _advance_stoch(
+            state,
+            _us(b["day"]),
+            b["high"].astype("float64"),
+            b["low"].astype("float64"),
+            b["close"].astype("float64"),
             periods,
             smooth,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "pct_k": [r[2] for r in rows],
-                    "pct_d": [r[3] for r in rows],
-                }
-            )
-
-    return ohlcv_daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_STOCH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
     )
 
 
@@ -1072,43 +767,22 @@ def obv_stream(
     key_col: str = "user_id",
 ) -> DataFrame:
     """Streaming OBV — twin of operators/indicators.obv; O(1) state."""
-    out_schema = StructType(
+    return _keyed_fold(
+        ohlcv_daily,
+        key_col,
+        ["day"],
         [
-            StructField(key_col, ohlcv_daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("close", DoubleType()),
             StructField("obv", LongType()),
-        ]
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values("day")
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_obv(
-            prev,
-            batch["day"].astype("int64") // 1000,
-            batch["close"].astype("float64"),
-            batch["n_trades"].astype("int64"),
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "obv": [r[2] for r in rows],
-                }
-            )
-
-    return ohlcv_daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_OBV_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        _OBV_STATE,
+        lambda state, b: _advance_obv(
+            state,
+            _us(b["day"]),
+            b["close"].astype("float64"),
+            b["n_trades"].astype("int64"),
+        ),
     )
 
 
@@ -1158,50 +832,19 @@ def holt_stream(
     """Streaming Holt linear-trend smoothing + one-step-ahead forecast
     — the streaming twin of operators/indicators.holt; level/trend
     carry across micro-batches through O(1) state per key."""
-    out_schema = StructType(
+    return _keyed_fold(
+        daily,
+        key_col,
+        [day_col],
         [
-            StructField(key_col, daily.schema[key_col].dataType),
             StructField("day", TimestampType()),
             StructField("close", DoubleType()),
             StructField("level", DoubleType()),
             StructField("trend", DoubleType()),
             StructField("fc_next", DoubleType()),
-        ]
-    )
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(day_col)
-        prev = tuple(state.get) if state.exists else None
-        rows, new_state = _advance_holt(
-            prev,
-            batch[day_col].astype("int64") // 1000,
-            batch[close_col].astype("float64"),
-            alpha,
-            beta,
-        )
-        state.update(tuple(new_state))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(rows),
-                    "day": pd.to_datetime([r[0] for r in rows], unit="us"),
-                    "close": [r[1] for r in rows],
-                    "level": [r[2] for r in rows],
-                    "trend": [r[3] for r in rows],
-                    "fc_next": [r[4] for r in rows],
-                }
-            )
-
-    return daily.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_HOLT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        _HOLT_STATE,
+        lambda state, b: _advance_holt(
+            state, _us(b[day_col]), b[close_col].astype("float64"), alpha, beta
+        ),
     )

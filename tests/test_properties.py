@@ -10,6 +10,9 @@ not volume.
 
 from __future__ import annotations
 
+import itertools
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -152,6 +155,38 @@ def test_morton_code_matches_reference_bit_interleave(spark, pts):
         assert r.z == _ref_morton(r.x, r.y, 16), (r.x, r.y, r.z)
 
 
+def _fold_inputs(values):
+    """Per-event input columns for the stateful folds, derived from one
+    drawn value sequence: strictly increasing days, OHLC around the
+    close, integer volumes, and session timestamps whose steps (0-100
+    µs) straddle a 30 µs gap."""
+    return {
+        "days": list(range(1, len(values) + 1)),
+        "ts": list(itertools.accumulate(int(v) for v in values)),
+        "closes": values,
+        "highs": [v * 1.1 for v in values],
+        "lows": [v * 0.9 for v in values],
+        "volumes": [int(v * 10) for v in values],
+    }
+
+
+# fold -> (input columns, parameters), both in the fold's positional
+# order after the state argument
+_FOLDS = {
+    "_advance_session": (("ts", "closes"), (30,)),
+    "_detect_changes": (("days", "closes"), (0.25,)),
+    "_advance_cross": (("days", "closes"), (2, 4)),
+    "_advance_bollinger": (("days", "closes"), (4, 2.0)),
+    "_advance_ewma": (("days", "closes"), (0.2,)),
+    "_advance_rsi": (("days", "closes"), (3,)),
+    "_advance_atr": (("days", "highs", "lows", "closes"), (3,)),
+    "_advance_stoch": (("days", "highs", "lows", "closes"), (3, 2)),
+    "_advance_obv": (("days", "closes", "volumes"), ()),
+    "_advance_holt": (("days", "closes"), (0.2, 0.1)),
+}
+
+
+@pytest.mark.parametrize("fold_name", list(_FOLDS))
 @given(
     values=st.lists(
         st.floats(min_value=0.5, max_value=100.0, allow_nan=False),
@@ -161,18 +196,22 @@ def test_morton_code_matches_reference_bit_interleave(spark, pts):
     n_cuts=st.integers(0, 3),
     data=st.data(),
 )
-@settings(**_SETTINGS)
-def test_change_alert_kernel_invariant_under_batch_splits(values, n_cuts, data):
+@settings(max_examples=25, deadline=None)
+def test_fold_invariant_under_batch_splits(fold_name, values, n_cuts, data):
     """Micro-batch boundaries are an accident of arrival, not of
-    semantics: running the change-detection kernel over ANY split of
-    an ordered event sequence must produce exactly the alerts of the
-    single-batch run, with state threaded across the cuts. Pure-Python
-    kernel property — this is the invariant the stream==batch Spark
+    semantics: folding an ordered event sequence through ANY split
+    must emit exactly the rows of the single-batch fold, with state
+    threaded across the cuts. The state round-trips through tuple()
+    at each cut, the way the stream binder stores it. Pure-Python
+    kernel property — this is the invariant each stream==batch Spark
     test samples once; here it's exercised across random splits."""
-    from streaming_data_spark.streaming.stateful import _detect_changes
+    from streaming_data_spark.streaming import stateful
 
-    ts = list(range(1, len(values) + 1))
-    whole, _ = _detect_changes(None, ts, values, pct=0.25)
+    fold = getattr(stateful, fold_name)
+    col_names, params = _FOLDS[fold_name]
+    inputs = _fold_inputs(values)
+    cols = [inputs[c] for c in col_names]
+    whole, _ = fold(None, *cols, *params)
 
     n_cuts = min(n_cuts, len(values) - 1)  # only len-1 distinct cut points exist
     cuts = sorted(
@@ -189,7 +228,8 @@ def test_change_alert_kernel_invariant_under_batch_splits(values, n_cuts, data):
     state = None
     pieced = []
     for lo, hi in zip(bounds, bounds[1:]):
-        out, state = _detect_changes(state, ts[lo:hi], values[lo:hi], pct=0.25)
+        out, state = fold(state, *(c[lo:hi] for c in cols), *params)
+        state = tuple(state)
         pieced.extend(out)
     assert pieced == whole
 
@@ -315,47 +355,6 @@ def test_cdc_diff_classification_tiles_the_key_space(spark, old_keys, new_keys, 
             n = None if k % 7 == 0 else float(k) * (2.0 if k in changed else 1.0)
             want.add((k, "U" if o != n else None))
     assert got == want
-
-
-@given(
-    values=st.lists(
-        st.floats(min_value=0.5, max_value=100.0, allow_nan=False),
-        min_size=6,
-        max_size=40,
-    ),
-    n_cuts=st.integers(0, 3),
-    data=st.data(),
-)
-@settings(**_SETTINGS)
-def test_sma_cross_kernel_invariant_under_batch_splits(values, n_cuts, data):
-    """Same invariant as the change-alert kernel, for the trailing-
-    window crossover state: folding a day-ordered close sequence
-    through ANY micro-batch split must emit exactly the rows (and
-    signals) of the single-batch fold, with the O(long) window state
-    threaded across the cuts."""
-    from streaming_data_spark.streaming.stateful import _advance_cross
-
-    days = list(range(1, len(values) + 1))
-    whole, _ = _advance_cross(None, days, values, short=2, long=4)
-
-    n_cuts = min(n_cuts, len(values) - 1)
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.integers(1, len(values) - 1),
-                min_size=n_cuts,
-                max_size=n_cuts,
-                unique=True,
-            )
-        )
-    )
-    bounds = [0, *cuts, len(values)]
-    state = None
-    pieced = []
-    for lo, hi in zip(bounds, bounds[1:]):
-        out, state = _advance_cross(state, days[lo:hi], values[lo:hi], short=2, long=4)
-        pieced.extend(out)
-    assert pieced == whole
 
 
 @given(

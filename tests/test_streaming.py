@@ -595,7 +595,7 @@ def test_backpressure_caps_rows_per_microbatch(spark, sf_small, tmp_path):
     assert max(sizes) <= 10, sizes  # 2 files/trigger × ≤5 rows/file
 
 
-def _drive_change_alerts(spark, sf_small, tmp_path, api):
+def _drive_change_alerts(spark, sf_small, tmp_path):
     """Feed 300 ts-ordered events through 3 micro-batches and return
     (streamed alert set, batch-twin alert set)."""
     import os
@@ -612,7 +612,7 @@ def _drive_change_alerts(spark, sf_small, tmp_path, api):
     )
     pdf = events.toPandas().sort_values(["ts", "event_id"]).reset_index(drop=True)
 
-    src = tmp_path / f"alerts_in_{api}"
+    src = tmp_path / "alerts_in"
     src.mkdir()
     for i, chunk in enumerate((pdf.iloc[:100], pdf.iloc[100:200], pdf.iloc[200:])):
         p = src / f"part-{i}.json"
@@ -635,16 +635,16 @@ def _drive_change_alerts(spark, sf_small, tmp_path, api):
     )
     # seq_col: same-ts events resolve by event_id, matching the batch
     # twin's lag ordering below (determinism across replays).
-    alerts = change_alert_stream(stream, pct=0.5, api=api, seq_col="event_id")
+    alerts = change_alert_stream(stream, pct=0.5, seq_col="event_id")
     writer = (
         alerts.writeStream.format("memory")
-        .queryName(f"alerts_{api}")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{api}"))
+        .queryName("alerts")
+        .option("checkpointLocation", str(tmp_path / "ckpt_alerts"))
     )
     sp.run_to_completion(writer)
     got = {
         (r.user_id, r.ts, round(r.value, 4), round(r.prev_value, 4), r.change_pct)
-        for r in spark.sql(f"SELECT * FROM alerts_{api}").collect()
+        for r in spark.sql("SELECT * FROM alerts").collect()
     }
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -672,35 +672,40 @@ def _drive_change_alerts(spark, sf_small, tmp_path, api):
 def test_change_alert_stream_matches_batch(spark, sf_small, tmp_path):
     """T6 — per-key change alerts: state (last seen event) must
     survive micro-batch boundaries, and the streamed alert set must
-    equal the batch lag() computation. Default binding (auto resolves
-    to applyInPandasWithState in this container)."""
-    got, want = _drive_change_alerts(spark, sf_small, tmp_path, api="auto")
+    equal the batch lag() computation."""
+    got, want = _drive_change_alerts(spark, sf_small, tmp_path)
     assert got == want
     assert len(got) > 0  # the threshold actually fires on this data
 
 
-def test_change_alert_stream_tws_binding(spark, sf_small, tmp_path):
-    """Same contract through the Spark 4 transformWithStateInPandas
-    binding. Its state-server protocol needs protobuf at worker
-    runtime — skip (with the named dependency) where absent."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol requires protobuf",
+def test_change_alert_stream_runs_on_string_key(spark, tmp_path):
+    """The alert rows carry the input's key column under its own name
+    and type: a string key must run to completion and come back as
+    strings, not fail the query at the first alert."""
+    import pandas as pd
+
+    from streaming_data_spark.streaming.stateful import change_alert_stream
+
+    src = tmp_path / "sym_src"
+    src.mkdir()
+    pd.DataFrame(
+        {
+            "sym": ["A"] * 3 + ["B"] * 3,
+            "ts": [f"2024-01-0{d}T00:00:00" for d in (1, 2, 3)] * 2,
+            "value": [10.0, 20.0, 21.0, 5.0, 5.1, 1.0],
+        }
+    ).to_json(src / "b1.json", orient="records", lines=True)
+    schema = (
+        StructType().add("sym", "string").add("ts", "timestamp").add("value", "double")
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    alerts = change_alert_stream(
+        spark.readStream.schema(schema).json(str(src)), key_col="sym", pct=0.5
     )
-    try:
-        got, want = _drive_change_alerts(spark, sf_small, tmp_path, api="tws")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert got == want
-    assert len(got) > 0
+    got = {
+        (r.sym, r.value, r.prev_value)
+        for r in _drain(spark, alerts, "sym_alerts", tmp_path).collect()
+    }
+    assert got == {("A", 20.0, 10.0), ("B", 1.0, 5.1)}, got
 
 
 def test_stream_stream_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
@@ -1138,19 +1143,17 @@ def test_sma_cross_state_survives_query_restart(spark, sf_small, tmp_path):
     assert first and (everything - first), "both lives must emit"
 
 
-def test_change_alert_v1_state_schema_restartable_checkpoint(spark, tmp_path):
-    """state_schema_version=1 declares the pre-seq (ts_us, value)
-    state layout: alerts must still match the batch lag() twin AND a
-    restart against the same checkpoint must carry the 2-field state
-    across runs (the operational reason v1 exists — v2 cannot open a
-    v1 checkpoint, Spark refuses state-schema changes in place)."""
+def test_change_alert_state_survives_query_restart(spark, tmp_path):
+    """The per-key (ts, seq, value) alert state must survive a full
+    query stop/restart through the checkpoint: an alert whose two
+    events straddle the restart still fires, and nothing replays."""
     import os
 
     import pandas as pd
 
     from streaming_data_spark.streaming.stateful import change_alert_stream
 
-    # unique ts per key (v1 has no tiebreak, keep the twin total-ordered)
+    # unique ts per key: no seq_col needed to keep the twin total-ordered
     rows = pd.DataFrame(
         {
             "user_id": [1] * 4 + [2] * 4,
@@ -1160,19 +1163,17 @@ def test_change_alert_v1_state_schema_restartable_checkpoint(spark, tmp_path):
             "value": [10.0, 11.0, 30.0, 5.0, 100.0, 90.0, 10.0, 40.0],
         }
     )
-    src = tmp_path / "v1_src"
+    src = tmp_path / "restart_src"
     src.mkdir()
-    out = str(tmp_path / "v1_out")
-    ckpt = str(tmp_path / "v1_ckpt")
+    out = str(tmp_path / "restart_out")
+    ckpt = str(tmp_path / "restart_ckpt")
     schema = (
         StructType().add("user_id", "long").add("ts", "timestamp").add("value", "double")
     )
 
     def _run_once() -> None:
         stream = spark.readStream.schema(schema).json(str(src))
-        alerts = change_alert_stream(
-            stream, pct=0.5, api="apply", state_schema_version=1
-        )
+        alerts = change_alert_stream(stream, pct=0.5)
         q = (
             alerts.writeStream.format("parquet")
             .option("path", out)
@@ -1192,7 +1193,7 @@ def test_change_alert_v1_state_schema_restartable_checkpoint(spark, tmp_path):
     _dump(rows.iloc[:4], "b1.json", 1_700_000_000)
     _run_once()
     # second run: the cross-run alert (user 2: 100 -> 10 and 10 -> 40)
-    # only fires if the v1 state survived the checkpoint round-trip
+    # only fires if the state survived the checkpoint round-trip
     _dump(rows.iloc[4:], "b2.json", 1_700_000_100)
     _run_once()
 
@@ -1209,34 +1210,43 @@ def test_change_alert_v1_state_schema_restartable_checkpoint(spark, tmp_path):
     assert got == want, got
 
 
-def test_change_alert_v1_rejects_seq_col(spark, tmp_path):
-    import pandas as pd  # noqa: F401
-
-    from streaming_data_spark.streaming.stateful import change_alert_stream
-
-    schema = (
-        StructType().add("user_id", "long").add("ts", "timestamp").add("value", "double")
-    )
-    stream = spark.readStream.schema(schema).json(str(tmp_path))
-    with pytest.raises(ValueError, match="state_schema_version=1"):
-        change_alert_stream(
-            stream, api="apply", seq_col="event_id", state_schema_version=1
-        )
-
-
-def test_sma_cross_stream_respects_key_col_name(spark, tmp_path):
+@pytest.mark.parametrize(
+    "op",
+    [
+        "sessionize_stream",
+        "change_alert_stream",
+        "sma_cross_stream",
+        "bollinger_stream",
+        "ewma_stream",
+        "rsi_stream",
+        "atr_stream",
+        "stochastic_stream",
+        "obv_stream",
+        "holt_stream",
+    ],
+)
+def test_stateful_streams_respect_key_col_name(spark, tmp_path, op):
     """A non-default key column must come back under ITS name and
     type — not silently renamed to user_id (schema is built from the
     input; asserted without running the query)."""
-    from streaming_data_spark.streaming.stateful import sma_cross_stream
+    from streaming_data_spark.streaming import stateful
 
     schema = (
-        StructType().add("symbol", "string").add("day", "timestamp").add("close", "double")
+        StructType()
+        .add("symbol", "string")
+        .add("ts", "timestamp")
+        .add("value", "double")
+        .add("day", "timestamp")
+        .add("high", "double")
+        .add("low", "double")
+        .add("close", "double")
+        .add("n_trades", "long")
     )
     stream = spark.readStream.schema(schema).json(str(tmp_path))
-    out = sma_cross_stream(stream, key_col="symbol")
+    out = getattr(stateful, op)(stream, key_col="symbol")
     assert out.schema.fieldNames()[0] == "symbol"
     assert out.schema["symbol"].dataType.typeName() == "string"
+    assert "user_id" not in out.schema.fieldNames()
 
 
 def _daily_stream(spark, sf_small, tmp_path, tag):
