@@ -8,6 +8,7 @@ from ``streaming_data_spark.queries`` (SURVEY.md §2 coverage).
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -24,178 +25,40 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_j1_dim_fact_join(spark, "/root/testdata/sf0.001")
 
 
+# Merge order of the registry modules. The first 50 entries in
+# insertion order are the ones oracle-checked each round, so queries()
+# fronts _R17_WINDOW + _R17_TAIL; the rest keeps this historical wave
+# order.
+_MODULES = (
+    *(f"queries_ext{n}" for n in range(29, 66)),
+    "queries",
+    "queries_ext",
+    *(f"queries_ext{n}" for n in range(2, 29)),
+)
+
+
+def _merged(kind: str) -> dict:
+    """Merge each module's ``<PREFIX>_<kind>`` dict in ``_MODULES``
+    order (``CORE_`` for ``queries``, ``EXT<n>_`` for ``queries_ext<n>``)."""
+    out: dict = {}
+    for mod in _MODULES:
+        m = importlib.import_module(f"streaming_data_spark.{mod}")
+        prefix = "CORE" if mod == "queries" else mod.removeprefix("queries_").upper()
+        out.update(getattr(m, f"{prefix}_{kind}"))
+    return out
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    from streaming_data_spark.queries import CORE_QUERIES
-    from streaming_data_spark.queries_ext import EXT_QUERIES
-    from streaming_data_spark.queries_ext2 import EXT2_QUERIES
-    from streaming_data_spark.queries_ext3 import EXT3_QUERIES
-    from streaming_data_spark.queries_ext4 import EXT4_QUERIES
-    from streaming_data_spark.queries_ext5 import EXT5_QUERIES
-    from streaming_data_spark.queries_ext6 import EXT6_QUERIES
-    from streaming_data_spark.queries_ext7 import EXT7_QUERIES
-    from streaming_data_spark.queries_ext8 import EXT8_QUERIES
-    from streaming_data_spark.queries_ext9 import EXT9_QUERIES
-    from streaming_data_spark.queries_ext10 import EXT10_QUERIES
-    from streaming_data_spark.queries_ext11 import EXT11_QUERIES
-    from streaming_data_spark.queries_ext12 import EXT12_QUERIES
-    from streaming_data_spark.queries_ext13 import EXT13_QUERIES
-    from streaming_data_spark.queries_ext14 import EXT14_QUERIES
-    from streaming_data_spark.queries_ext15 import EXT15_QUERIES
-    from streaming_data_spark.queries_ext16 import EXT16_QUERIES
-    from streaming_data_spark.queries_ext17 import EXT17_QUERIES
-    from streaming_data_spark.queries_ext18 import EXT18_QUERIES
-    from streaming_data_spark.queries_ext19 import EXT19_QUERIES
-    from streaming_data_spark.queries_ext20 import EXT20_QUERIES
-    from streaming_data_spark.queries_ext21 import EXT21_QUERIES
-    from streaming_data_spark.queries_ext22 import EXT22_QUERIES
-    from streaming_data_spark.queries_ext23 import EXT23_QUERIES
-    from streaming_data_spark.queries_ext24 import EXT24_QUERIES
-    from streaming_data_spark.queries_ext25 import EXT25_QUERIES
-    from streaming_data_spark.queries_ext26 import EXT26_QUERIES
-    from streaming_data_spark.queries_ext27 import EXT27_QUERIES
-    from streaming_data_spark.queries_ext28 import EXT28_QUERIES
-    from streaming_data_spark.queries_ext29 import EXT29_QUERIES
-    from streaming_data_spark.queries_ext30 import EXT30_QUERIES
-    from streaming_data_spark.queries_ext31 import EXT31_QUERIES
-    from streaming_data_spark.queries_ext32 import EXT32_QUERIES
-    from streaming_data_spark.queries_ext33 import EXT33_QUERIES
-    from streaming_data_spark.queries_ext34 import EXT34_QUERIES
-    from streaming_data_spark.queries_ext35 import EXT35_QUERIES
-    from streaming_data_spark.queries_ext36 import EXT36_QUERIES
-    from streaming_data_spark.queries_ext37 import EXT37_QUERIES
-    from streaming_data_spark.queries_ext38 import EXT38_QUERIES
-    from streaming_data_spark.queries_ext39 import EXT39_QUERIES
-    from streaming_data_spark.queries_ext40 import EXT40_QUERIES
-    from streaming_data_spark.queries_ext41 import EXT41_QUERIES
-    from streaming_data_spark.queries_ext42 import EXT42_QUERIES
-    from streaming_data_spark.queries_ext43 import EXT43_QUERIES
-    from streaming_data_spark.queries_ext44 import EXT44_QUERIES
-    from streaming_data_spark.queries_ext45 import EXT45_QUERIES
-    from streaming_data_spark.queries_ext46 import EXT46_QUERIES
-    from streaming_data_spark.queries_ext47 import EXT47_QUERIES
-    from streaming_data_spark.queries_ext48 import EXT48_QUERIES
-    from streaming_data_spark.queries_ext49 import EXT49_QUERIES
-    from streaming_data_spark.queries_ext50 import EXT50_QUERIES
-    from streaming_data_spark.queries_ext51 import EXT51_QUERIES
-    from streaming_data_spark.queries_ext52 import EXT52_QUERIES
-    from streaming_data_spark.queries_ext53 import EXT53_QUERIES
-    from streaming_data_spark.queries_ext54 import EXT54_QUERIES
-    from streaming_data_spark.queries_ext55 import EXT55_QUERIES
-    from streaming_data_spark.queries_ext56 import EXT56_QUERIES
-    from streaming_data_spark.queries_ext57 import EXT57_QUERIES
-    from streaming_data_spark.queries_ext58 import EXT58_QUERIES
-    from streaming_data_spark.queries_ext59 import EXT59_QUERIES
-    from streaming_data_spark.queries_ext60 import EXT60_QUERIES
-    from streaming_data_spark.queries_ext61 import EXT61_QUERIES
-    from streaming_data_spark.queries_ext62 import EXT62_QUERIES
-    from streaming_data_spark.queries_ext63 import EXT63_QUERIES
-    from streaming_data_spark.queries_ext64 import EXT64_QUERIES
-    from streaming_data_spark.queries_ext65 import EXT65_QUERIES
-
-    # Merge order is deliberate: the grading driver oracle-checks the
-    # FIRST 50 entries in insertion order. Round-7 rotation (r6
-    # verdict item 6): front the 50 LEAST-recently-driver-checked
-    # queries — computed as min(last window round) over
-    # CORRECTNESS_r01..r06, which lands on the r3/r4 blocks (CORE
-    # TPC-H rows, the x11-x20 training-data tier, scalar-function
-    # suites) — so the whole registry stays on a <=3-round
-    # re-verification cadence. The merge below keeps the historical
-    # wave order; _R7_FRONT reorders the final dict.
-    merged = {
-        **EXT29_QUERIES,
-        **EXT30_QUERIES,
-        **EXT31_QUERIES,
-        **EXT32_QUERIES,
-        **EXT33_QUERIES,
-        **EXT34_QUERIES,
-        **EXT35_QUERIES,
-        **EXT36_QUERIES,
-        **EXT37_QUERIES,
-        **EXT38_QUERIES,
-        **EXT39_QUERIES,
-        **EXT40_QUERIES,
-        **EXT41_QUERIES,
-        **EXT42_QUERIES,
-        **EXT43_QUERIES,
-        **EXT44_QUERIES,
-        **EXT45_QUERIES,
-        **EXT46_QUERIES,
-        **EXT47_QUERIES,
-        **EXT48_QUERIES,
-        **EXT49_QUERIES,
-        **EXT50_QUERIES,
-        **EXT51_QUERIES,
-        **EXT52_QUERIES,
-        **EXT53_QUERIES,
-        **EXT54_QUERIES,
-        **EXT55_QUERIES,
-        **EXT56_QUERIES,
-        **EXT57_QUERIES,
-        **EXT58_QUERIES,
-        **EXT59_QUERIES,
-        **EXT60_QUERIES,
-        **EXT61_QUERIES,
-        **EXT62_QUERIES,
-        **EXT63_QUERIES,
-        **EXT64_QUERIES,
-        **EXT65_QUERIES,
-        **CORE_QUERIES,
-        **EXT_QUERIES,
-        **EXT2_QUERIES,
-        **EXT3_QUERIES,
-        **EXT4_QUERIES,
-        **EXT5_QUERIES,
-        **EXT6_QUERIES,
-        **EXT7_QUERIES,
-        **EXT8_QUERIES,
-        **EXT9_QUERIES,
-        **EXT10_QUERIES,
-        **EXT11_QUERIES,
-        **EXT12_QUERIES,
-        **EXT13_QUERIES,
-        **EXT14_QUERIES,
-        **EXT15_QUERIES,
-        **EXT16_QUERIES,
-        **EXT17_QUERIES,
-        **EXT18_QUERIES,
-        **EXT19_QUERIES,
-        **EXT20_QUERIES,
-        **EXT21_QUERIES,
-        **EXT22_QUERIES,
-        **EXT23_QUERIES,
-        **EXT24_QUERIES,
-        **EXT25_QUERIES,
-        **EXT26_QUERIES,
-        **EXT27_QUERIES,
-        **EXT28_QUERIES,
-    }
+    merged = _merged("QUERIES")
     front = [n for n in _R17_WINDOW + _R17_TAIL if n in merged]
     return {**{n: merged[n] for n in front}, **merged}
 
 
-# Round-15 driver window, kept for provenance (CORRECTNESS_r15 went
-# 50/50 against exactly these names). Generated at upto=14; see
-# _R16_WINDOW for the live ordering.
-_R15_WINDOW = [
-    "x33_centroid_classify",
-    "cdc_snapshot_diff", "a21_candle_resample", "f_variant_json",
-    "x34_weighted_sample", "a22_wow_growth", "a23_topn_others",
-    "a24_cooccurrence", "funnel_in_session", "a25_rolling_median",
-    "x2_ngram_jaccard_prefix", "a1_count", "a2_max_per_key",
-    "a3_ohlcv", "a7_distinct", "a8_metric_rollup", "a26_window_median",
-    "a27_sma_crossover", "a28_bollinger", "a29_ewma",
-    "a30_max_drawdown", "x35_lm_score", "x36_heavy_hitters",
-    "a31_target_encode", "x42_pagerank", "x13_dup_clusters",
-    "x37_feature_hash", "a32_event_transitions",
-    "x30_inverted_index_capped", "a33_atr", "a34_rsi",
-    "a35_stochastic", "a36_obv", "x38_pmi_collocations",
-    "x39_char_entropy", "x40_bm25", "x43_stratified_split",
-    "x44_class_balance", "x45_hard_negatives", "x46_ks_drift",
-    "x47_chi2_drift", "x48_psi_drift", "x49_js_hourly", "x50_cusum",
-    "x51_bpe_pairs", "x52_zipf_slope", "a37_holt_forecast",
-    "x53_mutual_info", "a38_rfm_segments", "x54_auc",
-]
+def oracle_sql() -> dict[str, str]:
+    """DuckDB-runnable ANSI SQL oracle per query (same column aliases)."""
+    return _merged("ORACLES")
+
 
 # Round-17 driver window. Generated by `python tools/freshness.py
 # --window 50 --upto 16 --front <auto + 3>` over the r1..r16 driver
@@ -207,8 +70,8 @@ _R15_WINDOW = [
 # x63_boilerplate_ngrams, x66_ngram_novelty — the r10 precedent: the
 # upto=16 snapshots predate the current round's own edits, so auto
 # cannot see them; PLAN_FPS_r17 records the new fingerprints),
-# appended in _R16_WINDOW order (staleness-tie order = that round's
-# driver file order). Body = oldest-first minus the front; the
+# appended in CORRECTNESS_r16.json order (staleness-tie order = that
+# round's driver file order). Body = oldest-first minus the front; the
 # freshness floor advances to r13 when the r17 driver records these
 # rows.
 _R17_WINDOW = [
@@ -315,207 +178,3 @@ _R17_TAIL = [
     "x21_winnow_overlap",
     "x22_repetition",
 ]
-
-
-# Round-16 driver window (the grading driver oracle-checks the FIRST
-# 50 entries in insertion order). Generated by `python
-# tools/freshness.py --window 50 --front auto --upto 15` over the
-# r1..r15 driver history + the PLAN_FPS_r15 snapshot. `--front auto`
-# emits ZERO fronts (the r15 verdict predicted this: r15 made zero
-# registry/operator changes, so no fingerprint postdates its owner's
-# last driver row). The window is therefore the pure oldest-first
-# body: the 24 remaining r11-stale entries (x55_winsorize first) then
-# the 26 oldest r12 entries — exactly the r15 tail block, as the
-# rotation invariant requires. Because every r11-stale query is
-# inside this window, the freshness floor advances from r11 to r12
-# when the r16 driver records these rows; the r17 body starts
-# r12-stale.
-_R16_WINDOW = [
-    "x55_winsorize",
-    "x57_triangles", "a39_seasonal_dow", "x58_knn_classify",
-    "a40_anomaly_mad", "a41_ab_welch", "x60_benford",
-    "x61_key_concentration", "x62_pca_power", "j1_dim_fact_join",
-    "j3_upsert_anti", "semi_join_exists", "q1_pricing_summary",
-    "q3_shipping_priority", "a42_time_to_convert",
-    "a44_order_total_audit", "x63_boilerplate_ngrams",
-    "a46_interevent_gaps", "x64_embedding_outliers",
-    "x66_ngram_novelty", "a49_event_trigrams",
-    "a52_supplier_lead_time", "x73_lang_confusion", "a53_dau_mau",
-    "x75_tfidf_topk_pairs", "x79_source_overlap", "j8_asof_forward",
-    "a59_discount_waterfall", "x81_chunk_dedup", "a61_revenue_gini",
-    "a64_burst_ratio", "a65_fulfillment_span",
-    "a67_transition_latency", "x87_embedding_norms",
-    "a68_hourly_regression", "x88_ols_normal_eq",
-    "x90_ivf_recall_eval", "a69_seasonality_strength",
-    "a70_ltv_cohort_triangle", "a71_revenue_pareto",
-    "a74_repeat_purchase_gap", "a75_markov_accuracy",
-    "a76_capped_balance", "x93_readability", "x94_spearman_supplier",
-    "x95_cramers_v", "a78_kaplan_meier", "a47_entry_bounce",
-    "x67_lexical_richness", "x69_dedup_impact",
-]
-
-# The generator's FULL next block (50 queries) — the r17 rotation
-# starts here (oldest-first invariant, same generator; the length is
-# pinned by tests/test_freshness.py, r9 advice: the literal and the
-# claim "exactly what the generator emits" must agree).
-_R16_TAIL = [
-    "x71_lsh_recall_eval", "a54_priority_sla", "a58_daily_peak_hour",
-    "x80_minhash_recall_eval", "a60_return_cohort",
-    "x82_vocab_coverage", "a66_new_vs_returning",
-    "x86_dup_family_hist", "x89_split_leakage", "x91_threshold_sweep",
-    "x98_containment_pairs", "x99_rrf_fusion",
-    "a77_open_order_backlog", "x100_kmv_distinct",
-    "x101_bloom_filter_eval", "a80_holt_winters", "x102_ndcg_eval",
-    "x103_hubness_koccurrence", "a81_decile_migration",
-    "a10_percentiles", "a11_cube_counts", "j5_interval_join",
-    "q10_returned_items", "q14_promo_revenue", "q16_supplier_cnt",
-    "q18_large_orders", "q19_disjunctive_revenue", "q22_idle_customers",
-    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
-    "x11_train_test_split", "x14_chunk_documents", "x15_pack_sequences",
-    "x16_decontaminate", "x17_tfidf_terms", "x18_vocab_top_tokens",
-    "x19_stratified_sample", "x1_exact_dedup", "x20_source_quota",
-    "x2_minhash_lsh", "x2_ngram_jaccard", "x2_ngram_jaccard_capped",
-    "x4_simhash", "x5_signlsh_topk", "a12_profile_customer",
-    "x70_kcore", "x92_dup_clustering_coeff", "x96_adamic_adar",
-    "x97_degree_assortativity",
-]
-
-
-def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (same column aliases)."""
-    from streaming_data_spark.queries import CORE_ORACLES
-    from streaming_data_spark.queries_ext import EXT_ORACLES
-    from streaming_data_spark.queries_ext2 import EXT2_ORACLES
-    from streaming_data_spark.queries_ext3 import EXT3_ORACLES
-    from streaming_data_spark.queries_ext4 import EXT4_ORACLES
-    from streaming_data_spark.queries_ext5 import EXT5_ORACLES
-    from streaming_data_spark.queries_ext6 import EXT6_ORACLES
-    from streaming_data_spark.queries_ext7 import EXT7_ORACLES
-    from streaming_data_spark.queries_ext8 import EXT8_ORACLES
-    from streaming_data_spark.queries_ext9 import EXT9_ORACLES
-    from streaming_data_spark.queries_ext10 import EXT10_ORACLES
-    from streaming_data_spark.queries_ext11 import EXT11_ORACLES
-    from streaming_data_spark.queries_ext12 import EXT12_ORACLES
-    from streaming_data_spark.queries_ext13 import EXT13_ORACLES
-    from streaming_data_spark.queries_ext14 import EXT14_ORACLES
-    from streaming_data_spark.queries_ext15 import EXT15_ORACLES
-    from streaming_data_spark.queries_ext16 import EXT16_ORACLES
-    from streaming_data_spark.queries_ext17 import EXT17_ORACLES
-    from streaming_data_spark.queries_ext18 import EXT18_ORACLES
-    from streaming_data_spark.queries_ext19 import EXT19_ORACLES
-    from streaming_data_spark.queries_ext20 import EXT20_ORACLES
-    from streaming_data_spark.queries_ext21 import EXT21_ORACLES
-    from streaming_data_spark.queries_ext22 import EXT22_ORACLES
-    from streaming_data_spark.queries_ext23 import EXT23_ORACLES
-    from streaming_data_spark.queries_ext24 import EXT24_ORACLES
-    from streaming_data_spark.queries_ext25 import EXT25_ORACLES
-    from streaming_data_spark.queries_ext26 import EXT26_ORACLES
-    from streaming_data_spark.queries_ext27 import EXT27_ORACLES
-    from streaming_data_spark.queries_ext28 import EXT28_ORACLES
-    from streaming_data_spark.queries_ext29 import EXT29_ORACLES
-    from streaming_data_spark.queries_ext30 import EXT30_ORACLES
-    from streaming_data_spark.queries_ext31 import EXT31_ORACLES
-    from streaming_data_spark.queries_ext32 import EXT32_ORACLES
-    from streaming_data_spark.queries_ext33 import EXT33_ORACLES
-    from streaming_data_spark.queries_ext34 import EXT34_ORACLES
-    from streaming_data_spark.queries_ext35 import EXT35_ORACLES
-    from streaming_data_spark.queries_ext36 import EXT36_ORACLES
-    from streaming_data_spark.queries_ext37 import EXT37_ORACLES
-    from streaming_data_spark.queries_ext38 import EXT38_ORACLES
-    from streaming_data_spark.queries_ext39 import EXT39_ORACLES
-    from streaming_data_spark.queries_ext40 import EXT40_ORACLES
-    from streaming_data_spark.queries_ext41 import EXT41_ORACLES
-    from streaming_data_spark.queries_ext42 import EXT42_ORACLES
-    from streaming_data_spark.queries_ext43 import EXT43_ORACLES
-    from streaming_data_spark.queries_ext44 import EXT44_ORACLES
-    from streaming_data_spark.queries_ext45 import EXT45_ORACLES
-    from streaming_data_spark.queries_ext46 import EXT46_ORACLES
-    from streaming_data_spark.queries_ext47 import EXT47_ORACLES
-    from streaming_data_spark.queries_ext48 import EXT48_ORACLES
-    from streaming_data_spark.queries_ext49 import EXT49_ORACLES
-    from streaming_data_spark.queries_ext50 import EXT50_ORACLES
-    from streaming_data_spark.queries_ext51 import EXT51_ORACLES
-    from streaming_data_spark.queries_ext52 import EXT52_ORACLES
-    from streaming_data_spark.queries_ext53 import EXT53_ORACLES
-    from streaming_data_spark.queries_ext54 import EXT54_ORACLES
-    from streaming_data_spark.queries_ext55 import EXT55_ORACLES
-    from streaming_data_spark.queries_ext56 import EXT56_ORACLES
-    from streaming_data_spark.queries_ext57 import EXT57_ORACLES
-    from streaming_data_spark.queries_ext58 import EXT58_ORACLES
-    from streaming_data_spark.queries_ext59 import EXT59_ORACLES
-    from streaming_data_spark.queries_ext60 import EXT60_ORACLES
-    from streaming_data_spark.queries_ext61 import EXT61_ORACLES
-    from streaming_data_spark.queries_ext62 import EXT62_ORACLES
-    from streaming_data_spark.queries_ext63 import EXT63_ORACLES
-    from streaming_data_spark.queries_ext64 import EXT64_ORACLES
-    from streaming_data_spark.queries_ext65 import EXT65_ORACLES
-
-    # Same merge order as queries() (keyed lookup, but keep symmetric).
-    return {
-        **EXT29_ORACLES,
-        **EXT30_ORACLES,
-        **EXT31_ORACLES,
-        **EXT32_ORACLES,
-        **EXT33_ORACLES,
-        **EXT34_ORACLES,
-        **EXT35_ORACLES,
-        **EXT36_ORACLES,
-        **EXT37_ORACLES,
-        **EXT38_ORACLES,
-        **EXT39_ORACLES,
-        **EXT40_ORACLES,
-        **EXT41_ORACLES,
-        **EXT42_ORACLES,
-        **EXT43_ORACLES,
-        **EXT44_ORACLES,
-        **EXT45_ORACLES,
-        **EXT46_ORACLES,
-        **EXT47_ORACLES,
-        **EXT48_ORACLES,
-        **EXT49_ORACLES,
-        **EXT50_ORACLES,
-        **EXT51_ORACLES,
-        **EXT52_ORACLES,
-        **EXT53_ORACLES,
-        **EXT54_ORACLES,
-        **EXT55_ORACLES,
-        **EXT56_ORACLES,
-        **EXT57_ORACLES,
-        **EXT58_ORACLES,
-        **EXT59_ORACLES,
-        **EXT60_ORACLES,
-        **EXT61_ORACLES,
-        **EXT62_ORACLES,
-        **EXT63_ORACLES,
-        **EXT64_ORACLES,
-        **EXT65_ORACLES,
-        **CORE_ORACLES,
-        **EXT_ORACLES,
-        **EXT2_ORACLES,
-        **EXT3_ORACLES,
-        **EXT4_ORACLES,
-        **EXT5_ORACLES,
-        **EXT6_ORACLES,
-        **EXT7_ORACLES,
-        **EXT8_ORACLES,
-        **EXT9_ORACLES,
-        **EXT10_ORACLES,
-        **EXT11_ORACLES,
-        **EXT12_ORACLES,
-        **EXT13_ORACLES,
-        **EXT14_ORACLES,
-        **EXT15_ORACLES,
-        **EXT16_ORACLES,
-        **EXT17_ORACLES,
-        **EXT18_ORACLES,
-        **EXT19_ORACLES,
-        **EXT20_ORACLES,
-        **EXT21_ORACLES,
-        **EXT22_ORACLES,
-        **EXT23_ORACLES,
-        **EXT24_ORACLES,
-        **EXT25_ORACLES,
-        **EXT26_ORACLES,
-        **EXT27_ORACLES,
-        **EXT28_ORACLES,
-    }

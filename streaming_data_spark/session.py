@@ -214,22 +214,17 @@ def autosize_shuffle_partitions(
     ``floor`` defaulting to max(core parallelism, the session's
     CURRENT setting) — autosizing only ever RAISES the count (the
     same asymmetry as the 4x default: undershoot is the direction
-    AQE cannot repair). ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides
-    the computation — the hand knob still wins when a probe needs a
-    fixed count.
+    AQE cannot repair). A caller that needs a fixed count passes
+    ``floor``/``cap`` or sets ``spark.sql.shuffle.partitions`` itself.
     """
-    forced = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if forced:
-        n = int(forced)
+    if floor is not None:
+        lo = floor
     else:
-        if floor is not None:
-            lo = floor
-        else:
-            try:
-                current = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                current = 0
-            lo = max(spark.sparkContext.defaultParallelism, current)
-        n = min(cap, max(lo, -(-input_bytes(spark, *paths) // target_bytes)))
+        try:
+            current = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except Exception:
+            current = 0
+        lo = max(spark.sparkContext.defaultParallelism, current)
+    n = min(cap, max(lo, -(-input_bytes(spark, *paths) // target_bytes)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n

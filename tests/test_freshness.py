@@ -2,9 +2,11 @@
 verdict item 7), and since r10 the `--front` list is generated too
 (r9 verdict item 2): ``tools/freshness.py`` derives the oldest-first
 order from the CORRECTNESS_r*.json history and the front from the
-PLAN_FPS_r*.json fingerprint diffs, and the literals pasted into
-``__spark_entry__.py`` must be exactly what the generator emits.
-No SparkSession needed — this is pure bookkeeping.
+PLAN_FPS_r*.json fingerprint diffs. Past windows are pinned against
+the CORRECTNESS_r*.json file the driver recorded for them, and the
+live ``_R17_WINDOW`` / ``_R17_TAIL`` literals in ``__spark_entry__.py``
+must be exactly what the generator emits. No SparkSession needed —
+this is pure bookkeeping.
 """
 
 from __future__ import annotations
@@ -270,14 +272,19 @@ def test_auto_front_for_r15_at_r14_snapshots_is_empty():
 
 
 def test_r15_window_is_generator_output_from_r14_data():
-    """_R15_WINDOW (kept for provenance — CORRECTNESS_r15 went 50/50
-    against these names) == the oldest-first body from the r1..r14
-    driver history (zero fronts — see the previous test): the 24
-    remaining r10-stale entries (x33_centroid_classify first) then
-    the 26 oldest r11 entries."""
+    """The r15 window (now history — CORRECTNESS_r15 went 50/50
+    against it) was the oldest-first body from the r1..r14 driver
+    history (zero fronts — see the previous test): the 24 remaining
+    r10-stale entries (x33_centroid_classify first) then the 26 oldest
+    r11 entries. Pinned via the r15 CORRECTNESS file itself: the
+    driver ran exactly the literal we shipped."""
+    import json
+
+    with open(REPO / "CORRECTNESS_r15.json") as fh:
+        r15_checked = list(json.load(fh))
     order = [n for n, _ in oldest_first(upto=14)]
-    assert entry_mod._R15_WINDOW == order[:50]
-    assert entry_mod._R15_WINDOW[0] == "x33_centroid_classify"
+    assert r15_checked == order[:50]
+    assert r15_checked[0] == "x33_centroid_classify"
 
 
 def test_auto_front_for_r16_at_r15_snapshots_is_empty():
@@ -293,18 +300,20 @@ def test_auto_front_for_r16_at_r15_snapshots_is_empty():
 
 
 def test_r16_window_is_generator_output_from_r15_data():
-    """_R16_WINDOW == the oldest-first body from the r1..r15 driver
-    history (zero fronts — see the previous test): the 24 remaining
-    r11-stale entries (x55_winsorize first) then the 26 oldest r12
-    entries — exactly the r15 tail block, as the rotation invariant
-    requires. _R16_TAIL is the FULL next block of that same order
-    (r9 advice: the literal is exactly what the generator emits,
-    length included)."""
+    """The r16 window (now history — its driver rows are in
+    CORRECTNESS_r16.json) was the oldest-first body from the r1..r15
+    driver history (zero fronts — see the previous test): the 24
+    remaining r11-stale entries (x55_winsorize first) then the 26
+    oldest r12 entries — exactly the r15 tail block, as the rotation
+    invariant requires. Pinned via the r16 CORRECTNESS file itself.
+    The generator's next block is pinned through _R17_TAIL below."""
+    import json
+
+    with open(REPO / "CORRECTNESS_r16.json") as fh:
+        r16_checked = list(json.load(fh))
     order = [n for n, _ in oldest_first(upto=15)]
-    assert entry_mod._R16_WINDOW == order[:50]
-    assert entry_mod._R16_TAIL == order[50:100]
-    assert len(entry_mod._R16_TAIL) == 50
-    assert entry_mod._R16_WINDOW[0] == "x55_winsorize"
+    assert r16_checked == order[:50]
+    assert r16_checked[0] == "x55_winsorize"
 
 
 # `--front auto` at upto=16: every r16-touched query whose plan
@@ -326,8 +335,8 @@ R17_AUTO_FRONT = [
 # x63/x66 hashed checkpoints — the r10 precedent: the upto=16
 # snapshots predate the current round's own edits, so auto cannot see
 # them; PLAN_FPS_r17 records the new fingerprints). Appended in
-# _R16_WINDOW order — the staleness-tie order is that round's driver
-# file order.
+# CORRECTNESS_r16.json order — the staleness-tie order is that round's
+# driver file order.
 R17_FRONT = [
     *R17_AUTO_FRONT,
     "q3_shipping_priority", "x63_boilerplate_ngrams",

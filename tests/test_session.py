@@ -72,25 +72,6 @@ def test_autosize_shuffle_partitions_scales_with_bytes_and_caps(
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_autosize_shuffle_partitions_env_override_wins(
-    spark, tmp_path, monkeypatch
-):
-    """SPARK_GRAFT_SHUFFLE_PARTITIONS remains the explicit hand knob —
-    a probe that needs a fixed count (e.g. the r13 32-vs-256 spill
-    experiment itself) must be able to pin it."""
-    from streaming_data_spark.session import autosize_shuffle_partitions
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "77")
-        (tmp_path / "a.bin").write_bytes(b"x" * 10_000)
-        n = autosize_shuffle_partitions(spark, str(tmp_path), target_bytes=10)
-        assert n == 77
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "77"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def test_input_bytes_sums_files_and_dirs(spark, tmp_path):
     from streaming_data_spark.session import input_bytes
 
