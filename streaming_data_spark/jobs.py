@@ -13,13 +13,13 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from streaming_data_spark.operators.joins import dim_join
 from streaming_data_spark.schemas import UPBIT_MARKETS
-from streaming_data_spark.sinks.writers import gated_write, incremental_load, write_csv, write_if_absent
+from streaming_data_spark.sinks.writers import _counted, gated_write, incremental_load, write_csv, write_if_absent
 from streaming_data_spark.sources.rest import FetchFn, rest_paginated, rest_per_key, rest_snapshot
 from streaming_data_spark.streaming.listeners import AlertFn, run_job_with_alerts
 
@@ -138,8 +138,11 @@ def corpus_curation_job(
       greedy sequence packing → deterministic train/test split.
 
     Returns {"clean_docs", "chunks", "packed", "summary"}; ``summary``
-    is [(stage, rows_surviving)] — the per-stage scalar counts a
-    curation run reports (driver-side scalars, like every job here).
+    is [(stage, rows_surviving)], each count observed on a
+    materialization the job runs anyway (an ``Observation`` on the
+    stage checkpoint, or on the ``packed`` write for ``chunks``), so
+    no stage pays a count job of its own. Only ``chunks`` without an
+    ``out_dir`` is counted by a job: nothing else runs the chunking.
     ``out_dir`` additionally materializes the packed sequences and the
     clean corpus as parquet.
 
@@ -152,24 +155,39 @@ def corpus_curation_job(
     from streaming_data_spark.operators.chunking import chunk_documents, pack_sequences
     from streaming_data_spark.queries_ext8 import split_column
 
-    summary: list[tuple[str, int]] = [("input", docs.count())]
-
-    gated = docs.filter(txt.quality_score("text") >= min_quality)
-    summary.append(("quality_gate", gated.count()))
+    # the quality score is computed once: the input and quality-gate
+    # counts both read it, on the exact-dedup checkpoint's pass
+    seen = Observation()
+    gated = (
+        docs.withColumn("_q", txt.quality_score("text"))
+        .observe(
+            seen,
+            F.count(F.lit(1)).alias("input"),
+            F.count_if(F.col("_q") >= min_quality).alias("quality_gate"),
+        )
+        .filter(F.col("_q") >= min_quality)
+        .drop("_q")
+    )
 
     # exact dedup on the canonical-form fingerprint, min-id survivor
     fp = gated.withColumn("_fp", txt.fingerprint("text"))
-    exact_survivors = fp.withColumn(
-        "_keep",
-        F.row_number().over(
-            Window.partitionBy("_fp").orderBy(F.col("doc_id").asc())
-        ) == 1,
-    ).filter("_keep").drop("_fp", "_keep")
+    exact_survivors, exact_n = _counted(
+        fp.withColumn(
+            "_keep",
+            F.row_number().over(
+                Window.partitionBy("_fp").orderBy(F.col("doc_id").asc())
+            ) == 1,
+        ).filter("_keep").drop("_fp", "_keep")
+    )
     # checkpoint between stages: each later stage count/write would
     # otherwise re-execute everything upstream (the prefix-join and
     # the CC loop are the expensive passes — they must run ONCE)
     exact_survivors = exact_survivors.localCheckpoint(eager=True)
-    summary.append(("exact_dedup", exact_survivors.count()))
+    summary: list[tuple[str, int]] = [
+        ("input", seen.get["input"]),
+        ("quality_gate", seen.get["quality_gate"]),
+        ("exact_dedup", exact_n.get["n"]),
+    ]
 
     # near-dup clustering: lossless prefix-filtered pairs → star CC;
     # survivor = cluster minimum; unpaired docs survive untouched
@@ -180,9 +198,11 @@ def corpus_curation_job(
     dropped = clusters.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias("doc_id")
     )
-    near_survivors = exact_survivors.join(dropped, "doc_id", "left_anti")
+    near_survivors, near_n = _counted(
+        exact_survivors.join(dropped, "doc_id", "left_anti")
+    )
     near_survivors = near_survivors.localCheckpoint(eager=True)
-    summary.append(("near_dedup", near_survivors.count()))
+    summary.append(("near_dedup", near_n.get["n"]))
 
     # benchmark decontamination: any shared n-gram with the held-out
     # set disqualifies the training doc; benchmark side broadcasts
@@ -196,11 +216,14 @@ def corpus_curation_job(
             .select("doc_id")
             .distinct()
         )
-        clean = near_survivors.join(contaminated, "doc_id", "left_anti")
+        clean, clean_n = _counted(
+            near_survivors.join(contaminated, "doc_id", "left_anti")
+        )
         clean = clean.localCheckpoint(eager=True)
+        summary.append(("decontaminated", clean_n.get["n"]))
     else:
         clean = near_survivors
-    summary.append(("decontaminated", clean.count()))
+        summary.append(("decontaminated", near_n.get["n"]))
 
     # optional CCNet-style LM band filter (Wenzek et al. 2020): score
     # every surviving doc under the corpus's own bigram LM and keep
@@ -230,21 +253,30 @@ def corpus_curation_job(
         drop = scores.filter(
             (F.col("avg_logp") < F.lit(lo_v)) | (F.col("avg_logp") > F.lit(hi_v))
         ).select("doc_id")
-        clean = clean.join(drop, "doc_id", "left_anti")
+        clean, band_n = _counted(clean.join(drop, "doc_id", "left_anti"))
         clean = clean.localCheckpoint(eager=True)
-        summary.append(("lm_band", clean.count()))
+        summary.append(("lm_band", band_n.get["n"]))
 
     chunks = chunk_documents(
         clean, chunk_tokens=chunk_tokens, overlap=overlap
     )
-    packed = pack_sequences(chunks, max_tokens=max_tokens).withColumn(
-        "split", split_column("doc_id", test_pct)
-    )
-    summary.append(("chunks", chunks.count()))
 
+    def pack(ch: DataFrame) -> DataFrame:
+        return pack_sequences(ch, max_tokens=max_tokens).withColumn(
+            "split", split_column("doc_id", test_pct)
+        )
+
+    packed = pack(chunks)
     if out_dir:
         clean.write.mode("overwrite").parquet(f"{out_dir}/clean_docs")
-        packed.write.mode("overwrite").parquet(f"{out_dir}/packed")
+        # the write observes its own input's chunks; the returned
+        # frames stay unobserved, so a caller's later plans never
+        # carry this Observation
+        observed_chunks, chunks_n = _counted(chunks)
+        pack(observed_chunks).write.mode("overwrite").parquet(f"{out_dir}/packed")
+        summary.append(("chunks", chunks_n.get["n"]))
+    else:
+        summary.append(("chunks", chunks.count()))
 
     return {
         "clean_docs": clean,

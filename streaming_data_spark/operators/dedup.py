@@ -25,8 +25,9 @@ ON CONFLICT keys, upbit_data_pipeline.py:116).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # Mersenne prime 2^31-1; with base hash < 2^28 and a,b < p the
 # products stay < 2^59 — no 64-bit overflow in either engine.
@@ -498,14 +499,27 @@ def connected_components_star(
     with localCheckpoint lineage truncation per round, so at 100 TB
     the per-round cost FALLS as contraction proceeds — the right
     trade for duplicate graphs whose shape you don't control.
+
+    Driver finish: an ``Observation`` on the one edge materialization
+    counts the edges. When that count × the row's default size is at
+    most ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark
+    itself would ship whole to every executor — the edges are
+    collected and solved on the driver by union-find, and the labels
+    come back as a ``LocalRelation``: same rows, same schema, none of
+    the loop's per-round jobs. A threshold of -1 (broadcast off, the
+    100 TB shape) always runs the loop, which stays the only path for
+    edge lists above the threshold.
     """
     # Materialize the input edge list ONCE: both all_nodes and the
     # canonical edge set derive from it, and edge inputs are routinely
     # expensive plans (a prefix-filtered pair join) — without this the
     # full pair plan would execute twice before the first round.
-    raw = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t")
-    ).localCheckpoint(eager=True)
+    n_raw = Observation()
+    raw = (
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+        .observe(n_raw, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     # every endpoint, INCLUDING nodes whose only edges are self-loops —
     # label propagation keeps them (as singleton clusters), so this
     # algorithm must too or switching algorithms loses rows
@@ -514,6 +528,9 @@ def connected_components_star(
         .union(raw.select(F.col("t").alias("id")))
         .distinct()
     )
+    conf = raw.sparkSession._jsparkSession.sessionState().conf()
+    if n_raw.get["n"] * raw._jdf.schema().defaultSize() <= conf.autoBroadcastJoinThreshold():
+        return _components_on_driver(raw, all_nodes.schema["id"])
     # canonical directed form: (big, small), no self-loops
     e = (
         raw.filter(F.col("s") != F.col("t"))
@@ -626,6 +643,42 @@ def connected_components_star(
         labeled.select("id"), "id", "left_anti"
     ).withColumn("cluster_id", F.col("id"))
     return labeled.union(singletons)
+
+
+def _components_on_driver(raw: DataFrame, id_field: StructField) -> DataFrame:
+    """The star loop's output for a materialized (s, t) edge list that
+    fits the driver: union-find where a union keeps the smaller root,
+    so every root is its component's minimum. Every endpoint appears
+    once; self-loop-only and null endpoints are their own cluster (a
+    null endpoint joins no edge, as ``s != t`` drops it in the loop).
+
+    Built from Arrow, so the result plans as a ``LocalRelation``; a
+    Python-list ``createDataFrame`` plans as an RDD scan."""
+    import pyarrow as pa
+
+    edges = raw.toArrow()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(edges.column("s").to_pylist(), edges.column("t").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    table = pa.table({"id": pa.array(ids), "cluster_id": pa.array([find(x) for x in ids])})
+    schema = StructType([id_field, StructField("cluster_id", id_field.dataType, id_field.nullable)])
+    return raw.sparkSession.createDataFrame(table, schema)
 
 
 def ranked_encoded_shingles(

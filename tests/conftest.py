@@ -28,3 +28,38 @@ def sf_small() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` → (fn's result, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{id(fn)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def star_cc_paths(spark):
+    """``for path in star_cc_paths():`` runs the loop body once on each
+    path of ``connected_components_star``: the default broadcast
+    threshold sends every test-sized edge list to the driver finish,
+    and -1 (the 100 TB shape) keeps the distributed loop."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+
+    def paths():
+        for path, value in (("driver_finish", old), ("loop", "-1")):
+            spark.conf.set(key, value)
+            yield path
+
+    yield paths
+    spark.conf.set(key, old)

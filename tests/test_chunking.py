@@ -98,23 +98,27 @@ def test_connected_components_empty(spark):
     assert dedup.connected_components(edges).count() == 0
 
 
-def test_star_cc_matches_label_prop(spark):
+def _star_labels(edges):
+    return {
+        (r.id, r.cluster_id)
+        for r in dedup.connected_components_star(edges).collect()
+    }
+
+
+def test_star_cc_matches_label_prop(spark, star_cc_paths):
     """large-star/small-star must produce the identical (id, min-label)
     output as label propagation on a mixed graph: chain + island +
-    star-shaped component."""
+    star-shaped component — on the driver finish and on the loop."""
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11), (20, 25), (20, 22), (20, 27)],
         "id_a long, id_b long",
     )
     lp = {(r.id, r.cluster_id) for r in dedup.connected_components(edges).collect()}
-    star = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components_star(edges).collect()
-    }
-    assert star == lp
+    for _ in star_cc_paths():
+        assert _star_labels(edges) == lp
 
 
-def test_star_cc_high_diameter_chain(spark):
+def test_star_cc_high_diameter_chain(spark, star_cc_paths):
     """A 120-node chain has diameter 120: label propagation's
     iteration bound (max_iter) is diameter-many rounds, while star
     contraction converges in O(log² n) — this chain must finish well
@@ -122,19 +126,17 @@ def test_star_cc_high_diameter_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "id_a long, id_b long"
     )
-    got = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components_star(edges).collect()
-    }
-    assert got == {(i, 0) for i in range(121)}
+    for _ in star_cc_paths():
+        assert _star_labels(edges) == {(i, 0) for i in range(121)}
 
 
-def test_star_cc_empty(spark):
+def test_star_cc_empty(spark, star_cc_paths):
     edges = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup.connected_components_star(edges).count() == 0
+    for _ in star_cc_paths():
+        assert dedup.connected_components_star(edges).count() == 0
 
 
-def test_star_cc_keeps_self_loop_only_nodes(spark):
+def test_star_cc_keeps_self_loop_only_nodes(spark, star_cc_paths):
     """A node whose only edges are self-loops must appear as its own
     singleton cluster — exactly as label propagation reports it — so
     the two algorithms stay output-identical."""
@@ -142,8 +144,29 @@ def test_star_cc_keeps_self_loop_only_nodes(spark):
         [(5, 5), (2, 1), (7, 7)], "id_a long, id_b long"
     )
     lp = {(r.id, r.cluster_id) for r in dedup.connected_components(edges).collect()}
-    star = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components_star(edges).collect()
+    for _ in star_cc_paths():
+        assert _star_labels(edges) == lp == {(5, 5), (7, 7), (1, 1), (2, 1)}
+
+
+def test_star_cc_driver_finish_equals_loop(spark, star_cc_paths):
+    """String ids, null endpoints, duplicate and reversed edges and a
+    self-loop: the driver finish returns the loop's rows and schema,
+    and only the driver finish plans as a local relation."""
+    edges = spark.createDataFrame(
+        [
+            ("b", "a"), ("a", "b"), ("b", "a"), ("c", None), (None, "d"),
+            ("e", "e"), ("d", "x"), ("x", "d"), ("y", "x"), ("q", "p"),
+        ],
+        "id_a string, id_b string",
+    )
+    got = {}
+    for path in star_cc_paths():
+        out = dedup.connected_components_star(edges)
+        got[path] = (out.schema, sorted(map(tuple, out.collect()), key=str))
+        local = "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+        assert local == (path == "driver_finish"), path
+    assert got["driver_finish"] == got["loop"]
+    assert dict(got["loop"][1]) == {
+        "a": "a", "b": "a", "c": "c", "d": "d", "x": "d", "y": "d",
+        "e": "e", "p": "p", "q": "p", None: None,
     }
-    assert star == lp == {(5, 5), (7, 7), (1, 1), (2, 1)}

@@ -279,6 +279,122 @@ def test_corpus_curation_lm_band_drops_only_out_of_band_docs(spark, sf_small):
     assert banded_ids == base_ids - expected_drop
 
 
+def _counted_stages(docs, benchmark=None, lm_band=None, min_quality=0.25):
+    """The curation summary recomputed stage by stage with a plain
+    ``count()`` per stage frame, through the independent operators
+    (unfiltered pair join, label-propagation components) and the job's
+    other default parameters."""
+    from pyspark.sql import functions as F
+
+    from streaming_data_spark.operators import dedup as ddp
+    from streaming_data_spark.operators import text as txt
+    from streaming_data_spark.operators.chunking import chunk_documents
+
+    gated = docs.filter(txt.quality_score("text") >= min_quality)
+    first = gated.groupBy(txt.fingerprint("text").alias("_fp")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    exact = gated.join(first.select("doc_id"), "doc_id", "left_semi")
+    pairs = ddp.ngram_jaccard_pairs(exact, "doc_id", "text", n=3, threshold=0.8)
+    comps = ddp.connected_components(pairs, "id_a", "id_b")
+    near = exact.join(
+        comps.filter(F.col("id") != F.col("cluster_id")).select(
+            F.col("id").alias("doc_id")
+        ),
+        "doc_id",
+        "left_anti",
+    )
+    clean = near
+    if benchmark is not None:
+        bench_sh = ddp.shingles(benchmark, "doc_id", "text", n=5).select("shingle")
+        hit = ddp.shingles(near, "doc_id", "text", n=5).join(bench_sh, "shingle")
+        clean = near.join(hit.select("doc_id"), "doc_id", "left_anti")
+    stages = [
+        ("input", docs), ("quality_gate", gated), ("exact_dedup", exact),
+        ("near_dedup", near), ("decontaminated", clean),
+    ]
+    if lm_band is not None:
+        scores = txt.lm_scores(clean)
+        lo_v, hi_v = scores.agg(
+            F.expr(f"percentile(avg_logp, {lm_band[0]})"),
+            F.expr(f"percentile(avg_logp, {lm_band[1]})"),
+        ).collect()[0]
+        drop = scores.filter((F.col("avg_logp") < lo_v) | (F.col("avg_logp") > hi_v))
+        clean = clean.join(drop.select("doc_id"), "doc_id", "left_anti")
+        stages.append(("lm_band", clean))
+    stages.append(("chunks", chunk_documents(clean)))
+    return [(name, frame.count()) for name, frame in stages]
+
+
+@pytest.mark.parametrize("config", ["benchmark_and_out_dir", "neither", "lm_band"])
+def test_corpus_curation_summary_equals_stage_counts(spark, sf_small, tmp_path, config):
+    """Each observed stage count equals a plain count() of that
+    stage's frame: with a benchmark and an ``out_dir`` (``chunks``
+    observed on the packed write), with neither (``chunks`` counted),
+    and with the LM band stage. The second uses a quality bar that
+    drops documents, so the input and quality-gate counts differ."""
+    from pyspark.sql import functions as F
+
+    from streaming_data_spark.jobs import corpus_curation_job
+    from streaming_data_spark.schemas import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    bench = docs.filter(F.pmod("doc_id", F.lit(20)) == 0)
+    train_in = docs.filter(F.pmod("doc_id", F.lit(20)) != 0)
+    if config == "benchmark_and_out_dir":
+        out = corpus_curation_job(spark, train_in, benchmark=bench, out_dir=str(tmp_path))
+        expected = _counted_stages(train_in, benchmark=bench)
+        assert spark.read.parquet(f"{tmp_path}/packed").count() == dict(expected)["chunks"]
+    elif config == "neither":
+        out = corpus_curation_job(spark, docs, min_quality=0.4)
+        expected = _counted_stages(docs, min_quality=0.4)
+        assert dict(expected)["quality_gate"] < dict(expected)["input"]
+    else:
+        out = corpus_curation_job(spark, docs, lm_band=(0.1, 0.9))
+        expected = _counted_stages(docs, lm_band=(0.1, 0.9))
+    assert out["summary"] == expected
+
+
+# -- Spark job budgets at sf0.001 ---------------------------------------------
+# Each budget has headroom for AQE's +-1 stage-job flap; the parent of the
+# observed-count / driver-finish change ran 56-57, 31 and 32 jobs.
+
+
+def test_corpus_curation_job_budget(spark, sf_small, tmp_path, jobs_of):
+    """Stage counts ride on the checkpoints and the packed write, and
+    the small near-dup graph is solved on the driver."""
+    from pyspark.sql import functions as F
+
+    from streaming_data_spark.jobs import corpus_curation_job
+    from streaming_data_spark.schemas import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    bench = docs.filter(F.pmod("doc_id", F.lit(20)) == 0)
+    train_in = docs.filter(F.pmod("doc_id", F.lit(20)) != 0)
+    _, n = jobs_of(
+        lambda: corpus_curation_job(
+            spark, train_in, benchmark=bench, out_dir=str(tmp_path)
+        )
+    )
+    assert n <= 24, n
+
+
+@pytest.mark.parametrize(
+    "name, budget", [("x41_canonical_by_quality", 8), ("x13_dup_clusters_star", 12)]
+)
+def test_star_cc_query_job_budget(spark, sf_small, jobs_of, name, budget):
+    """The star-CC queries end in the driver finish; x41 is measured
+    with its shared pair build already memoized by a first run."""
+    import __spark_entry__ as entry
+
+    query = entry.queries()[name]
+    query(spark, sf_small).write.format("noop").mode("overwrite").save()
+    _, n = jobs_of(
+        lambda: query(spark, sf_small).write.format("noop").mode("overwrite").save()
+    )
+    assert n <= budget, n
+
+
 def test_drift_report_job_end_to_end(spark, sf_small, tmp_path):
     """The drift job materializes the per-type report (PSI + JS) and
     the CUSUM table, alerts once per drifting type through the K10

@@ -1575,14 +1575,15 @@ def test_label_prop_cc_materializes_edges_once(spark):
     _assert_evaluated_once(acc, n, "dedup.py label-prop CC")
 
 
-def test_star_cc_materializes_edges_once(spark):
+def test_star_cc_materializes_edges_once(spark, star_cc_paths):
     from streaming_data_spark.operators.dedup import connected_components_star
 
-    edges, acc, n = _instrumented_edges(spark)
-    out = connected_components_star(edges)
-    rows = {r["id"]: r["cluster_id"] for r in out.collect()}
-    assert rows[3] == 0 and rows[14] == 10 and rows[21] == 20
-    _assert_evaluated_once(acc, n, "dedup.py star-CC")
+    for path in star_cc_paths():
+        edges, acc, n = _instrumented_edges(spark)
+        out = connected_components_star(edges)
+        rows = {r["id"]: r["cluster_id"] for r in out.collect()}
+        assert rows[3] == 0 and rows[14] == 10 and rows[21] == 20
+        _assert_evaluated_once(acc, n, f"dedup.py star-CC ({path})")
 
 
 def test_triangles_materializes_edges_once(spark):

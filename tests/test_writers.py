@@ -135,30 +135,17 @@ def _keyed_batch(spark, lo, hi, key_type="bigint"):
     )
 
 
-def _jobs_of(spark, fn):
-    """(fn's result, the number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"jobs-of-{id(fn)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _data_files(path):
     return set(glob.glob(f"{path}/**/part-*", recursive=True))
 
 
-def test_write_if_absent_job_budget_on_existing_target(spark, target):
+def test_write_if_absent_job_budget_on_existing_target(spark, target, jobs_of):
     """At most 3 jobs per call on a non-empty target: the key scan,
     the dedup's shuffle stage and the write. No schema-inference job,
     no persist + count."""
     write_if_absent(_keyed_batch(spark, 0, 3000), target, keys=["k"])
-    n, jobs = _jobs_of(
-        spark,
-        lambda: write_if_absent(_keyed_batch(spark, 1500, 4500), target, keys=["k"]),
+    n, jobs = jobs_of(
+        lambda: write_if_absent(_keyed_batch(spark, 1500, 4500), target, keys=["k"])
     )
     assert n == 1500
     assert jobs <= 3, jobs
@@ -189,14 +176,13 @@ def test_write_if_absent_empty_replay_adds_only_a_schema_file(spark, target):
 
 
 @pytest.mark.parametrize("fmt", ["json", "orc"])
-def test_write_if_absent_other_name_resolved_formats(spark, target, fmt):
+def test_write_if_absent_other_name_resolved_formats(spark, target, fmt, jobs_of):
     """JSON and ORC targets keep the keyed-append contract. ORC reads
     its key schema from a footer on the driver, so it stays inside the
     same 3-job budget as parquet."""
     assert write_if_absent(_keyed_batch(spark, 0, 100), target, ["k"], fmt=fmt) == 100
-    n, jobs = _jobs_of(
-        spark,
-        lambda: write_if_absent(_keyed_batch(spark, 50, 150), target, ["k"], fmt=fmt),
+    n, jobs = jobs_of(
+        lambda: write_if_absent(_keyed_batch(spark, 50, 150), target, ["k"], fmt=fmt)
     )
     assert n == 50
     if fmt == "orc":
