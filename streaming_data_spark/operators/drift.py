@@ -14,13 +14,13 @@ listener tier's job, consistent with the K9 alert sinks):
 - ``js_divergence`` — Jensen-Shannon divergence between two
   categorical profiles (e.g. hour-of-day activity): symmetric,
   bounded by ln 2, zero-count cells contribute exactly 0.
-- ``cusum``  — one-sided CUSUM changepoint scores over an ordered
+- ``cusum``  — two-sided CUSUM changepoint scores over an ordered
   per-key series: s⁺ₜ = max(0, s⁺ₜ₋₁ + (xₜ − μ − k·σ)),
-  s⁻ₜ = max(0, s⁻ₜ₋₁ + (μ − k·σ′... symmetric form below) — the
-  classic sequential drift detector for a LEVEL shift, run as the
-  same partition-level ``mapInPandas`` fold as the EWMA/RSI
-  recursions (inherently sequential along the day axis, parallel
-  across keys).
+  s⁻ₜ = max(0, s⁻ₜ₋₁ + (μ − k·σ − xₜ)) — the classic sequential
+  drift detector for a LEVEL shift. The recursion is the pure
+  ``_advance_cusum`` fold (streaming/stateful), bound by the same
+  ``_partition_fold`` as the EWMA/RSI indicators (inherently
+  sequential along the day axis, parallel across keys).
 
 Float contract: bin/count arithmetic is integer-exact; the
 proportions and ln terms are single IEEE ops reproduced identically
@@ -43,7 +43,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField
+
+from streaming_data_spark.streaming.stateful import (
+    _advance_cusum,
+    _fold_input,
+    _partition_fold,
+)
 
 __all__ = ["psi", "js_divergence", "cusum"]
 
@@ -180,10 +186,11 @@ def cusum(
     step is a max/add/sub of identical doubles — bit-reproducible by
     any engine repeating the op order (the RECURSIVE-CTE oracle).
 
-    Runs as the ewma/rsi partition-level ``mapInPandas`` fold:
-    repartition(key) + sortWithinPartitions(key, order), state
-    carried across Arrow record batches. Single-key σ = NULL rows
-    (one observation) are dropped, matching the oracle.
+    The fold is ``_advance_cusum``, bound by ``_partition_fold`` like
+    the ewma/rsi indicators: repartition(key) +
+    sortWithinPartitions(key, order), state carried across Arrow
+    record batches. Single-key σ = NULL rows (one observation) are
+    dropped, matching the oracle.
 
     Returns (key, order_col, x_col, s_pos, s_neg) — keys × steps rows.
     """
@@ -195,37 +202,23 @@ def cusum(
     prepped = series.join(F.broadcast(stats), key).filter(
         F.col("_sigma").isNotNull()
     )
-    cols = [key, order_col, x_col]
-    out_schema = StructType(
-        [f for f in prepped.schema.fields if f.name in cols]
-        + [StructField("s_pos", DoubleType()), StructField("s_neg", DoubleType())]
-    )
-
-    def _fold_partition(pdfs):
-        cur = object()
-        s_pos = s_neg = 0.0
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pos_out, neg_out = [], []
-            for k_val, x, mu, sigma in zip(
-                pdf[key], pdf[x_col], pdf["_mu"], pdf["_sigma"]
-            ):
-                if k_val != cur:
-                    cur = k_val
-                    s_pos = s_neg = 0.0
-                slack = kf * float(sigma)
-                s_pos = max(0.0, s_pos + (float(x) - float(mu) - slack))
-                s_neg = max(0.0, s_neg + (float(mu) - slack - float(x)))
-                pos_out.append(s_pos)
-                neg_out.append(s_neg)
-            pdf = pdf.copy()
-            pdf["s_pos"] = pos_out
-            pdf["s_neg"] = neg_out
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return (
-        prepped.repartition(key)
-        .sortWithinPartitions(key, order_col)
-        .mapInPandas(_fold_partition, schema=out_schema)
+    order_f, x_f = prepped.schema[order_col], prepped.schema[x_col]
+    return _partition_fold(
+        prepped,
+        key,
+        [order_col],
+        [
+            order_f,
+            x_f,
+            StructField("s_pos", DoubleType()),
+            StructField("s_neg", DoubleType()),
+        ],
+        lambda state, b: _advance_cusum(
+            state,
+            _fold_input(b[order_col], order_f.dataType),
+            b[x_col],
+            float(b["_mu"][0]),
+            float(b["_sigma"][0]),
+            kf,
+        ),
     )

@@ -12,12 +12,12 @@ between indicator passes.
 Scale notes: inputs are per-(key, day) aggregates, so row counts are
 bounded by keys × calendar days regardless of fact volume; the only
 fact-sized pass is the daily-close groupBy, a map-side-combinable
-aggregation. The EWMA is the one inherently-sequential recursion
-(y_t = a·x_t + (1-a)·y_{t-1}); it runs as a partition-level
-``mapInPandas`` fold over key-sorted partitions (state carried
-across Arrow batches — see ``ewma``'s docstring) — vectorized,
-parallel across partitions, sequential only in the dimension the
-math requires.
+aggregation. The inherently-sequential recursions (EWMA, RSI, Holt
+and the capped-balance ledger) are pure per-key folds in
+streaming/stateful — the stream operators run the same ones — bound
+here by ``_partition_fold``: one key-sorted Arrow pass per partition
+with state carried across record batches, parallel across
+partitions and sequential only in the dimension the math requires.
 """
 
 from __future__ import annotations
@@ -28,7 +28,17 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     StructField,
-    StructType,
+    TimestampType,
+)
+
+from streaming_data_spark.streaming.stateful import (
+    _advance_balance,
+    _advance_ewma,
+    _advance_holt,
+    _advance_rsi,
+    _fold_input,
+    _partition_fold,
+    _us,
 )
 
 
@@ -143,54 +153,33 @@ def ewma(
     price_col: str = "close",
 ) -> DataFrame:
     """Recursive exponentially-weighted moving average per key:
-    y_1 = x_1; y_t = alpha·x_t + (1-alpha)·y_{t-1}.
+    y_1 = x_1; y_t = alpha·x_t + (1-alpha)·y_{t-1}, over a timestamp
+    ``day_col``. Returns (key, day, close, ewma), one row per day.
 
-    The recursion is inherently sequential along each key's day axis.
-    It runs inside ``mapInPandas`` over a key-partitioned,
-    (key, day)-sorted layout — NOT per-key ``applyInPandas``: with
-    thousands of small keys (1500 users × ~27 days at sf0.1) the
-    per-GROUP Arrow round-trip dominated (~5 s for 40k rows); one
-    Arrow transfer per PARTITION with the fold state carried across
-    record batches is ~5× cheaper, same math. The fold is written as
-    EXACTLY ``a*x + (1-a)*y`` so an engine repeating the same IEEE
-    ops (the DuckDB recursive-CTE oracle) reproduces it bit-for-bit
-    before rounding.
+    The recursion is the stream's ``_advance_ewma`` fold, bound through
+    ``_partition_fold`` (key-sorted partitions, one Arrow pass each),
+    so ewma_stream and this operator run one function. The
+    fold is written as EXACTLY ``a*x + (1-a)*y`` so an engine repeating
+    the same IEEE ops (the DuckDB recursive-CTE oracle) reproduces it
+    bit-for-bit before rounding.
 
     A closed-form window expression exists (y_t = Σ a(1-a)^(t-k)x_k)
     but needs (1-a)^(-k) factors that overflow past a few thousand
     rows — the per-key fold is the numerically-honest form.
     """
     a = float(alpha)
-    cols = [f.name for f in daily.schema.fields]
-    out_schema = StructType(
-        list(daily.schema.fields) + [StructField("ewma", DoubleType())]
-    )
-
-    def _fold_partition(pdfs):
-        # one partition = many whole keys, sorted by (key, day);
-        # Arrow may slice it into several record batches, so the
-        # (current key, running value) state crosses batch boundaries
-        cur = object()
-        y = None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            out = []
-            for k_val, x in zip(pdf[key], pdf[price_col]):
-                if k_val != cur:
-                    cur = k_val
-                    y = float(x)
-                else:
-                    y = a * float(x) + (1.0 - a) * y
-                out.append(y)
-            pdf = pdf.copy()
-            pdf["ewma"] = out
-            yield pdf[cols + ["ewma"]]
-
-    return (
-        daily.repartition(key)
-        .sortWithinPartitions(key, day_col)
-        .mapInPandas(_fold_partition, schema=out_schema)
+    return _partition_fold(
+        daily,
+        key,
+        [day_col],
+        [
+            StructField(day_col, TimestampType()),
+            StructField(price_col, DoubleType()),
+            StructField("ewma", DoubleType()),
+        ],
+        lambda state, b: _advance_ewma(
+            state, _us(b[day_col]), b[price_col].astype("float64"), a
+        ),
     )
 
 
@@ -252,86 +241,29 @@ def rsi(
     day_col: str = "day",
     price_col: str = "close",
 ) -> DataFrame:
-    """Wilder's RSI over per-key daily closes — the second inherently
-    sequential indicator recursion (after ewma): the seed average
-    gain/loss over the first ``periods`` deltas is followed by
-    avg = (avg·(periods-1) + x) / periods per day. Runs as the same
-    partition-level ``mapInPandas`` fold as ``ewma`` (key-sorted
-    partitions, state across Arrow batches); the DuckDB oracle is a
-    RECURSIVE CTE repeating the identical op order. Emits from day
-    ``periods``+1 (the first day with a full delta window).
+    """Wilder's RSI over per-key daily closes (timestamp ``day_col``):
+    the seed average gain/loss over the first ``periods`` deltas is
+    followed by avg = (avg·(periods-1) + x) / periods per day. The
+    recursion is the stream's ``_advance_rsi`` fold, bound like
+    ``ewma``; the DuckDB oracle is a RECURSIVE CTE repeating the
+    identical op order. Emits from day ``periods``+1 (the first day
+    with a full delta window), RSI rounded to 6 by Spark's round().
 
     avg_loss == 0 ⇒ RSI 100 (the charting convention — both engines
     branch on exact 0, deterministic)."""
-    p = float(periods)
-    cols = [key, day_col, price_col]
-    out_schema = StructType(
+    return _partition_fold(
+        daily.select(key, day_col, price_col),
+        key,
+        [day_col],
         [
-            daily.schema[key],
-            daily.schema[day_col],
-            daily.schema[price_col],
+            StructField(day_col, TimestampType()),
+            StructField(price_col, DoubleType()),
             StructField("rsi", DoubleType()),
-        ]
-    )
-
-    def _fold_partition(pdfs):
-        # state per key: (n_deltas, seed_gain_sum, seed_loss_sum,
-        # avg_gain, avg_loss, prev_close) — carried across batches
-        cur = object()
-        n = 0
-        gsum = lsum = 0.0
-        ag = al = None
-        prev = None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            keys_out, days_out, closes_out, rsis_out = [], [], [], []
-            for k_val, d_val, x in zip(pdf[key], pdf[day_col], pdf[price_col]):
-                x = float(x)
-                if k_val != cur:
-                    cur, n, gsum, lsum, ag, al, prev = k_val, 0, 0.0, 0.0, None, None, x
-                    continue
-                delta = x - prev
-                prev = x
-                gain = delta if delta > 0 else 0.0
-                loss = -delta if delta < 0 else 0.0
-                n += 1
-                if n < periods:
-                    gsum += gain
-                    lsum += loss
-                    continue
-                if n == periods:
-                    gsum += gain
-                    lsum += loss
-                    ag = gsum / p
-                    al = lsum / p
-                else:
-                    ag = (ag * (p - 1.0) + gain) / p
-                    al = (al * (p - 1.0) + loss) / p
-                r = 100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al)
-                keys_out.append(k_val)
-                days_out.append(d_val)
-                closes_out.append(x)
-                rsis_out.append(r)
-            if keys_out:
-                import pandas as pd
-
-                yield pd.DataFrame(
-                    {
-                        key: keys_out,
-                        day_col: days_out,
-                        price_col: closes_out,
-                        "rsi": rsis_out,
-                    }
-                )
-
-    return (
-        daily.select(*cols)
-        .repartition(key)
-        .sortWithinPartitions(key, day_col)
-        .mapInPandas(_fold_partition, schema=out_schema)
-        .withColumn("rsi", F.round("rsi", 6))
-    )
+        ],
+        lambda state, b: _advance_rsi(
+            state, _us(b[day_col]), b[price_col].astype("float64"), periods
+        ),
+    ).withColumn("rsi", F.round("rsi", 6))
 
 
 def stochastic(
@@ -401,9 +333,9 @@ def holt(
     day_col: str = "day",
     price_col: str = "close",
 ) -> DataFrame:
-    """Holt's linear-trend exponential smoothing per key — the
-    third inherently-sequential recursion (a DOUBLE-state fold:
-    level + trend), run exactly like ``ewma``/``rsi``:
+    """Holt's linear-trend exponential smoothing per key — a
+    DOUBLE-state recursion (level + trend), bound like ``ewma`` through
+    the stream's ``_advance_holt`` fold:
 
         l_1 = x_1,  b_1 = 0
         l_t = α·x_t + (1−α)·(l_{t−1} + b_{t−1})
@@ -417,46 +349,20 @@ def holt(
     then the same IEEE op sequence in both engines, so outputs are
     exact and unrounded.
     """
-    a, bb = float(alpha), float(beta)
-    oma, omb = 1.0 - a, 1.0 - bb
-    cols = [key, day_col, price_col]
-    out_schema = StructType(
-        [daily.schema[c] for c in cols]
-        + [
+    return _partition_fold(
+        daily.select(key, day_col, price_col),
+        key,
+        [day_col],
+        [
+            StructField(day_col, TimestampType()),
+            StructField(price_col, DoubleType()),
             StructField("level", DoubleType()),
             StructField("trend", DoubleType()),
             StructField("fc_next", DoubleType()),
-        ]
-    )
-
-    def _fold_partition(pdfs):
-        cur = object()
-        lvl = trd = None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            lvls, trds, fcs = [], [], []
-            for k_val, x in zip(pdf[key], pdf[price_col]):
-                x = float(x)
-                if k_val != cur:
-                    cur = k_val
-                    lvl, trd = x, 0.0
-                else:
-                    prev = lvl
-                    lvl = a * x + oma * (lvl + trd)
-                    trd = bb * (lvl - prev) + omb * trd
-                lvls.append(lvl)
-                trds.append(trd)
-                fcs.append(lvl + trd)
-            pdf = pdf.copy()
-            pdf["level"], pdf["trend"], pdf["fc_next"] = lvls, trds, fcs
-            yield pdf[cols + ["level", "trend", "fc_next"]]
-
-    return (
-        daily.select(*cols)
-        .repartition(key)
-        .sortWithinPartitions(key, day_col)
-        .mapInPandas(_fold_partition, schema=out_schema)
+        ],
+        lambda state, b: _advance_holt(
+            state, _us(b[day_col]), b[price_col].astype("float64"), alpha, beta
+        ),
     )
 
 
@@ -470,15 +376,13 @@ def clamped_balance(
 ) -> DataFrame:
     """Capped running-balance ledger per key: fold
     ``bal_t = min(cap, max(0, bal_{t-1} + delta_t))`` over the key's
-    seq order, with ``bal_0`` seeded from ``start + delta_1``. Emits
-    every input row plus ``balance`` and a ``clamp`` flag (-1 the step
-    hit the floor, +1 the ceiling, 0 in range) — the inventory /
-    wallet / quota simulation a prefix-sum window cannot express
-    because clamping destroys the prefix structure.
+    seq order, with ``bal_0`` seeded from ``start + delta_1``. Returns
+    (key, seq, delta, balance, clamp): every input row plus a ``clamp``
+    flag (-1 the step hit the floor, +1 the ceiling, 0 in range) — the
+    inventory / wallet / quota simulation a prefix-sum window cannot
+    express because clamping destroys the prefix structure.
 
-    Same execution shape as ``ewma``: ONE Arrow transfer per
-    key-sorted partition (``mapInPandas`` with fold state carried
-    across record batches), never per-key ``applyInPandas``. When the
+    The fold is ``_advance_balance``, bound like ``ewma``. When the
     deltas sit on an integer grid (whole-unit quantities), every
     add/clamp is IEEE-exact, so a recursive-CTE oracle repeating the
     identical op order reproduces the fold bit-for-bit.
@@ -488,39 +392,22 @@ def clamped_balance(
     engine-side, partition-parallel form.
     """
     cap_f, start_f = float(cap), float(start)
-    cols = [f.name for f in deltas.schema.fields]
-    out_schema = StructType(
-        list(deltas.schema.fields)
-        + [StructField("balance", DoubleType()),
-           StructField("clamp", IntegerType())]
-    )
-
-    def _fold_partition(pdfs):
-        cur = object()
-        bal = None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            bals, clamps = [], []
-            for k_val, d in zip(pdf[key], pdf[delta_col]):
-                prev = start_f if k_val != cur else bal
-                cur = k_val
-                raw = prev + float(d)
-                if raw < 0.0:
-                    bal, flag = 0.0, -1
-                elif raw > cap_f:
-                    bal, flag = cap_f, 1
-                else:
-                    bal, flag = raw, 0
-                bals.append(bal)
-                clamps.append(flag)
-            pdf = pdf.copy()
-            pdf["balance"], pdf["clamp"] = bals, clamps
-            yield pdf[cols + ["balance", "clamp"]]
-
-    return (
-        deltas.select(*cols)
-        .repartition(key)
-        .sortWithinPartitions(key, seq_col)
-        .mapInPandas(_fold_partition, schema=out_schema)
+    seq_f, delta_f = deltas.schema[seq_col], deltas.schema[delta_col]
+    return _partition_fold(
+        deltas.select(key, seq_col, delta_col),
+        key,
+        [seq_col],
+        [
+            seq_f,
+            delta_f,
+            StructField("balance", DoubleType()),
+            StructField("clamp", IntegerType()),
+        ],
+        lambda state, b: _advance_balance(
+            state,
+            _fold_input(b[seq_col], seq_f.dataType),
+            b[delta_col],
+            start_f,
+            cap_f,
+        ),
     )

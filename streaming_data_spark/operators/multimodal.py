@@ -26,7 +26,6 @@ Decoder tiers:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -275,10 +274,6 @@ def decode_ppm(payload: bytes):
     return _make_ppm_fns()[0](payload)
 
 
-def resize_ppm_array(img, width: int, height: int):
-    return _make_ppm_fns()[2](img, width, height)
-
-
 def encode_wav(samples, rate: int) -> bytes:
     return _make_wav_fns()[1](samples, rate)
 
@@ -289,13 +284,6 @@ def decode_wav(payload: bytes):
 
 def resample_wav_array(samples, src_rate: int, dst_rate: int):
     return _make_wav_fns()[2](samples, src_rate, dst_rate)
-
-
-def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic stand-in for a real decoder: sha256-seeded floats
-    in [0,1). Stable across runs/processes — testable plumbing."""
-    digest = hashlib.sha256(payload or b"").digest()
-    return [digest[i % 32] / 255.0 for i in range(dim)]
 
 
 def extract_features(

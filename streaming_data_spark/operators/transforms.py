@@ -37,12 +37,6 @@ def filter_contains(df: DataFrame, col: str, needle: str) -> DataFrame:
     return df.filter(F.col(col).contains(needle))
 
 
-def drop_null_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """P7/P8 — null-row drop / drop-if-empty event. Ref: etl_pipeline.py:48,
-    instagram-profiles.conf:19-21."""
-    return df.na.drop(subset=list(subset) if subset else None)
-
-
 def copy_column(df: DataFrame, src: str, dst: str) -> DataFrame:
     """P9 — derived/copy column. Ref: container-logs.conf:15-17."""
     return df.withColumn(dst, F.col(src))
@@ -79,25 +73,6 @@ def normalize_nulls(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
         for c in df.columns
     ]
     return df.select(*exprs)
-
-
-def parse_json_column(
-    df: DataFrame,
-    col: str,
-    schema: StructType,
-    corrupt_col: str | None = "_corrupt_record",
-) -> DataFrame:
-    """F14 + T8 — JSON parse with dead-letter routing support.
-
-    Ref: container-logs.conf:11-13 (json filter), instagram-profiles.conf:12-16.
-    PERMISSIVE mode keeps unparseable payloads in ``corrupt_col`` so the
-    caller can route them to an error sink instead of dropping them.
-    """
-    opts = {"mode": "PERMISSIVE"}
-    if corrupt_col:
-        schema = StructType(list(schema.fields)).add(corrupt_col, "string")
-        opts["columnNameOfCorruptRecord"] = corrupt_col
-    return df.withColumn(col, F.from_json(F.col(col), schema, opts))
 
 
 def logstash_normalize(

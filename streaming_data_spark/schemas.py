@@ -232,6 +232,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}

@@ -65,15 +65,6 @@ def jdbc_table(
     return reader.load()
 
 
-def jdbc_keys(
-    spark: SparkSession, url: str, table: str, key_col: str, **kwargs
-) -> DataFrame:
-    """S7 — pruned key scan (SELECT market FROM upbit_markets,
-    upbit_data_pipeline.py:64-65); the select() pushes column pruning
-    into the JDBC query."""
-    return jdbc_table(spark, url, table, **kwargs).select(key_col)
-
-
 def read_orc(
     spark: SparkSession,
     path: str,

@@ -18,20 +18,6 @@ from pyspark.sql.streaming import StreamingQueryListener
 AlertFn = Callable[[dict], None]
 
 
-def slack_webhook_sender(webhook_url: str) -> AlertFn:
-    """Build the production transport (requests.post to a Slack
-    webhook, as the reference does at upbit_data_pipeline.py:199-204).
-    Import-guarded: the engine never requires ``requests`` at runtime
-    unless this transport is actually used."""
-
-    def _send(payload: dict) -> None:
-        import requests  # deferred; baked images may omit it
-
-        requests.post(webhook_url, json={"text": str(payload)}, timeout=10)
-
-    return _send
-
-
 class AlertingListener(StreamingQueryListener):
     """K9 — stream lifecycle alerts (started / progress / terminated).
 

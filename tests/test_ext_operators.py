@@ -606,6 +606,44 @@ def test_ewma_matches_hand_fold_and_bounds(spark):
         assert min(closes[: i + 1]) <= got[i + 1] <= max(closes[: i + 1])
 
 
+def test_partition_folds_ignore_arrow_batch_size(spark, sf_small):
+    """The batch folds carry a key's state across Arrow record batches:
+    at 3 records per batch nearly every key straddles a cut, and ewma,
+    rsi, holt, clamped_balance and cusum must return exactly the rows
+    they return at the default batch size."""
+    from streaming_data_spark.operators import drift
+    from streaming_data_spark.operators import indicators as ind
+
+    daily = ind.daily_closes(load_table(spark, sf_small, "events"))
+    li = load_table(spark, sf_small, "lineitem")
+    monthly = li.groupBy(
+        "l_suppkey", F.trunc(F.to_date("l_shipdate"), "month").alias("month")
+    ).agg(F.sum(F.col("l_quantity") - 25).alias("delta"))
+    typed = (
+        load_table(spark, sf_small, "events")
+        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
+        .agg(F.round(F.avg("value"), 6).alias("x"))
+    )
+    ops = {
+        "ewma": lambda: ind.ewma(daily, alpha=0.2),
+        "rsi": lambda: ind.rsi(daily, periods=5),
+        "holt": lambda: ind.holt(daily, alpha=0.2, beta=0.1),
+        "balance": lambda: ind.clamped_balance(monthly, start=50.0, cap=100.0),
+        "cusum": lambda: drift.cusum(typed, "event_type", "day", "x"),
+    }
+    want = {name: sorted(map(tuple, op().collect())) for name, op in ops.items()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {name: sorted(map(tuple, op().collect())) for name, op in ops.items()}
+    finally:
+        spark.conf.set(key, old)
+    for name in ops:
+        assert len(want[name]) > 3, name
+        assert got[name] == want[name], name
+
+
 def test_max_drawdown_crafted_peak_trough(spark):
     """Peak 20 → trough 5 is a -75% drawdown even when the series
     later recovers above the old peak; a monotone series draws 0."""

@@ -184,6 +184,8 @@ _FOLDS = {
     "_advance_stoch": (("days", "highs", "lows", "closes"), (3, 2)),
     "_advance_obv": (("days", "closes", "volumes"), ()),
     "_advance_holt": (("days", "closes"), (0.2, 0.1)),
+    "_advance_balance": (("days", "closes"), (50.0, 120.0)),
+    "_advance_cusum": (("days", "closes"), (50.0, 10.0, 0.5)),
 }
 
 

@@ -678,6 +678,44 @@ def test_change_alert_stream_matches_batch(spark, sf_small, tmp_path):
     assert len(got) > 0  # the threshold actually fires on this data
 
 
+def test_round6_half_up_matches_spark_round(spark):
+    """The stream kernels' rounding helper must give Spark's round(x, 6)
+    bit-for-bit. Spark rounds the double's decimal string HALF_UP, so
+    these half-way values, whose binary product x * 1e6 falls on the
+    other side of .5, are where a float-arithmetic rounding disagrees."""
+    from streaming_data_spark.streaming.stateful import _round6_half_up
+
+    xs = [65.4790125, 66.5467925, 67.21619749999999, 64.4549735, 69.91917049999999]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    df.createOrReplaceTempView("round6_probe")
+    rounded = spark.sql("SELECT round(x, 6) AS r FROM round6_probe ORDER BY i")
+    want = [r.r for r in rounded.collect()]
+    assert [_round6_half_up(x) for x in xs] == want
+
+
+def test_stateful_folds_unpickle_without_the_package(tmp_path):
+    """Executor Python workers need not have this package importable
+    (a driver may run from any directory), so the folds the batch
+    indicators ship must travel by value: a fold pickled here has to
+    load and run in an interpreter that cannot import the package."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from streaming_data_spark.streaming.stateful import _advance_ewma
+
+    payload = cloudpickle.dumps(lambda d, c: _advance_ewma(None, d, c, 0.5)[0])
+    code = "import pickle, sys; print(pickle.loads(sys.stdin.buffer.read())([1, 2], [2.0, 4.0]))"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=payload, cwd=tmp_path, env=env, capture_output=True, check=True,
+    )
+    assert out.stdout.decode().strip() == "[(1, 2.0, 2.0), (2, 4.0, 3.0)]"
+
+
 def test_change_alert_stream_runs_on_string_key(spark, tmp_path):
     """The alert rows carry the input's key column under its own name
     and type: a string key must run to completion and come back as
