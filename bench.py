@@ -1123,9 +1123,9 @@ def main() -> None:
     ext_errors: dict[str, str] = {}  # never poisons the headline sentinel
 
     # Shared pair tier canary (r8 advice): six ext queries consume ONE
-    # memoized pair set, so only whichever consumer runs first pays the
+    # shared pair view, so only whichever consumer runs first pays the
     # build — making their timings order-dependent and a build-stage
-    # regression invisible on five of the six. Clear the memo and time
+    # regression invisible on five of the six. Drop the view and time
     # the build as its own line; the consumers below then all run warm,
     # so each per-query number isolates that query's own cost.
     try:
@@ -1134,7 +1134,7 @@ def main() -> None:
 
         best = float("inf")
         for _ in range(3):  # min-of-3, same protocol as the suites
-            _dedup._PREFIX_PAIR_CACHE.clear()
+            _dedup.drop_pair_views(spark)
             start = time.perf_counter()
             bench_canary.build_memoized(spark, sf_dir)
             best = min(best, time.perf_counter() - start)
@@ -1198,7 +1198,7 @@ def main() -> None:
         "methodology": (
             "headline: warm run + min-of-3 (x2 min-of-5); ext: min-of-3 "
             "everywhere (r9 verdict item 5); shared_pair_build timed "
-            "separately, min-of-3 on a cleared memo per rep, so ext "
+            "separately, min-of-3 on a dropped pair view per rep, so ext "
             "numbers are order-independent"
         ),
         "load_context": {

@@ -10,9 +10,10 @@ the wrong reference with no test failing. All three sites now import
 from here.
 
 The spec itself mirrors the shared-pair consumers' registry config
-(the x2/x41/x59/x63/x70/x75 tier all build this exact pair set via
-``cache_token=sf_dir``), which is why the bench times it as its own
-line: only whichever consumer runs first pays the build.
+(x41, x70, x89, x92, x96 and x97 all read this exact pair set from one
+session temp view, ``dedup.ngram_jaccard_pairs_prefix_shared``), which
+is why the bench times it as its own line: only whichever consumer
+runs first pays the build.
 """
 
 from __future__ import annotations
@@ -33,9 +34,9 @@ def canary_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UN-memoized builder — the deterministic analyzed plan
-    tools/plan_fps.py fingerprints (the memoizing wrapper returns a
-    checkpointed LogicalRDD whose plan string is session-dependent)."""
+    """The unshared builder — the deterministic analyzed plan
+    tools/plan_fps.py fingerprints (the shared build returns a view
+    over a checkpointed LogicalRDD)."""
     from streaming_data_spark.operators import dedup
 
     return dedup.ngram_jaccard_pairs_prefix(
@@ -45,11 +46,11 @@ def build_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The memoizing build bench.py/floor_probe.py TIME (clear
-    ``dedup._PREFIX_PAIR_CACHE`` first or the call is a cache hit)."""
+    """The shared build bench.py/floor_probe.py TIME (call
+    ``dedup.drop_pair_views(spark)`` first or the call is a view hit)."""
     from streaming_data_spark.operators import dedup
 
     return dedup.ngram_jaccard_pairs_prefix_shared(
         canary_input(spark, sf_dir), CANARY_ID_COL, CANARY_TEXT_COL,
-        n=CANARY_N, threshold=CANARY_THRESHOLD, cache_token=sf_dir,
+        n=CANARY_N, threshold=CANARY_THRESHOLD,
     )

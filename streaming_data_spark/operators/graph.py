@@ -1,8 +1,8 @@
 """[EXT] Iterative graph scoring over the duplicate graph.
 
-``connected_components`` (dedup.py) answers "which docs are the same
-document"; PageRank over the same near-dup edge set answers "which
-doc is the most CENTRAL copy" — a centrality-based canonicalization
+``connected_components_star`` (dedup.py) answers "which docs are the
+same document"; PageRank over the same near-dup edge set answers
+"which doc is the most CENTRAL copy" — a centrality-based canonicalization
 signal complementing x41's quality-based pick (a hub mirrored by many
 partial copies outranks a leaf copy even when their quality scores
 tie). Public algorithm (Brin & Page 1998); damping 0.85.

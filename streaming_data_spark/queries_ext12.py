@@ -28,7 +28,7 @@ x2's); x22 is two explode+groupBy passes with map-side combine; x23
 is a pure row-local projection + one groupBy on source. No all-pairs
 path anywhere.
 
-All hashing is the portable 28-bit md5 idiom (dedup._base_hash), so
+All hashing is the portable 28-bit md5 idiom (dedup._md5_hash28), so
 every query has an exact DuckDB oracle.
 """
 

@@ -12,10 +12,9 @@
   featurization) — token → dimension index via a PORTABLE hash
   (first 7 md5 hex chars mod D, the x11 split idiom; Spark's native
   murmur3 ``hash()`` differs from DuckDB's, so md5 is the
-  cross-engine contract, with xxhash64 as the documented native-perf
-  tier exactly like dedup's base_hash). Output is the sparse
-  (doc_id, feature_idx, tf) triple table — collisions are the
-  accepted trade of the trick, identical in both engines by
+  cross-engine contract, as in dedup's MinHash base hash). Output is
+  the sparse (doc_id, feature_idx, tf) triple table — collisions are
+  the accepted trade of the trick, identical in both engines by
   construction.
 
 Float contract: the LOO numerator is an order-dependent group sum →

@@ -44,9 +44,9 @@ def q_x41_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contraction CC (O(log^2 n) rounds regardless of component
     # diameter). Same oracle; measured 9.9s -> see SCALE.md.
     # r8: the shared tier — five registry queries consume this exact
-    # pair set; it is materialized once per (session, dataset).
+    # pair set; it is materialized once per (session, input files).
     pairs = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_dir
+        docs, "doc_id", "text", n=3, threshold=0.8
     )
     comps = dedup.connected_components_star(
         pairs, "id_a", "id_b"

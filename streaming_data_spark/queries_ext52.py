@@ -52,7 +52,7 @@ def q_x70_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     document near-dup graph, with their final peeled degree."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_dir
+        docs, "doc_id", "text", n=3, threshold=0.8
     )
     return graph.kcore_peel(pairs, k=KCORE_K, rounds=KCORE_ROUNDS)
 

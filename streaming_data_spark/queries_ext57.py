@@ -177,7 +177,7 @@ def q_x89_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs crossing the x11 md5 train/test split."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_dir
+        docs, "doc_id", "text", n=3, threshold=0.8
     )
     split = docs.select(
         "doc_id", split_column("doc_id").alias("split")

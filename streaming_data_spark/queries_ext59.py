@@ -40,7 +40,7 @@ def q_x92_dup_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # shared tier already localCheckpoints the pair set — no second cut
     pairs = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_dir
+        docs, "doc_id", "text", n=3, threshold=0.8
     ).select("id_a", "id_b")
     deg = (
         pairs.select(F.col("id_a").alias("id"))

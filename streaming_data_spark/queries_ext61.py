@@ -44,11 +44,11 @@ AA_TOPK = 20
 KM_CENSOR_DAYS = 90
 
 
-def _sym_edges(docs: DataFrame, sf_dir: str) -> DataFrame:
+def _sym_edges(docs: DataFrame) -> DataFrame:
     """Symmetric (node, nbr) adjacency of the Jaccard≥0.8 near-dup
     graph, materialized once (three consumers downstream)."""
     pairs = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_dir
+        docs, "doc_id", "text", n=3, threshold=0.8
     ).select("id_a", "id_b")
     return (
         pairs.select(F.col("id_a").alias("node"), F.col("id_b").alias("nbr"))
@@ -73,7 +73,7 @@ def q_x96_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_a, id_b, n_common, aa_score): top-20 non-adjacent pairs by
     Adamic-Adar common-neighbor score."""
     docs = _t(spark, sf_dir, "documents")
-    sym = _sym_edges(docs, sf_dir)
+    sym = _sym_edges(docs)
     # only deg>=2 nodes can center a wedge, and the explicit filter
     # keeps ANSI mode off the 1/ln(1) division for deg-1 nodes
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
@@ -135,7 +135,7 @@ def q_x97_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_ends, mean_deg, assortativity): Pearson r of endpoint
     degrees over the symmetric near-dup edge set."""
     docs = _t(spark, sf_dir, "documents")
-    sym = _sym_edges(docs, sf_dir)
+    sym = _sym_edges(docs)
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     ends = (
         sym.join(deg, "node")

@@ -47,30 +47,11 @@ toks AS (
 
 def q_x13_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters on the documents table: Jaccard≥0.8 pairs →
-    connected components → (doc_id, cluster_id, cluster_size,
-    is_canonical). The canonical survivor is the cluster's min id —
-    drop every row where is_canonical is false and the corpus is
-    transitively deduped."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
-    comps = dedup.connected_components(pairs, "id_a", "id_b")
-    w = Window.partitionBy("cluster_id")
-    return comps.select(
-        F.col("id").alias("doc_id"),
-        "cluster_id",
-        F.count(F.lit(1)).over(w).alias("cluster_size"),
-        (F.col("id") == F.col("cluster_id")).alias("is_canonical"),
-    )
-
-
-def q_x13_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identical output to q_x13_dup_clusters but clustered via
-    large-star/small-star contraction (dedup.connected_components_star)
-    instead of min-label propagation — the oracle gate proves the two
-    algorithms agree end-to-end on real near-dup pairs, not just on
-    the pytest graphs. Star is the variant to reach for when the
-    duplicate graph's diameter is unknown (chains of partial overlaps
-    rather than near-clique clusters)."""
+    connected components (large-star/small-star contraction,
+    dedup.connected_components_star) → (doc_id, cluster_id,
+    cluster_size, is_canonical). The canonical survivor is the
+    cluster's min id — drop every row where is_canonical is false and
+    the corpus is transitively deduped."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
     comps = dedup.connected_components_star(pairs, "id_a", "id_b")
@@ -184,15 +165,16 @@ SELECT doc_id, chunk_id, n_tokens, bucket, seq_id, seq_fill FROM pack
 
 
 EXT9_QUERIES = {
+    # both names stay registered: the __spark_entry__ window lists the _star one
     "x13_dup_clusters": q_x13_dup_clusters,
-    "x13_dup_clusters_star": q_x13_dup_clusters_star,
+    "x13_dup_clusters_star": q_x13_dup_clusters,
     "x14_chunk_documents": q_x14_chunk_documents,
     "x15_pack_sequences": q_x15_pack_sequences,
 }
 
 EXT9_ORACLES = {
     "x13_dup_clusters": SQL_X13,
-    "x13_dup_clusters_star": SQL_X13,  # same contract, different algorithm
+    "x13_dup_clusters_star": SQL_X13,
     "x14_chunk_documents": SQL_X14,
     "x15_pack_sequences": SQL_X15,
 }

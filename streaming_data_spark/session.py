@@ -40,6 +40,25 @@ def _default_shuffle_partitions(cores: int) -> int:
     return 4 * cores
 
 
+def _default_driver_memory(mem_total_kb: int) -> str:
+    """Half the host's RAM, at least 1g and at most 32g: in local[N]
+    the one driver JVM hosts every task slot, and a heap past physical
+    memory grows into the OS instead of spilling."""
+    return f"{max(1, min(32, mem_total_kb // (2 << 20)))}g"
+
+
+def _mem_total_kb() -> int:
+    """MemTotal from /proc/meminfo; a host without it gets the 32g cap."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return 64 << 20
+
+
 def get_session(
     app_name: str = "streaming-data-spark",
     master: str | None = None,
@@ -65,12 +84,14 @@ def get_session(
         # -- JVM sizing: in local[N] the ONE driver JVM hosts all N
         # task slots, and Spark's 1g default heap starves 32-way
         # parallel shuffles (observed: q21's triple self-join OOMs at
-        # 10x sf0.1). Only consulted at JVM launch — a getOrCreate
-        # against a live session keeps its existing heap. On a real
-        # cluster executors size their own JVMs and this is moot.
+        # 10x sf0.1), so the default is sized from host RAM. Only
+        # consulted at JVM launch — a getOrCreate against a live
+        # session keeps its existing heap. On a real cluster
+        # executors size their own JVMs and this is moot.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(_mem_total_kb()),
         )
         # -- shuffle sizing -------------------------------------------
         .config(

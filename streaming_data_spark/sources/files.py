@@ -1,9 +1,8 @@
-"""File & JDBC sources (SURVEY.md §2.1 S6–S8).
+"""File sources (SURVEY.md §2.1 S8).
 
 CSV reading with required-column validation mirrors the reference's
-pre-load checks (insert_csv_to_postgres.py:56-58,88-91); JDBC wrappers
-encode the scan patterns (full scan S6, pruned key scan S7) — Catalyst
-pushes predicates/projections to the database.
+pre-load checks (insert_csv_to_postgres.py:56-58,88-91). JDBC scans
+live in ``sources/jdbc.py``.
 """
 
 from __future__ import annotations
@@ -34,35 +33,6 @@ def read_csv(
     if missing:
         raise SchemaValidationError(f"missing required columns: {missing}")
     return df
-
-
-def jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-    num_partitions: int | None = None,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-) -> DataFrame:
-    """S6 — JDBC table scan (SELECT * FROM t). With the partition
-    options set, the scan parallelizes across executors instead of the
-    reference's single-cursor fetch. Filters/projections applied on
-    the returned DataFrame push down to the database."""
-    reader = (
-        spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    )
-    if partition_column:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    for key, val in (properties or {}).items():
-        reader = reader.option(key, val)
-    return reader.load()
 
 
 def read_orc(

@@ -11,6 +11,35 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
 
+def uf_components(edges, nodes):
+    """Reference connected components by union-find: {(node, component
+    minimum)} for every node in ``nodes``."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comp: dict = {}
+    for n in nodes:
+        comp.setdefault(find(n), []).append(n)
+    return {(n, min(ms)) for ms in comp.values() for n in ms}
+
+
+def pair_views(spark) -> list[str]:
+    """The session's shared pair views (operators/dedup.py)."""
+    return sorted(
+        r.viewName for r in spark.sql("SHOW VIEWS LIKE 'sds_pairs_*'").collect()
+        if r.isTemporary
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from streaming_data_spark.session import get_session

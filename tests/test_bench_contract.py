@@ -1185,18 +1185,19 @@ def test_bench_canary_is_the_consumers_shared_build(spark, sf_small):
     """The canary spec lives ONCE in streaming_data_spark/bench_canary
     (r14: it was hand-copied across bench.py / floor_probe.py /
     plan_fps.py with nothing keeping them in lockstep). This pins the
-    other half: the canary build populates the SAME memo entry the
+    other half: the canary build creates the SAME pair view the
     shared-pair consumers reuse, so the bench line times the build
     the registry tier actually pays."""
     import __spark_entry__ as entry
+    from conftest import pair_views
     from streaming_data_spark import bench_canary
     from streaming_data_spark.operators import dedup
 
-    dedup._PREFIX_PAIR_CACHE.clear()
+    dedup.drop_pair_views(spark)
     bench_canary.build_memoized(spark, sf_small)
-    assert len(dedup._PREFIX_PAIR_CACHE) == 1
-    key = next(iter(dedup._PREFIX_PAIR_CACHE))
-    # a shared-pair consumer resolves to a CACHE HIT on that entry —
-    # same input, same params, same token — not a second build
+    views = pair_views(spark)
+    assert len(views) == 1
+    # a shared-pair consumer resolves to that view — same input file,
+    # same params — not a second build
     entry.queries()["x70_kcore"](spark, sf_small)
-    assert list(dedup._PREFIX_PAIR_CACHE) == [key]
+    assert pair_views(spark) == views

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import uf_components
 from streaming_data_spark.operators import chunking, dedup
 
 
@@ -80,22 +81,21 @@ def test_pack_budget_and_order(spark):
             assert r.seq_fill == fill
 
 
-def test_connected_components_transitive_chain(spark):
+def test_connected_components_transitive_chain(spark, star_cc_paths):
     """A chain 1-2, 2-3, 3-4 plus an island pair 10-11 must collapse
     to two clusters labeled by their minima."""
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
     )
-    got = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components(edges).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
+    for _ in star_cc_paths():
+        assert _star_labels(edges) == {
+            (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)
+        }
 
 
 def test_connected_components_empty(spark):
     edges = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup.connected_components(edges).count() == 0
+    assert dedup.connected_components_star(edges).count() == 0
 
 
 def _star_labels(edges):
@@ -106,16 +106,15 @@ def _star_labels(edges):
 
 
 def test_star_cc_matches_label_prop(spark, star_cc_paths):
-    """large-star/small-star must produce the identical (id, min-label)
-    output as label propagation on a mixed graph: chain + island +
-    star-shaped component — on the driver finish and on the loop."""
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (10, 11), (20, 25), (20, 22), (20, 27)],
-        "id_a long, id_b long",
-    )
-    lp = {(r.id, r.cluster_id) for r in dedup.connected_components(edges).collect()}
+    """large-star/small-star must produce the (id, min-label) output
+    of the union-find reference (what min-label propagation converges
+    to) on a mixed graph: chain + island + star-shaped component — on
+    the driver finish and on the loop."""
+    pairs = [(2, 1), (2, 3), (3, 4), (10, 11), (20, 25), (20, 22), (20, 27)]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    ref = uf_components(pairs, {x for e in pairs for x in e})
     for _ in star_cc_paths():
-        assert _star_labels(edges) == lp
+        assert _star_labels(edges) == ref
 
 
 def test_star_cc_high_diameter_chain(spark, star_cc_paths):
@@ -138,14 +137,12 @@ def test_star_cc_empty(spark, star_cc_paths):
 
 def test_star_cc_keeps_self_loop_only_nodes(spark, star_cc_paths):
     """A node whose only edges are self-loops must appear as its own
-    singleton cluster — exactly as label propagation reports it — so
-    the two algorithms stay output-identical."""
-    edges = spark.createDataFrame(
-        [(5, 5), (2, 1), (7, 7)], "id_a long, id_b long"
-    )
-    lp = {(r.id, r.cluster_id) for r in dedup.connected_components(edges).collect()}
+    singleton cluster, as the union-find reference reports it."""
+    pairs = [(5, 5), (2, 1), (7, 7)]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    ref = uf_components(pairs, {x for e in pairs for x in e})
     for _ in star_cc_paths():
-        assert _star_labels(edges) == lp == {(5, 5), (7, 7), (1, 1), (2, 1)}
+        assert _star_labels(edges) == ref == {(5, 5), (7, 7), (1, 1), (2, 1)}
 
 
 def test_star_cc_driver_finish_equals_loop(spark, star_cc_paths):

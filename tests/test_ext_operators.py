@@ -222,31 +222,6 @@ def test_cosine_near_dup_auto_planes(spark, sf_oracle):
     assert capped <= set(auto)
 
 
-def test_minhash_native_hash_tier(spark, sf_oracle):
-    """base_hash='native' (xxhash64, no SQL oracle) must preserve the
-    hash-agnostic invariant: exact-duplicate documents have identical
-    shingle sets, hence identical signatures under ANY base hash, and
-    always pair at est_jaccard 1.0."""
-    docs = load_table(spark, sf_oracle, "documents").limit(200)
-    dup = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    corpus = docs.select("doc_id", "text").union(dup)
-    pairs = {
-        (r.id_a, r.id_b): r.est_jaccard
-        for r in dedup.minhash_lsh_pairs(
-            corpus, "doc_id", "text", base_hash="native"
-        ).collect()
-    }
-    planted = {
-        (r.doc_id, r.doc_id + 1_000_000) for r in docs.select("doc_id").collect()
-    }
-    # docs with <3 tokens have no signature and can't pair — found is
-    # the planted subset that does
-    found = {p for p in planted if p in pairs}
-    assert found, "native tier found none of the planted exact duplicates"
-    for p in found:
-        assert pairs[p] == 1.0
-
-
 def test_minhash_md5_kernel_matches_jvm_expression_form(spark, sf_oracle):
     """The batched mapInArrow md5 kernel (r16 kernel; r17 batches the
     digests through a memo + folds every doc's affine mins in one
@@ -267,7 +242,7 @@ def test_minhash_md5_kernel_matches_jvm_expression_form(spark, sf_oracle):
         for r in dedup.minhash_signatures(docs, "doc_id", "text").collect()
     }
     sh = dedup.shingles(docs, "doc_id", "text").withColumn(
-        "h", dedup._base_hash(F.col("shingle"), "md5")
+        "h", dedup._md5_hash28(F.col("shingle"))
     )
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % dedup.MINHASH_PRIME).alias(f"mh{i}")
@@ -740,93 +715,76 @@ def test_sign_bucket_mask_property(spark):
         assert mismatches == 0, f"planes={p}"
 
 
-def test_prefix_pairs_shared_memo_equals_uncached_and_keys_correctly(spark, sf_small):
-    """The r8 shared pair tier: memoized materialization must be (a)
-    value-identical to the uncached prefix tier, (b) reused for an
-    identical (token, params) request, (c) NOT reused across tokens or
-    parameter changes — a threshold=0.7 caller must never receive the
-    0.8 pair set."""
-    from streaming_data_spark.operators import dedup
-    from streaming_data_spark.schemas import load_table
+def test_prefix_pairs_shared_memo_equals_uncached_and_keys_correctly(
+    spark, sf_small, jobs_of
+):
+    """The shared pair view is value-identical to the unshared prefix
+    tier, and a different threshold or a filtered frame misses: a
+    threshold=0.7 caller never receives the 0.8 pair set."""
+    from conftest import pair_views
 
     docs = load_table(spark, sf_small, "documents")
-    dedup._PREFIX_PAIR_CACHE.clear()
-    plain = {
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs_prefix(
-            docs, "doc_id", "text", n=3, threshold=0.8
-        ).collect()
-    }
-    shared1 = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_small
-    )
-    assert {tuple(r) for r in shared1.collect()} == plain
-    shared2 = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_small
-    )
-    assert shared2 is shared1  # memo hit: the SAME checkpointed frame
-    other = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.7, cache_token=sf_small
-    )
-    assert other is not shared1
-    assert dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token="elsewhere"
-    ) is not shared1
-    # no token -> no caching, straight passthrough plan
-    assert len(dedup._PREFIX_PAIR_CACHE) == 3
-    dedup.ngram_jaccard_pairs_prefix_shared(docs, "doc_id", "text")
-    assert len(dedup._PREFIX_PAIR_CACHE) == 3
-    # r9 input-identity guard: a DIFFERENT df under the SAME token must
-    # miss (semanticHash in the key), not silently return the other
-    # dataset's pair set — and a re-read of the same parquet must still
-    # hit (semanticHash is plan-derived, not object-derived).
-    filtered = docs.filter(F.length("text") > 0)
-    assert dedup.ngram_jaccard_pairs_prefix_shared(
-        filtered, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_small
-    ) is not shared1
-    assert dedup.ngram_jaccard_pairs_prefix_shared(
-        load_table(spark, sf_small, "documents"), "doc_id", "text",
-        n=3, threshold=0.8, cache_token=sf_small,
-    ) is shared1
-    # r9 eviction guard, r11-refined (r10 advice): entries whose
-    # SparkContext has actually STOPPED are dropped at the next insert
-    # (they can never be returned again) — but a foreign appId alone is
-    # NOT grounds for eviction: two concurrent LIVE sessions must not
-    # thrash each other's memo by alternating calls.
-    class _StoppedCtx:
-        _jsc = None
+    dedup.drop_pair_views(spark)
 
-    class _StoppedSession:
-        sparkContext = _StoppedCtx()
+    def shared(df, threshold):
+        return dedup.ngram_jaccard_pairs_prefix_shared(
+            df, "doc_id", "text", n=3, threshold=threshold
+        )
 
-    class _StoppedDF:
-        sparkSession = _StoppedSession()
+    def plain(df, threshold):
+        return {
+            tuple(r)
+            for r in dedup.ngram_jaccard_pairs_prefix(
+                df, "doc_id", "text", n=3, threshold=threshold
+            ).collect()
+        }
 
-    assert dedup._context_stopped(_StoppedDF())
-    assert not dedup._context_stopped(shared1)
-    dedup._PREFIX_PAIR_CACHE[("dead-app", 0, "tok", "doc_id", "text", 3, 0.8)] = _StoppedDF()
-    live_foreign_key = ("live-other-app", 0, "tok", "doc_id", "text", 3, 0.8)
-    dedup._PREFIX_PAIR_CACHE[live_foreign_key] = shared1  # live context, other session
-    dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.9, cache_token=sf_small
+    assert {tuple(r) for r in shared(docs, 0.8).collect()} == plain(docs, 0.8)
+    assert len(pair_views(spark)) == 1
+    filtered = docs.filter(F.length("text") > 40)
+    for df, threshold in ((docs, 0.7), (filtered, 0.8)):
+        got, n_jobs = jobs_of(lambda: shared(df, threshold))
+        assert n_jobs > 0  # a miss builds
+        assert {tuple(r) for r in got.collect()} == plain(df, threshold)
+    assert len(pair_views(spark)) == 3
+    dedup.drop_pair_views(spark)
+    assert pair_views(spark) == []
+
+
+def test_prefix_pairs_shared_view_is_one_per_unchanged_file(spark, sf_small, jobs_of):
+    """Two separately loaded frames of one unchanged file resolve to
+    one view, and the second call runs no Spark job."""
+    from conftest import pair_views
+
+    dedup.drop_pair_views(spark)
+    first, second = (load_table(spark, sf_small, "documents") for _ in range(2))
+    dedup.ngram_jaccard_pairs_prefix_shared(first, "doc_id", "text")
+    views = pair_views(spark)
+    _, n_jobs = jobs_of(
+        lambda: dedup.ngram_jaccard_pairs_prefix_shared(second, "doc_id", "text")
     )
-    assert all(
-        k[0] != "dead-app" for k in dedup._PREFIX_PAIR_CACHE
-    ), "stopped-session entry survived an insert"
-    assert live_foreign_key in dedup._PREFIX_PAIR_CACHE, (
-        "live foreign-session entry was evicted — concurrent sessions "
-        "would thrash the memo"
-    )
-    # r10 (r9 advice): eviction also runs on the pure HIT path — a
-    # process whose later sessions only ever hit existing keys must
-    # not pin dead-session DataFrames forever.
-    dedup._PREFIX_PAIR_CACHE[("dead-app-2", 0, "tok", "doc_id", "text", 3, 0.8)] = _StoppedDF()
-    hit = dedup.ngram_jaccard_pairs_prefix_shared(
-        docs, "doc_id", "text", n=3, threshold=0.8, cache_token=sf_small
-    )
-    assert hit is shared1  # still a hit...
-    assert all(
-        k[0] != "dead-app-2" for k in dedup._PREFIX_PAIR_CACHE
-    ), "stopped-session entry survived a cache hit"
-    assert live_foreign_key in dedup._PREFIX_PAIR_CACHE  # still not thrashed
-    dedup._PREFIX_PAIR_CACHE.clear()
+    assert n_jobs == 0
+    assert pair_views(spark) == views and len(views) == 1
+
+
+def test_prefix_pairs_shared_view_sees_an_in_place_rewrite(spark, sf_small, tmp_path):
+    """Rewriting documents.parquet in place with its first 10 rows
+    leaves the plan's semanticHash unchanged, but the shared build
+    must return the rewritten file's pairs (none at sf0.001), not the
+    full file's."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from streaming_data_spark import bench_canary
+
+    path = tmp_path / "documents.parquet"
+    shutil.copyfile(os.path.join(sf_small, "documents.parquet"), path)
+    before = {tuple(r) for r in bench_canary.build_memoized(spark, str(tmp_path)).collect()}
+    assert before
+    pq.write_table(pq.read_table(path).slice(0, 10), path)
+    fresh = {tuple(r) for r in bench_canary.build_lazy(spark, str(tmp_path)).collect()}
+    after = {tuple(r) for r in bench_canary.build_memoized(spark, str(tmp_path)).collect()}
+    assert after == fresh != before
+    dedup.drop_pair_views(spark)

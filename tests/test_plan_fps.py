@@ -48,6 +48,14 @@ def test_normalize_strips_lambda_allocation_counters():
     assert normalize_plan(a) != normalize_plan(c)
 
 
+def test_normalize_strips_pair_view_digest():
+    """The shared pair view's name digests its input files' mtimes, so
+    two copies of one testdata tree name it differently."""
+    a = "SubqueryAlias sds_pairs_5d358c8ba5a520c9\n+- View (`sds_pairs_5d358c8ba5a520c9`, [id_a#30L])"
+    b = "SubqueryAlias sds_pairs_1605ffce963969c6\n+- View (`sds_pairs_1605ffce963969c6`, [id_a#31L])"
+    assert normalize_plan(a) == normalize_plan(b)
+
+
 def test_fingerprint_composes_plan_and_actions():
     """The actions component exists because an analyzed-plan hash
     cannot see driver-side execution changes (r9's star-contraction

@@ -1498,8 +1498,9 @@ def test_wave65_exchange_budgets(spark, sf_small):
 # plan referenced by multiple branches (a symmetrizing union, per-
 # iteration joins) silently replays the whole upstream pair
 # computation. Fixed by localCheckpoint(eager=True) guards at
-# graph.py:46 (pagerank) and dedup.py:299 (label-prop CC); triangles /
-# kcore_peel / star-CC already carried the guard. These tests pin the
+# graph.py:46 (pagerank) and the label-propagation CC that star-CC has
+# since replaced; triangles / kcore_peel / star-CC already carried the
+# guard. These tests pin the
 # convention mechanically: each feeds the operator an INSTRUMENTED
 # edge frame (a mapInPandas stage that counts every row it emits into
 # an accumulator) and asserts the upstream evaluated EXACTLY ONCE —
@@ -1563,16 +1564,6 @@ def test_pagerank_materializes_edges_once(spark):
     out = pagerank(edges, iters=3).collect()
     assert len(out) == 11  # 4-clique + 5-node path component + pair
     _assert_evaluated_once(acc, n, "graph.py pagerank")
-
-
-def test_label_prop_cc_materializes_edges_once(spark):
-    from streaming_data_spark.operators.dedup import connected_components
-
-    edges, acc, n = _instrumented_edges(spark)
-    out = connected_components(edges)
-    rows = {r["id"]: r["cluster_id"] for r in out.collect()}
-    assert rows[3] == 0 and rows[14] == 10 and rows[21] == 20
-    _assert_evaluated_once(acc, n, "dedup.py label-prop CC")
 
 
 def test_star_cc_materializes_edges_once(spark, star_cc_paths):

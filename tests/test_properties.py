@@ -16,6 +16,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from conftest import uf_components
 from streaming_data_spark.operators import dedup, similarity
 
 _SETTINGS = dict(
@@ -23,25 +24,6 @@ _SETTINGS = dict(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-def _uf_components(edges, nodes):
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp: dict[int, list[int]] = {}
-    for n in nodes:
-        comp.setdefault(find(n), []).append(n)
-    return {(n, min(ms)) for ms in comp.values() for n in ms}
 
 
 @given(
@@ -63,7 +45,7 @@ def test_star_cc_matches_union_find(spark, star_cc_paths, edges):
             (r.id, r.cluster_id)
             for r in dedup.connected_components_star(df).collect()
         }
-        assert got == _uf_components(edges, nodes)
+        assert got == uf_components(edges, nodes)
 
 
 @given(

@@ -134,6 +134,19 @@ def test_default_shuffle_partitions_carry_aqe_headroom():
     assert _default_shuffle_partitions(8) == 32
 
 
+def test_default_driver_memory_is_half_host_ram_within_bounds():
+    """The default driver heap is half of MemTotal, at least 1g and
+    at most 32g (the old fixed 32g was twice a 15 GB host's RAM)."""
+    from streaming_data_spark.session import _default_driver_memory, _mem_total_kb
+
+    gib = 1 << 20  # kB
+    assert _default_driver_memory(16 * gib) == "8g"
+    assert _default_driver_memory(15 * gib) == "7g"
+    assert _default_driver_memory(1 * gib) == "1g"
+    assert _default_driver_memory(512 * gib) == "32g"
+    assert _mem_total_kb() > 0
+
+
 def test_autosize_floor_includes_current_session_setting(spark, tmp_path):
     """Autosizing only ever RAISES: with the session already above the
     byte-derived count, the current setting is kept (the same

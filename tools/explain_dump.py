@@ -6,11 +6,11 @@ optimization round deliverable: plans/r16/<query>_{before,after}.txt).
 
 With no query names, dumps every bench-timed row (HEADLINE +
 EXT_HEADLINE + the shared_pair_build canary). ``shared_pair_build``
-is dumped as the UN-memoized prefix-pair plan (the memoized form
-returns a checkpoint scan, which hides the build plan this file
-exists to show). The shared memo is cleared before every build so a
-consumer query's plan never depends on dump order; note that the
-memoizing consumers (x41/x70/...) checkpoint the pair set during
+is dumped as the unshared prefix-pair plan (the shared form returns
+a view over a checkpoint scan, which hides the build plan this file
+exists to show). The session's shared pair views are dropped before
+every build so each consumer pays its own build; note that the
+shared-pair consumers (x41/x70/...) checkpoint the pair set during
 construction, so their dumped plan starts at the checkpoint scan —
 the build plan lives in shared_pair_build_{suffix}.txt.
 
@@ -75,7 +75,7 @@ def main() -> None:
     registry = entry_mod.queries()
     os.makedirs(args.out, exist_ok=True)
     for name in names:
-        dedup_mod._PREFIX_PAIR_CACHE.clear()
+        dedup_mod.drop_pair_views(spark)
         try:
             if name == "shared_pair_build":
                 from streaming_data_spark.queries import _t

@@ -56,22 +56,22 @@ def main() -> None:
     if args.query == "shared_pair_build":
         # The bench's one non-registry timing site (r13 verdict
         # item 5): replicate its canary protocol exactly — the ONE
-        # shared spec (streaming_data_spark/bench_canary.py), memo
-        # cleared per rep, the timed unit being the memoizing build
+        # shared spec (streaming_data_spark/bench_canary.py), pair
+        # view dropped per rep, the timed unit being the shared build
         # call itself (it materializes eagerly; no sink needed).
         from streaming_data_spark import bench_canary
         from streaming_data_spark.operators import dedup
 
         for _ in range(3):  # warm: codegen/JIT (3 reps, same
             # rationale as the registry branch below)
-            dedup._PREFIX_PAIR_CACHE.clear()
+            dedup.drop_pair_views(spark)
             bench_canary.build_memoized(spark, args.sf_dir)
         for _ in range(args.reps):
-            # memo cleared OUTSIDE the timed region — bench.py times
+            # view dropped OUTSIDE the timed region — bench.py times
             # exactly the build call after its own pre-clear (r14
             # advice: the two 'identical protocol' sites had drifted
             # on their timed unit)
-            dedup._PREFIX_PAIR_CACHE.clear()
+            dedup.drop_pair_views(spark)
             start = time.perf_counter()
             bench_canary.build_memoized(spark, args.sf_dir)
             times.append(round(time.perf_counter() - start, 3))

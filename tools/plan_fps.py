@@ -76,12 +76,17 @@ _EXPR_ID = re.compile(r"#\d+")
 # allocation counter ("lambda x_12#L" one build, "lambda x_19#L" the
 # next) — same session-dependence as exprIds, same normalization.
 _LAMBDA_ID = re.compile(r"\blambda ([A-Za-z]+)_\d+#")
+# The shared pair view's name digests its input files' lengths and
+# modification times (operators/dedup.py), which differ between
+# copies of the same testdata.
+_PAIR_VIEW = re.compile(r"\bsds_pairs_[0-9a-f]+")
 
 
 def normalize_plan(plan: str) -> str:
-    """Strip session-dependent expression ids from an analyzed-plan
-    string. Everything else is deterministic for this repo's queries
-    (seeded rand, fixed paths, seeded samples)."""
+    """Strip session-dependent expression ids and pair-view digests
+    from an analyzed-plan string. Everything else is deterministic for
+    this repo's queries (seeded rand, fixed paths, seeded samples)."""
+    plan = _PAIR_VIEW.sub("sds_pairs_#", plan)
     return _EXPR_ID.sub("#", _LAMBDA_ID.sub(r"lambda \1_#", plan))
 
 
@@ -163,21 +168,23 @@ def _shared_pair_build(spark, sf_dir):
     streaming_data_spark/bench_canary.py shared by all three sites).
     Fingerprinted alongside the registry (r13 verdict item 5) so the
     one non-registry bench row has the same triage path as everything
-    else: the LAZY builder is hashed (the memoizing wrapper returns a
-    checkpointed LogicalRDD whose plan string is session-dependent;
-    the wrapper itself is 30 lines of memo bookkeeping pinned by its
-    own idempotency tests), and any driver-side action the build runs
-    shows up in the action count as usual."""
+    else: the LAZY builder is hashed (the shared build returns a view
+    over a checkpointed LogicalRDD, pinned by its own reuse tests), and
+    any driver-side action the build runs shows up in the action count
+    as usual."""
     from streaming_data_spark import bench_canary
 
     return bench_canary.build_lazy(spark, sf_dir)
 
 
-def _clear_memos() -> None:
-    """Reset the shared pair memo (the repo's only module-level memo)
-    so every build pays its own jobs — order-independence, same as
-    bench.py. Tolerates its absence (pre-r8 code has no memo)."""
+def _clear_memos(spark) -> None:
+    """Drop the shared pair views so every build pays its own jobs —
+    order-independence, same as bench.py. ``--repo`` may point at a
+    historical tree: one that still keeps the pairs in a module-level
+    dict has it cleared, and pre-r8 code has neither."""
     mod = sys.modules.get("streaming_data_spark.operators.dedup")
+    if hasattr(mod, "drop_pair_views"):
+        mod.drop_pair_views(spark)
     cache = getattr(mod, "_PREFIX_PAIR_CACHE", None)
     if isinstance(cache, dict):
         cache.clear()
@@ -236,7 +243,7 @@ def compute(repo: str, sf_dir: str, reps: int, cpus: int,
         # cache-immune, but the warm-up also primes lazy imports and
         # keeps per-query wall time comparable).
         for rep in range(-1, reps):
-            _clear_memos()
+            _clear_memos(spark)
             counter = _ActionCounter(df_cls)
             originals = counter.install()
             try:

@@ -27,7 +27,7 @@ Stages, one process each:
     python tools/scale_probe.py autoplanes
 
 ``run`` times each query at the base and at every replica present,
-min-of-2 into the noop sink with the shared pair memo cleared per rep,
+min-of-2 into the noop sink with the shared pair view dropped per rep,
 after autosizing shuffle partitions from the scale's bytes. It prints
 one JSON line with the seconds and partitions per scale,
 ``ratio_x{N}`` against the base and ``seg_x{N}`` against the next
@@ -336,9 +336,9 @@ def _run(names: list[str]) -> None:
             parts = autosize_shuffle_partitions(spark, d, floor=floor)
             best = float("inf")
             for _ in range(2):
-                # standalone cost per rep: the shared pair memo would
+                # standalone cost per rep: the shared pair view would
                 # otherwise make rep 2 a warm cache hit
-                _dedup._PREFIX_PAIR_CACHE.clear()
+                _dedup.drop_pair_views(spark)
                 t0 = time.time()
                 fn(spark, d).write.format("noop").mode("overwrite").save()
                 best = min(best, time.time() - t0)
