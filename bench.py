@@ -1,17 +1,18 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Runs the headline and ext suites at $SPARK_GRAFT_SF_DIR (default
+sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+
+  {"metric": "headline_suite_seconds", "value": N, "unit": "sec",
+   "queries": {...}, "queries_ext": {...}, "sf": ...,
+   "load_context": {"cpus", "master", "loadavg_start", "loadavg_end"}}
 
 Each query is executed to completion through the noop sink (full plan
-runs, nothing is collected to the driver — the honest way to time a
-distributed plan).
-
-The stdout line is COMPACT (driver tail capture is 2,000 chars; see
-STDOUT_BUDGET); the full payload — per-flag records, triage detail,
-methodology — is written to BENCH_DETAIL.json next to this file and
-committed per round as BENCH_DETAIL_r{N}.json.
+runs, nothing is collected to the driver): one warm run, then the
+minimum of 3 timed runs (5 for x2_minhash_lsh). A query that fails is
+named in ``errors`` / ``errors_ext`` and its traceback goes to
+stderr; any headline failure turns ``value`` into the -1.0 sentinel.
+The harness writes no file.
 """
 
 from __future__ import annotations
@@ -21,9 +22,12 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# The headline total: the r1 query set, unchanged so the number stays
+# comparable across rounds.
 HEADLINE = (
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -38,9 +42,8 @@ HEADLINE = (
     "q5_regional_revenue",
 )
 
-# Secondary suite: representative round-4 additions, timed min-of-2 and
-# reported under "queries_ext" WITHOUT entering the headline total — the
-# suite number must stay comparable across rounds (same query set as r1).
+# Secondary suite: representatives of later rounds, reported under
+# "queries_ext" WITHOUT entering the headline total.
 EXT_HEADLINE = (
     "funnel_conversion",
     "a17_rolling_distinct",
@@ -74,971 +77,99 @@ EXT_HEADLINE = (
     "a44_order_total_audit",
 )
 
-
-# Per-query baseline re-pins (r7 verdict item 5). x2's r01 number
-# (0.926s) timed a run against signatures leaked into the
-# block-manager cache (persist bug fixed in r2) — an unreachable
-# target that made the guard emit a permanent JIT-noise note
-# instead of catching real regressions. Re-pinned to the measured
-# in-session steady state (1.3-1.5s across r2-r7; min-of-5 already
-# absorbs the ~6s first-run codegen/JIT outlier).
-# The override corrects THAT SPECIFIC 0.926s artifact, so it only
-# applies while the anchor file still records it (r9 advice: keying
-# on the filename alone let an in-place regeneration keep the pin).
-# A re-generated baseline — new earliest file OR a re-measured x2
-# number — retires the pin automatically instead of silently
-# loosening the guard against a fresher measured baseline.
-BASE_OVERRIDES_SPEC = {"x2_minhash_lsh": (0.926, 1.5)}  # (recorded, pin)
+# The shared near-dup pair build, timed as its own ext line. Six
+# registry queries (x41 and x70 among the ext rows) read one shared
+# pair view, so only whichever consumer ran first would pay the build;
+# timing it apart (on a dropped view per rep) and before the ext rows
+# leaves every consumer row warm and order-independent.
+SHARED_PAIR_BUILD = "shared_pair_build"
 
 
-# Load gate (r10 verdict item 4): BENCH_r10's committed headline was
-# captured at loadavg 7.34 and read 8.5s where quiet-box runs read
-# 5.8-6.9s — pure contamination that tripped three spurious vs-prev
-# flags. The bench now refuses to START timing on a loaded box: it
-# waits (bounded) for the 1-minute loadavg to fall under the
-# threshold, and if the box never quiets it stamps
-# `"load_contaminated": true`. Since r15 a marked artifact is INERT
-# rather than commit-forbidden (every BENCH_r*.json is
-# driver-deposited — see _marked_dirty): its numbers never become
-# records, history, baselines, or floors, so a noisy run can never
-# silently become the round's record.
-LOAD_GATE_THRESHOLD = 2.0
-
-# The start gate can't see load that ramps up DURING the run (r11
-# advice: BENCH_r11 committed with loadavg_end 2.2, unchecked). The
-# end reading includes the bench's OWN Spark load — a quiet-box run
-# ends around 2 (r11: 2.2) while the contaminated r9 ended at 4.07 —
-# so the end bound is gate + own-load allowance, a softer `load_drift`
-# marker rather than the hard contamination stamp: numbers from a run
-# that drifted above it are suspect and must be rerun, not recorded.
-LOAD_DRIFT_END_THRESHOLD = 4.0
-
-# Flap triage (r12 verdict item 3): every vs-prev flag so far whose
-# plan fingerprint was UNCHANGED turned out to be single-JVM JIT/GC
-# band (x30_capped r9; x35 1.30x and x63 1.17x r12), pre-root-caused
-# by hand each time with the same two steps — fingerprint identity +
-# a min-of-10 dedicated-session floor probe. The one REAL incident in
-# the history (x35 r7, 0.887 -> 1.322) moved the FLOOR; the flaps
-# never did (x35 floor 1.191 vs 1.158 record, x63 1.151 vs 1.026).
-# bench.py now runs that triage itself: a flagged query with an
-# unchanged fingerprint gets the dedicated-JVM floor probe
-# (tools/floor_probe.py), and the flag is demoted to a named
-# `jit_band` verdict when the floor stays within FLAP_FLOOR_BAND of
-# the best committed per-query record. A changed fingerprint, a
-# floor shift, or anything uncomparable keeps the hard flag.
-FLAP_FLOOR_BAND = 1.15
-FLAP_FLOOR_REPS = 10
-
-# Cumulative record-floor guard (r13 verdict item 4): the vs-prev gate
-# requires >1.3x AND >=0.25s absolute delta, so a sub-second query
-# drifting ~1.2x per round compounds invisibly (a34/x75/a44 escaped
-# the gate three rounds running on exactly this path). Every reported
-# row is therefore ALSO compared against its best committed record
-# across the whole BENCH_r*.json history (same sf): exceeding
-# RECORD_DRIFT_RATIO x record flags it regardless of absolute size,
-# and the flag goes through the same fingerprint+floor triage as a
-# vs-prev flag, so load noise still demotes to a named jit_band
-# verdict instead of crying wolf.
-RECORD_DRIFT_RATIO = 1.5
-
-# Record override for the guard above: the history scan reaches back
-# past ROOT-CAUSED plan changes, and numbers from a retired plan are
-# not comparable records. x35's one real incident (r5->r6: floor
-# 0.887 -> 1.322, root-caused then — the hot-key skew-split machinery
-# changed the plan and was accepted as a feature) left a 0.887 record
-# the current plan can never hit; without this pin the guard's first
-# quiet-box run re-flagged x35 (1.424 vs 0.887 = 1.605x, floor-probed
-# to a 'floor_shift' that was investigated eight rounds ago) and
-# would re-flag it every round forever. While the scan still resolves
-# to exactly THAT artifact's number, judge x35 against 1.082 — its
-# best committed number under the CURRENT plan (BENCH_r12). Same
-# self-retiring semantics as BASE_OVERRIDES_SPEC: a regenerated
-# history retires the pin instead of silently loosening the guard.
-#
-# r15 era-shift pins: ten sub-second shuffle/codegen-dense ext rows
-# read 1.5-2.1x their r7-r12 records in THREE independent sessions
-# (the r14 driver run, the r14 judge rerun, and r15's first-hour
-# quiet-box run) while (a) plan fingerprints are identical to the
-# r12-audited snapshots, (b) both calibration stamps sat at all-time
-# BESTS in the same r15 run (cpu 0.29/0.197, shuffle 0.279/0.217 —
-# the box was demonstrably serving full budget), and (c) a dedicated
-# 32-vs-128-partition A/B refuted r14's shuffle-default change as the
-# cause (x29: 0.511 vs 0.444 — the new default is not slower; full
-# data in SCALE.md Round-15). Conclusion: the sandbox HOST era
-# changed for this workload class somewhere around r13->r14; the old
-# records are unreachable on the current host for reasons outside
-# the repo, exactly like x35's retired-plan record. Each pin is the
-# r15 investigation-day measurement (dedicated min-of-N floor where
-# the probe completed before the host throttled, marked "floor";
-# otherwise the in-session min-of-3, cross-validated within 15% of
-# the dedicated floor on every row that has both). Same self-retiring
-# semantics: a history rescan resolving anywhere else drops the pin.
-RECORD_OVERRIDES_SPEC = {
-    # query: (stale record, its artifact, comparable record)
-    #
-    # x35's original pin corrected its r5->r6 skew-split plan change
-    # (0.887 -> 1.082, the post-change committed minimum); the era
-    # shift moved its floor again (r15 in-session 1.662), so the same
-    # entry now carries the era-adjusted comparable.
-    "x35_lm_score": (0.887, "BENCH_r05.json", 1.662),
-    # x2's r01 number timed a run against leaked block-manager-cached
-    # signatures (persist bug fixed in r2 — the SAME artifact
-    # BASE_OVERRIDES_SPEC corrects for the vs-baseline gate); its
-    # comparable record was 1.174 (BENCH_r06), the committed minimum
-    # of the post-fix steady state. r17 re-probe (verdict item 8): the
-    # round-close in-suite min-of-5 read 1.004 on a host_throttled-
-    # stamped run — a throttled box can only INFLATE a reading (the
-    # a17 precedent), so the pin TIGHTENS to that fresh upper bound on
-    # the true floor; it reflects the r17 Arrow-kernel digest-memo win
-    # (sf0.1 signature floor -24% interleaved). The dedicated
-    # fresh-JVM probe read 1.201 the same hour — on this host's
-    # cold-ramp era dedicated floors land ABOVE warmed in-suite
-    # minima, so the in-suite number is the binding one. x5_cosine_topk
-    # was re-probed the same way (in-suite 0.489, dedicated 0.713 vs
-    # record 0.435 r07): no pin — it is not era-shifted past the flag
-    # band, the committed record stands.
-    "x2_minhash_lsh": (0.926, "BENCH_r01.json", 1.004),
-    # --- r15 era-shift pins (rationale above; x29 + a17 re-probed
-    # r16 with dedicated floors — a throttled box can only INFLATE a
-    # reading, so "not back in the old band" is conclusive even on a
-    # worked box: x29 read 0.461 (old band 0.19-0.30 — stands), a17
-    # read 0.521, BELOW its 0.585 pin, which therefore tightens to
-    # the fresh upper bound on its true floor) ---
-    "a17_rolling_distinct": (0.322, "BENCH_r12.json", 0.521),
-    "j7_temporal_join": (0.399, "BENCH_r12.json", 0.603),
-    "x29_fuzzy_match": (0.191, "BENCH_r12.json", 0.332),   # floor
-    "a26_window_median": (0.355, "BENCH_r12.json", 0.605),  # floor
-    "x36_heavy_hitters": (0.678, "BENCH_r12.json", 1.095),
-    "a27_sma_crossover": (0.521, "BENCH_r11.json", 0.837),  # floor
-    "a34_rsi": (0.534, "BENCH_r12.json", 0.875),
-    "x30_inverted_index_capped": (0.827, "BENCH_r07.json", 1.311),
-    "x40_bm25": (0.551, "BENCH_r07.json", 0.813),           # floor
-}
-
-
-# Host-throttle detection (r14): this sandbox's host slows the VM's
-# AGGREGATE CPU budget under sustained load — a quiet-gate-passing
-# bench (1-min loadavg 0.11 at start) read 34% slower than an
-# identical run 30 minutes earlier, single-thread sha256 stayed fast,
-# and 12 spurious record flags fired at a uniform ~1.6x. loadavg
-# measures queue, not budget, so the bench times a fixed 32-way
-# CPU-bound Spark job (no IO, no shuffle) and stamps it; a reading
-# past CALIB_THROTTLE_RATIO x the best committed stamp marks the run
-# `host_throttled` (rerun-don't-record, like load_contaminated) and
-# skips the flap-triage floor probes, whose readings would be equally
-# inflated.
-CALIB_THROTTLE_RATIO = 1.35
-# Warm-box corroboration (r15 verdict "what's wrong" #4): the band
-# between ~1.2x and CALIB_THROTTLE_RATIO was blind — the r15 driver
-# window ran at start-calib 1.29x floor with 5-min loadavg 11.98 and
-# passed clean, while its ext rows read a near-uniform 1.1-1.7x of
-# r13 on identical plan fingerprints. When the 5-min loadavg shows the
-# box was busy for minutes leading into the START stamp (above
-# CALIB_WARM_LOAD5_FRAC of cores), a stamp past CALIB_WARM_RATIO x its
-# floor is corroborated load residue and marks host_throttled. A
-# quiet box (r16 fresh-session reading: 1.29x floor at loadavg5 0.5 —
-# host-era drift, not load) is deliberately NOT marked.
-CALIB_WARM_RATIO = 1.2
-CALIB_WARM_LOAD5_FRAC = 0.25
-CALIB_ROWS = 1_000_000_000
-CALIB_SHUFFLE_ROWS = 50_000_000  # -> 25M groups: a real exchange, no combine win
-
-# A degraded box produced 12 flags in one run (each flag = one
-# ~2.5-min dedicated floor probe); bound the probe bill and keep any
-# overflow as hard flags with a named no-verdict reason.
-MAX_FLOOR_PROBES = 6
-
-# Out-of-band calibration floor (r14 verdict item 2 for r15): throttle
-# detection judged only committed BENCH stamps, and the FIRST stamped
-# artifact (BENCH_r14) came back from the driver with "parsed": null —
-# so detection never armed. The quiet-box floor now ALSO lives in a
-# committed builder file that bench.py maintains write-if-better on
-# clean runs; detection no longer depends on a parseable driver
-# artifact. Retirement (r14 advice: an all-time min has no escape
-# hatch): artifact stamps auto-retire once older than
-# CALIB_RECENT_ROUNDS behind the newest stamped round, and the floor
-# file is hand-editable (raise it with a "note" explaining the
-# permanent host change) — the contract tests pin shape, not value,
-# so a documented hand-raise can never deadlock the round-close.
-CALIB_FLOOR_FILE = "CALIB_FLOOR.json"
-CALIB_RECENT_ROUNDS = 6
-
-# Driver capture budget (r14 post-mortem): the driver keeps the LAST
-# 2,000 chars of stdout; r14's 19-entry regressions_vs_record pushed
-# the one JSON line past that and the round's graded headline was
-# unrecoverable. stdout now carries a compact payload (flag dicts ->
-# count + worst offenders; triage -> verdict counts) hard-bounded by
-# the contract test at STDOUT_BUDGET; the FULL payload goes to
-# BENCH_DETAIL_FILE next to the artifact (committed per round as
-# BENCH_DETAIL_r{N}.json).
-STDOUT_BUDGET = 1800
-BENCH_DETAIL_FILE = "BENCH_DETAIL.json"
-# Smoke runs write their full payload HERE instead: an ad-hoc smoke
-# invocation between a real bench run and the round-close copy to
-# BENCH_DETAIL_r{N}.json must never destroy the round's only full
-# payload (r15 advice — the r14 incident showed the 2,000-char stdout
-# capture cannot reconstruct it). Same "no side effects" promise the
-# smoke path already makes for CALIB_FLOOR.json.
-BENCH_DETAIL_SMOKE_FILE = "BENCH_DETAIL.smoke.json"
-COMPACT_TOP_FLAGS = 2
-
-# Band-width term for the record guard (r14 watch item): x29's record
-# (0.191, BENCH_r12) is the bottom of a ten-round 0.19-0.30 honest
-# band, so a pure 1.5x-record threshold (0.286) false-flags ~half of
-# honest runs. With enough committed history the guard flags only
-# above max(ratio x record, mean + 2 sigma of that history) — in-band
-# readings never flag, a true floor shift still does. The band term
-# is CAPPED at RECORD_BAND_MAX_RATIO x record: committed history can
-# span eras/plans (x70_kcore's mixes a pre-optimization ~3 s era with
-# its 0.655 s record, putting mean+2 sigma at 5.2x the record), and an
-# uncapped band would silently neuter the guard for exactly the
-# multi-round drift it exists to catch.
-RECORD_BAND_MIN_SAMPLES = 4
-RECORD_BAND_MAX_RATIO = 2.0
-
-
-def _spark_calibration(spark, rows: int = CALIB_ROWS,
-                       shuffle_rows: int = CALIB_SHUFFLE_ROWS
-                       ) -> tuple[float, float]:
-    """(cpu_sec, shuffle_sec): two fixed Spark jobs, timed (one
-    warm-up rep each so a fresh JVM's JIT does not masquerade as
-    throttle). The cpu job saturates the 32 codegen pipelines; the
-    shuffle job moves a high-cardinality exchange (no map-side-combine
-    win) through the memory/disk path — the r14 degradation hit
-    shuffle-heavy rows while pure hashing stayed fast, so BOTH
-    subsystems are stamped. Shuffle partitions are PINNED for the
-    duration so the stamps compare across rounds even if the session
-    default changes (it did in r14: cores -> 4x cores)."""
-    from pyspark.sql import functions as F
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "64")
-
-    def _cpu(n: int) -> float:
-        t0 = time.perf_counter()
-        # max, not sum: summing xxhash64 longs overflows under ANSI
-        # mode; max exercises the same per-row hash work.
-        spark.range(n).select(F.max(F.xxhash64("id"))).collect()
-        return time.perf_counter() - t0
-
-    def _shuffle(n: int) -> float:
-        t0 = time.perf_counter()
-        spark.range(n).select(
-            F.pmod(F.xxhash64("id"), F.lit(n // 2)).alias("k")
-        ).groupBy("k").agg(F.count(F.lit(1))).select(F.max("k")).collect()
-        return time.perf_counter() - t0
-
+def _loadavg() -> list[float]:
     try:
-        _cpu(rows // 20)  # warm-up: codegen + JIT
-        cpu = round(min(_cpu(rows) for _ in range(2)), 3)
-        _shuffle(shuffle_rows // 10)
-        shuf = round(min(_shuffle(shuffle_rows) for _ in range(2)), 3)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return cpu, shuf
+        return [round(x, 2) for x in os.getloadavg()]
+    except OSError:  # pragma: no cover — non-POSIX
+        return []
 
 
-def _is_throttled(stamps: dict, floors: dict,
-                  ratio: float = CALIB_THROTTLE_RATIO,
-                  loadavg5: float | None = None,
-                  cpus: int | None = None) -> bool:
-    """True when any calibration stamp exceeds ``ratio`` x its OWN
-    position's floor (see CALIB_KEYS — start and end stamps are never
-    cross-compared). Module-level so the contract test pins the
-    done-criterion directly: a 1.4x reading on an armed floor marks
-    the run host_throttled.
-
-    The warm-box corroboration term (r15 verdict: the 1.29x-and-
-    passing blind band): when ``loadavg5``/``cpus`` show the box was
-    busy for the minutes leading into the stamp (5-min loadavg above
-    CALIB_WARM_LOAD5_FRAC of cores), a stamp already past
-    CALIB_WARM_RATIO x its floor is corroborated load residue — mark
-    it, instead of letting 1.29x slide under the unconditional 1.35
-    bar. Callers pass loadavg5 only for the START position: the end
-    stamp's 5-min loadavg always carries the bench's OWN work, so the
-    term would fire on every healthy run there."""
-    warm = bool(loadavg5 is not None and cpus
-                and loadavg5 / cpus > CALIB_WARM_LOAD5_FRAC)
-    eff = min(ratio, CALIB_WARM_RATIO) if warm else ratio
-    return any(
-        isinstance(stamps.get(lkey), (int, float))
-        and fkey in floors
-        and stamps[lkey] > eff * floors[fkey]
-        for lkey, fkey in CALIB_KEYS
-    )
+def _best_of(reps: int, run, reset=None) -> float:
+    """Minimum wall seconds of ``reps`` calls of ``run``; ``reset``
+    runs before each call, outside the timed region."""
+    best = float("inf")
+    for _ in range(reps):
+        if reset:
+            reset()
+        start = time.perf_counter()
+        run()
+        best = min(best, time.perf_counter() - start)
+    return round(best, 3)
 
 
-def _marked_dirty(parsed: dict) -> bool:
-    """True when a payload carries any rerun-don't-record marker.
-    Every BENCH_r*.json is DRIVER-deposited (the builder's runs live
-    in SCALE.md), so a marked artifact cannot be "rerun before
-    committing" — instead it is INERT: its numbers never become
-    records, history, vs-prev baselines, or calibration floors, and
-    the contract test checks inertness rather than forbidding the
-    marker (r14 went red exactly because the driver deposited an
-    artifact the builder's tests assumed the builder controlled).
-    smoke_mode payloads (test runs: truncated suites, 1/100-size
-    calibration) are equally non-comparable and equally inert."""
-    return bool(parsed.get("load_contaminated")
-                or parsed.get("host_throttled")
-                or parsed.get("load_drift")
-                or parsed.get("smoke_mode"))
+def _time_query(spark, registry: dict, name: str, sf_dir: str) -> float:
+    if name == SHARED_PAIR_BUILD:
+        from streaming_data_spark import bench_canary
+        from streaming_data_spark.operators import dedup
+
+        return _best_of(
+            3, lambda: bench_canary.build_memoized(spark, sf_dir),
+            reset=lambda: dedup.drop_pair_views(spark))
+    fn = registry[name]
+
+    def run() -> None:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()  # warm: JIT, file listing
+    # x2's 16-aggregate band-join plan has the largest codegen surface
+    # and swung ±20% at min-of-3.
+    return _best_of(5 if name == "x2_minhash_lsh" else 3, run)
 
 
-# The four calibration stamp positions. Start and end stamps are NOT
-# comparable to each other — the end-of-run JVM has the whole suite's
-# JIT behind it and reads systematically faster (measured r15: start
-# 0.29 vs end 0.197 on the same healthy box, a 1.47x gap that exceeds
-# CALIB_THROTTLE_RATIO) — so each position keeps its own floor and a
-# stamp is only ever judged against its own position's floor.
-CALIB_KEYS = (
-    ("spark_calib_sec", "cpu_sec"),
-    ("spark_calib_shuffle_sec", "shuffle_sec"),
-    ("spark_calib_end_sec", "cpu_end_sec"),
-    ("spark_calib_shuffle_end_sec", "shuffle_end_sec"),
-)
+def _run_suite(spark, registry: dict, names, sf_dir: str):
+    """({name: seconds}, [failed names]). A failure is isolated to its
+    query: r3 lost every number to a single AnalysisException."""
+    timings: dict[str, float] = {}
+    errors: list[str] = []
+    for name in names:
+        try:
+            timings[name] = _time_query(spark, registry, name, sf_dir)
+        except Exception:  # noqa: BLE001 — record and continue
+            errors.append(name)
+            print(f"bench: {name} failed\n{traceback.format_exc()}",
+                  file=sys.stderr)
+    return timings, errors
 
 
-def _calib_file_floor(here: str, sf: float) -> tuple[dict, bool]:
-    """({floor key: value}, pinned) from the committed
-    CALIB_FLOOR.json. The file is keyed by str(sf); unknown/malformed
-    entries (including hand edits that replace the dict with prose)
-    read as absent — the floor file must never be able to crash a
-    bench run. ``pinned`` is the entry's "pinned": true hand-raise
-    marker: the file's floors then OVERRIDE the artifact stamps
-    instead of min-ing with them — without it, a permanently slower
-    host could never escape fast-era stamps (throttled runs are inert,
-    so the stamp window's newest round would never advance and the old
-    stamps would never retire)."""
-    try:
-        with open(os.path.join(here, CALIB_FLOOR_FILE)) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        return {}, False
-    rec = doc.get(str(sf)) if isinstance(doc, dict) else None
-    if not isinstance(rec, dict):
-        return {}, False
-    floors = {
-        fkey: rec[fkey]
-        for _, fkey in CALIB_KEYS
-        if isinstance(rec.get(fkey), (int, float)) and rec[fkey] > 0
+def build_payload(timings: dict, errors: list, ext_timings: dict,
+                  ext_errors: list, sf: float, load_context: dict) -> dict:
+    """The one stdout line. ``queries`` and ``errors`` name each suite
+    query once, so the line's length is bounded by the suites."""
+    payload = {
+        "metric": "headline_suite_seconds",
+        # a total missing queries would read as a phantom speedup
+        "value": -1.0 if errors else round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "queries_ext": ext_timings,
+        "sf": sf,
+        "load_context": load_context,
     }
-    return floors, bool(rec.get("pinned"))
-
-
-def _committed_calib_floor(here: str, sf: float,
-                           recent_rounds: int = CALIB_RECENT_ROUNDS) -> dict:
-    """Best (lowest) demonstrated calibration stamps at this sf, PER
-    POSITION: {floor key: value} (see CALIB_KEYS). Sources:
-    CALIB_FLOOR.json (survives unparseable driver artifacts) plus the
-    stamps of committed BENCH_r*.json artifacts from the most recent
-    ``recent_rounds`` stamped rounds — older stamps auto-retire, so
-    one anomalously fast ancient reading (or a permanent host
-    slowdown) cannot mark every future run host_throttled forever
-    (r14 advice). A position with no floor disables detection for
-    that position until one lands."""
-    file_floors, pinned = _calib_file_floor(here, sf)
-    stamps: list[tuple[int, dict]] = []
-    for f in os.listdir(here):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
-        if not m:
-            continue
-        try:
-            with open(os.path.join(here, f)) as fh:
-                parsed = json.load(fh).get("parsed") or {}
-        except (OSError, ValueError):
-            continue
-        if parsed.get("sf") != sf:
-            continue
-        if _marked_dirty(parsed):
-            continue  # inflated stamps can't lower a floor, but keep
-            # the scan consistent with every other artifact reader
-        lc = parsed.get("load_context", {})
-        vals = {
-            fkey: lc[lkey]
-            for lkey, fkey in CALIB_KEYS
-            if isinstance(lc.get(lkey), (int, float)) and lc[lkey] > 0
-        }
-        if vals:
-            stamps.append((int(m.group(1)), vals))
-    stamp_floors: dict = {}
-    if stamps:
-        newest = max(r for r, _ in stamps)
-        for r, vals in stamps:
-            if r <= newest - recent_rounds:
-                continue  # auto-retired: too old to be comparable
-            for fkey, v in vals.items():
-                if fkey not in stamp_floors or v < stamp_floors[fkey]:
-                    stamp_floors[fkey] = v
-    if pinned:
-        # Hand-raised escape hatch: pinned positions are authoritative
-        # (stale fast-era stamps could otherwise never retire — see
-        # _calib_file_floor), but positions the hand edit does NOT
-        # list still fall back to the stamp scan, so a partial raise
-        # (or a typo'd key) cannot silently disarm the others.
-        return {**stamp_floors, **file_floors}
-    best = dict(stamp_floors)
-    for fkey, v in file_floors.items():
-        if fkey not in best or v < best[fkey]:
-            best[fkey] = v
-    return best
-
-
-def _maybe_update_calib_floor(here: str, sf: float, payload: dict) -> bool:
-    """Write-if-better persistence of the quiet-box calibration floor
-    into CALIB_FLOOR.json, per stamp position. Only a clean run (no
-    contamination/drift markers) may LOWER a position's floor; the
-    floor never rises automatically — a permanently slower host is a
-    hand edit with a "note" + "pinned": true in the file (see
-    _calib_file_floor). Returns True when the file changed."""
-    if _marked_dirty(payload):
-        # includes host_throttled: a throttled run's stamps must not
-        # seed floors for positions that are not armed yet (the
-        # armed-position argument — "an inflated stamp can't be lower
-        # than the floor" — doesn't hold where there IS no floor)
-        return False
-    lc = payload.get("load_context", {})
-    fresh = {
-        fkey: lc[lkey]
-        for lkey, fkey in CALIB_KEYS
-        if isinstance(lc.get(lkey), (int, float)) and lc[lkey] > 0
-    }
-    if not fresh:
-        return False
-    path = os.path.join(here, CALIB_FLOOR_FILE)
-    try:
-        with open(path) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        doc = {}
-    if not isinstance(doc, dict):
-        doc = {}  # a hand edit must never crash the run
-    rec = doc.get(str(sf))
-    if not isinstance(rec, dict):
-        rec = {}
-    if rec.get("pinned"):
-        # a hand-raised entry is authoritative; automatic lowering
-        # would silently un-raise it
-        return False
-    changed = False
-    for key, v in fresh.items():
-        old = rec.get(key)
-        if not isinstance(old, (int, float)) or v < old:
-            rec[key] = v
-            changed = True
-    if not changed:
-        return False
-    rec["protocol"] = ("per-position _spark_calibration stamps of a "
-                       "clean bench run; write-if-better; if the host "
-                       "permanently slowed, hand-raise with a note and "
-                       "set \"pinned\": true (the file then overrides "
-                       "artifact stamps and stops auto-lowering)")
-    doc[str(sf)] = rec
-    try:
-        with open(path, "w") as fh:
-            json.dump(doc, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-    except OSError:
-        return False  # persistence is best-effort, never fatal
-    return changed
-
-
-def _apply_record_override(query: str, best, src):
-    """RECORD_OVERRIDES_SPEC application — shared by the per-query
-    helper below and main's one-pass record table."""
-    ov = RECORD_OVERRIDES_SPEC.get(query)
-    if ov and (best, src) == (ov[0], ov[1]):
-        return ov[2], f"{src} (pre-plan-change; overridden to {ov[2]})"
-    return best, src
-
-
-def _record_floor_comparable(here: str, sf: float, query: str):
-    """_record_floor with RECORD_OVERRIDES_SPEC applied — the record
-    the drift guard and the flap triage judge against."""
-    return _apply_record_override(query, *_record_floor(here, sf, query))
-
-
-def _latest_plan_fps(here: str):
-    """(filename, per-query fingerprint records) of the newest
-    committed PLAN_FPS_r*.json — the code state the prev round's bench
-    numbers were produced against. None if no snapshot exists."""
-    files = sorted(
-        (f for f in os.listdir(here)
-         if re.fullmatch(r"PLAN_FPS_r\d+\.json", f)),
-        key=lambda f: int(re.search(r"r(\d+)", f).group(1)),
-    )
-    if not files:
-        return None, None
-    try:
-        with open(os.path.join(here, files[-1])) as fh:
-            return files[-1], json.load(fh)["queries"]
-    except (OSError, ValueError, KeyError, TypeError):
-        return files[-1], None
-
-
-def _record_tables(here: str, sf: float) -> tuple[dict, dict]:
-    """({query: (best committed seconds, source filename)},
-    {query: [every committed second]}) across every BENCH_r*.json at
-    this sf, built in ONE pass — ~35 reported rows x N artifacts would
-    otherwise re-list and re-parse the directory per row (and again
-    per triage flag), quadratically as rounds accumulate. Checks both
-    sections; headline and ext queries share the same min-of-N
-    protocol so the numbers are comparable. The history list feeds the
-    record guard's band term (RECORD_BAND_MIN_SAMPLES)."""
-    table: dict[str, tuple[float, str]] = {}
-    history: dict[str, list[float]] = {}
-    for f in sorted(f for f in os.listdir(here)
-                    if re.fullmatch(r"BENCH_r\d+\.json", f)):
-        try:
-            with open(os.path.join(here, f)) as fh:
-                # "parsed" can be null in an artifact whose bench run
-                # died before printing — skip, never crash the triage
-                parsed = json.load(fh).get("parsed") or {}
-        except (OSError, ValueError):
-            continue
-        if parsed.get("sf") != sf or _marked_dirty(parsed):
-            continue
-        for section in ("queries", "queries_ext"):
-            for query, t in parsed.get(section, {}).items():
-                if isinstance(t, (int, float)) and t > 0:
-                    history.setdefault(query, []).append(t)
-                    if query not in table or t < table[query][0]:
-                        table[query] = (t, f)
-    return table, history
-
-
-def _record_table(here: str, sf: float) -> dict:
-    """Minima view of _record_tables — see there."""
-    return _record_tables(here, sf)[0]
-
-
-def _record_floor(here: str, sf: float, query: str):
-    """(best, source) for one query — see _record_table."""
-    return _record_table(here, sf).get(query, (None, None))
-
-
-def _live_fingerprint(here: str, query: str, timeout_s: float = 900.0):
-    """Current-code fingerprint for one query, computed by
-    tools/plan_fps.py in a SUBPROCESS (own pinned session at sf0.001 —
-    the exact protocol every committed snapshot used, so the diff can
-    only see query-code changes). None on any failure or instability:
-    the caller then keeps the hard flag (fail-loud, never fail-quiet)."""
-    import subprocess
-    import tempfile
-
-    fd, out = tempfile.mkstemp(suffix=".json")
-    os.close(fd)
-    try:
-        subprocess.run(
-            [sys.executable, os.path.join(here, "tools", "plan_fps.py"),
-             "--repo", here, "--round", "0", "--out", out,
-             "--only", query, "--reps", "2"],
-            check=True, capture_output=True, timeout=timeout_s)
-        with open(out) as fh:
-            rec = json.load(fh)["queries"].get(query, {})
-        return rec if rec.get("stable") and "err" not in rec else None
-    except Exception:  # noqa: BLE001 — triage must never kill the bench
-        return None
-    finally:
-        if os.path.exists(out):
-            os.unlink(out)
-
-
-def _run_floor_probe(here: str, query: str, sf_dir: str,
-                     reps: int = FLAP_FLOOR_REPS,
-                     timeout_s: float = 1800.0):
-    """Min-of-``reps`` floor for one query in a DEDICATED JVM
-    (tools/floor_probe.py). None on any failure."""
-    import subprocess
-
-    try:
-        res = subprocess.run(
-            [sys.executable, os.path.join(here, "tools", "floor_probe.py"),
-             "--query", query, "--sf-dir", sf_dir, "--reps", str(reps)],
-            check=True, capture_output=True, timeout=timeout_s, text=True)
-        return json.loads(res.stdout.strip().splitlines()[-1])
-    except Exception:  # noqa: BLE001 — triage must never kill the bench
-        return None
-
-
-def _triage_flaps(vs_prev: dict, fp_snapshot, live_fp, floor_probe,
-                  record_floor, band: float = FLAP_FLOOR_BAND,
-                  max_probes: int = MAX_FLOOR_PROBES):
-    """Returns ``(triage records, names to demote)``. Pure decision
-    logic — the probe runners are injected so the contract test pins
-    every verdict path without a SparkSession.
-
-    Verdicts:
-      fingerprint_changed — the plan really changed since the prior
-        snapshot; the flag stands (and the rotation will front it).
-      floor_shift — fingerprint unchanged but the dedicated-session
-        floor moved past band x record: a real regression the
-        fingerprint can't see (data/layout/GC-profile); flag stands.
-      jit_band — fingerprint unchanged AND the floor is within band x
-        record: the in-session swing the min-of-N protocol documents;
-        the flag is demoted to this named note.
-      uncomparable — missing/unstable snapshot or a failed probe;
-        flag stands (fail-loud).
-      probe_budget_exceeded — more than ``max_probes`` flags needed a
-        floor probe this run (a degraded box can fire a dozen at
-        once; each probe is ~2.5 min of dedicated JVM); the worst
-        flags by ratio get the probes, the rest keep the hard flag
-        with this named reason.
-
-    Probe order is worst-first (flag now/base ratio), so the budget
-    spends where the signal is.
-    """
-    triage: dict[str, dict] = {}
-    demote: list[str] = []
-    probes_used = 0
-    for q in sorted(vs_prev, key=lambda n: -_flag_ratio(vs_prev[n])):
-        entry: dict = {"flag": vs_prev[q]}
-        # Budget check FIRST: the live fingerprint is ALSO a
-        # subprocess (a dedicated plan_fps session, minutes on a slow
-        # box) — a dozen flags must not spend unbounded wall time on
-        # fingerprinting either, so one budget unit covers BOTH legs
-        # of one flag: it is consumed before the fingerprint subprocess
-        # (r14 advice: incrementing only on the floor leg let
-        # fingerprint_changed/uncomparable flags spawn unbounded
-        # plan_fps subprocesses past the budget).
-        # A missing/unstable snapshot record decides the verdict for
-        # FREE — spawning the live-fingerprint subprocess first (as
-        # the first cut of this code did) burned a budget unit and
-        # minutes of dedicated-JVM wall time on a result that was
-        # discarded unread.
-        prev_rec = (fp_snapshot or {}).get(q)
-        if not prev_rec or "err" in prev_rec or not prev_rec.get("stable"):
-            entry["verdict"] = "uncomparable"
-            triage[q] = entry
-            continue
-        if probes_used >= max_probes:
-            entry["verdict"] = "probe_budget_exceeded"
-            triage[q] = entry
-            continue
-        probes_used += 1
-        now_rec = live_fp(q)
-        if not now_rec:
-            entry["verdict"] = "uncomparable"
-            triage[q] = entry
-            continue
-        entry["fp_prev"] = prev_rec["fp"]
-        entry["fp_now"] = now_rec["fp"]
-        if prev_rec["fp"] != now_rec["fp"]:
-            entry["verdict"] = "fingerprint_changed"
-            triage[q] = entry
-            continue
-        record, src = record_floor(q)
-        probe = floor_probe(q)  # the same budget unit paid above
-        if record is None or not probe:
-            entry["verdict"] = "uncomparable"
-            triage[q] = entry
-            continue
-        entry["floor"] = probe["floor"]
-        entry["floor_times"] = probe.get("times", [])
-        entry["record"] = record
-        entry["record_source"] = src
-        entry["floor_ratio"] = round(probe["floor"] / record, 3)
-        if probe["floor"] <= band * record:
-            entry["verdict"] = "jit_band"
-            demote.append(q)
-        else:
-            entry["verdict"] = "floor_shift"
-        triage[q] = entry
-    return triage, demote
-
-
-def _is_quiet(la: list[float], threshold: float,
-              load5_limit: float | None = None) -> bool:
-    """The quiet-gate condition on a loadavg triple: the 1-minute term
-    <= ``threshold`` and, when ``load5_limit`` is given, the 5-minute
-    term <= ``load5_limit``. A run that starts while it is false is
-    stamped ``load_contaminated``."""
-    return bool(la) and la[0] <= threshold and (
-        load5_limit is None or len(la) < 2 or la[1] <= load5_limit)
-
-
-def _await_quiet(threshold: float, timeout_s: float, poll_s: float = 15.0,
-                 loadavg=None, sleep=None,
-                 load5_limit: float | None = None) -> tuple[list[float], float]:
-    """Block (bounded) until the 1-minute loadavg is <= ``threshold``
-    AND (when ``load5_limit`` is given) the 5-minute loadavg is <=
-    ``load5_limit``. Returns ``(final loadavg triple, seconds
-    waited)``. Never raises — on non-POSIX or timeout it returns what
-    it saw; the caller stamps contamination instead of dying (the
-    driver must always get its one JSON line).
-
-    The 5-minute term is the r16 verdict item 1: BENCH_r16 started at
-    1-min loadavg 1.99 (gate passed) with 5-min loadavg 14.6 — the box
-    had been hammered for the minutes leading in and served a fraction
-    of its CPU budget for the first half of the suite. The warm-box
-    corroboration in _is_throttled DETECTED it; the gate now also
-    WAITS it out (same bounded budget) instead of recording garbage."""
-    import time as _time
-
-    loadavg = loadavg or (lambda: [round(x, 2) for x in os.getloadavg()])
-    sleep = sleep or _time.sleep
-    waited = 0.0
-    while True:
-        try:
-            la = loadavg()
-        except OSError:  # pragma: no cover — non-POSIX
-            return [], waited
-        if (not la or _is_quiet(la, threshold, load5_limit)
-                or waited >= timeout_s):
-            return la, waited
-        sleep(poll_s)
-        waited += poll_s
-
-
-def _calibrate_start_with_retry(calibrate, floors, loadavg5, cpus,
-                                budget_s: float = 0.0, sleep=None,
-                                pauses=(0.0, 30.0, 60.0, 120.0, 240.0)):
-    """Run the START calibration; while its stamp reads host_throttled,
-    re-run it under a bounded backoff budget (r16 verdict item 1: a
-    driver invocation on a throttled box must wait, not record
-    garbage). The first retry is immediate — on this host's cold-ramp
-    era the calibration job itself is the warm-up (r16: START stamps
-    1.7-9x floor on an idle box, END stamps at floor) — and later
-    retries sleep so genuine residual load can drain. Returns
-    ``(cpu, shuf, attempts, waited_s, loadavg5_last)``; never raises
-    (a calibration failure returns Nones and the caller keeps the
-    stamp-and-flag fallback). ``loadavg5`` is a callable re-read per
-    attempt so the warm-box corroboration judges the box state the
-    FINAL stamp actually ran under, not the pre-gate reading."""
-    import time as _time
-
-    sleep = sleep or _time.sleep
-    waited = 0.0
-    attempts = 0
-    cpu = shuf = la5 = None
-    for pause in pauses:
-        if attempts:  # pauses[0] belongs to the first attempt: no wait
-            if waited + pause > budget_s:
-                break
-            if pause:
-                sleep(pause)
-                waited += pause
-        attempts += 1
-        try:
-            cpu, shuf = calibrate()
-        except Exception:  # noqa: BLE001 — calibration must never kill the run
-            return None, None, attempts, waited, la5
-        try:
-            la5 = loadavg5()
-        except Exception:  # noqa: BLE001 — context only
-            la5 = None
-        if not _is_throttled(
-            {"spark_calib_sec": cpu, "spark_calib_shuffle_sec": shuf},
-            floors, loadavg5=la5, cpus=cpus,
-        ):
-            break
-    return cpu, shuf, attempts, waited, la5
-
-
-def _flag(base_section: dict, now: dict) -> dict:
-    """Regression filter: 1.3x relative AND >=0.25s absolute —
-    sub-second queries swing +-0.15s run-to-run on a shared box; a
-    pure ratio threshold buries real regressions (x35's 0.887->1.322)
-    under noise. Module-level so tests can pin that EVERY reported
-    line — headline, queries_ext, and the shared_pair_build canary —
-    is inside the vs-prev guard's domain."""
-    return {
-        q: {"base": b, "now": now[q]}
-        for q, b in base_section.items()
-        if q in now and b > 0 and now[q] > 1.3 * b and now[q] - b >= 0.25
-    }
-
-
-def _flag_vs_record(sections, record_floor, history=None,
-                    ratio: float = RECORD_DRIFT_RATIO) -> dict:
-    """Cumulative drift filter (r13 verdict item 4): flag any reported
-    row exceeding its threshold vs the best committed record — NO
-    absolute floor, so the sub-0.25s drift the vs-prev gate tolerates
-    cannot compound across rounds unseen. ``record_floor(q) ->
-    (best, src)`` is injected (same scan the flap triage uses) so the
-    contract test pins the decision without artifacts.
-
-    Band term (r14 watch item — see RECORD_BAND_MIN_SAMPLES): when
-    ``history(q)`` returns enough committed numbers, the threshold is
-    max(ratio x record, mean + 2 sigma of the history), so a
-    band-bottom record (x29: 0.191 under an honest 0.19-0.30 band)
-    stops false-flagging in-band readings while a true floor shift
-    still flags."""
-    import statistics
-
-    out: dict[str, dict] = {}
-    for section in sections:
-        for q, t in section.items():
-            record, src = record_floor(q)
-            if record is None or record <= 0:
-                continue
-            threshold = ratio * record
-            hist = (history(q) if history else None) or []
-            if len(hist) >= RECORD_BAND_MIN_SAMPLES:
-                band = statistics.mean(hist) + 2 * statistics.stdev(hist)
-                threshold = max(
-                    threshold,
-                    min(band, RECORD_BAND_MAX_RATIO * record))
-            if t > threshold:
-                out[q] = {"record": record, "record_source": src,
-                          "now": t, "ratio": round(t / record, 3),
-                          "threshold": round(threshold, 3)}
-    return out
-
-
-def _flag_ratio(flag: dict) -> float:
-    """now/base ordering key shared by the triage and the compactor."""
-    base = flag.get("base") or flag.get("record") or 0
-    now = flag.get("now") or 0
-    return (now / base) if base else float("inf")
-
-
-def _compact_flags(flags: dict) -> dict:
-    """Stdout summary of a flag dict: count + the worst
-    COMPACT_TOP_FLAGS offenders as [name, ratio] pairs. The full
-    per-flag records (record_source, threshold, ...) live in
-    BENCH_DETAIL_FILE — r14 lost its graded headline to 19 full
-    records blowing the driver's 2,000-char tail capture."""
-    top = sorted(flags, key=lambda q: -_flag_ratio(flags[q]))
-    return {"count": len(flags),
-            "top": [[q, round(_flag_ratio(flags[q]), 2)]
-                    for q in top[:COMPACT_TOP_FLAGS]]}
-
-
-def _compact_payload(payload: dict,
-                     budget: int = STDOUT_BUDGET) -> dict:
-    """The ONE stdout JSON line the driver captures, derived from the
-    full payload. Per-query timings, calibration stamps, and the
-    markers stay verbatim (the record/calibration scans read them
-    from committed artifacts); flag dicts compact to count+top; flap
-    triage compacts to verdict counts; methodology and error texts
-    move to the detail file. If the line STILL exceeds ``budget`` —
-    only reachable on disaster runs with many errors AND many flags —
-    progressively coarser strip levels apply until it fits, ending at
-    a minimal always-parseable core. tests/test_bench_contract.py
-    renders a worst-case payload through this and pins
-    len(json.dumps(...)) <= STDOUT_BUDGET."""
-    out = dict(payload)
-    out.pop("methodology", None)  # stable prose; lives in the detail
-    for key in ("regressions", "regressions_vs_prev",
-                "regressions_vs_record"):
-        if isinstance(out.get(key), dict):
-            out[key] = _compact_flags(out[key])
-    ft = payload.get("flap_triage")
-    if isinstance(ft, dict) and "queries" in ft:
-        verdicts: dict[str, int] = {}
-        for rec in ft["queries"].values():
-            v = rec.get("verdict", "?")
-            verdicts[v] = verdicts.get(v, 0) + 1
-        out["flap_triage"] = {
-            "plan_fps_snapshot": ft.get("plan_fps_snapshot"),
-            "verdicts": verdicts,
-            "demoted": len(ft.get("demoted", [])),
-        }
-    for key in ("errors", "errors_ext"):
-        if isinstance(out.get(key), dict):
-            errs = out[key]
-            out[key] = {"count": len(errs), "names": sorted(errs)[:3]}
-    # Config echoes and context only the detail file needs: the gate
-    # threshold/ratio are module constants, the calib refs live in
-    # CALIB_FLOOR.json and committed stamps — stdout carries only what
-    # a later scan reads from the artifact itself.
-    for key in ("record_drift_ratio", "baseline_overrides"):
-        out.pop(key, None)
-    lc = dict(out.get("load_context") or {})
-    for key in ("quiet_gate", "spark_calib_floors"):
-        lc.pop(key, None)
-    out["load_context"] = lc
-    out["detail"] = (BENCH_DETAIL_SMOKE_FILE if out.get("smoke_mode")
-                     else BENCH_DETAIL_FILE)
-
-    def _fits(d: dict) -> bool:
-        return len(json.dumps(d)) <= budget
-
-    if _fits(out):
-        return out
-    # Level 1: drop remaining informational extras.
-    out.pop("calib_floor_updated", None)
-    if _fits(out):
-        return out
-    # Level 2: counts only for flags/errors/triage.
-    for key in ("regressions", "regressions_vs_prev",
-                "regressions_vs_record", "errors", "errors_ext"):
-        if isinstance(out.get(key), dict) and "count" in out[key]:
-            out[key] = {"count": out[key]["count"]}
-    if isinstance(out.get("flap_triage"), dict):
-        out["flap_triage"] = {
-            k: v for k, v in out["flap_triage"].items()
-            if k in ("verdicts", "demoted", "skipped")}
-    if _fits(out):
-        return out
-    # Level 3 (disaster runs only — value is already the -1 sentinel
-    # when errors exist): the minimal core the driver must always be
-    # able to parse. Ext timings move to the detail file (scanners
-    # skip non-numeric marker values), but load_context SURVIVES —
-    # the committed-artifact contract test requires loadavg_start and
-    # the calibration stamp on every parseable payload, and dropping
-    # them would turn a disaster run into a misleading
-    # "missing stamp" suite failure.
-    core_keys = ("metric", "value", "unit", "sf", "queries",
-                 "load_context",
-                 "load_contaminated", "host_throttled", "load_drift",
-                 "smoke_mode",  # inertness marker must survive every level
-                 "suite_incomplete", "errors", "errors_ext", "detail")
-    out = {k: out[k] for k in core_keys if k in out}
-    if not _fits(out):
-        out["queries"] = {"omitted_see_detail": True}
-    return out
+    if errors:
+        payload["errors"] = sorted(errors)
+        payload["suite_incomplete"] = True
+    if ext_errors:
+        payload["errors_ext"] = sorted(ext_errors)
+    return payload
 
 
 def main() -> None:
-    def _loadavg() -> list[float]:
-        # context only — must never be able to kill the bench output
-        try:
-            return [round(x, 2) for x in os.getloadavg()]
-        except OSError:  # pragma: no cover — non-POSIX
-            return []
-
-    # Wait out box noise before the clock starts (r10 verdict item 4).
-    # SPARK_GRAFT_LOAD_WAIT=0 disables the wait (quick local iteration
-    # on a busy box); the contamination stamp below still applies.
-    def _env_float(name: str, default: float) -> float:
-        # a malformed env var must never kill the run — the driver
-        # contract is ONE JSON line, always
-        try:
-            return float(os.environ.get(name, default))
-        except ValueError:
-            return default
-
-    # Smoke mode (tests only): two queries per suite, a 100x-smaller
-    # calibration, no floor-file writes — locks the WHOLE main() path
-    # (session, suites, guards, compaction, detail write, the one
-    # stdout line) into CI without the full run's cost. The payload
-    # self-identifies via "smoke_mode" and the contract test forbids
-    # that key in committed artifacts.
-    smoke = os.environ.get("SPARK_GRAFT_BENCH_SMOKE") == "1"
-
-    threshold = _env_float("SPARK_GRAFT_LOAD_THRESHOLD", LOAD_GATE_THRESHOLD)
-    wait_budget = _env_float("SPARK_GRAFT_LOAD_WAIT", 600.0)
-    # r16 verdict item 1: the gate also waits out a WARM box — BENCH_r16
-    # passed the 1-min gate at 1.99 while the 5-min loadavg read 14.6,
-    # and the first half of the suite recorded 4-6x inflated. The limit
-    # mirrors the warm-box corroboration fraction in _is_throttled so
-    # the gate waits on exactly the condition the stamp would flag.
     from streaming_data_spark.session import get_session, local_cores
 
-    # the cores the session runs on ($SPARK_GRAFT_CPUS), not the host's
-    _n_cpus = local_cores()
-    load5_cap = CALIB_WARM_LOAD5_FRAC * _n_cpus if _n_cpus else None
-    _load_avg0, _waited = _await_quiet(
-        threshold, wait_budget, load5_limit=load5_cap)
-    contaminated = bool(_load_avg0) and not _is_quiet(
-        _load_avg0, threshold, load5_cap)
+    import __spark_entry__ as entry_mod
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else -1.0
-
-    import __spark_entry__ as entry_mod
+    loadavg_start = _loadavg()
 
     spark = get_session(app_name="sds-bench")
     # The registry's only partition-less windows are the sanctioned
@@ -1046,7 +177,7 @@ def main() -> None:
     # tests/test_plans.py::test_partitionless_windows_only_at_sanctioned_sites),
     # so WindowExec's "No Partition Defined" warning is pure noise in
     # the bench tail — demote that ONE logger so real warnings stay
-    # visible. Regressions fail the plan gate, not grep-the-log.
+    # visible.
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -1057,334 +188,18 @@ def main() -> None:
         pass
     registry = entry_mod.queries()
 
-    # Host-throttle stamp: timed BEFORE the suites so the reference
-    # job sees the same box state the timings start under, and AGAIN
-    # after them (r14 advice: the host throttles progressively under
-    # sustained load, so a run that starts clean and throttles
-    # mid-suite — the exact 34%-slower incident — passed a
-    # start-only check).
-    here = os.path.dirname(os.path.abspath(__file__))
-    calib_rows = CALIB_ROWS // 100 if smoke else CALIB_ROWS
-    calib_shuffle_rows = (
-        CALIB_SHUFFLE_ROWS // 100 if smoke else CALIB_SHUFFLE_ROWS)
-    calib_floors = _committed_calib_floor(here, sf)
-    # START stamp with bounded retry (r16 verdict item 1): while the
-    # stamp reads host_throttled, restamp under what remains of the
-    # quiet-gate budget instead of recording garbage. The END stamp
-    # below keeps the plain stamp-and-flag behavior (its 5-min loadavg
-    # always carries the bench's own work).
-    (spark_calib, spark_calib_shuffle, calib_attempts,
-     calib_retry_waited, _la5_stamp) = _calibrate_start_with_retry(
-        lambda: _spark_calibration(spark, calib_rows, calib_shuffle_rows),
-        calib_floors,
-        lambda: (_loadavg() or [None, None])[1],
-        _n_cpus,
-        budget_s=max(0.0, wait_budget - _waited))
-    host_throttled = _is_throttled({
-        "spark_calib_sec": spark_calib,
-        "spark_calib_shuffle_sec": spark_calib_shuffle,
-    }, calib_floors,
-        # warm-box corroboration (r15 verdict: the r15 driver run sat
-        # at 1.29x floor with loadavg5 11.98 and passed) — START
-        # position only; judged at the loadavg the FINAL stamp ran
-        # under (the retry may have waited minutes past the gate).
-        loadavg5=_la5_stamp if _la5_stamp is not None
-        else (_load_avg0[1] if _load_avg0 else None),
-        cpus=_n_cpus)
+    timings, errors = _run_suite(spark, registry, HEADLINE, sf_dir)
+    ext_timings, ext_errors = _run_suite(
+        spark, registry, (SHARED_PAIR_BUILD,) + EXT_HEADLINE, sf_dir)
 
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    total = 0.0
-    for name in (HEADLINE[:2] if smoke else HEADLINE):
-        fn = registry.get(name)
-        if fn is None:
-            continue
-        # Per-query failure isolation: one broken query must not abort
-        # the run — r3 lost ALL numbers to a single AnalysisException.
-        try:
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()  # warm (JIT, file listing)
-            # min-of-N: shields against box-load noise. x2's 16-agg +
-            # band-join plan has the largest codegen surface and kept
-            # flapping ±20% across rounds at N=3 — min-of-5 pins it to
-            # its 1.3-1.5s in-session steady state.
-            reps = 5 if name == "x2_minhash_lsh" else 3
-            best = float("inf")
-            for _ in range(reps):
-                start = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
-            timings[name] = round(best, 3)
-            total += best
-        except Exception as exc:  # noqa: BLE001 — record and continue
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    ext_timings: dict[str, float] = {}
-    ext_errors: dict[str, str] = {}  # never poisons the headline sentinel
-
-    # Shared pair tier canary (r8 advice): six ext queries consume ONE
-    # shared pair view, so only whichever consumer runs first pays the
-    # build — making their timings order-dependent and a build-stage
-    # regression invisible on five of the six. Drop the view and time
-    # the build as its own line; the consumers below then all run warm,
-    # so each per-query number isolates that query's own cost.
-    try:
-        from streaming_data_spark import bench_canary
-        from streaming_data_spark.operators import dedup as _dedup
-
-        best = float("inf")
-        for _ in range(3):  # min-of-3, same protocol as the suites
-            _dedup.drop_pair_views(spark)
-            start = time.perf_counter()
-            bench_canary.build_memoized(spark, sf_dir)
-            best = min(best, time.perf_counter() - start)
-        ext_timings["shared_pair_build"] = round(best, 3)
-    except Exception as exc:  # noqa: BLE001
-        ext_errors["shared_pair_build"] = f"{type(exc).__name__}: {exc}"[:500]
-
-    for name in (EXT_HEADLINE[:2] if smoke else EXT_HEADLINE):
-        fn = registry.get(name)
-        if fn is None:
-            continue
-        try:
-            # min-of-3 across the WHOLE ext suite (r9 verdict item 5):
-            # min-of-2 still let +-50% swings through on sub-second
-            # queries (x29_fuzzy_match measured 1.65x run-to-run in the
-            # r9 probe; x30_capped's r8 flag was the same box-drift
-            # class) — the ~20s of extra wall time retires the
-            # drift-vs-regression ambiguity for good.
-            best = float("inf")
-            for _ in range(3):
-                start = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
-            ext_timings[name] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001
-            ext_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    # loadavg_end is read BEFORE the end calibration — the calibration
-    # is itself a 32-way CPU-saturating job, so reading load after it
-    # would measure the detector, not the run (r15: the first ordering
-    # stamped a spurious load_drift on a clean box).
-    loadavg_end = _loadavg()
-
-    # End-of-run stamp, timed right after the suites (before the
-    # minutes-long triage subprocesses) so it reads the box state the
-    # LAST timed numbers ran under (r14 advice: the host throttles
-    # progressively; a start-only stamp misses mid-run degradation).
-    try:
-        spark_calib_end, spark_calib_shuffle_end = _spark_calibration(
-            spark, calib_rows, calib_shuffle_rows)
-    except Exception:  # noqa: BLE001 — calibration must never kill the run
-        spark_calib_end = spark_calib_shuffle_end = None
-    host_throttled = host_throttled or _is_throttled({
-        "spark_calib_end_sec": spark_calib_end,
-        "spark_calib_shuffle_end_sec": spark_calib_shuffle_end,
-    }, calib_floors)
-
-    payload = {
-        "metric": "headline_suite_seconds",
-        # a suite total missing queries is NOT comparable across
-        # rounds (a failure would read as a phantom speedup) — report
-        # the sentinel and let per-query timings carry the signal
-        "value": round(total, 3) if not errors else -1.0,
-        "unit": "sec",
-        "queries": timings,
-        "queries_ext": ext_timings,
-        "sf": sf,
-        # r9 protocol note + load context (r8 verdict item 4): r8's
-        # uniform +10% vs r7 was shared-box drift; stamping the box
-        # load lets a reader separate drift from regression.
-        "methodology": (
-            "headline: warm run + min-of-3 (x2 min-of-5); ext: min-of-3 "
-            "everywhere (r9 verdict item 5); shared_pair_build timed "
-            "separately, min-of-3 on a dropped pair view per rep, so ext "
-            "numbers are order-independent"
-        ),
-        "load_context": {
-            "cpus": _n_cpus,
-            "master": spark.sparkContext.master,
-            "spark_calib_sec": spark_calib,
-            "spark_calib_shuffle_sec": spark_calib_shuffle,
-            "spark_calib_end_sec": spark_calib_end,
-            "spark_calib_shuffle_end_sec": spark_calib_shuffle_end,
-            "spark_calib_floors": calib_floors,
-            "loadavg_start": _load_avg0,
-            "loadavg_end": loadavg_end,
-            "quiet_gate": {
-                "threshold": threshold,
-                "load5_limit": load5_cap,
-                "waited_sec": round(_waited, 1),
-                "calib_attempts": calib_attempts,
-                "calib_retry_waited_sec": round(calib_retry_waited, 1),
-            },
-        },
+    load_context = {
+        "cpus": local_cores(),
+        "master": spark.sparkContext.master,
+        "loadavg_start": loadavg_start,
+        "loadavg_end": _loadavg(),
     }
-    if contaminated:
-        # Loud marker: the box never quieted inside the wait budget,
-        # so every number above is suspect. A marked artifact is
-        # INERT in every scan (see _marked_dirty) — its numbers can
-        # never become records, baselines, or floors.
-        payload["load_contaminated"] = True
-    if host_throttled:
-        # Same rerun-don't-record rule: the host is serving less
-        # aggregate CPU than its demonstrated best (committed calib
-        # floor), so every number above is uniformly inflated even
-        # though loadavg looked quiet.
-        payload["host_throttled"] = True
-    la_end = payload["load_context"]["loadavg_end"]
-    if la_end and la_end[0] > LOAD_DRIFT_END_THRESHOLD:
-        # Load ramped up mid-run past what the bench's own work can
-        # explain — same inert-when-marked rule as the start gate.
-        payload["load_drift"] = True
-    if errors:
-        payload["errors"] = errors
-        payload["suite_incomplete"] = True
-    if ext_errors:
-        payload["errors_ext"] = ext_errors
-
-    # regression guard: compare per-query against the earliest recorded
-    # round bench (same sf) and flag anything >1.3x slower — surfaces
-    # shuffle-path regressions before they compound across rounds.
-    # r7 extension (r6 verdict item 5): the headline-vs-r01 compare had
-    # a blind spot — queries_ext (every [EXT] hot spot) was unguarded,
-    # so x35's 1.49x round-over-round regression shipped silently. Now
-    # BOTH sections are also compared against the PREVIOUS round's
-    # file, same >1.3x threshold, reported under regressions_vs_prev.
-    prior = sorted(
-        f for f in os.listdir(here) if re.fullmatch(r"BENCH_r\d+\.json", f)
-    )
-
-    if prior:
-        try:
-            with open(os.path.join(here, prior[0])) as fh:
-                # "or {}": an artifact with an explicit null "parsed"
-                # (the driver's r14 capture failure) must never crash
-                # the guards — same idiom as _record_tables
-                base = json.load(fh).get("parsed") or {}
-            if base.get("sf") == sf:
-                recorded = base.get("queries", {})
-                overrides = {
-                    q: pin
-                    for q, (artifact, pin) in BASE_OVERRIDES_SPEC.items()
-                    if prior[0] == "BENCH_r01.json"
-                    and recorded.get(q) == artifact
-                }
-                base_q = {**recorded, **overrides}
-                regressions = _flag(base_q, timings)
-                payload["baseline_round"] = prior[0]
-                payload["baseline_overrides"] = overrides
-                payload["regressions"] = regressions
-        except (OSError, ValueError):
-            pass
-        try:
-            # vs-prev compares against the newest artifact that
-            # actually carries numbers at this sf — a null-parsed
-            # driver capture (BENCH_r14) is skipped, not treated as
-            # "no previous round".
-            vs_prev: dict | None = None
-            for prev_name in reversed(prior):
-                try:
-                    with open(os.path.join(here, prev_name)) as fh:
-                        prev = json.load(fh).get("parsed") or {}
-                except (OSError, ValueError):
-                    continue  # one corrupt artifact never ends the scan
-                if _marked_dirty(prev):
-                    continue  # a throttled/contaminated prev would
-                    # launder regressions (or fake them); skip to the
-                    # newest CLEAN artifact
-                if prev.get("sf") == sf:
-                    vs_prev = _flag(prev.get("queries", {}), timings)
-                    vs_prev.update(
-                        _flag(prev.get("queries_ext", {}), ext_timings))
-                    payload["prev_round"] = prev_name
-                    break
-            # Cumulative record guard (r13 verdict item 4): every
-            # reported row vs its best committed record, no absolute
-            # floor — the compounding-drift blind spot of vs-prev.
-            records, record_history = _record_tables(here, sf)
-
-            def _rf(q):
-                return _apply_record_override(
-                    q, *records.get(q, (None, None)))
-
-            vs_record = _flag_vs_record(
-                (timings, ext_timings), _rf,
-                history=lambda q: record_history.get(q, []))
-            # Automated flap triage (r12 verdict item 3; extended to
-            # the record guard in r14): every unchanged-fingerprint
-            # flag gets the dedicated-JVM min-of-10 floor probe;
-            # jit_band verdicts are demoted out of BOTH flag dicts,
-            # everything else keeps the hard flag. SPARK_GRAFT_TRIAGE=0
-            # skips the (slow) probes for quick local iteration — the
-            # raw flags then stand untriaged, never silently dropped.
-            combined = {**vs_record, **(vs_prev or {})}
-            if combined and smoke:
-                # smoke mode promises "~1 minute, no side effects" —
-                # the multi-minute dedicated-JVM triage subprocesses
-                # must not fire from it regardless of the TRIAGE env
-                payload["flap_triage"] = {"skipped": "smoke_mode"}
-            elif combined and host_throttled:
-                # Floor probes on a throttled host read the throttle,
-                # not the query — leave the raw flags standing and
-                # record why no verdicts exist; the host_throttled
-                # marker already makes this artifact rerun-only.
-                payload["flap_triage"] = {
-                    "skipped": "host_throttled",
-                    "spark_calib_sec": spark_calib,
-                    "spark_calib_end_sec": spark_calib_end,
-                    "spark_calib_floors": calib_floors,
-                }
-            elif combined and os.environ.get(
-                    "SPARK_GRAFT_TRIAGE", "1") != "0":
-                fp_file, fp_snapshot = _latest_plan_fps(here)
-                triage, demote = _triage_flaps(
-                    combined, fp_snapshot,
-                    live_fp=lambda q: _live_fingerprint(here, q),
-                    floor_probe=lambda q: _run_floor_probe(
-                        here, q, sf_dir),
-                    record_floor=_rf,
-                )
-                for q in demote:
-                    if vs_prev is not None:
-                        vs_prev.pop(q, None)
-                    vs_record.pop(q, None)
-                payload["flap_triage"] = {
-                    "plan_fps_snapshot": fp_file,
-                    "floor_band": FLAP_FLOOR_BAND,
-                    "floor_reps": FLAP_FLOOR_REPS,
-                    "demoted": demote,
-                    "queries": triage,
-                }
-            if vs_prev is not None:
-                payload["regressions_vs_prev"] = vs_prev
-            payload["regressions_vs_record"] = vs_record
-            payload["record_drift_ratio"] = RECORD_DRIFT_RATIO
-        except (OSError, ValueError):
-            pass
-
-    # Quiet-box floor persistence (write-if-better; see
-    # CALIB_FLOOR_FILE) — BEFORE printing so a crash here could never
-    # eat the driver's one JSON line... and it can't crash: both the
-    # update and the detail write swallow their own IO errors.
-    if smoke:
-        # a smoke run's 1/100-size calibration stamps must never
-        # touch the real floors; the stamp below keeps the payload
-        # out of every artifact scan (see _marked_dirty) and the
-        # contract test forbids it in committed artifacts
-        payload["smoke_mode"] = True
-        payload["calib_floor_updated"] = False
-    else:
-        payload["calib_floor_updated"] = _maybe_update_calib_floor(
-            here, sf, payload)
-    detail_file = BENCH_DETAIL_SMOKE_FILE if smoke else BENCH_DETAIL_FILE
-    try:
-        with open(os.path.join(here, detail_file), "w") as fh:
-            json.dump(payload, fh, indent=1)
-            fh.write("\n")
-    except OSError:
-        payload["detail_write_failed"] = True
-    print(json.dumps(_compact_payload(payload)))
+    print(json.dumps(build_payload(
+        timings, errors, ext_timings, ext_errors, sf, load_context)))
     spark.stop()
 
 

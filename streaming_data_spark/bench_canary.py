@@ -1,13 +1,11 @@
 """The bench's shared_pair_build canary, defined ONCE.
 
-Three sites measure the same pair build — bench.py times it,
-tools/floor_probe.py floors it, tools/plan_fps.py fingerprints it —
-and until r14 each hand-copied the spec (documents table, doc_id /
-text, n=3, threshold=0.8). A one-site edit (say the bench moving to
-n=4) would silently leave the fingerprint and floor probing a
-DIFFERENT plan, so flap triage would judge the timed build against
-the wrong reference with no test failing. All three sites now import
-from here.
+bench.py times this pair build as its own line, tools/plan_fps.py
+fingerprints it and tools/explain_dump.py dumps its plan. Until r14
+each site hand-copied the spec (documents table, doc_id / text, n=3,
+threshold=0.8), so a one-site edit (say the bench moving to n=4)
+would silently leave the fingerprint describing a DIFFERENT plan from
+the one timed, with no test failing. Every site now imports from here.
 
 The spec itself mirrors the shared-pair consumers' registry config
 (x41, x70, x89, x92, x96 and x97 all read this exact pair set from one
@@ -46,7 +44,7 @@ def build_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared build bench.py/floor_probe.py TIME (call
+    """The shared build bench.py TIMES (call
     ``dedup.drop_pair_views(spark)`` first or the call is a view hit)."""
     from streaming_data_spark.operators import dedup
 

@@ -789,22 +789,28 @@ def ngram_jaccard_pairs_prefix(
 _PAIR_VIEW_PREFIX = "sds_pairs_"
 
 
+def _digest(key) -> str:
+    return hashlib.sha256(repr(key).encode()).hexdigest()[:16]
+
+
 def _pair_view_name(
     df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
 ) -> str:
-    """Digest of the analyzed plan's ``semanticHash`` (a filter or a
-    different source changes it), each input file's path, length and
-    modification time (an in-place rewrite changes those, not the plan
-    hash) and the build parameters."""
+    """The prefix, 16 hex of the build key (the analyzed plan's
+    ``semanticHash`` — a filter or a different source changes it — and
+    the build parameters), then 16 hex of each input file's path,
+    length and modification time (an in-place rewrite changes those,
+    not the plan hash). One hex run, so a rewrite keeps the build
+    key's part of the name."""
     spark = df.sparkSession
     conf = spark._jsc.hadoopConfiguration()
-    key: list = [df.semanticHash(), id_col, text_col, n, threshold]
+    stamps = []
     for f in sorted(df.inputFiles()):
         path = spark._jvm.org.apache.hadoop.fs.Path(f)
         status = path.getFileSystem(conf).getFileStatus(path)
-        key.append((f, status.getLen(), status.getModificationTime()))
-    digest = hashlib.sha256(repr(key).encode()).hexdigest()[:16]
-    return _PAIR_VIEW_PREFIX + digest
+        stamps.append((f, status.getLen(), status.getModificationTime()))
+    build_key = _digest([df.semanticHash(), id_col, text_col, n, threshold])
+    return _PAIR_VIEW_PREFIX + build_key + _digest(stamps)
 
 
 def ngram_jaccard_pairs_prefix_shared(
@@ -815,22 +821,30 @@ def ngram_jaccard_pairs_prefix_shared(
     threshold: float = 0.8,
 ) -> DataFrame:
     """:func:`ngram_jaccard_pairs_prefix`, built once per session and
-    input. A miss checkpoints the pairs into the temp view
-    :func:`_pair_view_name` names; hit or miss, the call returns that
-    view, so a consumer's plan does not depend on call order."""
+    input. A miss drops the views its build key superseded (same plan
+    and parameters, older files), then checkpoints the pairs into the
+    temp view :func:`_pair_view_name` names; hit or miss, the call
+    returns that view, so a consumer's plan does not depend on call
+    order."""
     spark = df.sparkSession
     view = _pair_view_name(df, id_col, text_col, n, threshold)
     if not spark.catalog.tableExists(view):
+        build_key = view[: len(_PAIR_VIEW_PREFIX) + 16]
+        _drop_views(spark, build_key)
         ngram_jaccard_pairs_prefix(
             df, id_col, text_col, n, threshold
         ).localCheckpoint(eager=True).createOrReplaceTempView(view)
     return spark.table(view)
 
 
+def _drop_views(spark: SparkSession, prefix: str) -> None:
+    # SHOW VIEWS runs no job and reads ~5x faster than listTables
+    for row in spark.sql(f"SHOW VIEWS LIKE '{prefix}*'").collect():
+        if row.isTemporary:
+            spark.catalog.dropTempView(row.viewName)
+
+
 def drop_pair_views(spark: SparkSession) -> None:
     """Drop the session's shared pair views, so the next shared call
     pays its own build."""
-    # SHOW VIEWS runs no job and reads ~5x faster than listTables
-    for row in spark.sql(f"SHOW VIEWS LIKE '{_PAIR_VIEW_PREFIX}*'").collect():
-        if row.isTemporary:
-            spark.catalog.dropTempView(row.viewName)
+    _drop_views(spark, _PAIR_VIEW_PREFIX)

@@ -788,3 +788,31 @@ def test_prefix_pairs_shared_view_sees_an_in_place_rewrite(spark, sf_small, tmp_
     after = {tuple(r) for r in bench_canary.build_memoized(spark, str(tmp_path)).collect()}
     assert after == fresh != before
     dedup.drop_pair_views(spark)
+
+
+def test_prefix_pairs_shared_miss_drops_the_views_it_supersedes(spark, sf_small, tmp_path):
+    """After an in-place rewrite the rebuild drops the old file's view
+    of the same build, so one view per build key is listed; a view
+    under a different threshold is another build and survives."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from conftest import pair_views
+    from streaming_data_spark import bench_canary
+
+    dedup.drop_pair_views(spark)
+    path = tmp_path / "documents.parquet"
+    shutil.copyfile(os.path.join(sf_small, "documents.parquet"), path)
+    bench_canary.build_memoized(spark, str(tmp_path))
+    [stale] = pair_views(spark)
+    dedup.ngram_jaccard_pairs_prefix_shared(
+        bench_canary.canary_input(spark, str(tmp_path)), "doc_id", "text", threshold=0.7
+    )
+    [other] = set(pair_views(spark)) - {stale}
+    pq.write_table(pq.read_table(path).slice(0, 10), path)
+    bench_canary.build_memoized(spark, str(tmp_path))
+    views = pair_views(spark)
+    assert len(views) == 2 and other in views and stale not in views
+    dedup.drop_pair_views(spark)

@@ -234,8 +234,8 @@ def test_auto_front_skips_rows_fresher_than_snapshot(tmp_path, monkeypatch):
 
 def test_compute_targets_include_shared_pair_build(spark):
     """r13 verdict item 5: the bench's one non-registry timing site is
-    fingerprinted with the registry protocol, so its flap-triage path
-    can resolve to a named verdict instead of 'uncomparable'. Live
+    fingerprinted with the registry protocol, so a change to its plan
+    shows up in the snapshot like any registry query's. Live
     run (reps=2, sf0.001) — also pins that the LAZY builder's plan is
     session-stable (the memoized wrapper's checkpointed plan is not,
     which is why the canary fingerprints the builder)."""

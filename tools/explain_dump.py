@@ -6,9 +6,9 @@ optimization round deliverable: plans/r16/<query>_{before,after}.txt).
 
 With no query names, dumps every bench-timed row (HEADLINE +
 EXT_HEADLINE + the shared_pair_build canary). ``shared_pair_build``
-is dumped as the unshared prefix-pair plan (the shared form returns
-a view over a checkpoint scan, which hides the build plan this file
-exists to show). The session's shared pair views are dropped before
+is dumped as the canary's unshared plan, ``bench_canary.build_lazy``
+(the shared form returns a view over a checkpoint scan, which hides
+the build plan this file exists to show). The session's shared pair views are dropped before
 every build so each consumer pays its own build; note that the
 shared-pair consumers (x41/x70/...) checkpoint the pair set during
 construction, so their dumped plan starts at the checkpoint scan —
@@ -63,11 +63,12 @@ def main() -> None:
 
     import bench as bench_mod
     import __spark_entry__ as entry_mod
+    from streaming_data_spark import bench_canary
     from streaming_data_spark.operators import dedup as dedup_mod
     from streaming_data_spark.session import get_session
 
     names = args.queries or (
-        list(bench_mod.HEADLINE) + ["shared_pair_build"]
+        list(bench_mod.HEADLINE) + [bench_mod.SHARED_PAIR_BUILD]
         + list(bench_mod.EXT_HEADLINE)
     )
     spark = get_session(app_name="explain-dump")
@@ -77,12 +78,8 @@ def main() -> None:
     for name in names:
         dedup_mod.drop_pair_views(spark)
         try:
-            if name == "shared_pair_build":
-                from streaming_data_spark.queries import _t
-
-                df = dedup_mod.ngram_jaccard_pairs_prefix(
-                    _t(spark, args.sf_dir, "documents"),
-                    "doc_id", "text", n=3, threshold=0.8)
+            if name == bench_mod.SHARED_PAIR_BUILD:
+                df = bench_canary.build_lazy(spark, args.sf_dir)
             else:
                 df = registry[name](spark, args.sf_dir)
             text = _formatted(df)

@@ -165,13 +165,12 @@ class _ActionCounter:
 def _shared_pair_build(spark, sf_dir):
     """The bench canary's pair-build plan (bench.py times exactly this
     spec as the ``shared_pair_build`` line — ONE definition in
-    streaming_data_spark/bench_canary.py shared by all three sites).
-    Fingerprinted alongside the registry (r13 verdict item 5) so the
-    one non-registry bench row has the same triage path as everything
-    else: the LAZY builder is hashed (the shared build returns a view
-    over a checkpointed LogicalRDD, pinned by its own reuse tests), and
-    any driver-side action the build runs shows up in the action count
-    as usual."""
+    streaming_data_spark/bench_canary.py). Fingerprinted alongside the
+    registry (r13 verdict item 5) so the one non-registry bench row is
+    covered by the same plan-change record: the LAZY builder is hashed
+    (the shared build returns a view over a checkpointed LogicalRDD,
+    pinned by its own reuse tests), and any driver-side action the
+    build runs shows up in the action count as usual."""
     from streaming_data_spark import bench_canary
 
     return bench_canary.build_lazy(spark, sf_dir)
