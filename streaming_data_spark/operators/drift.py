@@ -19,7 +19,7 @@ listener tier's job, consistent with the K9 alert sinks):
   s⁻ₜ = max(0, s⁻ₜ₋₁ + (μ − k·σ − xₜ)) — the classic sequential
   drift detector for a LEVEL shift. The recursion is the pure
   ``_advance_cusum`` fold (streaming/stateful), bound by the same
-  ``_partition_fold`` as the EWMA/RSI indicators (inherently
+  ``_bind_fold`` as the EWMA/RSI indicators (inherently
   sequential along the day axis, parallel across keys).
 
 Float contract: bin/count arithmetic is integer-exact; the
@@ -47,8 +47,8 @@ from pyspark.sql.types import DoubleType, StructField
 
 from streaming_data_spark.streaming.stateful import (
     _advance_cusum,
+    _bind_fold,
     _fold_input,
-    _partition_fold,
 )
 
 __all__ = ["psi", "js_divergence", "cusum"]
@@ -186,8 +186,8 @@ def cusum(
     step is a max/add/sub of identical doubles — bit-reproducible by
     any engine repeating the op order (the RECURSIVE-CTE oracle).
 
-    The fold is ``_advance_cusum``, bound by ``_partition_fold`` like
-    the ewma/rsi indicators: repartition(key) +
+    The fold is ``_advance_cusum``, bound by ``_bind_fold`` on a
+    batch like the ewma/rsi indicators: repartition(key) +
     sortWithinPartitions(key, order), state carried across Arrow
     record batches. Single-key σ = NULL rows (one observation) are
     dropped, matching the oracle.
@@ -203,7 +203,7 @@ def cusum(
         F.col("_sigma").isNotNull()
     )
     order_f, x_f = prepped.schema[order_col], prepped.schema[x_col]
-    return _partition_fold(
+    return _bind_fold(
         prepped,
         key,
         [order_col],

@@ -9,15 +9,24 @@ All are built on ONE shuffle per key (the daily aggregate), with every
 rolling form riding that same keyed window — no re-partitioning
 between indicator passes.
 
+Each of the eight indicators (SMA cross, Bollinger, EWMA, RSI, ATR,
+stochastic, OBV, Holt) is one function over a batch or a streaming
+frame. The inherently-sequential recursions (EWMA, RSI, Holt and the
+capped-balance ledger) are pure per-key folds in streaming/stateful,
+bound here by ``_bind_fold``, which picks the Spark API from
+``df.isStreaming``. The other five are window plans on a batch; on a
+stream they run their ``_advance_*`` fold, because Spark's streaming
+planner has no row-frame windows. On a batch the window plan is the
+faster one: bound as folds, a27/a28/a33/a35/a36 measured 8-35 %
+slower (medians of 7 interleaved runs at sf0.1 on 4 vCPU).
+
 Scale notes: inputs are per-(key, day) aggregates, so row counts are
 bounded by keys × calendar days regardless of fact volume; the only
 fact-sized pass is the daily-close groupBy, a map-side-combinable
-aggregation. The inherently-sequential recursions (EWMA, RSI, Holt
-and the capped-balance ledger) are pure per-key folds in
-streaming/stateful — the stream operators run the same ones — bound
-here by ``_partition_fold``: one key-sorted Arrow pass per partition
-with state carried across record batches, parallel across
-partitions and sequential only in the dimension the math requires.
+aggregation. A fold is one key-sorted Arrow pass per partition with
+state carried across record batches (on a stream: per key and
+micro-batch, with state in the state store), parallel across keys
+and sequential only in the dimension the math requires.
 """
 
 from __future__ import annotations
@@ -25,21 +34,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DataType,
     DoubleType,
     IntegerType,
+    LongType,
+    StringType,
     StructField,
     TimestampType,
 )
 
 from streaming_data_spark.streaming.stateful import (
+    _ATR_STATE,
+    _BOLL_STATE,
+    _CROSS_STATE,
+    _EWMA_STATE,
+    _HOLT_STATE,
+    _OBV_STATE,
+    _RSI_STATE,
+    _STOCH_STATE,
+    _advance_atr,
     _advance_balance,
+    _advance_bollinger,
+    _advance_cross,
     _advance_ewma,
     _advance_holt,
+    _advance_obv,
     _advance_rsi,
+    _advance_stoch,
+    _bind_fold,
     _fold_input,
-    _partition_fold,
+    _ohlc,
     _us,
 )
+
+
+def _day_fields(day_col: str, *doubles: str, **typed: DataType) -> list[StructField]:
+    """A per-day fold's output fields: the timestamp ``day_col``, then
+    ``doubles`` as DoubleType, then ``typed`` (name=type) in order."""
+    return [
+        StructField(day_col, TimestampType()),
+        *(StructField(c, DoubleType()) for c in doubles),
+        *(StructField(c, t) for c, t in typed.items()),
+    ]
 
 
 def daily_closes(
@@ -82,7 +118,24 @@ def sma_crossover(
     averages are order-dependent float sums, and comparing rounded
     values keeps the signal identical across engines (the oracle
     compares the same rounded values).
+
+    On a stream the ``_advance_cross`` fold carries each key's trailing
+    ``long`` closes across micro-batches (O(long) state per key), so a
+    cross whose two sides arrive in different batches still fires.
     """
+    if daily.isStreaming:
+        return _bind_fold(
+            daily,
+            key,
+            ["day"],
+            # signal is None on warmed days without a cross, emitted anyway
+            # so the stream is row-equal to the window plan
+            _day_fields("day", "close", "sma_s", "sma_l", signal=StringType()),
+            lambda state, b: _advance_cross(
+                state, _us(b["day"]), b["close"].astype("float64"), short, long
+            ),
+            _CROSS_STATE,
+        )
     w = Window.partitionBy(key).orderBy("day")
     w_s = w.rowsBetween(-(short - 1), 0)
     w_l = w.rowsBetween(-(long - 1), 0)
@@ -123,7 +176,21 @@ def bollinger_bands(
     """Rolling mean ± n_std·sample-stddev bands over ``periods`` days,
     plus the close's position (ABOVE/IN/BELOW) against the ROUNDED
     bands (same cross-engine determinism contract as sma_crossover).
-    Only fully-warmed windows emit — a 2-day "20-day band" is noise."""
+    Only fully-warmed windows emit — a 2-day "20-day band" is noise.
+    On a stream the ``_advance_bollinger`` fold carries the trailing
+    window, repeating Spark's Average and CentralMomentAgg op order so
+    the rounded bands agree bit-for-bit."""
+    if daily.isStreaming:
+        return _bind_fold(
+            daily,
+            key,
+            ["day"],
+            _day_fields("day", "close", "mid", "upper", "lower", position=StringType()),
+            lambda state, b: _advance_bollinger(
+                state, _us(b["day"]), b["close"].astype("float64"), periods, n_std
+            ),
+            _BOLL_STATE,
+        )
     w = Window.partitionBy(key).orderBy("day").rowsBetween(-(periods - 1), 0)
     mid = F.avg("close").over(w)
     sd = F.stddev_samp("close").over(w)
@@ -156,30 +223,26 @@ def ewma(
     y_1 = x_1; y_t = alpha·x_t + (1-alpha)·y_{t-1}, over a timestamp
     ``day_col``. Returns (key, day, close, ewma), one row per day.
 
-    The recursion is the stream's ``_advance_ewma`` fold, bound through
-    ``_partition_fold`` (key-sorted partitions, one Arrow pass each),
-    so ewma_stream and this operator run one function. The
-    fold is written as EXACTLY ``a*x + (1-a)*y`` so an engine repeating
-    the same IEEE ops (the DuckDB recursive-CTE oracle) reproduces it
-    bit-for-bit before rounding.
+    The recursion is the ``_advance_ewma`` fold under ``_bind_fold``
+    (key-sorted partitions on a batch, O(1) state per key on a
+    stream). The fold is written as EXACTLY ``a*x + (1-a)*y`` so an
+    engine repeating the same IEEE ops (the DuckDB recursive-CTE
+    oracle) reproduces it bit-for-bit before rounding.
 
     A closed-form window expression exists (y_t = Σ a(1-a)^(t-k)x_k)
     but needs (1-a)^(-k) factors that overflow past a few thousand
     rows — the per-key fold is the numerically-honest form.
     """
     a = float(alpha)
-    return _partition_fold(
+    return _bind_fold(
         daily,
         key,
         [day_col],
-        [
-            StructField(day_col, TimestampType()),
-            StructField(price_col, DoubleType()),
-            StructField("ewma", DoubleType()),
-        ],
+        _day_fields(day_col, price_col, "ewma"),
         lambda state, b: _advance_ewma(
             state, _us(b[day_col]), b[price_col].astype("float64"), a
         ),
+        _EWMA_STATE,
     )
 
 
@@ -209,8 +272,18 @@ def atr(
     TR = greatest(high-low, |high-prev_close|, |low-prev_close|)
     (first day: high-low, no prev close), ATR = rolling mean of TR
     over ``periods`` days, emitted only for fully-warmed windows.
-    Wilder's recursive smoothing variant is the ``rsi`` fold pattern;
-    the SMA form stays windows-only (one keyed exchange)."""
+    Wilder's recursive smoothing variant is the ``rsi`` fold pattern.
+    On a stream the ``_advance_atr`` fold carries the trailing TRs and
+    the previous close (O(periods) state per key)."""
+    if ohlcv_daily.isStreaming:
+        return _bind_fold(
+            ohlcv_daily,
+            key,
+            ["day"],
+            _day_fields("day", "tr", "atr"),
+            lambda state, b: _advance_atr(state, *_ohlc(b), periods),
+            _ATR_STATE,
+        )
     w_ord = Window.partitionBy(key).orderBy("day")
     w_frame = w_ord.rowsBetween(-(periods - 1), 0)
     prev_close = F.lag("close").over(w_ord)
@@ -244,25 +317,22 @@ def rsi(
     """Wilder's RSI over per-key daily closes (timestamp ``day_col``):
     the seed average gain/loss over the first ``periods`` deltas is
     followed by avg = (avg·(periods-1) + x) / periods per day. The
-    recursion is the stream's ``_advance_rsi`` fold, bound like
-    ``ewma``; the DuckDB oracle is a RECURSIVE CTE repeating the
-    identical op order. Emits from day ``periods``+1 (the first day
-    with a full delta window), RSI rounded to 6 by Spark's round().
+    recursion is the ``_advance_rsi`` fold, bound like ``ewma``; the
+    DuckDB oracle is a RECURSIVE CTE repeating the identical op order.
+    Emits from day ``periods``+1 (the first day with a full delta
+    window), RSI rounded to 6 by Spark's round().
 
     avg_loss == 0 ⇒ RSI 100 (the charting convention — both engines
     branch on exact 0, deterministic)."""
-    return _partition_fold(
+    return _bind_fold(
         daily.select(key, day_col, price_col),
         key,
         [day_col],
-        [
-            StructField(day_col, TimestampType()),
-            StructField(price_col, DoubleType()),
-            StructField("rsi", DoubleType()),
-        ],
+        _day_fields(day_col, price_col, "rsi"),
         lambda state, b: _advance_rsi(
             state, _us(b[day_col]), b[price_col].astype("float64"), periods
         ),
+        _RSI_STATE,
     ).withColumn("rsi", F.round("rsi", 6))
 
 
@@ -276,7 +346,17 @@ def stochastic(
     (close − min_low) / (max_high − min_low) over ``periods`` days
     (NULL when the range is 0 — both engines branch identically),
     %D = ``smooth``-day mean of %K over fully-warmed rows. Emits rows
-    where both windows are full."""
+    where both windows are full. On a stream the ``_advance_stoch``
+    fold carries the trailing (high, low) window and the last %Ks."""
+    if ohlcv_daily.isStreaming:
+        return _bind_fold(
+            ohlcv_daily,
+            key,
+            ["day"],
+            _day_fields("day", "close", "pct_k", "pct_d"),
+            lambda state, b: _advance_stoch(state, *_ohlc(b), periods, smooth),
+            _STOCH_STATE,
+        )
     w_frame = Window.partitionBy(key).orderBy("day").rowsBetween(-(periods - 1), 0)
     lo = F.min("low").over(w_frame)
     hi = F.max("high").over(w_frame)
@@ -308,7 +388,22 @@ def obv(
     trade COUNT as the volume unit (integer-exact — no float
     accumulation, so the cumulative sum needs no rounding contract):
     +n on up days, −n on down days, 0 on flat/first days; OBV is the
-    running total."""
+    running total. On a stream the ``_advance_obv`` fold carries the
+    previous close and the total (O(1) state per key)."""
+    if ohlcv_daily.isStreaming:
+        return _bind_fold(
+            ohlcv_daily,
+            key,
+            ["day"],
+            _day_fields("day", "close", obv=LongType()),
+            lambda state, b: _advance_obv(
+                state,
+                _us(b["day"]),
+                b["close"].astype("float64"),
+                b["n_trades"].astype("int64"),
+            ),
+            _OBV_STATE,
+        )
     w_ord = Window.partitionBy(key).orderBy("day")
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     prev_close = F.lag("close").over(w_ord)
@@ -334,8 +429,8 @@ def holt(
     price_col: str = "close",
 ) -> DataFrame:
     """Holt's linear-trend exponential smoothing per key — a
-    DOUBLE-state recursion (level + trend), bound like ``ewma`` through
-    the stream's ``_advance_holt`` fold:
+    DOUBLE-state recursion (level + trend), the ``_advance_holt`` fold
+    bound like ``ewma``:
 
         l_1 = x_1,  b_1 = 0
         l_t = α·x_t + (1−α)·(l_{t−1} + b_{t−1})
@@ -349,20 +444,15 @@ def holt(
     then the same IEEE op sequence in both engines, so outputs are
     exact and unrounded.
     """
-    return _partition_fold(
+    return _bind_fold(
         daily.select(key, day_col, price_col),
         key,
         [day_col],
-        [
-            StructField(day_col, TimestampType()),
-            StructField(price_col, DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("fc_next", DoubleType()),
-        ],
+        _day_fields(day_col, price_col, "level", "trend", "fc_next"),
         lambda state, b: _advance_holt(
             state, _us(b[day_col]), b[price_col].astype("float64"), alpha, beta
         ),
+        _HOLT_STATE,
     )
 
 
@@ -393,7 +483,7 @@ def clamped_balance(
     """
     cap_f, start_f = float(cap), float(start)
     seq_f, delta_f = deltas.schema[seq_col], deltas.schema[delta_col]
-    return _partition_fold(
+    return _bind_fold(
         deltas.select(key, seq_col, delta_col),
         key,
         [seq_col],

@@ -44,15 +44,12 @@ folds).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, DoubleType, StructField, StructType
 
 from streaming_data_spark.queries import _t
+from streaming_data_spark.streaming.stateful import _advance_holt_winters, _bind_fold
 
 KMV_K = 64
 KMV_SALTS = 64
@@ -318,57 +315,23 @@ _HW_SCHEMA = StructType(
 
 def q_a80_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d, y, s_used, level, trend, fitted, resid): additive weekly
-    Holt-Winters over daily order revenue, emitted from day m+1 on."""
+    Holt-Winters over daily order revenue, emitted from day m+1 on —
+    the ``_advance_holt_winters`` fold, bound on a constant key so the
+    whole day-grain series is one key folded in day order."""
     orders = _t(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.round(F.sum("o_totalprice"), 6).alias("y")
     )
     a, b, g, m = HW_ALPHA, HW_BETA, HW_GAMMA, HW_M
-    oma, omb, omg = 1.0 - a, 1.0 - b, 1.0 - g
-
-    def _fold(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # bounded day-grain series: state fits trivially; carry it
-        # across Arrow batches
-        seeds_y: list[float] = []
-        acc = 0.0
-        lvl = trd = None
-        season: list[float] = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            out = {k: [] for k in ("d", "y", "s_used", "level", "trend", "fitted", "resid")}
-            for d, y in zip(pdf["d"], pdf["y"]):
-                y = float(y)
-                if lvl is None:
-                    acc += y
-                    seeds_y.append(y)
-                    if len(seeds_y) == m:
-                        lvl = acc / float(m)
-                        trd = 0.0
-                        season = [v - lvl for v in seeds_y]
-                    continue
-                s_used = season[0]
-                fitted = lvl + trd + s_used
-                resid = y - fitted
-                prev = lvl
-                lvl = a * (y - s_used) + oma * (lvl + trd)
-                trd = b * (lvl - prev) + omb * trd
-                s_new = g * (y - lvl) + omg * s_used
-                season = season[1:] + [s_new]
-                out["d"].append(d)
-                out["y"].append(y)
-                out["s_used"].append(s_used)
-                out["level"].append(lvl)
-                out["trend"].append(trd)
-                out["fitted"].append(fitted)
-                out["resid"].append(resid)
-            yield pd.DataFrame(out)
-
-    return (
-        daily.repartition(1)
-        .sortWithinPartitions("d")
-        .mapInPandas(_fold, _HW_SCHEMA)
-    )
+    return _bind_fold(
+        daily.withColumn("_series", F.lit(0)),
+        "_series",
+        ["d"],
+        _HW_SCHEMA.fields,
+        lambda state, batch: _advance_holt_winters(
+            state, batch["d"], batch["y"], a, b, g, m
+        ),
+    ).drop("_series")
 
 
 _A, _OMA = repr(HW_ALPHA), repr(1.0 - HW_ALPHA)

@@ -213,21 +213,32 @@ def windowed_distinct_users(
     ts_col: str = "ts",
     window_duration: str = "1 day",
     watermark: str = "1 day",
-    rsd: float = 0.01,
+    rsd: float = 0.02,
 ) -> DataFrame:
     """Streaming active-user counts per event-time window — the
-    "streaming DAU" metric. Exact COUNT(DISTINCT) is unsupported in
-    streaming aggregations (state would hold every id per window);
-    ``approx_count_distinct`` keeps a bounded HLL sketch per window
-    cell instead — the same mergeable-sketch trade as the batch tier
-    (operators/sketches.py), made by the engine automatically. At
-    rsd=0.01 counts in the thousands are near-exact; the batch
-    comparison test bounds the error."""
+    "streaming DAU" metric, the continuous twin of a53's DAU leg.
+    Exact COUNT(DISTINCT) is unsupported in streaming aggregations
+    (state would hold every id per window); ``approx_count_distinct``
+    keeps a bounded HLL++ sketch, O(1/rsd^2), per window cell instead —
+    the same mergeable-sketch trade as the batch tier
+    (operators/sketches.py), made by the engine automatically. The
+    sketch is DETERMINISTIC for a given input set (register maxima are
+    order-independent), so the stream equals the batch
+    ``approx_count_distinct`` on the same rows. Emits (period_start,
+    period_end, n_events, dau_est)."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window_duration))
-        .agg(F.approx_count_distinct(user_col, rsd).alias("users_est"))
-        .select(F.col("window.start").alias("bucket_ts"), "users_est")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.approx_count_distinct(user_col, rsd).alias("dau_est"),
+        )
+        .select(
+            F.col("window.start").alias("period_start"),
+            F.col("window.end").alias("period_end"),
+            "n_events",
+            "dau_est",
+        )
     )
 
 
@@ -577,38 +588,6 @@ def streaming_session_rollup(
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
             key, "n_events", "session_value",
-        )
-    )
-
-
-def dau_stream(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    window_duration: str = "1 day",
-    watermark: str = "1 day",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Streaming daily-active-users — the continuous twin of a53's DAU
-    leg: per event-time window, the approximate distinct count of
-    ``user_col`` (exact distinct aggregation is unsupported in one
-    streaming pass; HLL++ keeps O(1/rsd^2) state per window and is
-    DETERMINISTIC for a given input set — register maxima are
-    order-independent, so the stream equals the batch
-    ``approx_count_distinct`` on the same rows, which the parity test
-    asserts). Emits (period_start, period_end, n_events, dau_est)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct(user_col, rsd).alias("dau_est"),
-        )
-        .select(
-            F.col("window.start").alias("period_start"),
-            F.col("window.end").alias("period_end"),
-            "n_events",
-            "dau_est",
         )
     )
 

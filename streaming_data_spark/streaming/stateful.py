@@ -1,28 +1,29 @@
-"""Custom stateful streaming operators (SURVEY.md §2.9 T6).
+"""Per-key folds and the one binder that runs them over a batch or a
+stream (SURVEY.md §2.9 T6).
 
 The reference's streaming path (Logstash) is stateless per event; state
-only enters through windowed aggregation. This module adds the ten
-custom stateful operators a training-data event pipeline needs where
-``window()`` can't express the semantics: gap-based sessionization
+only enters through windowed aggregation. This module holds the per-key
+recurrences ``window()`` can't express: gap-based sessionization
 (session length is data-dependent, not fixed), cross-batch change
-alerts, and the streaming twins of the eight indicator operators in
+alerts, the folds behind the eight indicator operators in
 operators/indicators (SMA cross, Bollinger, EWMA, RSI, ATR,
-stochastic, OBV, Holt).
+stochastic, OBV, Holt), the capped-balance ledger, CUSUM and a80's
+seasonal Holt-Winters.
 
-Each operator is a pure per-key fold, ``fold(state, rows) -> (out
-rows, new state)``, and ``_keyed_fold`` binds every one of them
-through ``applyInPandasWithState`` — the Structured Streaming shape
-of arbitrary stateful processing, a user function over (key, rows,
-state). ``_partition_fold`` binds the same kind of fold as a batch
-operator: the batch EWMA, RSI and Holt indicators run the stream's
-``_advance_*`` folds through it, and the capped-balance ledger and
-CUSUM are folds of this module bound only that way. A recurrence is
-one function, so its stream and batch forms agree by construction.
+Each is a pure per-key fold, ``fold(state, rows) -> (out rows, new
+state)``, and ``_bind_fold`` binds every one of them. It picks the
+Spark API from ``df.isStreaming``: a stream goes through
+``applyInPandasWithState`` — the Structured Streaming shape of
+arbitrary stateful processing, a user function over (key, rows,
+state) — and a batch through one key-sorted ``mapInPandas`` pass per
+partition. A recurrence is one function under one binding, so its
+stream and batch forms agree by construction.
 
 Scale notes: state is per-key and O(1) or O(window) per key; the
-shuffle is the groupBy on the key, identical to what any keyed
-stateful op pays. Arrow moves each key-batch into pandas, so
-per-event Python overhead is amortized per batch, not paid per row.
+shuffle is the groupBy (stream) or repartition (batch) on the key,
+identical to what any keyed stateful op pays. Arrow moves rows into
+pandas per key-batch (stream) or per partition (batch), so per-event
+Python overhead is amortized per batch, not paid per row.
 """
 
 from __future__ import annotations
@@ -34,13 +35,11 @@ from typing import TYPE_CHECKING, Any, Callable, Iterator, Tuple
 
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
@@ -78,6 +77,16 @@ def _us(col) -> list[int]:
     return (col.astype("int64") // 1000).tolist()
 
 
+def _ohlc(b) -> tuple:
+    """(day µs, high, low, close) of a daily OHLC fold batch."""
+    return (
+        _us(b["day"]),
+        b["high"].astype("float64"),
+        b["low"].astype("float64"),
+        b["close"].astype("float64"),
+    )
+
+
 def _fold_input(col, dtype):
     """A pass-through column as a fold takes it: epoch µs when its
     Spark type is TimestampType (the binders turn µs back into
@@ -108,72 +117,70 @@ def _rows_frame(key_col: str, keys, rows: list[tuple], cols) -> "pd.DataFrame":
     return frame
 
 
-def _keyed_fold(
-    df: DataFrame,
-    key_col: str,
-    order_cols: list[str],
-    fields: list[StructField],
-    state_schema: StructType,
-    fold: Callable[[Any, "pd.DataFrame"], tuple[list[tuple], tuple]],
-) -> DataFrame:
-    """Bind a per-key fold as a stateful streaming operator — the one
-    ``applyInPandasWithState`` call site in this module.
-
-    Per key and micro-batch, the key's rows are concatenated and sorted
-    by ``order_cols``; ``fold(state, batch)`` receives the stored state
-    tuple (None for a key never seen) and returns (rows, new state).
-    Each row is a tuple in ``fields`` order, with TimestampType fields
-    as epoch µs. The output leads with the key under ``key_col``'s own
-    name and input type, so a non-default key never comes back renamed
-    or retyped. State moves only when the key's events arrive.
-    """
-    out_schema, cols = _out_columns(df, key_col, fields)
-
-    def _fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        batch = pd.concat(list(pdfs)).sort_values(order_cols)
-        rows, new_state = fold(tuple(state.get) if state.exists else None, batch)
-        state.update(tuple(new_state))
-        if rows:
-            yield _rows_frame(key_col, [key[0]] * len(rows), rows, cols)
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _partition_fold(
+def _bind_fold(
     df: DataFrame,
     key_col: str,
     order_cols: list[str],
     fields: list[StructField],
     fold: Callable[[Any, dict], tuple[list[tuple], tuple]],
+    state_schema: StructType | None = None,
 ) -> DataFrame:
-    """Bind a per-key fold as a batch operator — ``_keyed_fold``'s fold
-    signature and output rules, run over a whole DataFrame at once.
+    """Bind a per-key fold as an operator over ``df``, batch or stream —
+    the one binder every fold in this package goes through.
 
-    ``repartition(key)`` then ``sortWithinPartitions(key, *order_cols)``
-    lay every partition out as whole keys in order, and ONE
-    ``mapInPandas`` walks each partition's Arrow record batches: each
-    run of one key's rows goes to ``fold(state, batch)``, with None
-    state where the key starts and the state carried on where a key's
-    rows straddle two record batches. One Arrow transfer per partition,
-    not per key: per-group ``applyInPandas`` measured ~5x slower with
-    thousands of small keys (1500 users x ~27 days at sf0.1). For the
-    same reason ``batch`` maps each column name to a numpy slice, not a
-    pandas frame: a per-key ``iloc`` slice would cost more than the
-    fold itself.
+    ``fold(state, batch)`` receives the key's carried state tuple (None
+    where the key starts) and a run of the key's rows in ``order_cols``
+    order, as a dict of column name -> numpy array; it returns (rows,
+    new state). Each row is a tuple in ``fields`` order, with
+    TimestampType fields as epoch µs. The output leads with the key
+    under ``key_col``'s own name and input type, so a non-default key
+    never comes back renamed or retyped.
+
+    ``df.isStreaming`` picks the Spark API:
+
+    - a stream groups by the key through ``applyInPandasWithState``:
+      per key and micro-batch, the key's rows are concatenated and
+      sorted, and the state lives in the state store under
+      ``state_schema`` (required here, unused on a batch) between
+      micro-batches. State moves only when the key's events arrive.
+    - a batch is laid out by ``repartition(key)`` then
+      ``sortWithinPartitions(key, *order_cols)`` as whole keys in
+      order, and ONE ``mapInPandas`` walks each partition's Arrow
+      record batches: each run of one key's rows goes to the fold, with
+      None state where the key starts and the state carried on where a
+      key's rows straddle two record batches. One Arrow transfer per
+      partition, not per key: per-group ``applyInPandas`` measured ~5x
+      slower with thousands of small keys (1500 users x ~27 days at
+      sf0.1). For the same reason a run is numpy slices, not a pandas
+      frame: a per-key ``iloc`` slice would cost more than the fold.
     """
     out_schema, cols = _out_columns(df, key_col, fields)
+
+    if df.isStreaming:
+        if state_schema is None:
+            raise ValueError("a fold bound over a stream needs a state_schema")
+
+        def _fn(
+            key: Tuple[Any, ...],
+            pdfs: Iterator["pd.DataFrame"],
+            state: GroupState,
+        ) -> Iterator["pd.DataFrame"]:
+            import pandas as pd
+
+            batch = pd.concat(list(pdfs)).sort_values(order_cols)
+            arrays = {c: batch[c].to_numpy() for c in batch.columns}
+            rows, new_state = fold(tuple(state.get) if state.exists else None, arrays)
+            state.update(tuple(new_state))
+            if rows:
+                yield _rows_frame(key_col, [key[0]] * len(rows), rows, cols)
+
+        return df.groupBy(key_col).applyInPandasWithState(
+            _fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
     def _fn(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
@@ -263,7 +270,7 @@ def sessionize_stream(
     The open session per key lives in Spark state across micro-batches
     and closes only when a late-enough event arrives."""
     gap_us = gap_minutes * 60 * 1_000_000
-    return _keyed_fold(
+    return _bind_fold(
         events,
         key_col,
         [ts_col],
@@ -273,10 +280,10 @@ def sessionize_stream(
             StructField("n_events", LongType()),
             StructField("session_value", DoubleType()),
         ],
-        _SESSION_STATE,
         lambda state, b: _advance_session(
             state, _us(b[ts_col]), b[value_col].astype("float64"), gap_us
         ),
+        _SESSION_STATE,
     )
 
 
@@ -363,7 +370,7 @@ def change_alert_stream(
             prev, _us(b[ts_col]), b[value_col].astype("float64"), pct, seqs=seqs
         )
 
-    return _keyed_fold(
+    return _bind_fold(
         events,
         key_col,
         [ts_col] if seq_col is None else [ts_col, seq_col],
@@ -373,13 +380,14 @@ def change_alert_stream(
             StructField("prev_value", DoubleType()),
             StructField("change_pct", DoubleType()),
         ],
-        _LAST_SCHEMA,
         _fold,
+        _LAST_SCHEMA,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming SMA crossover — golden/death-cross alerts over a candle stream
+# Indicator folds — operators/indicators binds each of them on a stream;
+# EWMA, RSI and Holt on a batch too
 # ---------------------------------------------------------------------------
 
 # cross-batch state: the trailing `long` closes (day-ordered) plus
@@ -431,48 +439,6 @@ def _advance_cross(state, days_us, closes, short, long):
         prev_full, p_s, p_l = 1, sma_s, sma_l
     return out, (hist_d, hist_c, prev_full, p_s, p_l)
 
-
-def sma_cross_stream(
-    daily: DataFrame,
-    key_col: str = "user_id",
-    day_col: str = "day",
-    close_col: str = "close",
-    short: int = 5,
-    long: int = 20,
-) -> DataFrame:
-    """Streaming golden/death-cross detection over a per-key daily
-    close stream (the candle cadence the reference's daily DAG
-    materializes) — the streaming twin of
-    operators/indicators.sma_crossover. Each key carries its trailing
-    ``long`` closes across micro-batches, so a cross whose two sides
-    arrive in different batches still fires; state is O(long) per key
-    regardless of stream length, and keys shard across executors on
-    the groupBy — the same scaling shape as every stateful op here."""
-    return _keyed_fold(
-        daily,
-        key_col,
-        [day_col],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("sma_s", DoubleType()),
-            StructField("sma_l", DoubleType()),
-            # None on warmed days without a cross — emitted anyway so the
-            # stream is row-equal to the batch form, not just alert-equal
-            StructField("signal", StringType()),
-        ],
-        _CROSS_STATE,
-        lambda state, b: _advance_cross(
-            state, _us(b[day_col]), b[close_col].astype("float64"), short, long
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming Bollinger bands / EWMA — the remaining indicator twins
-# (VERDICT r6 item 8: extend the sma_cross_stream O(window)-state
-# kernel pattern so the whole indicator panel has a streaming tier)
-# ---------------------------------------------------------------------------
 
 # cross-batch state: the trailing `periods` (day, close) pairs —
 # O(periods) per key no matter how many batches pass.
@@ -530,38 +496,6 @@ def _advance_bollinger(state, days_us, closes, periods, n_std):
     return out, (hist_d, hist_c)
 
 
-def bollinger_stream(
-    daily: DataFrame,
-    key_col: str = "user_id",
-    day_col: str = "day",
-    close_col: str = "close",
-    periods: int = 20,
-    n_std: float = 2.0,
-) -> DataFrame:
-    """Streaming Bollinger bands over a per-key daily close stream —
-    the streaming twin of operators/indicators.bollinger_bands: same
-    warm rule, same rounded bands, same ABOVE/IN/BELOW classification,
-    with the trailing window carried across micro-batches. State is
-    O(periods) per key; keys shard across executors on the groupBy."""
-    return _keyed_fold(
-        daily,
-        key_col,
-        [day_col],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("mid", DoubleType()),
-            StructField("upper", DoubleType()),
-            StructField("lower", DoubleType()),
-            StructField("position", StringType()),
-        ],
-        _BOLL_STATE,
-        lambda state, b: _advance_bollinger(
-            state, _us(b[day_col]), b[close_col].astype("float64"), periods, n_std
-        ),
-    )
-
-
 # cross-batch state: ONE (last day, running value) pair per key — the
 # minimum any exponential recursion can carry.
 _EWMA_STATE = StructType(
@@ -574,8 +508,8 @@ _EWMA_STATE = StructType(
 
 def _advance_ewma(state, days_us, closes, alpha):
     """Fold one key's day-ordered batch through y = a·x + (1-a)·y —
-    the one EWMA recurrence, run by ewma_stream and by the batch
-    indicators.ewma. Every row emits (the recursion starts at
+    the one EWMA recurrence, which indicators.ewma binds on a batch and
+    on a stream. Every row emits (the recursion starts at
     y_1 = x_1, no warmup); late days drop, state moves forward only."""
     last_d, y = state or (None, None)
     out = []
@@ -587,34 +521,6 @@ def _advance_ewma(state, days_us, closes, alpha):
         last_d = int(d)
         out.append((last_d, x, y))
     return out, (last_d, y)
-
-
-def ewma_stream(
-    daily: DataFrame,
-    key_col: str = "user_id",
-    day_col: str = "day",
-    close_col: str = "close",
-    alpha: float = 0.2,
-) -> DataFrame:
-    """Streaming EWMA over a per-key daily close stream — the
-    ``_advance_ewma`` fold that operators/indicators.ewma runs over a
-    batch, here with values carried across micro-batches through O(1)
-    state per key."""
-    a = float(alpha)
-    return _keyed_fold(
-        daily,
-        key_col,
-        [day_col],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("ewma", DoubleType()),
-        ],
-        _EWMA_STATE,
-        lambda state, b: _advance_ewma(
-            state, _us(b[day_col]), b[close_col].astype("float64"), a
-        ),
-    )
 
 
 # cross-batch state for the Wilder RSI recursion: O(1) per key
@@ -637,7 +543,7 @@ def _advance_rsi(state, days_us, closes, periods):
     seed average gain/loss over the first ``periods`` deltas, then
     avg = (avg·(periods-1) + x) / periods per day, emitting from day
     ``periods``+1. avg_loss == 0 gives RSI 100. The RSI is unrounded;
-    rsi_stream and indicators.rsi both round it with Spark's round().
+    indicators.rsi rounds it with Spark's round() on both binders.
     Late days drop; state moves forward only."""
     p = float(periods)
     last_d, n, gsum, lsum, ag, al, prev = state or (
@@ -674,32 +580,6 @@ def _advance_rsi(state, days_us, closes, periods):
     return out, (last_d, n, gsum, lsum, ag, al, prev)
 
 
-def rsi_stream(
-    daily: DataFrame,
-    key_col: str = "user_id",
-    day_col: str = "day",
-    close_col: str = "close",
-    periods: int = 14,
-) -> DataFrame:
-    """Streaming Wilder RSI — the ``_advance_rsi`` fold that
-    operators/indicators.rsi runs over a batch, here through O(1)
-    state per key."""
-    return _keyed_fold(
-        daily,
-        key_col,
-        [day_col],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("rsi", DoubleType()),
-        ],
-        _RSI_STATE,
-        lambda state, b: _advance_rsi(
-            state, _us(b[day_col]), b[close_col].astype("float64"), periods
-        ),
-    ).withColumn("rsi", F.round("rsi", 6))
-
-
 # trailing (day, tr) window + prev close: O(periods) per key
 _ATR_STATE = StructType(
     [
@@ -733,34 +613,6 @@ def _advance_atr(state, days_us, highs, lows, closes, periods):
             atr = _round6_half_up(sum(hist_tr) / periods)
             out.append((int(d), _round6_half_up(tr), atr))
     return out, (hist_d, hist_tr, prev)
-
-
-def atr_stream(
-    ohlcv_daily: DataFrame,
-    key_col: str = "user_id",
-    periods: int = 14,
-) -> DataFrame:
-    """Streaming ATR — twin of operators/indicators.atr over a daily
-    OHLC stream; O(periods) state per key."""
-    return _keyed_fold(
-        ohlcv_daily,
-        key_col,
-        ["day"],
-        [
-            StructField("day", TimestampType()),
-            StructField("tr", DoubleType()),
-            StructField("atr", DoubleType()),
-        ],
-        _ATR_STATE,
-        lambda state, b: _advance_atr(
-            state,
-            _us(b["day"]),
-            b["high"].astype("float64"),
-            b["low"].astype("float64"),
-            b["close"].astype("float64"),
-            periods,
-        ),
-    )
 
 
 # trailing (high, low) window + %K history + warm counter
@@ -805,37 +657,6 @@ def _advance_stoch(state, days_us, highs, lows, closes, periods, smooth):
     return out, (hist_d, hist_h, hist_l, ks, n_full)
 
 
-def stochastic_stream(
-    ohlcv_daily: DataFrame,
-    key_col: str = "user_id",
-    periods: int = 14,
-    smooth: int = 3,
-) -> DataFrame:
-    """Streaming stochastic oscillator — twin of
-    operators/indicators.stochastic; O(periods) state per key."""
-    return _keyed_fold(
-        ohlcv_daily,
-        key_col,
-        ["day"],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("pct_k", DoubleType()),
-            StructField("pct_d", DoubleType()),
-        ],
-        _STOCH_STATE,
-        lambda state, b: _advance_stoch(
-            state,
-            _us(b["day"]),
-            b["high"].astype("float64"),
-            b["low"].astype("float64"),
-            b["close"].astype("float64"),
-            periods,
-            smooth,
-        ),
-    )
-
-
 # O(1) per key: last day, previous close, running OBV total
 _OBV_STATE = StructType(
     [
@@ -868,30 +689,6 @@ def _advance_obv(state, days_us, closes, volumes):
     return out, (last_d, prev, total)
 
 
-def obv_stream(
-    ohlcv_daily: DataFrame,
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Streaming OBV — twin of operators/indicators.obv; O(1) state."""
-    return _keyed_fold(
-        ohlcv_daily,
-        key_col,
-        ["day"],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("obv", LongType()),
-        ],
-        _OBV_STATE,
-        lambda state, b: _advance_obv(
-            state,
-            _us(b["day"]),
-            b["close"].astype("float64"),
-            b["n_trades"].astype("int64"),
-        ),
-    )
-
-
 # cross-batch state for Holt's linear-trend recursion: O(1) per key.
 _HOLT_STATE = StructType(
     [
@@ -905,8 +702,8 @@ _HOLT_STATE = StructType(
 def _advance_holt(state, days_us, closes, alpha, beta):
     """Fold one key's day-ordered batch through Holt's double-state
     recursion (level + trend, with (1−α)/(1−β) computed once) — the
-    one Holt recurrence, run by holt_stream and by the batch
-    indicators.holt. Late days drop; state moves forward only."""
+    one Holt recurrence, which indicators.holt binds on a batch and on
+    a stream. Late days drop; state moves forward only."""
     a, bb = float(alpha), float(beta)
     oma, omb = 1.0 - a, 1.0 - bb
     last_d, lvl, trd = state or (None, None, None)
@@ -926,38 +723,8 @@ def _advance_holt(state, days_us, closes, alpha, beta):
     return out, (last_d, lvl, trd)
 
 
-def holt_stream(
-    daily: DataFrame,
-    key_col: str = "user_id",
-    day_col: str = "day",
-    close_col: str = "close",
-    alpha: float = 0.2,
-    beta: float = 0.1,
-) -> DataFrame:
-    """Streaming Holt linear-trend smoothing + one-step-ahead forecast
-    — the ``_advance_holt`` fold that operators/indicators.holt runs
-    over a batch; level/trend carry across micro-batches through O(1)
-    state per key."""
-    return _keyed_fold(
-        daily,
-        key_col,
-        [day_col],
-        [
-            StructField("day", TimestampType()),
-            StructField("close", DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("fc_next", DoubleType()),
-        ],
-        _HOLT_STATE,
-        lambda state, b: _advance_holt(
-            state, _us(b[day_col]), b[close_col].astype("float64"), alpha, beta
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
-# Batch-only folds, bound through _partition_fold
+# Folds bound on batches only
 # ---------------------------------------------------------------------------
 
 
@@ -993,3 +760,39 @@ def _advance_cusum(state, orders, xs, mu, sigma, k):
         s_neg = max(0.0, s_neg + (mu - slack - float(x)))
         out.append((o, x, s_pos, s_neg))
     return out, (s_pos, s_neg)
+
+
+def _advance_holt_winters(state, days, ys, alpha, beta, gamma, m):
+    """Additive Holt-Winters with season length ``m`` over one series
+    in day order. The first ``m`` values seed the level (their mean),
+    a zero trend and the season offsets (value − level). From value
+    m+1 on, each row is (day, y, s_used, level, trend, fitted, resid):
+    the fitted level + trend + season comes BEFORE the update
+
+        l = α(y − s) + (1−α)(l + b),  b = β(l − l_prev) + (1−β)b,
+        s_new = γ(y − l) + (1−γ)s
+
+    with (1−α)/(1−β)/(1−γ) computed once. The state is (seed values,
+    seed sum, level, trend, season offsets)."""
+    seeds, acc, lvl, trd, season = state or ([], 0.0, None, None, [])
+    seeds, season = list(seeds), list(season)
+    oma, omb, omg = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
+    out = []
+    for d, y in zip(days, ys):
+        y = float(y)
+        if lvl is None:
+            acc += y
+            seeds.append(y)
+            if len(seeds) == m:
+                lvl = acc / float(m)
+                trd = 0.0
+                season = [v - lvl for v in seeds]
+            continue
+        s_used = season[0]
+        fitted = lvl + trd + s_used
+        prev = lvl
+        lvl = alpha * (y - s_used) + oma * (lvl + trd)
+        trd = beta * (lvl - prev) + omb * trd
+        season = season[1:] + [gamma * (y - lvl) + omg * s_used]
+        out.append((d, y, s_used, lvl, trd, fitted, y - fitted))
+    return out, (seeds, acc, lvl, trd, season)

@@ -584,10 +584,12 @@ def test_ewma_matches_hand_fold_and_bounds(spark):
 def test_partition_folds_ignore_arrow_batch_size(spark, sf_small):
     """The batch folds carry a key's state across Arrow record batches:
     at 3 records per batch nearly every key straddles a cut, and ewma,
-    rsi, holt, clamped_balance and cusum must return exactly the rows
-    they return at the default batch size."""
+    rsi, holt, clamped_balance, cusum and a80's one-key Holt-Winters
+    must return exactly the rows they return at the default batch
+    size."""
     from streaming_data_spark.operators import drift
     from streaming_data_spark.operators import indicators as ind
+    from streaming_data_spark.queries_ext63 import q_a80_holt_winters
 
     daily = ind.daily_closes(load_table(spark, sf_small, "events"))
     li = load_table(spark, sf_small, "lineitem")
@@ -605,6 +607,7 @@ def test_partition_folds_ignore_arrow_batch_size(spark, sf_small):
         "holt": lambda: ind.holt(daily, alpha=0.2, beta=0.1),
         "balance": lambda: ind.clamped_balance(monthly, start=50.0, cap=100.0),
         "cusum": lambda: drift.cusum(typed, "event_type", "day", "x"),
+        "holt_winters": lambda: q_a80_holt_winters(spark, sf_small),
     }
     want = {name: sorted(map(tuple, op().collect())) for name, op in ops.items()}
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"

@@ -17,8 +17,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from streaming_data_spark.operators import aggregates as agg
+from streaming_data_spark.operators import indicators as ind
 from streaming_data_spark.schemas import load_table
 from streaming_data_spark.streaming import pipeline as sp
+from streaming_data_spark.streaming import stateful
 from streaming_data_spark.streaming.listeners import AlertingListener, run_job_with_alerts
 
 PAYLOAD_SCHEMA = (
@@ -919,7 +921,7 @@ def test_streaming_windowed_distinct_matches_batch_within_tolerance(
     stream = sp.file_json_source(spark, event_stream_dir)
     normalized = sp.normalize_stream(stream, PAYLOAD_SCHEMA)
     est = sp.windowed_distinct_users(
-        normalized, window_duration="6 hours", watermark="2 days"
+        normalized, window_duration="6 hours", watermark="2 days", rsd=0.01
     )
     writer = (
         est.writeStream.format("memory")
@@ -929,7 +931,7 @@ def test_streaming_windowed_distinct_matches_batch_within_tolerance(
     )
     sp.run_to_completion(writer)
     got = {
-        r.bucket_ts: r.users_est
+        r.period_start: r.dau_est
         for r in spark.sql("SELECT * FROM dau_est").collect()
     }
 
@@ -1004,9 +1006,6 @@ def test_sma_cross_stream_matches_batch(spark, sf_small, tmp_path):
     included."""
     import os
 
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import sma_cross_stream
-
     daily = (
         ind.daily_closes(load_table(spark, sf_small, "events"))
         .filter(F.col("user_id") < 40)
@@ -1037,7 +1036,7 @@ def test_sma_cross_stream_matches_batch(spark, sf_small, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(src))
     )
-    crosses = sma_cross_stream(stream, short=3, long=5)
+    crosses = ind.sma_crossover(stream, short=3, long=5)
     writer = (
         crosses.writeStream.format("memory")
         .queryName("sma_cross")
@@ -1110,9 +1109,6 @@ def test_sma_cross_state_survives_query_restart(spark, sf_small, tmp_path):
     restart."""
     import os
 
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import sma_cross_stream
-
     daily = (
         ind.daily_closes(load_table(spark, sf_small, "events"))
         .filter(F.col("user_id") < 40)
@@ -1148,7 +1144,7 @@ def test_sma_cross_state_survives_query_restart(spark, sf_small, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .json(str(src))
         )
-        crosses = sma_cross_stream(stream, short=3, long=5)
+        crosses = ind.sma_crossover(stream, short=3, long=5)
         writer = (
             crosses.writeStream.format("parquet")
             .option("path", out_dir)
@@ -1249,26 +1245,26 @@ def test_change_alert_state_survives_query_restart(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "op",
+    "op, key_arg",
     [
-        "sessionize_stream",
-        "change_alert_stream",
-        "sma_cross_stream",
-        "bollinger_stream",
-        "ewma_stream",
-        "rsi_stream",
-        "atr_stream",
-        "stochastic_stream",
-        "obv_stream",
-        "holt_stream",
+        pytest.param(stateful.sessionize_stream, "key_col", id="sessionize_stream"),
+        pytest.param(stateful.change_alert_stream, "key_col", id="change_alert_stream"),
+        # ids: each indicator's stream form, which is the batch function
+        pytest.param(ind.sma_crossover, "key", id="sma_cross_stream"),
+        pytest.param(ind.bollinger_bands, "key", id="bollinger_stream"),
+        pytest.param(ind.ewma, "key", id="ewma_stream"),
+        pytest.param(ind.rsi, "key", id="rsi_stream"),
+        pytest.param(ind.atr, "key", id="atr_stream"),
+        pytest.param(ind.stochastic, "key", id="stochastic_stream"),
+        pytest.param(ind.obv, "key", id="obv_stream"),
+        pytest.param(ind.holt, "key", id="holt_stream"),
     ],
 )
-def test_stateful_streams_respect_key_col_name(spark, tmp_path, op):
+def test_stateful_streams_respect_key_col_name(spark, tmp_path, op, key_arg):
     """A non-default key column must come back under ITS name and
-    type — not silently renamed to user_id (schema is built from the
-    input; asserted without running the query)."""
-    from streaming_data_spark.streaming import stateful
-
+    type — not silently renamed to user_id — on a stream and on a
+    batch alike (schema is built from the input; asserted without
+    running a job)."""
     schema = (
         StructType()
         .add("symbol", "string")
@@ -1281,17 +1277,17 @@ def test_stateful_streams_respect_key_col_name(spark, tmp_path, op):
         .add("n_trades", "long")
     )
     stream = spark.readStream.schema(schema).json(str(tmp_path))
-    out = getattr(stateful, op)(stream, key_col="symbol")
-    assert out.schema.fieldNames()[0] == "symbol"
-    assert out.schema["symbol"].dataType.typeName() == "string"
-    assert "user_id" not in out.schema.fieldNames()
+    for df in (stream, spark.createDataFrame([], schema)):
+        out = op(df, **{key_arg: "symbol"})
+        assert out.isStreaming == df.isStreaming
+        assert out.schema.fieldNames()[0] == "symbol"
+        assert out.schema["symbol"].dataType.typeName() == "string"
+        assert "user_id" not in out.schema.fieldNames()
 
 
 def _daily_stream(spark, sf_small, tmp_path, tag):
     """Per-user daily closes split into 3 micro-batch files + batch df."""
     import os
-
-    from streaming_data_spark.operators import indicators as ind
 
     daily = (
         ind.daily_closes(load_table(spark, sf_small, "events"))
@@ -1328,11 +1324,8 @@ def test_bollinger_stream_matches_batch(spark, sf_small, tmp_path):
     micro-batch cuts; warmed rows must equal the batch operator
     row-for-row — rounded bands AND classification (the kernel
     repeats Spark's Average + CentralMomentAgg fold order)."""
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import bollinger_stream
-
     stream, daily = _daily_stream(spark, sf_small, tmp_path, "boll")
-    bands = bollinger_stream(stream, periods=5, n_std=2.0)
+    bands = ind.bollinger_bands(stream, periods=5, n_std=2.0)
     sp.run_to_completion(
         bands.writeStream.format("memory")
         .queryName("boll_stream")
@@ -1355,11 +1348,8 @@ def test_ewma_stream_matches_batch(spark, sf_small, tmp_path):
     """T6 — streaming EWMA: the recursion's O(1) state carries across
     micro-batches and the streamed values are BIT-identical to the
     batch mapInPandas fold (same IEEE op order, no rounding)."""
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import ewma_stream
-
     stream, daily = _daily_stream(spark, sf_small, tmp_path, "ewma")
-    smoothed = ewma_stream(stream, alpha=0.2)
+    smoothed = ind.ewma(stream, alpha=0.2)
     sp.run_to_completion(
         smoothed.writeStream.format("memory")
         .queryName("ewma_stream")
@@ -1431,13 +1421,10 @@ def _drain(spark, stream_df, name, tmp_path):
 def test_rsi_stream_matches_batch(spark, sf_small, tmp_path):
     """T6 — streaming Wilder RSI: the seed/recursion state crosses
     micro-batch cuts; streamed rows equal the batch fold exactly."""
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import rsi_stream
-
     stream, _ = _daily_stream(spark, sf_small, tmp_path, "rsi")
     got = {
         tuple(r)
-        for r in _drain(spark, rsi_stream(stream, periods=5), "rsi_s", tmp_path).collect()
+        for r in _drain(spark, ind.rsi(stream, periods=5), "rsi_s", tmp_path).collect()
     }
     daily = (
         ind.daily_closes(load_table(spark, sf_small, "events"))
@@ -1448,27 +1435,21 @@ def test_rsi_stream_matches_batch(spark, sf_small, tmp_path):
 
 
 def test_atr_stream_matches_batch(spark, sf_small, tmp_path):
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import atr_stream
-
     stream, daily = _ohlcv_stream(spark, sf_small, tmp_path, "atr")
     got = {
         tuple(r)
-        for r in _drain(spark, atr_stream(stream, periods=5), "atr_s", tmp_path).collect()
+        for r in _drain(spark, ind.atr(stream, periods=5), "atr_s", tmp_path).collect()
     }
     want = {tuple(r) for r in ind.atr(daily, periods=5).collect()}
     assert got == want and len(got) > 0
 
 
 def test_stochastic_stream_matches_batch(spark, sf_small, tmp_path):
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import stochastic_stream
-
     stream, daily = _ohlcv_stream(spark, sf_small, tmp_path, "stoch")
     got = {
         tuple(r)
         for r in _drain(
-            spark, stochastic_stream(stream, periods=5, smooth=3), "stoch_s", tmp_path
+            spark, ind.stochastic(stream, periods=5, smooth=3), "stoch_s", tmp_path
         ).collect()
     }
     want = {tuple(r) for r in ind.stochastic(daily, periods=5, smooth=3).collect()}
@@ -1478,12 +1459,9 @@ def test_stochastic_stream_matches_batch(spark, sf_small, tmp_path):
 def test_obv_stream_matches_batch(spark, sf_small, tmp_path):
     """Integer-exact: no rounding contract anywhere — the streamed
     running totals must equal the batch cumulative sums exactly."""
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import obv_stream
-
     stream, daily = _ohlcv_stream(spark, sf_small, tmp_path, "obv")
     got = {
-        tuple(r) for r in _drain(spark, obv_stream(stream), "obv_s", tmp_path).collect()
+        tuple(r) for r in _drain(spark, ind.obv(stream), "obv_s", tmp_path).collect()
     }
     want = {tuple(r) for r in ind.obv(daily).collect()}
     assert got == want and len(got) > 0
@@ -1781,11 +1759,8 @@ def test_holt_stream_matches_batch(spark, sf_small, tmp_path):
     carries across micro-batches and the streamed values are
     BIT-identical to the batch mapInPandas fold (same IEEE op order,
     no rounding anywhere)."""
-    from streaming_data_spark.operators import indicators as ind
-    from streaming_data_spark.streaming.stateful import holt_stream
-
     stream, daily = _daily_stream(spark, sf_small, tmp_path, "holt")
-    smoothed = holt_stream(stream, alpha=0.2, beta=0.1)
+    smoothed = ind.holt(stream, alpha=0.2, beta=0.1)
     sp.run_to_completion(
         smoothed.writeStream.format("memory")
         .queryName("holt_stream")
@@ -1814,7 +1789,7 @@ def test_dau_stream_matches_batch_approx_distinct(
     stream = sp.normalize_stream(
         sp.file_json_source(spark, event_stream_dir), PAYLOAD_SCHEMA
     )
-    dau = sp.dau_stream(stream, window_duration="1 minute")
+    dau = sp.windowed_distinct_users(stream, window_duration="1 minute")
     sp.run_to_completion(
         dau.writeStream.format("memory").queryName("dauw")
         .outputMode("complete")
