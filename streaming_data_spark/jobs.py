@@ -456,78 +456,3 @@ def drift_report_job(
         }
 
     return run_job_with_alerts(_run, alert, name="drift_report_job")
-
-
-def engagement_report_job(
-    spark: SparkSession,
-    stream: DataFrame,
-    warehouse: str,
-    gap: str = "30 minutes",
-    bounce_alert_rate: float = 0.8,
-    min_sessions: int = 5,
-    alert: AlertFn = lambda payload: None,
-) -> dict:
-    """Streaming engagement report — the two-stage composition the
-    entry_bounce_stream docstring prescribes (chained streaming
-    aggregations over session windows are unsupported, so the
-    per-entry-type rollup happens in foreachBatch):
-
-      session_window sessions with deterministic entry type
-      (streaming.pipeline.entry_bounce_stream) → per micro-batch, a
-      per-entry-type (n_sessions, n_bounces, bounce_rate) rollup
-      written to the warehouse → a K9/K10 gate: alert() once per
-      entry type whose bounce rate crosses ``bounce_alert_rate`` on
-      at least ``min_sessions`` sessions (small-sample rates alarm on
-      noise).
-
-    Drains everything available (the bounded smoke-test contract the
-    other jobs use), then returns stage counts for observability.
-    The alert loop collects only crossing types — ≤ |types| rows,
-    the bounded driver-pull pattern.
-    """
-    from streaming_data_spark.streaming import pipeline as sp
-
-    sessions = sp.entry_bounce_stream(stream, gap=gap)
-    counts = {"batches": 0, "alerts": 0}
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        counts["batches"] += 1
-        rollup = batch_df.groupBy("entry_type").agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.sum(F.when(F.col("bounce"), 1).otherwise(0)).alias(
-                "n_bounces"
-            ),
-            F.round(
-                F.sum(F.when(F.col("bounce"), 1).otherwise(0))
-                / F.count(F.lit(1)),
-                6,
-            ).alias("bounce_rate"),
-        )
-        rollup.write.mode("overwrite").parquet(
-            f"{warehouse}/engagement_report"
-        )
-        crossing = rollup.filter(
-            (F.col("bounce_rate") >= bounce_alert_rate)
-            & (F.col("n_sessions") >= min_sessions)
-        ).collect()  # bounded: <= |entry types|
-        for r in crossing:
-            counts["alerts"] += 1
-            alert(
-                {
-                    "event": "bounce_rate_alert",
-                    "entry_type": r["entry_type"],
-                    "bounce_rate": r["bounce_rate"],
-                    "n_sessions": r["n_sessions"],
-                }
-            )
-
-    query = (
-        sessions.writeStream.foreachBatch(_sink)
-        .outputMode("complete")
-        .start()
-    )
-    query.processAllAvailable()
-    query.stop()
-    report = spark.read.parquet(f"{warehouse}/engagement_report")
-    counts["entry_types"] = report.count()
-    return counts

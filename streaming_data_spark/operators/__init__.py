@@ -7,5 +7,8 @@ Modules:
 - dedup       — exact + near-duplicate detection at scale ([EXT] X1/X2)
 - similarity  — embedding similarity search ([EXT] X2)
 - text        — language-ID, quality scoring, tokenization, fingerprints ([EXT] X3)
-- multimodal  — opaque binary columns + typed metadata plumbing ([EXT] X4)
+- multimodal  — opaque binary columns + typed metadata, batched feature
+                extraction (fake / PPM / WAV decoders) ([EXT] X4)
+- layout      — Z-order (Morton curve) clustered parquet writes ([EXT])
+- sketches    — Misra-Gries heavy hitters with an exact verify pass ([EXT])
 """

@@ -25,15 +25,22 @@ def dim_join(
     on: str | Sequence[str],
     select: Sequence[str] | None = None,
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J1/J2 — fact ⋈ small-dimension equi-join + projection.
 
     Ref: upbit_data_pipeline.py:171-176 (markets ⋈ prices CTAS).
-    ``broadcast_dim`` skips the fact-side shuffle entirely — the only
-    sane plan when fact is 100 TB and dim fits in memory.
+    The dim side is always broadcast, so the fact side never shuffles
+    — the only sane plan when fact is 100 TB and dim fits in memory.
+
+    The same call enriches a STREAM (stream-static join, the
+    engine-side form of Logstash's translate/jdbc_static lookups): no
+    shuffle and no streaming state, because a static side needs no
+    watermark. Pass ``how="left"`` there so an event with no dim row
+    passes through with NULL attributes instead of dropping. The dim
+    snapshot is fixed at query start; restart the query to pick up a
+    refreshed dimension.
     """
-    joined = fact.join(F.broadcast(dim) if broadcast_dim else dim, on=on, how=how)
+    joined = fact.join(F.broadcast(dim), on=on, how=how)
     return joined.select(*select) if select else joined
 
 

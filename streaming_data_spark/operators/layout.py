@@ -70,174 +70,3 @@ def zorder_write(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def files_matching_box(
-    path: str,
-    x_col: str,
-    x_lo: int,
-    x_hi: int,
-    y_col: str,
-    y_lo: int,
-    y_hi: int,
-) -> tuple[int, int]:
-    """(files that COULD contain rows in the box, total files), judged
-    purely by parquet footer min/max stats — i.e. exactly what a
-    stats-based scan planner can skip without reading data pages.
-
-    Test/audit helper (driver-side, reads only footers — bytes per
-    file, not data). The production path is the engine's own
-    pushdown; this measures what that pushdown has to work with.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    parts = sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    hit = 0
-    for f in parts:
-        md = pq.ParquetFile(f).metadata
-        overlaps = False
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            stats = {}
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                name = col.path_in_schema
-                if name in (x_col, y_col) and col.statistics is not None:
-                    stats[name] = (col.statistics.min, col.statistics.max)
-            if x_col in stats and y_col in stats:
-                (xmn, xmx), (ymn, ymx) = stats[x_col], stats[y_col]
-                if xmn <= x_hi and xmx >= x_lo and ymn <= y_hi and ymx >= y_lo:
-                    overlaps = True
-                    break
-            else:  # missing stats: cannot skip
-                overlaps = True
-                break
-        hit += int(overlaps)
-    return hit, len(parts)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_to_compact: int = 2,
-    enforce_single_writer: bool = True,
-) -> dict:
-    """Rewrite a parquet directory's many small files into ~target-size
-    files — the OPTIMIZE/compaction maintenance pass every streaming
-    sink eventually needs (each micro-batch commit writes
-    files-per-trigger × partitions small files; a month of 1-minute
-    triggers turns a table scan into an open()-bound listing crawl,
-    and at 100 TB the NameNode/listing cost dominates long before the
-    bytes do).
-
-    Sizing: output file count = ceil(current_bytes / target) measured
-    from the ACTUAL on-disk footprint (not row counts — compression
-    ratios vary per table). The rewrite is repartition(n) + overwrite
-    via a temp directory, then a two-rename swap. POSIX has no atomic
-    directory exchange, so the swap has a WINDOW between the two
-    renames where ``path`` does not exist: a reader listing exactly
-    then fails with path-not-found (it never sees a half-written mix
-    — each listing is all-old or all-new), and a crash inside the
-    window leaves the data parked at ``<path>.compact.old`` for
-    manual recovery. Run it when the table is quiet, or under the
-    same single-writer lock as write_if_absent; Delta/Iceberg
-    OPTIMIZE is the upgrade that closes the window with a real
-    atomic commit.
-
-    ``enforce_single_writer`` (default on): takes a SIBLING lock file
-    (``<path>.compact.lock`` — beside the directory, because the swap
-    renames the directory out from under anything stored inside it)
-    to exclude concurrent compactions, and refuses when a keyed
-    writer's in-dir ``_sds_writer.lock`` is present. Advisory and
-    best-effort like the writer lock itself: a writer that STARTS
-    after the check still races the swap, so schedule compaction in
-    the same maintenance slot that owns writes.
-
-    Returns {files_before, files_after, bytes} for observability.
-    Skips (and reports) when the directory already has fewer than
-    ``min_files_to_compact`` data files.
-    """
-    import json
-    import os
-    import shutil
-    import time
-
-    def _data_files(p):
-        return [
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-
-    lock_fd = None
-    lock = path.rstrip("/") + ".compact.lock"
-    if enforce_single_writer:
-        writer_lock = os.path.join(path, "_sds_writer.lock")
-        if os.path.exists(writer_lock):
-            raise RuntimeError(
-                f"keyed writer holds {writer_lock}; compacting under an "
-                "active writer would drop its in-flight append"
-            )
-        try:
-            lock_fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise RuntimeError(
-                f"another compaction holds {lock} (remove only if its "
-                "owner is dead — it carries pid + timestamp)"
-            ) from None
-    try:
-        if enforce_single_writer:
-            # content write INSIDE the try: if it fails (disk full,
-            # signal) the finally still releases the .compact.lock
-            with os.fdopen(lock_fd, "w") as fh:
-                fh.write(json.dumps({"pid": os.getpid(), "ts": time.time()}))
-        # Stale-swap detection AFTER the lock (a live compaction
-        # legitimately has .compact.old between its renames — the lock
-        # check above reports THAT case correctly as a concurrent
-        # holder) but BEFORE any expensive work: a crash after the
-        # second rename but before the rmtree leaves the previous data
-        # parked at <path>.compact.old, and a later run would only
-        # discover it at os.rename(path, old) — after the full Spark
-        # rewrite — with an ENOTEMPTY that reads like corruption.
-        stale_old = path.rstrip("/") + ".compact.old"
-        if os.path.exists(stale_old):
-            raise RuntimeError(
-                f"stale {stale_old} found (a prior compaction crashed "
-                "after its swap); verify the table, then delete the "
-                ".compact.old directory before compacting again"
-            )
-
-        before = _data_files(path)
-        total = sum(os.path.getsize(f) for f in before)
-        if len(before) < min_files_to_compact:
-            return {"files_before": len(before), "files_after": len(before),
-                    "bytes": total, "skipped": True}
-
-        n_out = max(1, -(-total // target_file_bytes))  # ceil
-        tmp = path.rstrip("/") + ".compact.tmp"
-        old = path.rstrip("/") + ".compact.old"
-        (
-            spark.read.parquet(path)
-            .repartition(n_out)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    finally:
-        if enforce_single_writer:
-            os.remove(lock)
-    return {
-        "files_before": len(before),
-        "files_after": len(_data_files(path)),
-        "bytes": total,
-        "skipped": False,
-    }

@@ -1,125 +1,15 @@
-"""[EXT] Mergeable-sketch aggregation (Apache DataSketches HLL via
-Spark 3.5+ built-ins).
+"""[EXT] Heavy hitters: Misra-Gries candidates + exact verify.
 
-The scale story: at 100 TB you cannot afford to touch raw events
-every time someone asks for a distinct count over a new window.
-Mergeable sketches decouple the two costs — ONE pass materializes a
-small sketch per (key, day) cell, and any window/rollup after that is
-a union of sketches (bytes, not rows). ``hll_sketch_agg`` /
-``hll_union_agg`` / ``hll_sketch_estimate`` are the public Spark
-built-ins (JVM DataSketches — no Python in the hot path).
-
-Estimates are property-tested against exact counts
-(tests/test_sketches.py) instead of oracle-matched: sketch internals
-are engine-specific by design, so a DuckDB hash-match is the wrong
-contract. The exact twin of the rolling form is the registry query
-``a17_rolling_distinct`` (queries_ext18.py).
-
-Reference anchor: the reference's rollup loop recomputes aggregates
-from raw rows every cycle (upbit_data_pipeline.py's candle refresh);
-daily sketches are the re-aggregation-friendly generalization.
+``heavy_hitters`` is the bounded-memory tier of the exact
+full-vocabulary groupBy (``x18_vocab_top_tokens``); the registry
+query ``x36_heavy_hitters`` (queries_ext32.py) runs it and matches
+the DuckDB HAVING-threshold oracle hash-for-hash.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# 2^12 registers — ~1.6% relative standard error, 4 KB per sketch.
-DEFAULT_LGK = 12
-
-
-def daily_user_sketches(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lgk: int = DEFAULT_LGK,
-) -> DataFrame:
-    """One HLL sketch of distinct users per day: (day, sketch).
-
-    This is the ONLY pass over raw events; one shuffle keyed by day.
-    At scale this table is what gets persisted (a few KB per day-key
-    cell) and every downstream distinct metric reads it, not the log.
-    """
-    return (
-        events.select(F.col(ts_col).cast("date").alias("day"), F.col(user_col))
-        .groupBy("day")
-        .agg(F.hll_sketch_agg(user_col, F.lit(lgk)).alias("sketch"))
-    )
-
-
-def rolling_distinct_hll(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-    lgk: int = DEFAULT_LGK,
-) -> DataFrame:
-    """Trailing-N-day distinct users per day from daily sketches:
-    (day, users_est).
-
-    Each daily sketch is exploded into the ≤N target days it serves,
-    then ``hll_union_agg`` merges per target day — the same
-    explode-into-windows shape as the exact tier, but the rows being
-    shuffled are fixed-size sketches instead of user ids, so the
-    second-pass cost is |days| × N × 4 KB REGARDLESS of cardinality.
-    Target days past the observed max are capped via a 1-row
-    broadcast, mirroring the exact tier.
-    """
-    daily = daily_user_sketches(events, user_col, ts_col, lgk)
-    span = events.agg(F.max(F.col(ts_col).cast("date")).alias("max_day"))
-    fanned = daily.select(
-        "sketch",
-        F.explode(
-            F.expr(f"sequence(day, date_add(day, {window_days - 1}), interval 1 day)")
-        ).alias("day"),
-    )
-    return (
-        fanned.join(F.broadcast(span), fanned["day"] <= span["max_day"])
-        .groupBy("day")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch", F.lit(False)))
-            .cast("long")
-            .alias("users_est")
-        )
-    )
-
-
-def distinct_rollup_hll(
-    events: DataFrame,
-    key_cols: list[str],
-    user_col: str = "user_id",
-    lgk: int = DEFAULT_LGK,
-) -> DataFrame:
-    """Distinct users at (key...) AND at every rollup prefix, from one
-    sketch pass: (key..., users_est). Demonstrates re-aggregation —
-    the coarser levels union the finer sketches instead of re-reading
-    events. Output carries NULLs at rolled-up levels, like GROUP BY
-    ROLLUP."""
-    base = events.groupBy(*key_cols).agg(
-        F.hll_sketch_agg(user_col, F.lit(lgk)).alias("sketch")
-    )
-    levels = [base.select(*key_cols, "sketch")]
-    for i in range(len(key_cols) - 1, -1, -1):
-        keep = key_cols[:i]
-        lvl = base.groupBy(*keep).agg(
-            F.hll_union_agg("sketch", F.lit(False)).alias("sketch")
-        )
-        for dropped in key_cols[i:]:
-            # NULL typed as the SOURCE column's type — a string-typed
-            # NULL would make unionByName coerce the whole key column
-            # to string, unlike GROUP BY ROLLUP which preserves types
-            lvl = lvl.withColumn(
-                dropped, F.lit(None).cast(base.schema[dropped].dataType)
-            )
-        levels.append(lvl.select(*key_cols, "sketch"))
-    out = levels[0]
-    for lvl in levels[1:]:
-        out = out.unionByName(lvl)
-    return out.select(
-        *key_cols,
-        F.hll_sketch_estimate("sketch").cast("long").alias("users_est"),
-    )
 
 
 # ---------------------------------------------------------------------------

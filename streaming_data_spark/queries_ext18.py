@@ -4,10 +4,7 @@ data layout:
 - a17_rolling_distinct: trailing-7-day distinct active users per day —
   the canonical "rolling DAU/WAU" metric. Exact tier here (explode
   each (user, day) into the 7 windows it serves — countDistinct per
-  target day); the mergeable-sketch production tier (daily HLL
-  sketches + hll_union_agg reassembly, operators.sketches) is
-  property-tested for accuracy instead of oracle-matched, since
-  sketch internals differ across engines by design.
+  target day).
 - x26_zorder_curve: Morton (Z-order) curve value per row over two
   join/filter dimensions — the interleaved-bit key behind
   multi-dimension data-skipping layouts (Delta/Iceberg OPTIMIZE
@@ -44,10 +41,6 @@ def q_a17_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders of magnitude smaller than the event log. Target days are
     capped at the observed max so trailing windows don't dangle past
     the data; the cap is a 1-row broadcast join, not a driver action.
-
-    Production tier at extreme scale: materialize daily HLL sketches
-    once and reassemble any window via hll_union_agg — see
-    operators/sketches.py (accuracy property-tested).
     """
     events = _t(spark, sf_dir, "events")
     ud = events.select(

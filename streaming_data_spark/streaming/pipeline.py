@@ -27,9 +27,9 @@ from __future__ import annotations
 
 from collections.abc import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import DataType, StructType
 
 from streaming_data_spark.operators.transforms import logstash_normalize
@@ -219,13 +219,11 @@ def windowed_distinct_users(
     "streaming DAU" metric, the continuous twin of a53's DAU leg.
     Exact COUNT(DISTINCT) is unsupported in streaming aggregations
     (state would hold every id per window); ``approx_count_distinct``
-    keeps a bounded HLL++ sketch, O(1/rsd^2), per window cell instead —
-    the same mergeable-sketch trade as the batch tier
-    (operators/sketches.py), made by the engine automatically. The
-    sketch is DETERMINISTIC for a given input set (register maxima are
-    order-independent), so the stream equals the batch
-    ``approx_count_distinct`` on the same rows. Emits (period_start,
-    period_end, n_events, dau_est)."""
+    keeps a bounded HLL++ sketch, O(1/rsd^2), per window cell instead,
+    made by the engine automatically. The sketch is DETERMINISTIC for a
+    given input set (register maxima are order-independent), so the
+    stream equals the batch ``approx_count_distinct`` on the same rows.
+    Emits (period_start, period_end, n_events, dau_est)."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window_duration))
@@ -238,6 +236,43 @@ def windowed_distinct_users(
             F.col("window.end").alias("period_end"),
             "n_events",
             "dau_est",
+        )
+    )
+
+
+def _windowed_counts(
+    stream: DataFrame,
+    conds: Sequence[Column],
+    stats: Callable[[list[Column]], list[Column]],
+    ts_col: str,
+    window_duration: str,
+    watermark: str,
+) -> DataFrame:
+    """The known-categories scaffold of the drift and trending
+    monitors: ONE watermarked tumbling-window aggregation of the row
+    count ``n`` plus one conditional count per condition in ``conds``,
+    emitted as (period_start, period_end, n, *stats(counts)) where
+    ``counts`` are the per-condition count columns. Counting per
+    category with groupBy(window, category) → groupBy(window) would be
+    two streaming aggregations (unsupported); with the conditions known
+    up front it is one native, codegen'd, watermark-bounded
+    aggregation."""
+    counts = [F.col(f"_c{i}") for i in range(len(conds))]
+    return (
+        stream.withWatermark(ts_col, watermark)
+        .groupBy(F.window(F.col(ts_col), window_duration))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.sum(F.when(c, 1).otherwise(0)).alias(f"_c{i}")
+                for i, c in enumerate(conds)
+            ],
+        )
+        .select(
+            F.col("window.start").alias("period_start"),
+            F.col("window.end").alias("period_end"),
+            "n",
+            *stats(counts),
         )
     )
 
@@ -259,12 +294,10 @@ def chi2_drift_stream(
     this replaces the reference's log-grep monitor loop
     (airflow/dags/monitor_errors.py) with a statistic on the data.
 
-    Spark-first shape: chaining groupBy(window, type) → groupBy(window)
-    would be two streaming aggregations (unsupported), but the
-    reference categories are KNOWN up front, so the per-type counts
-    become conditional sums inside ONE windowed aggregation —
-    native, codegen'd, watermark-bounded state, no stateful-API
-    fallback. Categories outside ``ref_mix`` (expected 0 under the
+    Spark-first shape: the reference categories are KNOWN up front, so
+    the per-type counts are conditional sums inside ONE windowed
+    aggregation (``_windowed_counts``) — no stateful-API fallback.
+    Categories outside ``ref_mix`` (expected 0 under the
     reference) are reported in ``n_unexpected`` rather than folded
     into chi2 (their expected count is 0 ⇒ the statistic is
     undefined; any occurrence is its own alert).
@@ -275,28 +308,22 @@ def chi2_drift_stream(
     6; dof = |ref|−1 is the caller's constant.
     """
     cats = sorted(ref_mix)
-    counts = [
-        F.sum(F.when(F.col(type_col) == c, 1).otherwise(0)).alias(f"_c{i}")
-        for i, c in enumerate(cats)
-    ]
-    n = F.col("n").cast("double")
-    chi2 = None
-    for i, c in enumerate(cats):
-        e = n * F.lit(float(ref_mix[c]))
-        term = (F.col(f"_c{i}") - e) * (F.col(f"_c{i}") - e) / e
-        chi2 = term if chi2 is None else chi2 + term
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration))
-        .agg(F.count(F.lit(1)).alias("n"), *counts)
-        .select(
-            F.col("window.start").alias("period_start"),
-            F.col("window.end").alias("period_end"),
-            "n",
-            (F.col("n") - sum(F.col(f"_c{i}") for i in range(len(cats)))
-             ).alias("n_unexpected"),
+
+    def stats(counts):
+        n = F.col("n").cast("double")
+        chi2 = None
+        for c, cnt in zip(cats, counts):
+            e = n * F.lit(float(ref_mix[c]))
+            term = (cnt - e) * (cnt - e) / e
+            chi2 = term if chi2 is None else chi2 + term
+        return [
+            (F.col("n") - sum(counts)).alias("n_unexpected"),
             F.round(chi2, 6).alias("chi2"),
-        )
+        ]
+
+    conds = [F.col(type_col) == c for c in cats]
+    return _windowed_counts(
+        stream, conds, stats, ts_col, window_duration, watermark
     )
 
 
@@ -316,9 +343,10 @@ def psi_drift_stream(
     profiled offline (``bin_edges`` = the n+1 ascending edges,
     ``ref_props`` = the n reference bin proportions).
 
-    Same single-aggregation trick as ``chi2_drift_stream``: the bins
-    are fixed up front, so per-bin counts are conditional sums inside
-    ONE windowed aggregation — no second groupBy, no stateful API.
+    Same single-aggregation scaffold as ``chi2_drift_stream``: the
+    bins are fixed up front, so per-bin counts are conditional sums
+    inside ONE windowed aggregation — no second groupBy, no stateful
+    API.
     Values outside [edges[0], edges[-1]] clamp into the end bins
     (the standard serving-time PSI convention — production data that
     escapes the training range must still score, loudly).
@@ -351,32 +379,24 @@ def psi_drift_stream(
     a = float(alpha)
     stream = stream.filter(F.col(value_col).isNotNull())
     v = F.col(value_col)
-    counts = []
-    for i in range(k):
-        if i == 0:
-            cond = v < bin_edges[1]
-        elif i == k - 1:
-            cond = v >= bin_edges[k - 1]
-        else:
-            cond = (v >= bin_edges[i]) & (v < bin_edges[i + 1])
-        counts.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"_b{i}"))
-    n = F.col("n").cast("double")
-    psi = None
-    for i in range(k):
-        p = (F.col(f"_b{i}") + a) / (n + a * k)
-        q = F.lit(float(ref_props[i]))
-        term = (p - q) * F.log(p / q)
-        psi = term if psi is None else psi + term
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration))
-        .agg(F.count(F.lit(1)).alias("n"), *counts)
-        .select(
-            F.col("window.start").alias("period_start"),
-            F.col("window.end").alias("period_end"),
-            "n",
-            F.round(psi, 6).alias("psi"),
-        )
+    conds = (
+        [v < bin_edges[1]]
+        + [(v >= bin_edges[i]) & (v < bin_edges[i + 1]) for i in range(1, k - 1)]
+        + [v >= bin_edges[k - 1]]
+    )
+
+    def stats(counts):
+        n = F.col("n").cast("double")
+        psi = None
+        for cnt, q_i in zip(counts, ref_props):
+            p = (cnt + a) / (n + a * k)
+            q = F.lit(float(q_i))
+            term = (p - q) * F.log(p / q)
+            psi = term if psi is None else psi + term
+        return [F.round(psi, 6).alias("psi")]
+
+    return _windowed_counts(
+        stream, conds, stats, ts_col, window_duration, watermark
     )
 
 
@@ -392,11 +412,12 @@ def topk_trending_stream(
     """Streaming per-window top-k trending categories — the "what is
     spiking right now" monitor next to the drift family.
 
-    Spark-first shape (the chi2/psi known-categories trick, third
-    use): top-k-per-group normally needs an aggregation FOLLOWED by a
-    ranking window — two streaming aggregations, unsupported. With
-    the category vocabulary known up front, per-category counts are
-    conditional sums inside ONE windowed aggregation, and the ranking
+    Spark-first shape (the chi2/psi known-categories scaffold,
+    ``_windowed_counts``): top-k-per-group normally needs an
+    aggregation FOLLOWED by a ranking window — two streaming
+    aggregations, unsupported. With the category vocabulary known up
+    front, per-category counts are conditional sums inside ONE
+    windowed aggregation, and the ranking
     collapses to a pure per-row expression: sort the (−count,
     category) struct array (count desc, category asc — total order),
     slice k. Native, codegen'd, watermark-bounded state; categories
@@ -407,38 +428,25 @@ def topk_trending_stream(
     array of (category, cnt) structs, rank order = array order.
     """
     cats = sorted(categories)
-    counts = [
-        F.sum(F.when(F.col(type_col) == c, 1).otherwise(0)).alias(f"_c{i}")
-        for i, c in enumerate(cats)
-    ]
-    entries = F.array(
-        *[
-            F.struct(
-                (-F.col(f"_c{i}")).alias("neg"), F.lit(c).alias("category")
-            )
-            for i, c in enumerate(cats)
-        ]
-    )
-    top = F.transform(
-        F.slice(F.sort_array(entries), 1, k),
-        lambda s: F.struct(
-            s["category"].alias("category"), (-s["neg"]).alias("cnt")
-        ),
-    )
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration))
-        .agg(F.count(F.lit(1)).alias("n"), *counts)
-        .select(
-            F.col("window.start").alias("period_start"),
-            F.col("window.end").alias("period_end"),
-            "n",
-            (
-                F.col("n")
-                - sum(F.col(f"_c{i}") for i in range(len(cats)))
-            ).alias("n_other"),
-            top.alias("top"),
+
+    def stats(counts):
+        entries = F.array(
+            *[
+                F.struct((-cnt).alias("neg"), F.lit(c).alias("category"))
+                for c, cnt in zip(cats, counts)
+            ]
         )
+        top = F.transform(
+            F.slice(F.sort_array(entries), 1, k),
+            lambda s: F.struct(
+                s["category"].alias("category"), (-s["neg"]).alias("cnt")
+            ),
+        )
+        return [(F.col("n") - sum(counts)).alias("n_other"), top.alias("top")]
+
+    conds = [F.col(type_col) == c for c in cats]
+    return _windowed_counts(
+        stream, conds, stats, ts_col, window_duration, watermark
     )
 
 
@@ -456,8 +464,8 @@ def streaming_windowed_median(
     windowed median in streaming would hold every value per window cell
     in state (unbounded, like exact distinct); ``percentile_approx``
     keeps one bounded Greenwald-Khanna sketch per cell instead — the
-    same mergeable-sketch trade as ``windowed_distinct_users`` / the
-    batch HLL tier (operators/sketches.py). The estimate is a TRUE
+    same bounded-sketch trade as ``windowed_distinct_users``. The
+    estimate is a TRUE
     element of the window with rank error ≤ n/accuracy, so at the
     default accuracy any window under 10k values is rank-exact; the
     pytest tier bounds the rank error against the batch exact median.
@@ -498,40 +506,6 @@ def streaming_ohlcv(
         .select(
             F.col("window.start").alias("bucket_ts"), key,
             "open", "high", "low", "close", "volume", "n_trades",
-        )
-    )
-
-
-def streaming_rolling_sum(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    window_duration: str = "24 hours",
-    slide: str = "1 hour",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """A4 streaming — the 24 h rolling accumulation
-    (``acc_trade_price_24h``, upbit_data_pipeline.py:83-85) as a
-    SLIDING event-time window: each event lands in
-    window_duration/slide overlapping windows, and the window ENDING
-    at hour H holds the rolling 24 h total as of H — maintained
-    incrementally instead of recomputed per poll like the reference.
-
-    Scale: one shuffle keyed on (window, key) with map-side partial
-    aggregation; state is (duration/slide) windows per key, bounded by
-    the watermark."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration, slide), key)
-        .agg(
-            F.sum(value_col).alias("acc_value"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            key, "acc_value", "n_events",
         )
     )
 
@@ -590,69 +564,6 @@ def streaming_session_rollup(
             key, "n_events", "session_value",
         )
     )
-
-
-def entry_bounce_stream(
-    stream: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    seq_col: str = "event_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Streaming per-session entry/bounce classification — the
-    continuous twin of a47_entry_bounce's session layer: native
-    ``session_window`` sessions carrying the session's ENTRY event
-    type (deterministic ``min_by`` over the (ts, seq) order — the
-    same tiebreak contract as the batch query) and a bounce flag
-    (single-event session). Feed a windowed rollup or the K9 alert
-    listeners downstream; the per-entry-type rate aggregation is a
-    second (batch or foreachBatch) step because chained streaming
-    aggregations over session windows are unsupported.
-
-    Scale: one shuffle on the session key; JVM-side state merged by
-    Spark's session-window machinery, watermark-bounded."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), key)
-        .agg(
-            F.min_by(
-                F.col(type_col), F.struct(F.col(ts_col), F.col(seq_col))
-            ).alias("entry_type"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            key,
-            "entry_type",
-            "n_events",
-            (F.col("n_events") == 1).alias("bounce"),
-        )
-    )
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    select: Sequence[str] | None = None,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment: join each micro-batch against a
-    BROADCAST dimension table — the engine-side form of Logstash's
-    translate/jdbc_static lookup filters (enrich events with catalog
-    attributes as they flow). The static side is broadcast, so the
-    stream never shuffles for the lookup and no streaming state is
-    kept (unlike stream-stream joins, a static side needs no
-    watermark). Left join by default: an event with no dim row passes
-    through with NULL attributes instead of silently dropping —
-    enrichment must never lose events. The dim snapshot is fixed at
-    query start; restart the query to pick up a refreshed dimension
-    (the documented stream-static contract)."""
-    out = stream.join(F.broadcast(dim), on, how)
-    return out.select(*select) if select else out
 
 
 def stream_stream_join(
@@ -794,13 +705,3 @@ def idempotent_stream_sink(
         write_if_absent(batch, target_path, keys)
 
     return df.writeStream.foreachBatch(_write).option("checkpointLocation", checkpoint)
-
-
-def run_to_completion(writer: DataStreamWriter, **start_kwargs) -> StreamingQuery:
-    """Test/batch-drain helper: start, process everything available,
-    stop. Mirrors the reference's bounded smoke tests
-    (kafka/test.sh produce-100/consume-100)."""
-    query = writer.start(**start_kwargs)
-    query.processAllAvailable()
-    query.stop()
-    return query

@@ -32,6 +32,15 @@ def uf_components(edges, nodes):
     return {(n, min(ms)) for ms in comp.values() for n in ms}
 
 
+def run_to_completion(writer, **start_kwargs):
+    """Start a streaming query, process everything available, stop it
+    and return it — the bounded produce-N/consume-N smoke shape."""
+    query = writer.start(**start_kwargs)
+    query.processAllAvailable()
+    query.stop()
+    return query
+
+
 def pair_views(spark) -> list[str]:
     """The session's shared pair views (operators/dedup.py)."""
     return sorted(

@@ -276,7 +276,7 @@ def test_avro_wire_streams_end_to_end(spark, sf_small, registry, tmp_path):
     import os
 
     from streaming_data_spark.schemas import load_table
-    from streaming_data_spark.streaming import pipeline as sp
+    from conftest import run_to_completion
 
     events = (
         load_table(spark, sf_small, "events")
@@ -300,7 +300,7 @@ def test_avro_wire_streams_end_to_end(spark, sf_small, registry, tmp_path):
     wire = ar.encode_avro_registry(stream, "events-value", SCHEMA_V1, _url(registry))
     decoded = ar.decode_avro_registry(wire, SCHEMA_V2, _url(registry))
     assert decoded.isStreaming
-    sp.run_to_completion(
+    run_to_completion(
         decoded.writeStream.format("memory")
         .queryName("avro_stream")
         .option("checkpointLocation", str(tmp_path / "ckpt_avro"))

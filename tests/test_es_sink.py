@@ -13,6 +13,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import run_to_completion
 from streaming_data_spark.schemas import load_table
 from streaming_data_spark.sinks import elasticsearch as es
 from streaming_data_spark.streaming import pipeline as sp
@@ -137,7 +138,7 @@ def test_es_stream_sink_idempotent_ids(spark, sf_small, tmp_path, es_server):
         stream, url, "events-stream",
         checkpoint=str(tmp_path / "ckpt"), id_col="key", chunk_docs=30,
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     pairs = _docs(es_server)
     assert len(pairs) == 100
     ids = [p[0]["index"]["_id"] for p in pairs]

@@ -448,50 +448,3 @@ def test_drift_report_job_end_to_end(spark, sf_small, tmp_path):
     )
     assert rerun["types"] == n_types and rerun["drifting"] == 0
     assert [a for a in quiet if "event_type" in a] == []
-
-
-def test_engagement_report_job_end_to_end(spark, sf_small, tmp_path):
-    """Streaming sessions -> foreachBatch rollup -> warehouse table +
-    bounded alert gate: the report lands with sane rates, and with a
-    threshold of 0 every entry type with >= min_sessions alerts while
-    small-sample types stay silent."""
-    from pyspark.sql import functions as F
-
-    from streaming_data_spark import jobs
-    from streaming_data_spark.schemas import load_table
-    from streaming_data_spark.streaming import pipeline as sp
-    from tests.test_streaming import PAYLOAD_SCHEMA
-
-    events = load_table(spark, sf_small, "events").limit(200)
-    env = events.select(
-        F.col("event_id").cast("string").alias("key"),
-        F.to_json(
-            F.struct("event_id", "ts", "user_id", "event_type", "value")
-        ).alias("value"),
-    )
-    src = str(tmp_path / "engage_in")
-    env.coalesce(1).write.mode("overwrite").json(src)
-    stream = sp.normalize_stream(
-        sp.file_json_source(spark, src), PAYLOAD_SCHEMA
-    )
-
-    alerts = []
-    counts = jobs.engagement_report_job(
-        spark,
-        stream,
-        str(tmp_path / "wh"),
-        gap="2 hours",
-        bounce_alert_rate=0.0,
-        min_sessions=5,
-        alert=alerts.append,
-    )
-    report = spark.read.parquet(str(tmp_path / "wh" / "engagement_report"))
-    rows = {r["entry_type"]: r for r in report.collect()}
-    assert counts["entry_types"] == len(rows) > 0
-    assert counts["batches"] >= 1
-    for r in rows.values():
-        assert 0.0 <= r["bounce_rate"] <= 1.0
-        assert r["n_bounces"] <= r["n_sessions"]
-    eligible = [t for t, r in rows.items() if r["n_sessions"] >= 5]
-    assert sorted(a["entry_type"] for a in alerts) == sorted(eligible)
-    assert counts["alerts"] == len(eligible)

@@ -7,15 +7,57 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from streaming_data_spark.operators.layout import (
-    files_matching_box,
-    morton_code,
-    zorder_write,
-)
+from streaming_data_spark.operators.layout import morton_code, zorder_write
 from streaming_data_spark.schemas import load_table
 
 N_FILES = 8
 BOX = dict(x_col="l_partkey", x_lo=1, x_hi=40, y_col="l_suppkey", y_lo=1, y_hi=3)
+
+
+def files_matching_box(
+    path: str,
+    x_col: str,
+    x_lo: int,
+    x_hi: int,
+    y_col: str,
+    y_lo: int,
+    y_hi: int,
+) -> tuple[int, int]:
+    """(files that COULD contain rows in the box, total files), judged
+    purely by parquet footer min/max stats — i.e. exactly what a
+    stats-based scan planner can skip without reading data pages.
+    Reads only footers, not data pages."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    parts = sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    hit = 0
+    for f in parts:
+        md = pq.ParquetFile(f).metadata
+        overlaps = False
+        for rg in range(md.num_row_groups):
+            row_group = md.row_group(rg)
+            stats = {}
+            for ci in range(row_group.num_columns):
+                col = row_group.column(ci)
+                name = col.path_in_schema
+                if name in (x_col, y_col) and col.statistics is not None:
+                    stats[name] = (col.statistics.min, col.statistics.max)
+            if x_col in stats and y_col in stats:
+                (xmn, xmx), (ymn, ymx) = stats[x_col], stats[y_col]
+                if xmn <= x_hi and xmx >= x_lo and ymn <= y_hi and ymx >= y_lo:
+                    overlaps = True
+                    break
+            else:  # missing stats: cannot skip
+                overlaps = True
+                break
+        hit += int(overlaps)
+    return hit, len(parts)
 
 
 def test_zorder_layout_prunes_2d_box_better_than_1d_sort(spark, sf_oracle, tmp_path):
@@ -67,84 +109,3 @@ def test_morton_code_locality_property(spark):
     for r in df.collect():
         want_top = ((r["y"] >> 3) << 1) | (r["x"] >> 3)
         assert (r["z"] >> (2 * bits - 2)) == want_top, r
-
-
-def test_compact_parquet_rewrites_small_files_content_identical(spark, tmp_path):
-    """Compaction must shrink the file count to the byte-target sizing
-    and preserve content EXACTLY (row multiset, schema); a second run
-    under the threshold must no-op and say so."""
-    from streaming_data_spark.operators.layout import compact_parquet
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(0, 20_000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(path)  # 64 tiny files
-
-    before = spark.read.parquet(path)
-    before_rows = sorted((r.id, r.v) for r in before.collect())
-
-    stats = compact_parquet(spark, path, target_file_bytes=10 * 1024 * 1024)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] < 64 and stats["skipped"] is False
-    # 20k longs << 10 MiB target → sizing should land on very few files
-    assert stats["files_after"] <= 4, stats
-
-    after = spark.read.parquet(path)
-    assert sorted((r.id, r.v) for r in after.collect()) == before_rows
-    assert after.schema == before.schema
-
-    again = compact_parquet(
-        spark, path, target_file_bytes=10 * 1024 * 1024,
-        min_files_to_compact=stats["files_after"] + 1,
-    )
-    assert again["skipped"] is True
-    assert again["files_after"] == stats["files_after"]
-
-
-def test_compact_parquet_lock_excludes_writers_and_compactions(spark, tmp_path):
-    """With enforcement on (the default): an in-dir keyed-writer lock
-    makes compaction refuse outright, and a held sibling compact lock
-    blocks a second compaction; both locks release/clear cleanly."""
-    import json
-    import os
-
-    import pytest
-
-    from streaming_data_spark.operators.layout import compact_parquet
-
-    path = str(tmp_path / "locked")
-    spark.range(0, 1000).repartition(8).write.parquet(path)
-
-    writer_lock = os.path.join(path, "_sds_writer.lock")
-    with open(writer_lock, "w") as fh:
-        fh.write(json.dumps({"pid": 0}))
-    with pytest.raises(RuntimeError, match="keyed writer holds"):
-        compact_parquet(spark, path, target_file_bytes=1 << 20)
-    os.remove(writer_lock)
-
-    compact_lock = path + ".compact.lock"
-    with open(compact_lock, "w") as fh:
-        fh.write(json.dumps({"pid": 0}))
-    with pytest.raises(RuntimeError, match="another compaction holds"):
-        compact_parquet(spark, path, target_file_bytes=1 << 20)
-    os.remove(compact_lock)
-
-    stats = compact_parquet(spark, path, target_file_bytes=1 << 20)
-    assert stats["skipped"] is False and stats["files_after"] < 8
-    assert not os.path.exists(compact_lock)  # released on success
-
-
-def test_compact_parquet_detects_stale_old_dir(spark, tmp_path):
-    """A leftover .compact.old from a crashed swap must fail FAST with
-    a recovery message — before the expensive rewrite, not at the
-    rename."""
-    import os
-
-    import pytest
-
-    from streaming_data_spark.operators.layout import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(100).repartition(4).write.parquet(path)
-    os.makedirs(path + ".compact.old/junk")
-    with pytest.raises(RuntimeError, match="stale .*compact.old"):
-        compact_parquet(spark, path, target_file_bytes=1 << 20)

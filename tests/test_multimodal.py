@@ -1,13 +1,42 @@
 """Multimodal-column plumbing (X4): binary payloads + typed metadata,
-Arrow-batched feature extraction (stubbed decode), frame sampling."""
+Arrow-batched feature extraction over the fake, PPM and WAV decoders."""
 
 from __future__ import annotations
 
+import struct
+
+import numpy as np
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from streaming_data_spark.operators import multimodal as mm
+
+decode_ppm = mm._make_ppm_fns()[0]
+decode_wav = mm._make_wav_fns()[0]
+
+
+def encode_ppm(img) -> bytes:
+    """HxWx3 uint8 array -> binary PPM (P6) bytes."""
+    a = np.ascontiguousarray(np.asarray(img, dtype=np.uint8))
+    h, w = a.shape[:2]
+    return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes()
+
+
+def encode_wav(samples, rate: int) -> bytes:
+    """float samples in [-1,1] (1-D mono or (n, ch)) -> 16-bit PCM
+    WAV bytes."""
+    a = np.asarray(samples, dtype=np.float64)
+    if a.ndim == 1:
+        a = a[:, None]
+    pcm = np.clip(np.rint(a * 32767.0), -32768, 32767).astype("<i2")
+    n_ch = pcm.shape[1]
+    data = pcm.tobytes()
+    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * n_ch * 2, n_ch * 2, 16)
+    body = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
 @pytest.fixture()
@@ -23,12 +52,6 @@ def media_df(spark):
     return spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
 
 
-def test_attach_media_meta(media_df):
-    out = {r.media_id: r.meta.n_bytes for r in mm.attach_media_meta(media_df).collect()}
-    assert out[1] == len(b"\x89PNG fake bytes")
-    assert out[3] is None  # null payload stays null-sized
-
-
 def test_extract_features_deterministic(media_df):
     a = {r.media_id: r.features for r in mm.extract_features(media_df).collect()}
     b = {r.media_id: r.features for r in mm.extract_features(media_df).collect()}
@@ -40,31 +63,8 @@ def test_extract_features_deterministic(media_df):
 
 def test_extract_features_real_decoder_stubbed(media_df):
     out = mm.extract_features(media_df, decoder="pil")
-    with pytest.raises(Exception, match="Pillow"):
+    with pytest.raises(Exception, match="unknown decoder 'pil'"):
         out.collect()
-
-
-def test_sample_frames(media_df):
-    frames = mm.sample_frames(media_df, every_ms=1000).collect()
-    # video is 3500ms → offsets 0,1000,2000,3000
-    assert [r.frame_ms for r in frames] == [0, 1000, 2000, 3000]
-    assert all(r.media_id == 2 for r in frames)
-
-
-def test_resize_images_plumbing(media_df):
-    """Resize: images only, deterministic payload scaled to the target
-    dims, metadata columns populated; real kernel honestly stubbed."""
-    out = {r.media_id: r for r in mm.resize_images(media_df, 32, 16).collect()}
-    img_ids = {r.media_id for r in media_df.filter("kind = 'image'").collect()}
-    assert set(out) == img_ids
-    row = out[min(img_ids)]
-    assert (row.width, row.height) == (32, 16)
-    assert len(row.content) == 32 * 16 // 64
-    again = {r.media_id: bytes(r.content) for r in mm.resize_images(media_df, 32, 16).collect()}
-    assert {k: bytes(v.content) for k, v in out.items()} == again
-
-    with pytest.raises(Exception, match="Pillow"):
-        mm.resize_images(media_df, 8, 8, decoder="pil").collect()
 
 
 @pytest.fixture()
@@ -72,14 +72,12 @@ def ppm_df(spark):
     """Two real binary-PPM images: a 4x4 horizontal red→black gradient
     and an 8x2 constant mid-gray (with a header comment to exercise
     the parser)."""
-    import numpy as np
-
     grad = np.zeros((4, 4, 3), dtype=np.uint8)
     grad[:, :, 0] = np.array([255, 170, 85, 0], dtype=np.uint8)[None, :]
     gray = np.full((2, 8, 3), 128, dtype=np.uint8)
-    gray_bytes = mm.encode_ppm(gray).replace(b"P6\n", b"P6\n# comment\n", 1)
+    gray_bytes = encode_ppm(gray).replace(b"P6\n", b"P6\n# comment\n", 1)
     rows = [
-        Row(media_id=10, kind="image", content=mm.encode_ppm(grad),
+        Row(media_id=10, kind="image", content=encode_ppm(grad),
             meta=Row(mime="image/x-portable-pixmap", width=4, height=4,
                      duration_ms=None, n_bytes=None)),
         Row(media_id=11, kind="image", content=gray_bytes,
@@ -91,38 +89,10 @@ def ppm_df(spark):
 
 def test_ppm_codec_roundtrip():
     """encode → decode is the identity, including a commented header."""
-    import numpy as np
-
     img = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    assert np.array_equal(mm.decode_ppm(mm.encode_ppm(img)), img)
-    commented = mm.encode_ppm(img).replace(b"P6\n", b"P6\n# c\n", 1)
-    assert np.array_equal(mm.decode_ppm(commented), img)
-
-
-def test_resize_images_real_ppm_kernel(spark, ppm_df):
-    """Real bytes → resized real bytes through the distributed path:
-    output payloads are valid PPMs at the target dims, constant images
-    stay constant, and gradients keep their ordering."""
-    import numpy as np
-
-    out = {r.media_id: r for r in
-           mm.resize_images(ppm_df, 2, 2, decoder="ppm").collect()}
-    assert set(out) == {10, 11}
-    for r in out.values():
-        img = mm.decode_ppm(bytes(r.content))
-        assert img.shape == (2, 2, 3)
-    # constant gray stays exactly 128 everywhere
-    gray = mm.decode_ppm(bytes(out[11].content))
-    assert np.all(gray == 128)
-    # the red gradient keeps left > right after downsampling
-    grad = mm.decode_ppm(bytes(out[10].content))
-    assert grad[0, 0, 0] > grad[0, 1, 0]
-    # upsample path: 4x4 → 8x8 bilinear of a linear ramp stays monotone
-    up = {r.media_id: r for r in
-          mm.resize_images(ppm_df, 8, 8, decoder="ppm").collect()}
-    ramp = mm.decode_ppm(bytes(up[10].content))[0, :, 0].astype(int)
-    assert ramp.shape == (8,)
-    assert all(a >= b for a, b in zip(ramp, ramp[1:])), ramp
+    assert np.array_equal(decode_ppm(encode_ppm(img)), img)
+    commented = encode_ppm(img).replace(b"P6\n", b"P6\n# c\n", 1)
+    assert np.array_equal(decode_ppm(commented), img)
 
 
 def test_extract_features_real_ppm_decoder(spark, ppm_df):
@@ -143,16 +113,14 @@ def test_extract_features_real_ppm_decoder(spark, ppm_df):
 def wav_df(spark):
     """Two real PCM WAV payloads: a 440 Hz mono sine at 8 kHz and a
     constant-silence stereo clip."""
-    import numpy as np
-
     t = np.arange(800) / 8000.0
     sine = 0.5 * np.sin(2 * np.pi * 440.0 * t)
     silence = np.zeros((400, 2))
     rows = [
-        Row(media_id=20, kind="audio", content=mm.encode_wav(sine, 8000),
+        Row(media_id=20, kind="audio", content=encode_wav(sine, 8000),
             meta=Row(mime="audio/wav", width=None, height=None,
                      duration_ms=100, n_bytes=None)),
-        Row(media_id=21, kind="audio", content=mm.encode_wav(silence, 8000),
+        Row(media_id=21, kind="audio", content=encode_wav(silence, 8000),
             meta=Row(mime="audio/wav", width=None, height=None,
                      duration_ms=50, n_bytes=None)),
     ]
@@ -162,30 +130,19 @@ def wav_df(spark):
 def test_wav_codec_roundtrip():
     """encode → decode recovers samples to 16-bit precision, for both
     mono and stereo, and preserves the sample rate."""
-    import numpy as np
-
     # encode scales by 32767, decode divides by 32768 (the standard
     # asymmetric PCM convention): worst-case roundtrip error is
     # |x|/32768 (scale mismatch) + 0.5/32768 (rounding) < 1/16384
     bound = 1.0 / 16384
     mono = np.linspace(-1.0, 1.0, 101)
-    got, rate = mm.decode_wav(mm.encode_wav(mono, 44100))
+    got, rate = decode_wav(encode_wav(mono, 44100))
     assert rate == 44100 and got.shape == (101, 1)
     assert np.max(np.abs(got[:, 0] - mono)) <= bound
 
     stereo = np.stack([np.sin(np.arange(50) / 5.0), np.cos(np.arange(50) / 5.0)], axis=1)
-    got2, rate2 = mm.decode_wav(mm.encode_wav(stereo, 16000))
+    got2, rate2 = decode_wav(encode_wav(stereo, 16000))
     assert rate2 == 16000 and got2.shape == (50, 2)
     assert np.max(np.abs(got2 - stereo)) <= bound
-
-
-def test_wav_resample_length_and_constant_invariance():
-    import numpy as np
-
-    const = np.full(1000, 0.25)
-    down = mm.resample_wav_array(const, 8000, 2000)
-    assert down.shape[0] == 250
-    assert np.allclose(down, 0.25)
 
 
 def test_extract_features_real_wav_decoder(spark, wav_df):
@@ -204,38 +161,6 @@ def test_extract_features_real_wav_decoder(spark, wav_df):
     assert all(p == 0.0 for p in silence[4:])
 
 
-def test_split_video_frames_real_ppmv(spark):
-    """A concatenated-PPM video payload splits into standalone P6
-    frames; every_n sampling keeps exactly frames 0, n, 2n... and each
-    emitted frame decodes back to its original pixels."""
-    import numpy as np
-
-    frames = [np.full((2, 3, 3), 10 * i, dtype=np.uint8) for i in range(5)]
-    payload = b"".join(mm.encode_ppm(f) for f in frames)
-    rows = [
-        Row(media_id=30, kind="video", content=payload,
-            meta=Row(mime="video/x-ppmv", width=3, height=2,
-                     duration_ms=5000, n_bytes=None)),
-        Row(media_id=31, kind="image", content=mm.encode_ppm(frames[0]),
-            meta=Row(mime="image/x-portable-pixmap", width=3, height=2,
-                     duration_ms=None, n_bytes=None)),
-    ]
-    df = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-
-    out = mm.split_video_frames(df, every_n=2).collect()
-    assert {r.media_id for r in out} == {30}  # image rows filtered out
-    got = {r.frame_idx: bytes(r.content) for r in out}
-    assert sorted(got) == [0, 2, 4]
-    for idx, content in got.items():
-        assert np.array_equal(mm.decode_ppm(content), frames[idx])
-
-    # every_n=1 keeps all frames, and they chain into the ppm feature path
-    all_frames = mm.split_video_frames(df).withColumn("kind", F.lit("image"))
-    feats = mm.extract_features(all_frames, decoder="ppm").collect()
-    assert len(feats) == 5
-    assert all(len(r.features) == mm.FEATURE_DIM for r in feats)
-
-
 def test_ppm_truncated_header_raises_not_hangs():
     """A payload cut off mid-header must raise ValueError — the scan
     loops are bounds-checked so one malformed row can't wedge an
@@ -243,26 +168,4 @@ def test_ppm_truncated_header_raises_not_hangs():
     for bad in (b"P6", b"P6\n", b"P6\n12", b"P6\n# comment with no newline",
                 b"P6\n3 2"):
         with pytest.raises(ValueError):
-            mm.decode_ppm(bad)
-
-
-def test_split_video_frames_truncated_body_raises(spark):
-    """A PPMV payload cut off inside a frame body must raise, not
-    silently emit a short frame."""
-    import numpy as np
-
-    frame = np.full((2, 3, 3), 7, dtype=np.uint8)
-    payload = (mm.encode_ppm(frame) * 2)[:-5]  # second frame truncated
-    rows = [Row(media_id=40, kind="video", content=payload,
-                meta=Row(mime="video/x-ppmv", width=3, height=2,
-                         duration_ms=None, n_bytes=None))]
-    df = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    with pytest.raises(Exception, match="truncated P6 frame body"):
-        mm.split_video_frames(df).collect()
-
-
-def test_wav_resample_empty_input():
-    import numpy as np
-
-    out = mm.resample_wav_array(np.zeros((0,)), 8000, 4000)
-    assert out.shape[0] == 0
+            decode_ppm(bad)

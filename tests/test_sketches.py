@@ -1,75 +1,13 @@
-"""Accuracy/property tests for the mergeable-sketch tier (HLL
-distinct counting). Sketch estimates are engine-specific, so the
-contract is tolerance vs exact — not an oracle hash."""
+"""Accuracy/property tests for the sketch tiers: approx_percentile
+against the exact percentile, and the Misra-Gries heavy-hitter
+summary. Approximate estimates are engine-specific, so their contract
+is tolerance vs exact — not an oracle hash."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from streaming_data_spark.operators.sketches import (
-    daily_user_sketches,
-    distinct_rollup_hll,
-    rolling_distinct_hll,
-)
-from streaming_data_spark.queries_ext18 import q_a17_rolling_distinct
 from streaming_data_spark.schemas import load_table
-
-# lgK=12 ⇒ ~1.6% RSE; cardinalities here are ≤ a few hundred, where
-# the sketch is still in exact (sparse) mode — but assert the loose
-# production bound, not the lucky one.
-REL_TOL = 0.05
-
-
-def test_rolling_hll_matches_exact_within_tolerance(spark, sf_oracle):
-    events = load_table(spark, sf_oracle, "events")
-    est = {
-        r["day"]: r["users_est"]
-        for r in rolling_distinct_hll(events).collect()
-    }
-    exact = {
-        r["day"]: r["users_7d"]
-        for r in q_a17_rolling_distinct(spark, sf_oracle).collect()
-    }
-    assert set(est) == set(exact)
-    for day, n in exact.items():
-        assert abs(est[day] - n) <= max(2, REL_TOL * n), (day, est[day], n)
-
-
-def test_daily_sketches_are_small_and_mergeable(spark, sf_oracle):
-    """The scale contract: per-day state is a bounded blob, and the
-    union of daily sketches equals (within tolerance) a direct sketch
-    over the union of days."""
-    events = load_table(spark, sf_oracle, "events")
-    daily = daily_user_sketches(events)
-    sizes = daily.select(F.length("sketch").alias("b")).agg(
-        F.max("b").alias("mx")
-    ).collect()[0]
-    assert sizes["mx"] <= 1 << 16  # bounded state per cell
-    merged = daily.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch", F.lit(False)))
-        .cast("long")
-        .alias("est")
-    ).collect()[0]["est"]
-    direct = events.select("user_id").distinct().count()
-    assert abs(merged - direct) <= max(2, REL_TOL * direct)
-
-
-def test_distinct_rollup_reaggregates_without_rescanning(spark, sf_oracle):
-    events = load_table(spark, sf_oracle, "events")
-    got = distinct_rollup_hll(events, ["event_type"]).collect()
-    by_type = {r["event_type"]: r["users_est"] for r in got if r["event_type"]}
-    total = next(r["users_est"] for r in got if r["event_type"] is None)
-    exact_by_type = {
-        r["event_type"]: r["n"]
-        for r in events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert set(by_type) == set(exact_by_type)
-    for k, n in exact_by_type.items():
-        assert abs(by_type[k] - n) <= max(2, REL_TOL * n)
-    exact_total = events.select("user_id").distinct().count()
-    assert abs(total - exact_total) <= max(2, REL_TOL * exact_total)
 
 
 def test_approx_percentile_tier_within_tolerance(spark, sf_oracle):

@@ -175,12 +175,12 @@ def test_stream_sql_windowed_agg_matches_batch(spark, sf_small, tmp_path):
     completion, equal the same SQL over the same rows as a batch
     frame (stream==batch, the T3 contract via SQL)."""
     from streaming_data_spark.sql import run_stream_sql
-    from streaming_data_spark.streaming import pipeline as sp
+    from conftest import run_to_completion
 
     stream, events = _event_files(spark, sf_small, tmp_path)
     out = run_stream_sql(spark, STREAM_WINDOWED_SQL, views={"ev": stream})
     assert out.isStreaming
-    sp.run_to_completion(
+    run_to_completion(
         out.writeStream.format("memory")
         .queryName("sqlstream_win")
         .outputMode("complete")
@@ -196,11 +196,11 @@ def test_stream_sql_windowed_agg_matches_batch(spark, sf_small, tmp_path):
 
 def test_stream_sql_filtered_projection_matches_batch(spark, sf_small, tmp_path):
     from streaming_data_spark.sql import run_stream_sql
-    from streaming_data_spark.streaming import pipeline as sp
+    from conftest import run_to_completion
 
     stream, events = _event_files(spark, sf_small, tmp_path)
     out = run_stream_sql(spark, STREAM_FILTERED_SQL, views={"ev": stream})
-    sp.run_to_completion(
+    run_to_completion(
         out.writeStream.format("memory")
         .queryName("sqlstream_proj")
         .option("checkpointLocation", str(tmp_path / "ckpt_proj"))

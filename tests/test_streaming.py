@@ -16,8 +16,10 @@ from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from conftest import run_to_completion
 from streaming_data_spark.operators import aggregates as agg
 from streaming_data_spark.operators import indicators as ind
+from streaming_data_spark.operators.joins import dim_join
 from streaming_data_spark.schemas import load_table
 from streaming_data_spark.streaming import pipeline as sp
 from streaming_data_spark.streaming import stateful
@@ -55,7 +57,7 @@ def test_roundtrip_count_and_keys(spark, event_stream_dir, tmp_path):
     stream = sp.file_json_source(spark, event_stream_dir)
     normalized = sp.normalize_stream(stream, PAYLOAD_SCHEMA)
     writer = normalized.writeStream.format("memory").queryName("roundtrip")
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     out = spark.sql("SELECT * FROM roundtrip")
     assert out.count() == 100
     got_keys = {r.event_id for r in out.select("event_id").collect()}
@@ -73,7 +75,7 @@ def test_e2e_partitioned_sink(spark, event_stream_dir, tmp_path):
     writer = sp.stream_to_partitioned_sink(
         normalized, out_path, ts_col="ts", checkpoint=str(tmp_path / "ckpt")
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     stored = spark.read.parquet(out_path)
     assert stored.count() == 100
     assert "event_date" in stored.columns
@@ -94,7 +96,7 @@ def test_idempotent_sink_absorbs_replay(spark, event_stream_dir, tmp_path):
             normalized, target, keys=["event_id"],
             checkpoint=str(tmp_path / f"ckpt{attempt}"),
         )
-        sp.run_to_completion(writer)
+        run_to_completion(writer)
     stored = spark.read.parquet(target)
     assert stored.count() == 100
     assert stored.select("event_id").distinct().count() == 100
@@ -118,8 +120,8 @@ def test_dead_letter_split(spark, tmp_path):
 
     stream = sp.file_json_source(spark, src)
     good, dead = sp.dead_letter_split(stream, PAYLOAD_SCHEMA)
-    sp.run_to_completion(good.writeStream.format("memory").queryName("dl_good"))
-    sp.run_to_completion(dead.writeStream.format("memory").queryName("dl_dead"))
+    run_to_completion(good.writeStream.format("memory").queryName("dl_good"))
+    run_to_completion(dead.writeStream.format("memory").queryName("dl_dead"))
     good_rows = spark.sql("SELECT * FROM dl_good").collect()
     dead_rows = spark.sql("SELECT * FROM dl_dead").collect()
     assert len(good_rows) == 1 and good_rows[0].event_id == 1
@@ -136,7 +138,7 @@ def test_windowed_rollup_matches_batch(spark, sf_small, event_stream_dir, tmp_pa
     # complete mode: a finite drain never advances the watermark past
     # the last window, so append would withhold final windows
     writer = rolled.writeStream.format("memory").queryName("roll").outputMode("complete")
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = spark.sql(
         "SELECT period_start, event_type, n, round(avg_value,6) avg_value, max_value FROM roll"
     )
@@ -154,7 +156,7 @@ def test_streaming_ohlcv_matches_batch(spark, sf_small, event_stream_dir, tmp_pa
     normalized = sp.normalize_stream(stream, PAYLOAD_SCHEMA)
     candles = sp.streaming_ohlcv(normalized, "user_id", "ts", "value")
     writer = candles.writeStream.format("memory").queryName("candles").outputMode("complete")
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = spark.sql("SELECT user_id, bucket_ts, open, high, low, close, round(volume,6) volume, n_trades FROM candles")
     batch = load_table(spark, sf_small, "events").limit(100)
     want = agg.ohlcv(batch, "user_id", "ts", "value").select(
@@ -163,47 +165,6 @@ def test_streaming_ohlcv_matches_batch(spark, sf_small, event_stream_dir, tmp_pa
     )
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
-
-
-def test_streaming_rolling_sum_matches_batch(spark, sf_small, event_stream_dir, tmp_path):
-    """A4 streaming — the sliding-window rolling sum maintained
-    incrementally equals the same sliding-window aggregation computed
-    in batch (F.window is semantically identical in both modes), and
-    each window's acc_value is the true rolling total as of win_end."""
-    stream = sp.file_json_source(spark, event_stream_dir)
-    normalized = sp.normalize_stream(stream, PAYLOAD_SCHEMA)
-    rolled = sp.streaming_rolling_sum(
-        normalized, "event_type", "ts", "value",
-        window_duration="24 hours", slide="6 hours",
-    )
-    writer = rolled.writeStream.format("memory").queryName("roll24").outputMode("complete")
-    sp.run_to_completion(writer)
-    got = spark.sql(
-        "SELECT win_start, win_end, event_type, round(acc_value,6) acc_value, n_events FROM roll24"
-    )
-
-    batch = load_table(spark, sf_small, "events").limit(100)
-    want = (
-        batch.groupBy(F.window("ts", "24 hours", "6 hours"), "event_type")
-        .agg(F.round(F.sum("value"), 6).alias("acc_value"),
-             F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("win_start"),
-                F.col("window.end").alias("win_end"),
-                "event_type", "acc_value", "n_events")
-    )
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
-
-    # cross-check one window against a first-principles rolling total:
-    # acc_value for a window == sum of values in [win_start, win_end)
-    sample = got.orderBy(F.desc("n_events")).first()
-    direct = (
-        batch.filter((F.col("event_type") == sample.event_type)
-                     & (F.col("ts") >= sample.win_start)
-                     & (F.col("ts") < sample.win_end))
-        .agg(F.round(F.sum("value"), 6)).collect()[0][0]
-    )
-    assert direct == sample.acc_value
 
 
 def test_fanout_two_sinks(spark, event_stream_dir, tmp_path):
@@ -216,7 +177,7 @@ def test_fanout_two_sinks(spark, event_stream_dir, tmp_path):
         lambda b, e: b.select("event_id", "event_type").write.mode("append").parquet(p2),
     ]
     writer = sp.fanout_sink(normalized, sinks, checkpoint=str(tmp_path / "ckpt"))
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     assert spark.read.parquet(p1).count() == 100
     assert spark.read.parquet(p2).columns == ["event_id", "event_type"]
 
@@ -230,7 +191,7 @@ def test_alert_listener_and_job_wrapper(spark, event_stream_dir, tmp_path):
         stream = sp.file_json_source(spark, event_stream_dir)
         normalized = sp.normalize_stream(stream, PAYLOAD_SCHEMA)
         writer = normalized.writeStream.format("memory").queryName("alerts_q")
-        sp.run_to_completion(writer)
+        run_to_completion(writer)
         # listener events are delivered asynchronously
         import time
 
@@ -336,7 +297,7 @@ def test_stateful_sessionization_across_batches(spark, sf_small, tmp_path):
         .queryName("sessions_out")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events, round(r.session_value, 4))
         for r in spark.sql("SELECT * FROM sessions_out").collect()
@@ -445,7 +406,7 @@ def test_streaming_session_window_matches_batch(spark, sf_small, event_stream_di
         sessions.writeStream.format("memory")
         .queryName("native_sessions").outputMode("complete")
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = spark.sql(
         "SELECT session_start, session_end, user_id, n_events,"
         " round(session_value, 6) AS session_value FROM native_sessions"
@@ -498,7 +459,7 @@ def test_dedup_stream_drops_in_stream_duplicates(spark, sf_small, tmp_path):
     stream = sp.file_json_source(spark, src)
     normalized = sp.normalize_stream(stream, PAYLOAD_SCHEMA)
     deduped = sp.dedup_stream(normalized, ["event_id"], "ts")
-    sp.run_to_completion(
+    run_to_completion(
         deduped.writeStream.format("memory").queryName("dedup_out")
     )
     out = spark.sql("SELECT * FROM dedup_out")
@@ -533,7 +494,7 @@ def test_stream_stream_join_matches_batch(spark, sf_small, event_stream_dir, tmp
         F.col("view_ts"), F.col("click_ts"),
     )
     writer = joined.writeStream.format("memory").queryName("attrib").outputMode("append")
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = spark.sql("SELECT view_id, click_id FROM attrib")
 
     batch = load_table(spark, sf_small, "events").limit(100)
@@ -588,7 +549,7 @@ def test_backpressure_caps_rows_per_microbatch(spark, sf_small, tmp_path):
     writer = stream.writeStream.foreachBatch(_collect).option(
         "checkpointLocation", str(tmp_path / "bp_ckpt")
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
 
     sizes = [s for s in batch_sizes if s > 0]
     assert sum(sizes) == 40
@@ -643,7 +604,7 @@ def _drive_change_alerts(spark, sf_small, tmp_path):
         .queryName("alerts")
         .option("checkpointLocation", str(tmp_path / "ckpt_alerts"))
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = {
         (r.user_id, r.ts, round(r.value, 4), round(r.prev_value, 4), r.change_pct)
         for r in spark.sql("SELECT * FROM alerts").collect()
@@ -893,7 +854,7 @@ def test_metrics_collector_accounts_every_input_row(spark, event_stream_dir, tmp
             .queryName("metrics_probe")
             .option("checkpointLocation", str(tmp_path / "ckpt_metrics"))
         )
-        sp.run_to_completion(writer)
+        run_to_completion(writer)
         # listener delivery is async — wait for the progress events
         import time
 
@@ -929,7 +890,7 @@ def test_streaming_windowed_distinct_matches_batch_within_tolerance(
         .outputMode("complete")
         .option("checkpointLocation", str(tmp_path / "ckpt_dau"))
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = {
         r.period_start: r.dau_est
         for r in spark.sql("SELECT * FROM dau_est").collect()
@@ -970,7 +931,7 @@ def test_streaming_windowed_median_rank_error_bounded(
         .outputMode("complete")
         .option("checkpointLocation", str(tmp_path / "ckpt_med"))
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = {
         r.bucket_ts: (r.med_est, r.n)
         for r in spark.sql("SELECT * FROM med_est").collect()
@@ -1042,7 +1003,7 @@ def test_sma_cross_stream_matches_batch(spark, sf_small, tmp_path):
         .queryName("sma_cross")
         .option("checkpointLocation", str(tmp_path / "ckpt_cross"))
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = {
         (r.user_id, r.day, r.close, r.sma_s, r.sma_l, r.signal)
         for r in spark.sql("SELECT * FROM sma_cross").collect()
@@ -1071,16 +1032,16 @@ def test_enrich_stream_matches_batch_and_keeps_unmatched(spark, sf_small, event_
         .filter(F.col("user_id") % 2 == 0)
         .withColumn("segment", F.concat(F.lit("seg-"), F.col("user_id") % 3))
     )
-    enriched = sp.enrich_stream(
+    enriched = dim_join(
         normalized, dim, on="user_id",
-        select=["event_id", "user_id", "segment"],
+        select=["event_id", "user_id", "segment"], how="left",
     )
     writer = (
         enriched.writeStream.format("memory")
         .queryName("enriched")
         .option("checkpointLocation", str(tmp_path / "ckpt_enrich"))
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = {
         (r.event_id, r.user_id, r.segment)
         for r in spark.sql("SELECT * FROM enriched").collect()
@@ -1151,7 +1112,7 @@ def test_sma_cross_state_survives_query_restart(spark, sf_small, tmp_path):
             .option("checkpointLocation", str(tmp_path / "ckpt_restart"))
             .outputMode("append")
         )
-        sp.run_to_completion(writer)
+        run_to_completion(writer)
         return {
             (r.user_id, r.day, r.close, r.sma_s, r.sma_l, r.signal)
             for r in spark.read.parquet(out_dir).collect()
@@ -1326,7 +1287,7 @@ def test_bollinger_stream_matches_batch(spark, sf_small, tmp_path):
     repeats Spark's Average + CentralMomentAgg fold order)."""
     stream, daily = _daily_stream(spark, sf_small, tmp_path, "boll")
     bands = ind.bollinger_bands(stream, periods=5, n_std=2.0)
-    sp.run_to_completion(
+    run_to_completion(
         bands.writeStream.format("memory")
         .queryName("boll_stream")
         .option("checkpointLocation", str(tmp_path / "ckpt_boll"))
@@ -1350,7 +1311,7 @@ def test_ewma_stream_matches_batch(spark, sf_small, tmp_path):
     batch mapInPandas fold (same IEEE op order, no rounding)."""
     stream, daily = _daily_stream(spark, sf_small, tmp_path, "ewma")
     smoothed = ind.ewma(stream, alpha=0.2)
-    sp.run_to_completion(
+    run_to_completion(
         smoothed.writeStream.format("memory")
         .queryName("ewma_stream")
         .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
@@ -1410,7 +1371,7 @@ def _ohlcv_stream(spark, sf_small, tmp_path, tag):
 
 
 def _drain(spark, stream_df, name, tmp_path):
-    sp.run_to_completion(
+    run_to_completion(
         stream_df.writeStream.format("memory")
         .queryName(name)
         .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
@@ -1493,7 +1454,7 @@ def test_chi2_drift_stream_matches_independent_batch(
         .queryName("chi2w")
         .outputMode("complete")
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = spark.sql(
         "SELECT period_start, period_end, n, n_unexpected, chi2 FROM chi2w"
     )
@@ -1571,7 +1532,7 @@ def test_psi_drift_stream_matches_independent_batch(
         .queryName("psiw")
         .outputMode("complete")
     )
-    sp.run_to_completion(writer)
+    run_to_completion(writer)
     got = spark.sql("SELECT period_start, period_end, n, psi FROM psiw")
 
     # independent batch path: explicit window x bin cells
@@ -1643,7 +1604,7 @@ def test_psi_drift_stream_rejects_single_bin_and_drops_nulls(spark):
     scored = sp.psi_drift_stream(
         stream, [0.0, 5.0, 10.0], [0.5, 0.5], window_duration="1 minute"
     )
-    sp.run_to_completion(
+    run_to_completion(
         scored.writeStream.format("memory").queryName("psinull")
         .outputMode("complete")
     )
@@ -1696,7 +1657,7 @@ def test_topk_trending_stream_matches_independent_batch(spark, tmp_path):
         trended = sp.topk_trending_stream(
             stream, vocab, k=k, window_duration="1 minute"
         )
-        sp.run_to_completion(
+        run_to_completion(
             trended.writeStream.format("memory").queryName(f"topk{k}")
             .outputMode("complete")
         )
@@ -1761,7 +1722,7 @@ def test_holt_stream_matches_batch(spark, sf_small, tmp_path):
     no rounding anywhere)."""
     stream, daily = _daily_stream(spark, sf_small, tmp_path, "holt")
     smoothed = ind.holt(stream, alpha=0.2, beta=0.1)
-    sp.run_to_completion(
+    run_to_completion(
         smoothed.writeStream.format("memory")
         .queryName("holt_stream")
         .option("checkpointLocation", str(tmp_path / "ckpt_holt"))
@@ -1790,7 +1751,7 @@ def test_dau_stream_matches_batch_approx_distinct(
         sp.file_json_source(spark, event_stream_dir), PAYLOAD_SCHEMA
     )
     dau = sp.windowed_distinct_users(stream, window_duration="1 minute")
-    sp.run_to_completion(
+    run_to_completion(
         dau.writeStream.format("memory").queryName("dauw")
         .outputMode("complete")
     )
@@ -1823,52 +1784,3 @@ def test_dau_stream_matches_batch_approx_distinct(
         assert abs(r["dau_est"] - exact[r["period_start"]]) <= max(
             2, 0.1 * exact[r["period_start"]]
         )
-
-
-def test_entry_bounce_stream_matches_batch_session_window(
-    spark, sf_small, event_stream_dir
-):
-    """The streaming session entry/bounce rows equal the identical
-    session_window + min_by aggregation on the static frame —
-    including the deterministic (ts, event_id) entry tiebreak and the
-    single-event bounce flag."""
-    stream = sp.normalize_stream(
-        sp.file_json_source(spark, event_stream_dir), PAYLOAD_SCHEMA
-    )
-    sessions = sp.entry_bounce_stream(stream, gap="2 hours")
-    sp.run_to_completion(
-        sessions.writeStream.format("memory").queryName("bouncew")
-        .outputMode("complete")
-    )
-    got = spark.sql(
-        "SELECT session_start, session_end, user_id, entry_type,"
-        " n_events, bounce FROM bouncew"
-    )
-    # batch side consumes the SAME JSON round-trip (the envelope
-    # serializes timestamps at millisecond precision, so comparing
-    # against the raw parquet micros would differ in the sub-ms tail)
-    batch = sp.normalize_stream(
-        spark.read.json(event_stream_dir), PAYLOAD_SCHEMA
-    )
-    want = (
-        batch.groupBy(F.session_window("ts", "2 hours"), "user_id")
-        .agg(
-            F.min_by("event_type", F.struct("ts", "event_id")).alias(
-                "entry_type"
-            ),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "entry_type",
-            "n_events",
-            (F.col("n_events") == 1).alias("bounce"),
-        )
-    )
-    assert got.count() == want.count() and got.count() > 0
-    assert got.exceptAll(want).count() == 0
-    assert got.filter(F.col("bounce")).count() == got.filter(
-        F.col("n_events") == 1
-    ).count()
