@@ -316,7 +316,10 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
+SIMHASH_BITS = 32
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """X2c — 32-bit SimHash signature per document: per-bit ±1 sums of
     token hashes, reassembled into one integer."""
     toks = df.select(
@@ -325,11 +328,11 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     ).withColumn("h", _md5_hash28(F.col("tok")))
     bit_sums = [
         F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1, 1).otherwise(-1)).alias(f"b{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     agg = toks.groupBy(id_col).agg(*bit_sums)
     value = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(F.col(f"b{j}") > 0, F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long"))
         value = term if value is None else value + term
     return agg.select(F.col(id_col), value.alias("simhash"))

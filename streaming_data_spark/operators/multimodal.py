@@ -1,8 +1,8 @@
 """[EXT] Multimodal columns (SURVEY.md §2.11 X4).
 
-Design: image/audio/video payloads are opaque ``binary`` columns with
-a typed metadata struct alongside — the engine plans around SIZE and
-METADATA, never decoding in the relational path. Decode / feature
+Design: image/audio/video payloads are opaque ``binary`` columns in a
+``(media_id, kind, content)`` frame — the engine plans around SIZE,
+never decoding in the relational path. Decode / feature
 extraction runs in Arrow-batched ``mapInPandas`` so the 100 TB story
 is: binary stays columnar in parquet, decode parallelizes per
 partition, and the expensive step sees whole batches.
@@ -28,27 +28,12 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("kind", StringType(), False),        # image | audio | video
-    StructField("content", BinaryType(), True),       # opaque payload
-    StructField("meta", StructType([
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]), True),
-])
 
 FEATURE_DIM = 16
 

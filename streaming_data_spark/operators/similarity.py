@@ -8,9 +8,14 @@ Two tiers, per the PAPERS.md top-k-similarity line of work:
   At 100 TB the corpus scan dominates and parallelizes linearly; no
   shuffle of the corpus, only of (n_queries × k) candidate rows.
 - ``signlsh_topk`` — LSH-bucketed approximate variant: random-
-  hyperplane sign bits bucket the corpus; each query probes only its
-  bucket (and optionally neighbors). The hyperplanes are frozen
-  constants so results are deterministic and testable.
+  hyperplane sign bits bucket the corpus; each query probes its
+  bucket and every bucket one bit-flip away. The hyperplanes are
+  frozen constants so results are deterministic and testable.
+
+Near-duplicate pairs over the same sign buckets come from one blocked
+kernel, ``_lsh_block_pairs``: ``cosine_near_dup``'s scale path calls it
+per bucket, and SemDeDup (``queries_ext47.x59_semdedup``) calls it per
+(cluster, bucket).
 
 Embeddings are array<float>; math is done in double (cast first) with
 left-fold summation so Spark and the DuckDB oracle agree bit-for-bit
@@ -19,8 +24,17 @@ before rounding.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+
+# The blocked kernel's Arrow helper runs inside executor Python workers,
+# which need not have this package importable (a driver may run from any
+# directory). Registering the module ships its helpers by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -63,9 +77,9 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact brute-force cosine top-k per query vector.
+    """Exact brute-force cosine top-k per query vector, the query
+    itself excluded.
 
     Returns (query_id, neighbor_id, rank, cosine) with deterministic
     (cosine desc, neighbor_id asc) ranking.
@@ -74,9 +88,7 @@ def cosine_topk(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    pairs = c.crossJoin(q)
-    if not include_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    pairs = c.crossJoin(q).filter(F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -142,6 +154,131 @@ def auto_n_planes(corpus_rows: int, target_bucket: int = 128) -> int:
     return max(1, min(32, (-(-corpus_rows // target_bucket) - 1).bit_length()))
 
 
+def _probe_set(home: str, n_planes: int) -> Column:
+    """Multi-probe bucket set {home} ∪ {home ^ 2^p}: two vectors meet in
+    some probed bucket exactly when their home buckets differ in at
+    most one bit."""
+    return F.array(
+        F.col(home),
+        *[F.col(home).bitwiseXOR(F.lit(2 ** p)) for p in range(n_planes)],
+    )
+
+
+def _rows_matrix(arr):
+    """(n, d) float64 matrix of an Arrow list array whose rows all hold
+    d numbers: one flat copy, no per-row Python step. Vectors of
+    different lengths have no cosine, so a ragged batch raises."""
+    import numpy as np
+
+    widths = np.diff(np.asarray(arr.offsets))
+    if len(arr) and (widths != widths[0]).any():
+        raise ValueError(
+            "embeddings must all have one length, got lengths "
+            f"{sorted(set(widths.tolist()))}"
+        )
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype("float64")
+    return flat.reshape(len(arr), widths[0] if len(arr) else 0)
+
+
+def _lsh_block_pairs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    n_planes: int,
+    block_cols: tuple = (),
+    bucket_cap: int | None = None,
+) -> DataFrame:
+    """Sign-LSH blocked near-duplicate rows (id_a, id_b, cosine_raw),
+    id_a < id_b, cosine_raw >= threshold. A pair is emitted once per
+    block it meets in; callers dedup across blocks.
+
+    A block is ``(*block_cols, bucket)``: each vector sits in its home
+    bucket and probes every one-bit-flip bucket (``_probe_set``), so
+    within one value of ``block_cols`` a pair is found exactly when
+    hamming(home_a, home_b) <= 1. Normalize and plane projection run as
+    ONE numpy pass per Arrow batch (same frozen planes and sign rule as
+    ``sign_bucket``: raw-vector projection >= 0 sets bit 2^p) that
+    emits each vector once; the probe fan-out is a JVM ``explode``.
+    Within a block the probe rows are matmul'd against the home rows,
+    Arrow in and Arrow out — the per-pair work is a BLAS row, not an
+    interpreted array fold.
+
+    ``bucket_cap`` keeps only the cap smallest ids of a larger block
+    (see ``cosine_near_dup``).
+    """
+    import numpy as np
+
+    planes = np.array(
+        [[_plane_component(p, d) for d in range(_MAX_DIMS)] for p in range(n_planes)]
+    )
+    blocks = [df.schema[c] for c in block_cols]
+    id_field = df.schema[id_col]
+    unit_schema = StructType([
+        *blocks,
+        StructField("_id", id_field.dataType),
+        StructField("_u", ArrayType(DoubleType())),
+        StructField("home", LongType()),
+    ])
+
+    def _bucketize(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            mat = _rows_matrix(batch.column("_v"))
+            bits = (mat @ planes[:, : mat.shape[1]].T) >= 0
+            home = (bits * (1 << np.arange(n_planes))).sum(axis=1).astype("int64")
+            units = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+            offsets = np.arange(len(units) + 1, dtype="int32") * units.shape[1]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *(batch.column(f.name) for f in blocks),
+                    batch.column("_id"),
+                    pa.ListArray.from_arrays(offsets, units.reshape(-1)),
+                    pa.array(home),
+                ],
+                names=unit_schema.fieldNames(),
+            )
+
+    def _bucket_pairs(tbl):
+        import numpy as np
+        import pyarrow as pa
+
+        ids = tbl.column("_id").to_numpy()
+        if bucket_cap is not None and len(ids) > bucket_cap:
+            # shuffle delivery order is nondeterministic — keep the cap
+            # smallest ids so the kept subset (and the output) is
+            # deterministic
+            tbl = tbl.take(np.argsort(ids)[:bucket_cap])
+            ids = tbl.column("_id").to_numpy()
+        mat = _rows_matrix(tbl.column("_u").combine_chunks())
+        is_home = tbl.column("home").to_numpy() == tbl.column("bucket").to_numpy()
+        sims = mat @ mat[is_home].T
+        ia, ib = np.nonzero(sims >= threshold)
+        id_a, id_b = ids[ia], ids[is_home][ib]
+        lo, hi = np.minimum(id_a, id_b), np.maximum(id_a, id_b)
+        keep = lo < hi
+        return pa.table(
+            {"id_a": lo[keep], "id_b": hi[keep], "cosine_raw": sims[ia, ib][keep]}
+        )
+
+    id_type = id_field.dataType.simpleString()
+    return (
+        df.select(*block_cols, F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .mapInArrow(_bucketize, unit_schema)
+        .select(*block_cols, "_id", "_u", "home",
+                F.explode(_probe_set("home", n_planes)).alias("bucket"))
+        .groupBy(*block_cols, "bucket")
+        .applyInArrow(
+            _bucket_pairs,
+            schema=f"id_a {id_type}, id_b {id_type}, cosine_raw double",
+        )
+    )
+
+
 def cosine_near_dup(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -149,15 +286,14 @@ def cosine_near_dup(
     threshold: float = 0.8,
     n_planes: int | str | None = None,
     bucket_cap: int | None = None,
-    target_bucket: int = 128,
 ) -> DataFrame:
     """[EXT X1/X2] Embedding-cosine near-duplicate pairs: (id_a, id_b,
     cosine) for every unordered pair with cosine >= threshold.
 
     ``n_planes=None`` is the exact all-pairs form (the oracle-matched
     correctness baseline; O(n^2), fine at test SF). ``n_planes=k`` is
-    the scale path: both sides are sign-LSH bucketed and only
-    same-or-one-bit-apart buckets are compared — the corpus never
+    the scale path: the sign-LSH blocked kernel ``_lsh_block_pairs``
+    compares only same-or-one-bit-apart buckets — the corpus never
     materializes the full cross product, so cost is
     sum(bucket_size^2) instead of n^2. At 100 TB the bucketed corpus
     is written once partitioned by bucket and the pair scan is
@@ -168,8 +304,8 @@ def cosine_near_dup(
     bounded driver scalar (a count, same protocol class as pagerank's
     node count), then the identical blocked path. The registry query
     stays pinned at 4 planes (its frozen oracle config); auto is the
-    deployment mode, keeping expected bucket occupancy near
-    ``target_bucket`` so pair work grows linearly with the corpus.
+    deployment mode, keeping expected bucket occupancy near 128 so
+    pair work grows linearly with the corpus.
 
     ``bucket_cap`` (scale knob, analog of ``hot_shingle_cap``) bounds
     the quadratic term per bucket: a bucket holding more than cap
@@ -181,7 +317,7 @@ def cosine_near_dup(
     identical) — property-tested in tests/test_ext_operators.py.
     """
     if n_planes == "auto":
-        n_planes = auto_n_planes(df.count(), target_bucket)
+        n_planes = auto_n_planes(df.count())
     elif n_planes is not None and not isinstance(n_planes, int):
         # Fail fast with a clear message: any other string (e.g. "4"
         # read from a config file) would fall past both branches and
@@ -190,109 +326,28 @@ def cosine_near_dup(
             f"n_planes must be an int, None (exact all-pairs) or "
             f"'auto', got {n_planes!r}"
         )
-    # Normalize ONCE per vector (one corpus pass) so the pairwise step
-    # is a single dot fold instead of dot + two norms — 3× less per-pair
-    # work, and at scale the unit vectors are what you'd persist.
+    if n_planes is not None:
+        return (
+            _lsh_block_pairs(df, id_col, vec_col, threshold, n_planes,
+                             bucket_cap=bucket_cap)
+            .dropDuplicates(["id_a", "id_b"])
+            .select("id_a", "id_b", F.round("cosine_raw", 6).alias("cosine"))
+        )
+    # Exact path. Normalize ONCE per vector (one corpus pass) so the
+    # pairwise step is a single dot fold instead of dot + two norms —
+    # 3× less per-pair work. The left-fold HOF dot keeps float op order
+    # identical to the SQL oracle (bit-for-bit before rounding).
     unit = df.withColumn("_n", _norm(F.col(vec_col))).select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_n")).alias("_u"),
     )
-    if n_planes is None:
-        # Exact path: left-fold HOF dot keeps float op order identical
-        # to the SQL oracle (bit-for-bit before rounding).
-        a = unit.select(F.col("_id").alias("id_a"), F.col("_u").alias("a_vec"))
-        b = unit.select(F.col("_id").alias("id_b"), F.col("_u").alias("b_vec"))
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-        cos = _dot(F.col("a_vec"), F.col("b_vec"))
-        return (
-            pairs.select("id_a", "id_b", cos.alias("cosine_raw"))
-            .filter(F.col("cosine_raw") >= threshold)
-            .select("id_a", "id_b", F.round("cosine_raw", 6).alias("cosine"))
-        )
-
-    # Blocked scale path: each vector's home bucket plus every
-    # one-bit-flip bucket is probed; within a bucket the probe set is
-    # matmul'd against the home set with numpy (Arrow batches) — the
-    # per-pair work is a BLAS row, not an interpreted array fold.
-    #
-    # Normalize + plane projection also run as ONE vectorized numpy
-    # stage (same frozen plane constants, same sign convention as
-    # sign_bucket): per-element Catalyst HOF folds don't participate
-    # in codegen, and the measured cost of 1 norm + n_planes
-    # projection folds dominated this whole query (~2s of 2.2s at
-    # sf0.1); the BLAS form is two matmuls per batch.
-    import pandas as pd  # noqa: F401 — mapInPandas dependency
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    planes = [
-        [_plane_component(p, d) for d in range(_MAX_DIMS)] for p in range(n_planes)
-    ]
-    raw = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-
-    def _bucketize(batches):
-        import numpy as np
-        import pandas as pd
-
-        pm = None  # plane matrix, sliced to the corpus dim on first batch
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf["_v"].to_numpy()).astype("float64")
-            if pm is None:
-                pm = np.array(planes, dtype="float64")[:, : mat.shape[1]]
-            units = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            # sign convention identical to sign_bucket: raw-vec
-            # projection >= 0 sets bit 2^p (norms are positive, so
-            # unit-vec signs match raw-vec signs)
-            bits = (mat @ pm.T) >= 0
-            home = (bits * (1 << np.arange(pm.shape[0]))).sum(axis=1).astype("int64")
-            probes = np.concatenate(
-                [home[:, None], home[:, None] ^ (1 << np.arange(pm.shape[0]))[None, :]],
-                axis=1,
-            )
-            n_probe = probes.shape[1]
-            yield pd.DataFrame({
-                "_id": np.repeat(pdf["_id"].to_numpy(), n_probe),
-                "_u": np.repeat(list(units), n_probe, axis=0).tolist(),
-                "home": np.repeat(home, n_probe),
-                "bucket": probes.reshape(-1),
-            })
-
-    exploded = raw.mapInPandas(
-        _bucketize,
-        schema=f"_id {id_type}, _u array<double>, home long, bucket long",
-    )
-
-    def _bucket_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-        import pandas as pd
-
-        if bucket_cap is not None and len(pdf) > bucket_cap:
-            # shuffle delivery order is nondeterministic — sort by id
-            # so the kept subset (and thus the output) is deterministic
-            pdf = pdf.sort_values("_id").iloc[:bucket_cap]
-        mat = np.stack(pdf["_u"].to_numpy())
-        ids = pdf["_id"].to_numpy()
-        is_home = (pdf["home"] == pdf["bucket"]).to_numpy()
-        if not is_home.any():
-            return pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0],
-                                 "cosine_raw": np.array([], dtype="float64")})
-        home_mat = mat[is_home]
-        home_ids = ids[is_home]
-        sims = mat @ home_mat.T
-        ia, ib = np.nonzero(sims >= threshold)
-        id_a, id_b = ids[ia], home_ids[ib]
-        lo, hi = np.minimum(id_a, id_b), np.maximum(id_a, id_b)
-        keep = lo < hi
-        return pd.DataFrame(
-            {"id_a": lo[keep], "id_b": hi[keep], "cosine_raw": sims[ia, ib][keep]}
-        )
-
-    out_schema = f"id_a {id_type}, id_b {id_type}, cosine_raw double"
+    a = unit.select(F.col("_id").alias("id_a"), F.col("_u").alias("a_vec"))
+    b = unit.select(F.col("_id").alias("id_b"), F.col("_u").alias("b_vec"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    cos = _dot(F.col("a_vec"), F.col("b_vec"))
     return (
-        exploded.groupBy("bucket")
-        .applyInPandas(_bucket_pairs, schema=out_schema)
-        .dropDuplicates(["id_a", "id_b"])
+        pairs.select("id_a", "id_b", cos.alias("cosine_raw"))
+        .filter(F.col("cosine_raw") >= threshold)
         .select("id_a", "id_b", F.round("cosine_raw", 6).alias("cosine"))
     )
 
@@ -381,11 +436,9 @@ def signlsh_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = N_PLANES,
-    multiprobe: int = 1,
 ) -> DataFrame:
     """Approximate cosine top-k: probe the query's sign-LSH bucket plus
-    (multiprobe=1) every bucket one bit-flip away — the standard
-    multi-probe trade: (n_planes+1)/2^n_planes of the corpus scanned
+    every bucket one bit-flip away — the standard multi-probe trade: (n_planes+1)/2^n_planes of the corpus scanned
     instead of all of it, recovering the neighbors that sit just
     across one hyperplane.
 
@@ -404,15 +457,10 @@ def signlsh_topk(
         F.col(vec_col).alias("q_vec"),
         sign_bucket(F.col(vec_col), n_planes).alias("home"),
     )
-    if multiprobe >= 1:
-        probes = F.array(
-            F.col("home"),
-            *[F.col("home").bitwiseXOR(F.lit(2 ** p)) for p in range(n_planes)],
-        )
-    else:
-        probes = F.array(F.col("home"))
     q = F.broadcast(
-        q_base.select("query_id", "q_vec", F.explode(probes).alias("bucket"))
+        q_base.select(
+            "query_id", "q_vec", F.explode(_probe_set("home", n_planes)).alias("bucket")
+        )
     )
     pairs = (
         c.join(q, "bucket")

@@ -199,14 +199,14 @@ def q_x4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-def _simhash_sql(bits: int = 32) -> str:
+def _simhash_sql() -> str:
     bit_sums = ",\n    ".join(
         f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}"
-        for j in range(bits)
+        for j in range(dedup.SIMHASH_BITS)
     )
     value = " + ".join(
         f"(CASE WHEN b{j} > 0 THEN {2 ** j}::BIGINT ELSE 0::BIGINT END)"
-        for j in range(bits)
+        for j in range(dedup.SIMHASH_BITS)
     )
     return rf"""
 WITH toks AS (

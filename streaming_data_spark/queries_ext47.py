@@ -10,12 +10,14 @@
   2023, arXiv:2303.09540): cluster every embedding to its nearest
   label-centroid (the x33 assignment), then WITHIN each cluster drop
   any vector whose cosine to a smaller-id cluster-mate exceeds the
-  near-dup threshold. Pairwise work is blocked on (cluster, sign-LSH
+  near-dup threshold. The pairs come from similarity's sign-LSH
+  blocked kernel (the x7_near_dup_lsh one) blocked on (cluster,
   bucket with 1-bit multiprobe) — cluster-only blocking goes
   quadratic once the corpus outgrows the fixed centroid count (the
   x10 probe measured 47x; with the sub-block it is ~linear), and the
   frozen-hyperplane buckets keep the oracle exact. Emits the full
-  keep/drop decision per vector.
+  keep/drop decision per vector; the only Python UDF of its own is
+  the centroid argmin.
 - a40_anomaly_mad: per-user robust anomaly flags — each event scored
   against its user's exact median and MAD (same engine/oracle median
   parity as a15, which grades per event type; this grades per USER
@@ -25,7 +27,7 @@
 
 Scale shapes: x58 broadcasts only the absolutely-bounded probe batch
 and the queries×k result (corpus stays distributed, work linear in
-corpus rows); x59's pair join keys on (cluster, LSH bucket); a40 is
+corpus rows); x59's pair blocks key on (cluster, LSH bucket); a40 is
 two keyed median passes + a user-grain broadcast back, like a15.
 
 [EXT]-classic per SURVEY.md §2.11 scope.
@@ -37,8 +39,10 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from streaming_data_spark.operators import similarity
+from streaming_data_spark.operators.similarity import _lsh_block_pairs, _rows_matrix
 from streaming_data_spark.queries import _t
 
 KNN_K = 5
@@ -158,26 +162,16 @@ def q_x59_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and whether a smaller-id cluster-mate within cosine >= 0.45 marks
     it a semantic duplicate.
 
-    r16 optimization round: the centroid argmin, normalization, plane
-    projection and per-block cosine all run in numpy (the x7
-    cosine_near_dup recipe, guide §4.2) — the previous shape's
-    posexplode⋈centroid distance pipeline (an n×d×L-row intermediate
-    through two grouped exchanges) and the interpreted per-pair HOF
-    cosine fold dominated the row (phase-profiled at sf0.1: 0.9 s
-    assignment + 1.1 s sign_bucket folds + 1.4 s pair tail). Emitted
-    pairs are STILL exactly those with hamming(home_a, home_b) <= 1
-    over the corpus-derived plane count with cosine >= threshold, so
-    the oracle reproduces the blocking bit-for-bit (frozen md5-derived
-    hyperplanes, identical count(*)-driven plane formula, same sign
-    convention as similarity.sign_bucket). A/B same-session at sf0.1:
-    min 1.37 s vs 3.32 s; value-exact vs the DuckDB oracle at
-    sf0.001/0.01/0.1."""
-    import numpy as np  # noqa: F401 — worker closures import their own
-
-    from streaming_data_spark.operators.similarity import (
-        _MAX_DIMS,
-        _plane_component,
-    )
+    The centroid argmin runs in numpy over Arrow batches; the pairs
+    come from similarity's sign-LSH blocked kernel (the x7 scale path)
+    blocked on (cluster, bucket), and the dropped set is the larger id
+    of each pair. Emitted pairs are exactly those in one cluster with
+    hamming(home_a, home_b) <= 1 over the corpus-derived plane count
+    and cosine >= threshold, so the oracle reproduces the blocking
+    bit-for-bit (frozen md5-derived hyperplanes, identical
+    count(*)-driven plane formula, same sign convention as
+    similarity.sign_bucket)."""
+    import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
     # Label centroids: ONE n×d-row posexplode + one grouped exchange
@@ -199,105 +193,49 @@ def q_x59_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab_arr = np.array(labels, dtype=np.int32)
     # The count() is one bounded driver scalar on a columnar scan.
     planes = _sem_planes(emb.count())
-    plane_mat = np.array(
-        [[_plane_component(p, d) for d in range(_MAX_DIMS)] for p in range(planes)],
-        dtype=np.float64,
-    )
-    thr = float(SEM_THRESHOLD)
 
-    def _bucketize(batches):
-        # One vectorized pass per Arrow batch: cluster argmin (ties ->
-        # lowest label, numpy argmin picks the first = label-ascending
-        # index, matching min(struct(d2, clabel))), raw-vector plane
-        # signs (sign_bucket's convention: projection >= 0 sets 2^p),
-        # and unit vectors for the pair matmul.
-        import numpy as np
-        import pandas as pd
+    def _assign(batches):
+        # Squared L2 to every centroid; ties -> lowest label (numpy
+        # argmin picks the first = label-ascending index, matching the
+        # oracle's (d2, clabel) order).
         import pyarrow as pa
 
         for batch in batches:
-            tbl = pa.table(batch)
-            col = tbl.column("embedding").combine_chunks()
-            arr = col.chunk(0) if isinstance(col, pa.ChunkedArray) else col
-            flat = np.asarray(arr.values, dtype=np.float64)
-            offs = np.asarray(arr.offsets)
-            widths = np.diff(offs)
-            if len(arr) and (widths == widths[0]).all():
-                mat = flat.reshape(len(arr), widths[0])
-            else:  # ragged corpus fallback (not hit by the data model)
-                mat = np.zeros((len(arr), widths.max() if len(arr) else 0))
-                for i in range(len(arr)):
-                    mat[i, : widths[i]] = flat[offs[i]:offs[i + 1]]
+            if not batch.num_rows:
+                continue
+            mat = _rows_matrix(batch.column("embedding"))
             d2 = (
                 (mat * mat).sum(1, keepdims=True)
                 - 2.0 * mat @ cent_mat.T
                 + (cent_mat * cent_mat).sum(1)[None, :]
             )
-            cl = lab_arr[d2.argmin(1)]
-            pm = plane_mat[:, : mat.shape[1]]
-            bits = (mat @ pm.T) >= 0
-            home = (bits * (1 << np.arange(planes))).sum(1).astype("int64")
-            units = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            out = pd.DataFrame({
-                "vec_id": np.asarray(tbl.column("vec_id")),
-                "cluster": cl,
-                "_u": list(units),
-                "home": home,
-            })
-            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("vec_id"), pa.array(lab_arr[d2.argmin(1)]),
+                 batch.column("embedding")],
+                names=["vec_id", "cluster", "embedding"],
+            )
 
-    # vecs feeds the probe explode AND the final flag join — ONE eager
-    # checkpoint (1× corpus rows; the probe fan stays a cheap scalar
-    # explode downstream of it) or the mapInArrow pipeline replays per
-    # consumer.
+    # vecs feeds the pair blocks AND the final flag join — ONE eager
+    # checkpoint, or the argmin pipeline replays per consumer.
     vecs = (
         emb.select("vec_id", "embedding")
-        .mapInArrow(
-            _bucketize,
-            "vec_id long, cluster int, _u array<double>, home long",
-        )
+        .mapInArrow(_assign, StructType([
+            emb.schema["vec_id"],
+            StructField("cluster", IntegerType()),
+            emb.schema["embedding"],
+        ]))
         .localCheckpoint(eager=True)
     )
-    # Pairwise work is blocked on (cluster, sign-LSH bucket) with
-    # 1-bit multiprobe — the x7 recipe. A cluster-only join is
+    # Blocking on (cluster, LSH bucket): a cluster-only join is
     # quadratic in cluster size once the corpus outgrows the fixed
-    # centroid count (the 47x cliff the x10 probe caught); the LSH
-    # sub-block keys the work on bucket occupancy instead, and the
-    # plane count SCALES with the corpus (_sem_planes) so occupancy
-    # stays bounded as the corpus outgrows cluster x bucket count.
-    probes = F.array(
-        F.col("home"),
-        *[F.col("home").bitwiseXOR(F.lit(2 ** p)) for p in range(planes)],
-    )
-    exploded = vecs.select(
-        "vec_id", "cluster", "_u", "home", F.explode(probes).alias("bucket")
-    )
-
-    def _block_pairs(pdf):
-        # Probe rows of the block × its home rows through one BLAS
-        # matmul; a pair survives when cosine >= threshold. Emitting
-        # max(id_a, id_b) reproduces the old join's id_a < id_b
-        # probe-vs-home filter exactly: for any qualifying pair the
-        # probe-side id < home-side id in exactly one orientation, and
-        # the emitted member is always the larger id.
-        import numpy as np
-        import pandas as pd
-
-        mat = np.stack(pdf["_u"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()
-        is_home = (pdf["home"] == pdf["bucket"]).to_numpy()
-        if not is_home.any():
-            return pd.DataFrame({"vec_id": ids[:0]})
-        sims = mat @ mat[is_home].T
-        ia, ib = np.nonzero(sims >= thr)
-        id_a, id_b = ids[ia], ids[is_home][ib]
-        hi = np.maximum(id_a, id_b)
-        keep = np.minimum(id_a, id_b) < hi
-        return pd.DataFrame({"vec_id": np.unique(hi[keep])})
-
+    # centroid count (the 47x cliff the x10 probe caught); the bucket
+    # keys the work on bucket occupancy instead, and the plane count
+    # SCALES with the corpus (_sem_planes) so occupancy stays bounded
+    # as the corpus outgrows cluster x bucket count.
     dropped = (
-        exploded.groupBy("cluster", "bucket")
-        .applyInPandas(_block_pairs, "vec_id long")
+        _lsh_block_pairs(vecs, "vec_id", "embedding", SEM_THRESHOLD, planes,
+                         block_cols=("cluster",))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
     # NO broadcast hint here (r6 verdict item 1): SemDeDup at

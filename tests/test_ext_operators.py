@@ -4,6 +4,7 @@ locality."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from streaming_data_spark.operators import dedup, joins, similarity
@@ -154,6 +155,40 @@ def test_cosine_near_dup_bucket_cap_subset(spark, sf_oracle):
         ).collect()
     }
     assert rerun == set(capped)
+
+
+def test_lsh_block_pairs_by_cluster_is_the_same_cluster_subset(spark, sf_oracle):
+    """Blocking on (cluster, bucket) returns exactly the bucket-blocked
+    pairs whose two ends share a cluster, with the same cosines: the
+    property SemDeDup (x59) relies on when it runs the x7 kernel with
+    block_cols=("cluster",). The label column stands in for the
+    cluster; threshold 0.3 surfaces a few hundred pairs at sf0.01."""
+    emb = load_table(spark, sf_oracle, "embeddings")
+    label = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}
+
+    def pairs(**kw):
+        rows = similarity._lsh_block_pairs(
+            emb, "vec_id", "embedding", 0.3, 4, **kw
+        ).collect()
+        return {(r.id_a, r.id_b): r.cosine_raw for r in rows}
+
+    unblocked = pairs()
+    by_cluster = pairs(block_cols=("label",))
+    same_cluster = {p for p in unblocked if label[p[0]] == label[p[1]]}
+    assert same_cluster and same_cluster != set(unblocked)
+    assert set(by_cluster) == same_cluster
+    for p in same_cluster:
+        assert abs(by_cluster[p] - unblocked[p]) <= 1e-12
+
+
+def test_cosine_near_dup_blocked_rejects_ragged_vectors(spark):
+    """Vectors of different lengths have no cosine: the blocked path
+    fails with a named error instead of pairing misaligned rows."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.5])], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="embeddings must all have one length"):
+        similarity.cosine_near_dup(df, n_planes=2).collect()
 
 
 def test_cosine_near_dup_auto_planes(spark, sf_oracle):

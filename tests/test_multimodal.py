@@ -8,8 +8,31 @@ import struct
 import numpy as np
 import pytest
 from pyspark.sql import Row
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from streaming_data_spark.operators import multimodal as mm
+
+# Media fixture rows: the (media_id, kind, content) frame that
+# extract_features reads, plus a metadata struct it ignores.
+MEDIA_SCHEMA = StructType([
+    StructField("media_id", LongType(), False),
+    StructField("kind", StringType(), False),        # image | audio | video
+    StructField("content", BinaryType(), True),       # opaque payload
+    StructField("meta", StructType([
+        StructField("mime", StringType(), True),
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("duration_ms", IntegerType(), True),
+        StructField("n_bytes", LongType(), True),
+    ]), True),
+])
 
 decode_ppm = mm._make_ppm_fns()[0]
 decode_wav = mm._make_wav_fns()[0]
@@ -49,7 +72,7 @@ def media_df(spark):
         Row(media_id=3, kind="audio", content=None,
             meta=Row(mime="audio/wav", width=None, height=None, duration_ms=2000, n_bytes=None)),
     ]
-    return spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 def test_extract_features_deterministic(media_df):
@@ -84,7 +107,7 @@ def ppm_df(spark):
             meta=Row(mime="image/x-portable-pixmap", width=8, height=2,
                      duration_ms=None, n_bytes=None)),
     ]
-    return spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 def test_ppm_codec_roundtrip():
@@ -124,7 +147,7 @@ def wav_df(spark):
             meta=Row(mime="audio/wav", width=None, height=None,
                      duration_ms=50, n_bytes=None)),
     ]
-    return spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 def test_wav_codec_roundtrip():

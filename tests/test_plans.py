@@ -948,11 +948,11 @@ def test_wave47_exchange_budgets(spark, sf_small):
     """x58: probe set and queries×k results ride broadcasts (the
     cross join against the broadcast probe set is the sanctioned ANN
     NLJ from x5) — the 3 exchanges are the vote/rank keyed hops.
-    x59 (r16 optimization round, numpy/x7-recipe shape): the
-    checkpointed mapInArrow bucketize truncates the centroid pipeline
-    out of the plan; the 2 in-plan exchanges are the (cluster, bucket)
-    applyInPandas block groupBy and the dropped-set distinct, with the
-    hint-free dropped-flag join left to AQE (r7: the forced broadcast
+    x59: the checkpointed mapInArrow argmin frame truncates the
+    centroid pipeline out of the plan; the 2 in-plan exchanges are the
+    (cluster, bucket) groupBy of similarity's sign-LSH blocked pair
+    kernel (the one x7 runs per bucket) and the dropped-set distinct,
+    with the hint-free dropped-flag join left to AQE (r7: the forced broadcast
     of the O(corpus) dropped set was removed — AQE localizes it at
     runtime when it actually fits). (Two earlier r16 attempts are on
     record: driver-collected centroid LITERALS — the 640-literal
@@ -1089,7 +1089,9 @@ def test_wave52_exchange_budgets(spark, sf_small):
     """x70: the peel rounds execute eagerly (localCheckpoint per
     round); the final plan is one degree groupBy over the checkpointed
     edge set. x71: the exact all-pairs side is the sanctioned bounded-
-    sample NLJ baseline; the full-outer pair merge sort-merges. a52:
+    sample NLJ baseline; the LSH side is similarity's blocked pair
+    kernel (its bucket groupBy, then the cross-bucket pair dedup); the
+    full-outer pair merge sort-merges. a52:
     fact-fact keyed join collapses onto the supplier agg's exchange.
     x73: row-local scoring, one |langs|^2-bounded groupBy. a53: day
     and month distinct-agg cascades."""
@@ -1695,11 +1697,11 @@ def test_x75_weight_table_materializes_once(spark, sf_small, monkeypatch):
 
 def test_x59_assignment_and_vecs_materialize_once(spark, sf_small,
                                                   monkeypatch):
-    """x59 SemDeDup's bucketized vecs frame feeds the pair-block
-    explode AND the final flag join; the single eager localCheckpoint
-    at queries_ext47.py keeps the mapInArrow bucketize pipeline from
-    replaying per consumer (r16 shape — previously two checkpoints
-    guarded the posexplode/centroid pipeline the same way)."""
+    """x59 SemDeDup's argmin frame (vec_id, cluster, embedding) feeds
+    the blocked pair kernel AND the final flag join; the single eager
+    localCheckpoint at queries_ext47.py keeps the mapInArrow argmin
+    pipeline from replaying per consumer (earlier shapes guarded the
+    posexplode/centroid pipeline the same way)."""
     from streaming_data_spark import queries_ext47
 
     n = __import__("streaming_data_spark.schemas", fromlist=["load_table"]) \
