@@ -12,8 +12,11 @@ Catalyst — same optimizer, same pushdown, same plans as the DataFrame
 API (Spark compiles both to one logical plan language).
 
 Temp views are session-scoped metadata over the parquet scans — no
-data copy, no extra jobs; predicate pushdown and column pruning reach
-the files exactly as with ``load_table``.
+data copy; predicate pushdown and column pruning reach the files
+exactly as with ``load_table``. The first registration in a session
+reads each table's parquet footer (one Spark job per table);
+``load_table`` keeps the schemas for the session, so every later
+``run_sql`` over unchanged files runs no job before its action.
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ def register_catalog(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a session temp view (idempotent).
 
     Views go through ``load_table`` so the events.ts dtype
-    normalization (nanos/NTZ era handling) applies to SQL users too.
+    normalization (nanos/NTZ era handling) applies to SQL users too,
+    and a repeat registration over unchanged files runs no Spark job.
     """
     for name in TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

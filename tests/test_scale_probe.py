@@ -59,3 +59,19 @@ def test_replicate_two_copies(spark, sf_small, tmp_path):
     assert joined.where(F.abs(F.col("n") - F.col("n1")) > 1e-9).count() == 0
     # the transform is applied, not a plain copy
     assert joined.where(F.col("embedding") != F.col("e1")).count() > 0
+
+
+def test_ratios_report_slope_per_added_copy():
+    """slope_x{N} = (t_xN - t_base) / (N - 1): a lower base time with
+    the same added cost per copy leaves the slope alone, while the
+    ratio rises."""
+    labels = ["sf0.1", "x10", "x100"]
+    out = scale_probe._ratios({"sf0.1": 2.0, "x10": 5.6, "x100": 41.6,
+                               "parts_x10": 16}, labels)
+    assert out == {"ratio_x10": 2.8, "slope_x10": 0.4,
+                   "ratio_x100": 20.8, "slope_x100": 0.4, "seg_x100": 7.43}
+    lower_base = scale_probe._ratios({"sf0.1": 1.0, "x10": 4.6}, labels)
+    assert lower_base == {"ratio_x10": 4.6, "slope_x10": 0.4}
+    # a replica that was skipped is not reported
+    assert scale_probe._ratios({"sf0.1": 2.0, "x100": 41.6}, labels) == {
+        "ratio_x100": 20.8, "slope_x100": 0.4}

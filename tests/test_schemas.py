@@ -83,3 +83,82 @@ def test_relational_tables_have_expected_key_columns(spark, sf_small):
         for c in cols:
             assert c in fields, (table, c, sorted(fields))
             assert isinstance(fields[c], (LongType, IntegerType)), (table, c, fields[c])
+
+
+def test_second_load_of_an_unchanged_table_runs_no_job(spark, sf_small, jobs_of):
+    """The file schema is resolved once per session and file stamp:
+    a repeat load reads with it instead of a footer-read job."""
+    first = schemas.load_table(spark, sf_small, "orders")
+    again, n_jobs = jobs_of(lambda: schemas.load_table(spark, sf_small, "orders"))
+    assert n_jobs == 0
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def _write_events(path, ts_unit: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    micros = [1_700_000_000_123_456, 1_700_086_400_000_001, 1_700_172_800_999_999]
+    scale = {"us": 1, "ns": 1000}[ts_unit]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array([m * scale for m in micros], pa.timestamp(ts_unit)),
+        }),
+        path, version="2.6", coerce_timestamps=None,
+    )
+
+
+def test_in_place_rewrite_from_micros_ntz_to_nanos_is_re_resolved(spark, tmp_path):
+    """A testdata regeneration that rewrites events.parquet in place
+    with another ts encoding gets a new file stamp, so its schema is
+    inferred again: ts stays TimestampType with the same values. A
+    resolver that ignored the stamp would read the nanos file with the
+    micros-NTZ schema."""
+    path = tmp_path / "events.parquet"
+    _write_events(path, "us")
+
+    def ts_micros():
+        df = schemas.load_table(spark, str(tmp_path), "events")
+        assert df.schema["ts"].dataType == TimestampType()
+        return [r.us for r in df.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()]
+
+    before = ts_micros()
+    assert ts_micros() == before  # the cached-schema path
+    _write_events(path, "ns")
+    assert ts_micros() == before
+
+
+def test_a_new_session_resolves_again(sf_small, tmp_path):
+    """The resolver lives and dies with its session: after
+    ``spark.stop()`` the next session pays its own footer-read job.
+    Run in a child process, so the suite's session stays up."""
+    import os
+    import subprocess
+    import sys
+
+    code = f"""
+import sys
+sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+from streaming_data_spark.schemas import load_table
+from streaming_data_spark.session import get_session
+
+def jobs(spark, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    load_table(spark, {sf_small!r}, "orders")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+spark = get_session(app_name="resolver-a")
+print(jobs(spark, "first"), jobs(spark, "again"))
+spark.stop()
+spark = get_session(app_name="resolver-b")
+print(jobs(spark, "new-session"))
+spark.stop()
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="2")
+    out = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["1", "0", "1"]

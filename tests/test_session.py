@@ -162,3 +162,23 @@ def test_autosize_floor_includes_current_session_setting(spark, tmp_path):
         assert n == 96  # floor = max(parallelism 32, current 96)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_warm_curation_pass_compiles_no_class(spark, sf_small):
+    """A warm session keeps every generated class of a pass: the
+    second pass over perfbench's curation queries compiles none (at
+    Spark's default cache of 100 classes it recompiled about 150)."""
+    import __spark_entry__
+    from perfbench.workloads import CURATION_QUERIES
+
+    registry = __spark_entry__.queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for name in CURATION_QUERIES:
+            registry[name](spark, sf_small).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0

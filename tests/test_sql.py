@@ -224,3 +224,13 @@ def test_stream_sql_rejects_batch_views_and_batch_plans(spark, sf_small, tmp_pat
     stream, _ = _event_files(spark, sf_small, tmp_path)
     with pytest.raises(ValueError, match="batch plan"):
         run_stream_sql(spark, "SELECT 1 AS one", views={"ev": stream})
+
+
+def test_repeat_run_sql_runs_no_job_before_its_action(spark, sf_small, jobs_of):
+    """register_catalog goes through load_table's per-session schemas:
+    only the first registration reads the ten parquet footers."""
+    query = "SELECT o_orderkey FROM orders WHERE o_totalprice > 1000"
+    run_sql(spark, sf_small, query)
+    df, n_jobs = jobs_of(lambda: run_sql(spark, sf_small, query))
+    assert n_jobs == 0
+    assert df.count() > 0

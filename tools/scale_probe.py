@@ -30,8 +30,9 @@ Stages, one process each:
 min-of-2 into the noop sink with the shared pair view dropped per rep,
 after autosizing shuffle partitions from the scale's bytes. It prints
 one JSON line with the seconds and partitions per scale,
-``ratio_x{N}`` against the base and ``seg_x{N}`` against the next
-smaller replica. Run heavy queries one process each, so one query's
+``ratio_x{N}`` against the base, ``slope_x{N}`` (seconds per added
+copy of the base, which a cut in fixed per-call cost does not
+inflate) and ``seg_x{N}`` against the next smaller replica. Run heavy queries one process each, so one query's
 GC/JIT state cannot skew the next.
 """
 
@@ -295,12 +296,19 @@ def _fans_embeddings(copies: int) -> bool:
 
 
 def _ratios(times: dict[str, float], labels: list[str]) -> dict[str, float]:
-    """ratio_{label} = t / t_base for every replica; seg_{label} =
-    t / t of the next smaller replica measured."""
+    """ratio_{label} = t / t_base for every replica; slope_x{N} =
+    (t_xN - t_base) / (N - 1), the seconds each added copy of the base
+    costs, which a lower base time does not inflate the way it inflates
+    the ratio; seg_{label} = t / t of the next smaller replica
+    measured."""
     out: dict[str, float] = {}
     measured = [lb for lb in labels if lb in times]
+    base = times[measured[0]] if measured else 0.0
     for prev, cur in zip(measured, measured[1:]):
-        out[f"ratio_{cur}"] = round(times[cur] / times[measured[0]], 2)
+        out[f"ratio_{cur}"] = round(times[cur] / base, 2)
+        copies = re.fullmatch(r"x(\d+)", cur)
+        if copies and int(copies[1]) > 1:
+            out[f"slope_{cur}"] = round((times[cur] - base) / (int(copies[1]) - 1), 3)
         if prev != measured[0]:
             out[f"seg_{cur}"] = round(times[cur] / times[prev], 2)
     return out
