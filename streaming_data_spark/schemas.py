@@ -190,34 +190,36 @@ EMBEDDINGS = StructType(
 )
 
 
-def _file_stamp(spark: SparkSession, path: str) -> tuple:
-    """(path, length, modification time) of every file under ``path``,
-    from Hadoop ``listStatus``: an in-place rewrite changes it. One
-    file costs about 3 ms of py4j round trips and no Spark job."""
-    conf = spark._jsc.hadoopConfiguration()
+def _file_stamp(spark: SparkSession, path: str) -> tuple | None:
+    """(length, modification time) of ``path`` from one Hadoop
+    ``getFileStatus`` call, or None when it has no status (a missing
+    table). For a single-file table that is the file itself; a
+    directory table's time moves whenever a file in it is added,
+    renamed or removed, which covers Spark's writes (an overwrite
+    deletes and recreates the directory). One call, about 1 ms of py4j
+    round trips and no Spark job, whatever the number of part files."""
+    from py4j.protocol import Py4JJavaError
+
     root = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    stamp, pending = [], [root]
-    while pending:
-        for status in fs.listStatus(pending.pop()):
-            if status.isDirectory():
-                pending.append(status.getPath())
-            else:
-                stamp.append((status.getPath().toString(), status.getLen(),
-                              status.getModificationTime()))
-    return tuple(sorted(stamp))
+    try:
+        status = root.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(root)
+    except Py4JJavaError:
+        return None
+    return status.getLen(), status.getModificationTime()
 
 
-def _read_parquet(spark: SparkSession, path: str, infer) -> DataFrame:
-    """``infer(path)``'s frame, inferring the file schema once per
+def _read_parquet(spark: SparkSession, path: str, nanos_as_long: bool = False) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the file schema once per
     session and file stamp.
 
-    The first load of a stamp runs ``infer``, which costs a Spark job
-    to read the parquet footer, and records the schema it read. Later
-    loads read with that schema and run no job. The record is an
-    attribute of the session object, so it ends with the session, as
-    the shared pair views do; a rewritten input gets a new stamp and
-    is inferred again.
+    The first load of a stamp infers the schema, which costs a Spark
+    job to read the parquet footer, and records it. Later loads read
+    with that schema and run no job. The record is an attribute of the
+    session object, so it ends with the session, as the shared pair
+    views do; a rewritten input gets a new stamp and is inferred again.
+    A path without a stamp is read as is, so a missing table fails
+    with Spark's own error. ``nanos_as_long`` infers TIMESTAMP(NANOS)
+    columns as long.
     """
     known = getattr(spark, "_sds_file_schemas", None)
     if known is None:
@@ -226,36 +228,33 @@ def _read_parquet(spark: SparkSession, path: str, infer) -> DataFrame:
     # old stamp, which the next load re-infers
     stamp = _file_stamp(spark, path)
     hit = known.get(path)
-    if hit is not None and hit[0] == stamp:
+    if stamp is not None and hit is not None and hit[0] == stamp:
         return spark.read.schema(hit[1]).parquet(path)
-    df = infer(path)
-    known[path] = (stamp, df.schema)
-    return df
-
-
-def _infer_events(spark: SparkSession, path: str) -> DataFrame:
-    # Scope the legacy-nanos conf to the inference: only the footer
-    # read needs it (a read given a long ts schema decodes nanos
-    # without it), so later nanos-parquet reads in the same session
-    # keep default behavior.
+    # Scope the legacy-nanos conf to the inference: a read given a
+    # long ts schema decodes nanos without it, so later nanos-parquet
+    # reads in the same session keep default behavior.
     key = "spark.sql.legacy.parquet.nanosAsLong"
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
+    if nanos_as_long:
+        spark.conf.set(key, "true")
     try:
-        return spark.read.parquet(path)
+        df = spark.read.parquet(path)
     finally:
-        if prev is None:
+        if nanos_as_long and prev is None:
             spark.conf.unset(key)
-        else:
+        elif nanos_as_long:
             spark.conf.set(key, prev)
+    if stamp is not None:
+        known[path] = (stamp, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (columnar parquet scan — pushdown
     and pruning reach the scan; see plans.checks).
 
-    The file schema is inferred once per session and file stamp (path,
-    length, modification time; see :func:`_read_parquet`): the first
+    The file schema is inferred once per session and file stamp
+    (length and modification time; see :func:`_read_parquet`): the first
     load of a table runs one footer-read job, every later load of the
     unchanged file runs none.
 
@@ -274,10 +273,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown testdata table {name!r}; one of {TESTDATA_TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
-        return _read_parquet(spark, path, spark.read.parquet)
+        return _read_parquet(spark, path)
     from pyspark.sql import functions as F
 
-    df = _read_parquet(spark, path, lambda p: _infer_events(spark, p))
+    df = _read_parquet(spark, path, nanos_as_long=True)
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):  # nanos-era file
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

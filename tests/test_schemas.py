@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
+from pyspark.sql.types import LongType, StringType, TimestampType
 
 from streaming_data_spark import schemas
 
@@ -66,7 +66,7 @@ def test_relational_tables_have_expected_key_columns(spark, sf_small):
     """Cheap presence guard for the TPC-H-ish tables: the join keys
     every registry query depends on must exist with integral types —
     a regeneration that re-types a key breaks half the registry."""
-    from pyspark.sql.types import IntegerType, LongType
+    from pyspark.sql.types import IntegerType
 
     keys = {
         "region": ["r_regionkey"],
@@ -93,6 +93,36 @@ def test_second_load_of_an_unchanged_table_runs_no_job(spark, sf_small, jobs_of)
     assert n_jobs == 0
     assert again.schema == first.schema
     assert again.count() == first.count()
+
+
+def test_spark_overwrite_of_a_directory_table_is_re_resolved(spark, tmp_path, jobs_of):
+    """A directory table (several part files, as the scale probe's
+    replicas are) is stamped by the directory's own status: a repeat
+    load runs no job, and a Spark overwrite that changes a column's
+    type is inferred again."""
+    path = str(tmp_path / "orders.parquet")
+    spark.range(40).withColumn("o_custkey", F.col("id")).repartition(4) \
+        .write.mode("overwrite").parquet(path)
+    first = schemas.load_table(spark, str(tmp_path), "orders")
+    assert first.schema["o_custkey"].dataType == LongType()
+    _, n_jobs = jobs_of(lambda: schemas.load_table(spark, str(tmp_path), "orders"))
+    assert n_jobs == 0
+    spark.range(40).withColumn("o_custkey", F.col("id").cast("string")).repartition(4) \
+        .write.mode("overwrite").parquet(path)
+    again = schemas.load_table(spark, str(tmp_path), "orders")
+    assert again.schema["o_custkey"].dataType == StringType()
+    assert sorted(r.o_custkey for r in again.collect()) == sorted(str(i) for i in range(40))
+
+
+def test_missing_table_raises_spark_path_not_found(spark, tmp_path):
+    """A table that is not there has no stamp and is read as is, so
+    the load fails with Spark's own error, as without the resolver."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        schemas.load_table(spark, str(tmp_path), "documents")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        schemas.load_table(spark, str(tmp_path), "events")
 
 
 def _write_events(path, ts_unit: str) -> None:
