@@ -32,8 +32,9 @@ after autosizing shuffle partitions from the scale's bytes. It prints
 one JSON line with the seconds and partitions per scale,
 ``ratio_x{N}`` against the base, ``slope_x{N}`` (seconds per added
 copy of the base, which a cut in fixed per-call cost does not
-inflate) and ``seg_x{N}`` against the next smaller replica. Run heavy queries one process each, so one query's
-GC/JIT state cannot skew the next.
+inflate) and ``seg_x{N}`` against the next smaller replica. Run
+heavy queries one process each, so one query's GC/JIT state cannot
+skew the next.
 """
 
 from __future__ import annotations
